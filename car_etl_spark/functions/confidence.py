@@ -102,22 +102,6 @@ def noi_growth_penalty(noi_in_place: Column, noi_pro_forma: Column) -> Column:
     )
 
 
-def om_field_confidence(
-    base: Column,
-    source_section: Column,
-    value_type: Column,
-    penalty: Column,
-    skepticism: Column | None = None,
-) -> Column:
-    """F27: base x source x value-type x skepticism x consistency,
-    clamped to [0, 1] (``om_confidence.py:88-116``)."""
-    conf = base * source_reliability(source_section) * value_type_factor(value_type)
-    if skepticism is not None:
-        conf = conf * skepticism
-    conf = conf * penalty
-    return F.greatest(F.lit(0.0), F.least(F.lit(1.0), conf))
-
-
 def pro_forma_warnings(
     rent_growth: Column, noi_in_place: Column, noi_pro_forma: Column, occ_pro_forma: Column
 ) -> tuple[Column, Column, Column]:

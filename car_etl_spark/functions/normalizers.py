@@ -192,23 +192,6 @@ def normalize_text(c: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(c), r"[^a-z0-9]+", " "))
 
 
-def similarity_levenshtein(a: Column, b: Column) -> Column:
-    """Edit-distance similarity ratio in [0, 1] (F12 approximation).
-
-    The reference uses difflib ``SequenceMatcher.ratio()``
-    (``matching.py:51-57``); the SQL-expressible approximation declared to
-    the oracle is ``1 - levenshtein/greatest(len)``.  Both-empty -> 1.0,
-    one-empty -> 0.0, per the reference's guards.
-    """
-    la, lb = F.length(a), F.length(b)
-    denom = F.greatest(la, lb)
-    return (
-        F.when((la == 0) & (lb == 0), F.lit(1.0))
-        .when((la == 0) | (lb == 0), F.lit(0.0))
-        .otherwise(1.0 - F.levenshtein(a, b) / denom)
-    )
-
-
 def match_decision(score: Column) -> Column:
     """Threshold decisions (F13, reference ``matching.py:104-110``):
     >=0.95 auto_merge, >=0.80 suggest_merge, else different."""

@@ -27,15 +27,6 @@ def tokenize(c: Column) -> Column:
     return F.filter(F.split(F.trim(c), r"\s+"), lambda x: x != "")
 
 
-def remove_stopwords(tokens: Column) -> Column:
-    """Drop stop words and 1-char tokens (F18, reference
-    ``highlighter.py:69-90``)."""
-    stop = F.array(*[F.lit(w) for w in STOPWORDS])
-    return F.filter(
-        tokens, lambda x: (~F.array_contains(stop, F.lower(x))) & (F.length(x) >= 2)
-    )
-
-
 def token_count(c: Column) -> Column:
     """Whitespace token count (the cheap tiktoken stand-in, F24)."""
     return F.size(tokenize(c))
@@ -77,14 +68,6 @@ def stopword_ratio(c: Column) -> Column:
     return F.when(n > 0, ns / n).otherwise(F.lit(0.0))
 
 
-def avg_token_length(c: Column) -> Column:
-    toks = tokenize(c)
-    total = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
-    )
-    return F.when(F.size(toks) > 0, total / F.size(toks)).otherwise(F.lit(0.0))
-
-
 def quality_score(c: Column) -> Column:
     """Composite document-quality score in [0, 1].
 
@@ -112,12 +95,6 @@ def fingerprint(c: Column) -> Column:
     """
     canon = F.array_join(F.array_sort(F.array_distinct(tokenize(F.lower(c)))), " ")
     return F.sha2(canon, 256)
-
-
-def content_hash(c: Column) -> Column:
-    """Exact content identity, sha256 hex (F14, reference
-    ``src/services/file_storage.py:90-100``)."""
-    return F.sha2(c, 256)
 
 
 def shingles_from_tokens(toks: Column, n: int = 3) -> Column:

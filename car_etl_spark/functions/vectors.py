@@ -29,10 +29,6 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return F.when(denom > 0, dot(a, b) / denom)
 
 
-def cosine_distance(a: Column, b: Column) -> Column:
-    return 1.0 - cosine_similarity(a, b)
-
-
 def literal_vector(values) -> Column:
     """A query vector as ONE SQL literal expression.
 

@@ -509,10 +509,8 @@ COMPACT_DELTA_FRACTION = 0.2
 
 def _layout_gen(store_path: str) -> int:
     """Current generation of a generation-numbered store layout — the
-    ``_current.json`` pointer at the store root.  0 = the legacy
-    in-place layout (base/delta/tombstones at the root, pre-r9 stores):
-    those keep serving unchanged and migrate to ``layout-1/`` at their
-    next compact or rebuild."""
+    ``_current.json`` pointer at the store root.  0 = nothing published
+    yet (the first build publishes ``layout-1/``)."""
     try:
         with open(os.path.join(store_path, "_current.json")) as f:
             return int(json.load(f)["gen"])
@@ -521,7 +519,7 @@ def _layout_gen(store_path: str) -> int:
 
 
 def _layout_root(store_path: str, gen: int) -> str:
-    return store_path if gen <= 0 else os.path.join(store_path, f"layout-{gen}")
+    return os.path.join(store_path, f"layout-{gen}")
 
 
 # -- maintenance writer lease + fencing (round 10) ----------------------
@@ -1276,9 +1274,8 @@ def _pinned_generations(store_path: str) -> set[int]:
     return out
 
 
-def _existing_generations(store_path: str, legacy_dirs: tuple[str, ...]) -> list[int]:
-    """Generations with directories on disk: every ``layout-<n>/`` plus
-    legacy gen 0 if any of its root-level dirs remain."""
+def _existing_generations(store_path: str) -> list[int]:
+    """Generations with directories on disk: every ``layout-<n>/``."""
     gens: list[int] = []
     try:
         for fn in os.listdir(store_path):
@@ -1289,8 +1286,6 @@ def _existing_generations(store_path: str, legacy_dirs: tuple[str, ...]) -> list
                     pass
     except OSError:
         return gens
-    if any(os.path.isdir(os.path.join(store_path, d)) for d in legacy_dirs):
-        gens.append(0)
     return sorted(gens)
 
 
@@ -1365,7 +1360,6 @@ def _flip_layout(store_path: str, new_gen: int, fence: int | None = None) -> Non
 def _publish_store_generation(
     store_path: str,
     new_gen: int,
-    legacy_dirs: tuple[str, ...],
     lease: MaintenanceLease | None = None,
 ) -> None:
     """Flip the pointer to ``new_gen``, then clean up: applied-batch
@@ -1386,35 +1380,24 @@ def _publish_store_generation(
     for f in os.listdir(store_path):
         if f.startswith("_applied_"):
             os.remove(os.path.join(store_path, f))
-    _gc_store_generations(store_path, new_gen, legacy_dirs)
+    _gc_store_generations(store_path, new_gen)
 
 
-def _gc_store_generations(
-    store_path: str, new_gen: int, legacy_dirs: tuple[str, ...]
-) -> None:
+def _gc_store_generations(store_path: str, new_gen: int) -> None:
     """Sweep every on-disk generation at or below ``new_gen - 2`` that
     no live pin protects.  Sweeping ALL eligible generations (not just
     exactly ``new_gen - 2``) is what makes pin-blocked layouts a
     deferral, not a leak: the next publish after release reclaims
     them."""
     pinned = _pinned_generations(store_path)
-    for g in _existing_generations(store_path, legacy_dirs):
+    for g in _existing_generations(store_path):
         if g <= new_gen - 2 and g not in pinned:
-            _gc_layout(store_path, g, legacy_dirs)
+            _gc_layout(store_path, g)
 
 
-def _gc_layout(
-    store_path: str, gen: int, legacy_dirs: tuple[str, ...]
-) -> None:
-    """Remove generation ``gen``'s directories.  Gen 0 is the legacy
-    in-place layout — its dirs live at the store root."""
-    if gen < 0:
-        return
-    if gen == 0:
-        for d in legacy_dirs:
-            shutil.rmtree(os.path.join(store_path, d), ignore_errors=True)
-    else:
-        shutil.rmtree(os.path.join(store_path, f"layout-{gen}"), ignore_errors=True)
+def _gc_layout(store_path: str, gen: int) -> None:
+    """Remove generation ``gen``'s directory."""
+    shutil.rmtree(_layout_root(store_path, gen), ignore_errors=True)
 
 
 def _tombstone_frame(
@@ -1533,9 +1516,8 @@ class PostingStore:
     #
     # (Each store keeps its OWN copy of these few path helpers rather
     # than sharing a mixin — deliberate: the three stores differ in
-    # primary-dir name, legacy-dir set, sentinel naming, and publish
-    # semantics (rollup's refresh keeps sentinels, compact clears
-    # them), and the shared pieces that are genuinely identical ARE
+    # primary-dir name, sentinel naming, and publish semantics
+    # (rollup's refresh keeps sentinels, compact clears them), and the shared pieces that are genuinely identical ARE
     # shared as module functions: _layout_gen/_layout_root/
     # _flip_layout/_gc_layout/_publish_store_generation/
     # _tombstone_frame.)
@@ -1546,15 +1528,12 @@ class PostingStore:
     # that listed files under the previous generation keeps reading
     # them — the old generation stays on disk for one full compact
     # interval (deferred GC) — so compaction never invalidates an
-    # in-flight query's file paths.  Gen 0 is the legacy in-place
-    # layout (pre-r9 stores serve unchanged and migrate on their next
-    # compact).  Meta lives INSIDE the generation's base/ (underscore-
+    # in-flight query's file paths.  Gen 0 means nothing is published
+    # yet.  Meta lives INSIDE the generation's base/ (underscore-
     # prefixed, invisible to the parquet reader), so layout and meta
     # publish together; property ACCESS ORDER in the read paths (data
     # dir first, meta second) guarantees any flip-straddling mix still
     # resolves to a committed historical snapshot.
-
-    _LEGACY_DIRS = ("base", "delta", "tombstones", "doclens_delta")
 
     def _gen(self) -> int:
         return _layout_gen(self.path)
@@ -1624,9 +1603,7 @@ class PostingStore:
     def _publish_generation(self, new_gen: int) -> None:
         """See :func:`_publish_store_generation`; fenced by the active
         maintenance lease (every caller is ``@_with_maintenance_lease``)."""
-        _publish_store_generation(
-            self.path, new_gen, self._LEGACY_DIRS, lease=_active_lease(self)
-        )
+        _publish_store_generation(self.path, new_gen, lease=_active_lease(self))
 
     def _meta(self) -> dict:
         try:
@@ -2479,10 +2456,13 @@ class PostingStore:
             cand = None
             for lit in lits:
                 # docs rides through for the positions-less layout's
-                # bounded recheck; positional stores ignore it
+                # bounded recheck; positional stores ignore it.
+                # ordered=False: the cap test below does not depend on
+                # row order, and a declared sort would pay a range
+                # exchange plus its bound-sampling job per literal
                 ids = self.substring_search(
                     spark, lit, tenant=tenant, docs=docs,
-                    id_col=id_col, text_col=text_col,
+                    id_col=id_col, text_col=text_col, ordered=False,
                 ).select("doc_id")
                 cand = ids if cand is None else cand.join(ids, "doc_id")
             cand_ids = [
@@ -2845,13 +2825,10 @@ class IvfStore:
     # Same discipline as PostingStore: mutable dirs under layout-<gen>/,
     # build/compact publish a fresh generation by flipping _current.json
     # (deferred GC gives in-flight serves one compact interval of
-    # grace), gen 0 = the legacy in-place layout.  Meta rides INSIDE
-    # the generation's assignments/ so centroids/stats and layout
-    # publish together; apply_batch's incremental meta updates
-    # os.replace the current generation's file in place, preserving its
-    # own write-order argument.
-
-    _LEGACY_DIRS = ("assignments", "delta", "tombstones")
+    # grace).  Meta rides INSIDE the generation's assignments/ so
+    # centroids/stats and layout publish together; apply_batch's
+    # incremental meta updates os.replace the current generation's file
+    # in place, preserving its own write-order argument.
 
     def _gen(self) -> int:
         return _layout_gen(self.path)
@@ -2894,9 +2871,7 @@ class IvfStore:
     def _publish_generation(self, new_gen: int) -> None:
         """See :func:`_publish_store_generation`; fenced by the active
         maintenance lease (every caller is ``@_with_maintenance_lease``)."""
-        _publish_store_generation(
-            self.path, new_gen, self._LEGACY_DIRS, lease=_active_lease(self)
-        )
+        _publish_store_generation(self.path, new_gen, lease=_active_lease(self))
 
     def _stored_schema(self, gen: int | None = None):
         """Build-time assignments schema — reads supply it explicitly so

@@ -49,15 +49,6 @@ MAGIC_BYTES = {
     "video/avi": [(0, b"RIFF"), (8, b"AVI ")],
 }
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("path", StringType()),
-        StructField("content", BinaryType()),
-        StructField("mime_type", StringType()),
-        StructField("file_size_bytes", LongType()),
-        StructField("file_hash", StringType()),
-    ]
-)
 
 AUDIO_FEATURES_SCHEMA = StructType(
     [

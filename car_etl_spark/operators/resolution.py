@@ -3,8 +3,8 @@ rerank composition (SURVEY.md F12/F31/O6).
 
 ``calculate_similarity_exact`` is the difflib-parity UDF the reference
 actually uses (``src/entities/matching.py:51-57``); the SQL-expressible
-levenshtein form lives in ``functions/normalizers`` and is what the
-oracle checks.  Both are exposed so callers choose parity vs pushdown.
+levenshtein form lives in ``queries.entity.scored_pairs`` and is what
+the oracle checks.  Both are exposed so callers choose parity vs pushdown.
 """
 
 from __future__ import annotations

@@ -63,7 +63,8 @@ def exploded_shingle_rows(
     aggregation first, so 48 longs per doc cross the wire instead of
     every token (r12: sigs 1.43 -> 1.15 s at sf0.1, and the shuffled
     bytes drop from O(corpus tokens) to O(docs) at any scale;
-    scripts/profile_minhash_shingles.py, multiset parity asserted).
+    scripts/profile_minhash_shingles.py at commit d864714, multiset
+    parity asserted).
     The array is never copied per exploded row: Generate and the gram
     projection fuse into one whole-stage-codegen span.
 
@@ -334,7 +335,8 @@ def prefix_frames(
     # The join form sorted the whole token stream by the ~20-char
     # element string on BOTH SMJ sides; the window attaches __df with
     # one exchange + one sort.  Measured on the sf1 shingle corpus
-    # (scripts/profile_prefix_frames.py, parity asserted): pref build
+    # (scripts/profile_prefix_frames.py at commit d864714, parity
+    # asserted): pref build
     # 2.91 -> 0.83 s (-72 %).  __df values are identical (set_col
     # elements are distinct per id, so the per-token row count IS the
     # document frequency), hence prefix contents and every downstream

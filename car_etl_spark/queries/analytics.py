@@ -200,20 +200,6 @@ def latest_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-LATEST_ORDER_SQL = """
-SELECT o_custkey,
-       o_orderkey AS latest_orderkey,
-       strftime(o_orderdate, '%Y-%m-%d') AS latest_orderdate,
-       ROUND(o_totalprice, 2) AS latest_totalprice
-FROM (
-  SELECT *, ROW_NUMBER() OVER (
-    PARTITION BY o_custkey ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-  FROM orders)
-WHERE rn = 1
-ORDER BY o_custkey
-"""
-
-
 def next_version_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7: MAX(version)+1 per key — the extraction-versioning rule
     (``030_extractions.sql:84-105``) computed deterministically per
@@ -227,13 +213,6 @@ def next_version_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("o_custkey")
     )
-
-
-NEXT_VERSION_SQL = """
-SELECT o_custkey, COUNT(*) AS current_versions,
-       MAX(o_orderkey) + 1 AS next_version_key
-FROM orders GROUP BY o_custkey ORDER BY o_custkey
-"""
 
 
 def customer_order_versioning(spark: SparkSession, sf_dir: str) -> DataFrame:

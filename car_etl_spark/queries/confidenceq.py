@@ -75,24 +75,6 @@ _OM_FIELDS_SQL = """
 """
 
 
-def om_consistency_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F26: the four cross-column consistency penalties per order."""
-    om = _om_fields(spark, sf_dir)
-    return om.select(
-        "orderkey",
-        F.round(
-            C.cap_rate_penalty(F.col("noi_in_place"), F.col("asking_price"), F.col("stated_cap")), 2
-        ).alias("cap_rate_penalty"),
-        F.round(
-            C.price_psf_penalty(F.col("asking_price"), F.col("total_sf"), F.col("price_psf")), 2
-        ).alias("price_psf_penalty"),
-        F.round(C.occupancy_penalty(F.col("occupancy")), 2).alias("occupancy_penalty"),
-        F.round(
-            C.noi_growth_penalty(F.col("noi_in_place"), F.col("noi_pro_forma")), 2
-        ).alias("noi_growth_penalty"),
-    ).orderBy("orderkey")
-
-
 OM_CONSISTENCY_SQL = f"""
 WITH om AS ({_OM_FIELDS_SQL})
 SELECT orderkey,
@@ -113,37 +95,6 @@ SELECT orderkey,
                   ELSE 1.0 END, 2) AS noi_growth_penalty
 FROM om ORDER BY orderkey
 """
-
-
-def om_field_confidence_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F27: base x source-reliability x value-type x consistency, clamped
-    — the marketing-aware confidence for the cap-rate field.
-
-    Factor products are exact finite decimals (e.g. 0.9*0.85*0.85*0.85 =
-    0.55271250) that land ON the 6-dp rounding tie, so the whole product
-    is computed in DECIMAL (DuckDB's literals already are) — double math
-    would tie-break differently per engine.
-    """
-    om = _om_fields(spark, sf_dir)
-    dec = "decimal(12,6)"
-    penalty = C.cap_rate_penalty(
-        F.col("noi_in_place"), F.col("asking_price"), F.col("stated_cap")
-    )
-    conf = (
-        F.lit(0.9).cast(dec)
-        * C.source_reliability(F.col("source_section")).cast(dec)
-        * C.value_type_factor(F.col("value_type")).cast(dec)
-        * penalty.cast(dec)
-    )
-    clamped = F.greatest(
-        F.lit(0).cast(dec), F.least(F.lit(1).cast(dec), conf)
-    )
-    return om.select(
-        "orderkey",
-        "source_section",
-        "value_type",
-        F.round(clamped, 6).cast("double").alias("cap_rate_confidence"),
-    ).orderBy("orderkey")
 
 
 _SRC_CASE = "CASE source_section " + " ".join(
@@ -170,23 +121,6 @@ FROM scored ORDER BY orderkey
 """
 
 
-def pro_forma_validation_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F28: benchmark warning flags + warning count per order."""
-    om = _om_fields(spark, sf_dir)
-    rent_growth = F.round((F.col("orderkey") % 9).cast("double") / 100.0, 2)
-    rent_w, noi_w, occ_w = C.pro_forma_warnings(
-        rent_growth, F.col("noi_in_place"), F.col("noi_pro_forma"), F.col("occupancy")
-    )
-    return om.select(
-        "orderkey",
-        rent_growth.alias("rent_growth_assumption"),
-        rent_w.alias("rent_growth_warning"),
-        noi_w.alias("noi_uplift_warning"),
-        occ_w.alias("occupancy_warning"),
-        (rent_w.cast("int") + noi_w.cast("int") + occ_w.cast("int")).cast("long").alias("warning_count"),
-    ).orderBy("orderkey")
-
-
 PRO_FORMA_SQL = f"""
 WITH om AS ({_OM_FIELDS_SQL}),
 flags AS (
@@ -204,23 +138,6 @@ SELECT orderkey, rent_growth_assumption, rent_growth_warning, noi_uplift_warning
             + CAST(occupancy_warning AS INT) AS BIGINT) AS warning_count
 FROM flags ORDER BY orderkey
 """
-
-
-def calibration_variances(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F29: relative variance of extracted vs closing values with
-    zero/NULL baseline guards; every 11th baseline is zero, every 13th
-    missing."""
-    om = _om_fields(spark, sf_dir)
-    k = F.col("orderkey")
-    baseline = F.when(k % 11 == 0, F.lit(0.0)).when(k % 13 == 0, F.lit(None)).otherwise(
-        drow(F.col("asking_price") * 0.97)  # money round-at-tie -> decimal stage
-    )
-    variance = C.calibration_variance(F.col("asking_price"), baseline)
-    return om.select(
-        "orderkey",
-        baseline.alias("closing_price"),
-        F.round(variance, 6).alias("price_variance"),
-    ).orderBy("orderkey")
 
 
 CALIBRATION_SQL = f"""
@@ -249,8 +166,14 @@ def om_validation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE projection over ONE _om_fields scan: every output is a pure
     column expression over the same per-orderkey fields, so the
     previous four-sub-query composition paid 4 table scans + 3 shuffle
-    joins for what a single select produces byte-identically (the
-    sub-queries remain as the round-1 single-facet API)."""
+    joins for what a single select produces byte-identically (the four
+    facet SQL statements remain as the oracle's sub-queries).
+
+    F27's factor products are exact finite decimals (e.g.
+    0.9*0.85*0.85*0.85 = 0.55271250) that land ON the 6-dp rounding
+    tie, so the whole product is computed in DECIMAL (DuckDB's literals
+    already are) — double math would tie-break differently per engine.
+    """
     om = _om_fields(spark, sf_dir)
     k = F.col("orderkey")
     cap_penalty = C.cap_rate_penalty(

@@ -378,9 +378,6 @@ WHERE ROUND(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
 ORDER BY id_a, id_b
 """
 
-#: the historical B=1 form (kept for direct callers/tests)
-EMBEDDING_NEARDUP_EXACT_SQL = _EMB_NEARDUP_SQL_T.format(SUB="")
-
 
 def embedding_neardup_exact_sql(sf_dir: str) -> str:
     """Oracle builder: same scale-derived sub-block as the Spark side

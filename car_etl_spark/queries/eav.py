@@ -57,9 +57,9 @@ def eav_pivot_effective_rent(spark: SparkSession, sf_dir: str) -> DataFrame:
     # also removes the range-sort SAMPLING pass that was re-executing
     # the pivot + normalizer chains (plans/r12/..._before.txt: Exchange
     # (13) + Exchange(18); after: one Exchange).  Measured 2.59 -> 2.23s
-    # interleaved (scripts/profile_eav_variants.py).  Partition count
-    # comes from spark.sql.shuffle.partitions — scale-adaptive, not a
-    # local constant.
+    # interleaved (scripts/profile_eav_variants.py at commit d864714).
+    # Partition count comes from spark.sql.shuffle.partitions —
+    # scale-adaptive, not a local constant.
     fields = _tall_fields(spark, sf_dir).repartitionByRange("extraction_id")
     wide = P.pivot_eav(
         fields,

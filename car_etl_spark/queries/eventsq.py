@@ -42,8 +42,10 @@ def _ev_money_fns(sf_dir: str):
 
 
 def _events_hourly_rollup_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unordered core of :func:`events_hourly_rollup` — suites consume
-    this so the declared per-arm sort (dead under their union, and
+    """Tumbling 1-hour event-time window x type (T7 / streaming window
+    analog): the batch equivalent of
+    ``groupBy(window('ts','1 hour'), 'event_type')``.  Unordered — suites
+    consume it so a declared per-arm sort (dead under their union, and
     paying its own range-bound sampling job) never enters the plan
     (r13; the r12 ``lsh_neardup_suite`` pattern)."""
     ev = load_tables(spark, sf_dir, ("events",))["events"]
@@ -56,27 +58,6 @@ def _events_hourly_rollup_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         vsum(F.col("value")).alias("total_value"),
         F.countDistinct("user_id").alias("active_users"),
     )
-
-
-def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour event-time window x type (T7 / streaming window
-    analog): the batch equivalent of
-    ``groupBy(window('ts','1 hour'), 'event_type')``."""
-    return _events_hourly_rollup_core(spark, sf_dir).orderBy(
-        "hour_start", "event_type"
-    )
-
-
-EVENTS_HOURLY_SQL = """
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_start,
-       event_type,
-       COUNT(*) AS event_count,
-       CAST(ROUND(SUM(CAST(value AS DECIMAL(30,6))), 2) AS DOUBLE) AS total_value,
-       COUNT(DISTINCT user_id) AS active_users
-FROM events
-GROUP BY 1, 2
-ORDER BY hour_start, event_type
-"""
 
 
 def events_user_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -351,7 +332,11 @@ QUERIES: dict[str, QuerySpec] = {
 
 
 def _events_sliding_window_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unordered core (suite arm — see :func:`_events_hourly_rollup_core`)."""
+    """T7 batch form of the sliding window (1 h window, 30 min slide):
+    each event lands in two overlapping windows — explode the two
+    window starts, aggregate per (window_start, type).  Matches the
+    streaming `sliding_window_value` job expression-for-expression.
+    Unordered suite arm (see :func:`_events_hourly_rollup_core`)."""
     ev = load_tables(spark, sf_dir, ("events",))["events"]
     half_hour = F.date_trunc("hour", F.col("ts") - F.expr("INTERVAL 30 MINUTES"))
     starts = F.array(
@@ -371,16 +356,6 @@ def _events_sliding_window_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",
     ).agg(F.count(F.lit(1)).alias("n"), _ev_money_fns(sf_dir)[0](F.col("value")).alias("total_value"))
-
-
-def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T7 batch form of the sliding window (1 h window, 30 min slide):
-    each event lands in two overlapping windows — explode the two
-    window starts, aggregate per (window_start, type).  Matches the
-    streaming `sliding_window_value` job expression-for-expression."""
-    return _events_sliding_window_core(spark, sf_dir).orderBy(
-        "window_start", "event_type"
-    )
 
 
 # NOTE the dedup carries event_id: two distinct events sharing the same
@@ -515,24 +490,15 @@ HIST_QUANTILES = [(0.5, "p50_value"), (0.9, "p90_value"), (0.99, "p99_value")]
 HIST_BINS = 64
 
 
-def events_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _events_hist_quantiles_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The bounded-state percentile path the exact arm's scale note
     promises: equi-width histogram quantiles
     (``functions/sketches.py``) — at most 64 counters per group with
     full map-side combine, vs the exact form's per-group sort.  Served
     beside the exact arm in the ``events_profile`` suite so the
     sketch's cross-engine portability AND its error on this corpus are
-    both in the driver hash every round."""
-    from car_etl_spark.functions.sketches import (
-        histogram_quantiles,
-        histogram_state,
-    )
-
-    return _events_hist_quantiles_core(spark, sf_dir).orderBy("event_type")
-
-
-def _events_hist_quantiles_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unordered core (suite arm — see :func:`_events_hourly_rollup_core`)."""
+    both in the oracle-checked hash every round.  Unordered suite arm (see
+    :func:`_events_hourly_rollup_core`)."""
     from car_etl_spark.functions.sketches import (
         histogram_quantiles,
         histogram_state,
@@ -568,8 +534,6 @@ ORDER BY qq_out.event_type
 """
 
 
-
-
 #: fixed per-user activity probes for the count-min arm (user ids are
 #: dense from 0 at every SF, so the probe set exists at all scales)
 CMS_PROBE_USERS = tuple(str(u) for u in range(8))
@@ -577,7 +541,7 @@ CMS_D = 4
 CMS_W = 1024
 
 
-def events_user_cms_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _events_user_cms_freq_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min point-frequency estimates of per-user event counts
     (``functions/sketches.py``) — the frequency member of the sketch
     family, the distinct-activity reporting shape over the reference's
@@ -587,12 +551,8 @@ append-only audit events (``src/audit/logger.py``) at
     with user cardinality.  Probes are driver-side literals (no
     in-engine hashing); served beside the exact arm in the
     ``events_profile`` suite so portability AND real over-count on this
-    corpus sit in the driver hash."""
-    return _events_user_cms_freq_core(spark, sf_dir).orderBy("user_key")
-
-
-def _events_user_cms_freq_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unordered core (suite arm — see :func:`_events_hourly_rollup_core`)."""
+    corpus sit in the oracle-checked hash.  Unordered suite arm (see
+    :func:`_events_hourly_rollup_core`)."""
     from car_etl_spark.functions.sketches import cms_estimate, cms_state
 
     ev = load_tables(spark, sf_dir, ("events",))["events"]
@@ -603,15 +563,11 @@ def _events_user_cms_freq_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_user_exact_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _events_user_exact_freq_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact twin of the CMS probes: true per-user event counts for
     the same probe set (absent users count 0, mirroring the sketch's
-    absent-counter semantics)."""
-    return _events_user_exact_freq_core(spark, sf_dir).orderBy("user_key")
-
-
-def _events_user_exact_freq_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unordered core (suite arm — see :func:`_events_hourly_rollup_core`)."""
+    absent-counter semantics).  Unordered suite arm (see
+    :func:`_events_hourly_rollup_core`)."""
     ev = load_tables(spark, sf_dir, ("events",))["events"]
     spark_probes = spark.createDataFrame(
         [(u,) for u in CMS_PROBE_USERS], "user_key string"

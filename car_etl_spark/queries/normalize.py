@@ -19,6 +19,7 @@ from car_etl_spark.tables import load_tables
 
 
 def _currency_core(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """F2: ``$x`` / ``(x)`` accounting negatives / padded / null-words."""
     orders = load_tables(spark, sf_dir, ("orders",))["orders"]
     s = F.round("o_totalprice", 2).cast("string")
     raw = (
@@ -32,11 +33,6 @@ def _currency_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw.alias("raw_value"),
         F.round(N.normalize_currency(raw), 2).alias("normalized"),
     )
-
-
-def currency_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F2: ``$x`` / ``(x)`` accounting negatives / padded / null-words."""
-    return _currency_core(spark, sf_dir).orderBy("o_orderkey")
 
 
 CURRENCY_ROUNDTRIP_SQL = """
@@ -65,6 +61,7 @@ ORDER BY o_orderkey
 
 
 def _date_core(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """F1: four input formats -> ISO; null-words -> NULL."""
     orders = load_tables(spark, sf_dir, ("orders",))["orders"]
     d = F.col("o_orderdate")
     raw = (
@@ -79,11 +76,6 @@ def _date_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw.alias("raw_value"),
         N.normalize_date_str(raw).alias("normalized_date"),
     )
-
-
-def date_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F1: four input formats -> ISO; null-words -> NULL."""
-    return _date_core(spark, sf_dir).orderBy("o_orderkey")
 
 
 DATE_ROUNDTRIP_SQL = """
@@ -103,6 +95,7 @@ ORDER BY o_orderkey
 
 
 def _percent_core(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """F4: ``"7%"`` == ``0.07`` == ``7``; out-of-range -> NULL."""
     li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
     key = F.col("l_orderkey") * 10 + F.col("l_linenumber")
     pct100 = F.round(F.col("l_discount") * 100, 4).cast("string")
@@ -119,11 +112,6 @@ def _percent_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw.alias("raw_value"),
         F.round(N.normalize_percent(raw), 6).alias("normalized_pct"),
     )
-
-
-def percent_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F4: ``"7%"`` == ``0.07`` == ``7``; out-of-range -> NULL."""
-    return _percent_core(spark, sf_dir).orderBy("l_orderkey", "l_linenumber")
 
 
 PERCENT_ROUNDTRIP_SQL = """
@@ -156,6 +144,7 @@ ORDER BY l_orderkey, l_linenumber
 
 
 def _boolean_enum_core(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """F6/F7: truthy/falsy vocabulary + case-insensitive enum matching."""
     cust = load_tables(spark, sf_dir, ("customer",))["customer"]
     words = ["yes", "No", "TRUE", "off", "enabled", "not required", "maybe", "1", "0"]
     bool_raw = F.element_at(
@@ -174,11 +163,6 @@ def _boolean_enum_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         seg_raw.alias("seg_raw"),
         N.normalize_enum(seg_raw, allowed).alias("normalized_segment"),
     )
-
-
-def boolean_enum_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F6/F7: truthy/falsy vocabulary + case-insensitive enum matching."""
-    return _boolean_enum_core(spark, sf_dir).orderBy("c_custkey")
 
 
 BOOLEAN_ENUM_ROUNDTRIP_SQL = """
@@ -210,6 +194,9 @@ ORDER BY c_custkey
 
 
 def _extract_numeric_core(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """F9: the effective-rent lenient parser — keep digits+dots, default
+    0.0 (``src/services/effective_rent.py:49-67``).  Note its documented
+    quirk: ``(1,200)`` parses positive here, unlike F2."""
     orders = load_tables(spark, sf_dir, ("orders",))["orders"]
     s = F.round("o_totalprice", 2).cast("string")
     raw = (
@@ -222,13 +209,6 @@ def _extract_numeric_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw.alias("raw_value"),
         F.round(N.extract_numeric(raw), 2).alias("numeric_value"),
     )
-
-
-def extract_numeric_lenient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F9: the effective-rent lenient parser — keep digits+dots, default
-    0.0 (``src/services/effective_rent.py:49-67``).  Note its documented
-    quirk: ``(1,200)`` parses positive here, unlike F2."""
-    return _extract_numeric_core(spark, sf_dir).orderBy("o_orderkey")
 
 
 EXTRACT_NUMERIC_SQL = """
@@ -248,6 +228,7 @@ ORDER BY o_orderkey
 
 
 def _integer_core(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """F3: comma-separated integers, float-string truncation, null-words."""
     part = load_tables(spark, sf_dir, ("part",))["part"]
     size1000 = (F.col("p_size") * 1000).cast("string")
     raw = (
@@ -261,11 +242,6 @@ def _integer_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw.alias("raw_value"),
         N.normalize_integer(raw).alias("normalized_int"),
     )
-
-
-def integer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F3: comma-separated integers, float-string truncation, null-words."""
-    return _integer_core(spark, sf_dir).orderBy("p_partkey")
 
 
 INTEGER_ROUNDTRIP_SQL = """
@@ -350,10 +326,10 @@ def normalize_roundtrips(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the real pass — with no shuffle boundary under it, that means
     # every normalizer chain ran TWICE (measured: 5.22s direct vs 3.83s
     # with this boundary vs 2.40s sortless;
-    # scripts/profile_normalize_hashpart.py).  The hash exchange
-    # materializes the union once; the sampling pass then re-reads
-    # shuffle files instead of re-normalizing.  Same rows, same final
-    # order.
+    # scripts/profile_normalize_hashpart.py at commit d864714).  The
+    # hash exchange materializes the union once; the sampling pass then
+    # re-reads shuffle files instead of re-normalizing.  Same rows, same
+    # final order.
     return out.repartition("kind", "key_id").orderBy("kind", "key_id")
 
 

@@ -78,11 +78,6 @@ def rnd(c: Column, scale: int = 6) -> Column:
     return F.floor(c * factor + 0.5) / factor
 
 
-def sql_rnd(expr: str, scale: int = 6) -> str:
-    factor = float(10**scale)
-    return f"(FLOOR(({expr}) * {factor} + 0.5) / {factor})"
-
-
 # ---------------------------------------------------------------------------
 # r13 fast path: int64-cents partial aggregation for fixed-scale money
 # columns.  DECIMAL(30,6) sums are exact and order-independent, but any

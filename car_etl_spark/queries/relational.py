@@ -237,8 +237,9 @@ LIMIT 50
 
 
 def _customers_with_orders_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unordered core of :func:`customers_with_orders` — the presence
-    suite consumes this so the per-arm sort (dead under its union, and
+    """Left-semi join (J7/P8) — the RLS EXISTS-subquery shape
+    (reference ``031_extraction_fields.sql:46-52``).  Unordered: the
+    presence suite consumes it so a per-arm sort (dead under its union, and
     paying a range-bound sampling job that re-executes the semi-join)
     never enters the plan (r13; the r12 lsh-suite pattern)."""
     t = load_tables(spark, sf_dir, ("customer", "orders"))
@@ -250,44 +251,16 @@ def _customers_with_orders_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def customers_with_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-semi join (J7/P8) — the RLS EXISTS-subquery shape
-    (reference ``031_extraction_fields.sql:46-52``)."""
-    return _customers_with_orders_core(spark, sf_dir).orderBy("c_custkey")
-
-
-CUSTOMERS_WITH_ORDERS_SQL = """
-SELECT c_custkey, c_name, c_mktsegment
-FROM customer
-WHERE EXISTS (
-  SELECT 1 FROM orders
-  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-ORDER BY c_custkey
-"""
-
-
 def _customers_without_orders_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unordered core (suite arm — see :func:`_customers_with_orders_core`)."""
+    """Left-anti join (J6) — the ingest-dedup shape: rows whose key
+    already exists are dropped (reference ``020_documents.sql:31``).
+    Unordered suite arm (see :func:`_customers_with_orders_core`)."""
     t = load_tables(spark, sf_dir, ("customer", "orders"))
     return (
         t["customer"]
         .join(t["orders"], F.col("c_custkey") == F.col("o_custkey"), "left_anti")
         .select("c_custkey", "c_name", F.round("c_acctbal", 2).alias("acctbal"))
     )
-
-
-def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-anti join (J6) — the ingest-dedup shape: rows whose key
-    already exists are dropped (reference ``020_documents.sql:31``)."""
-    return _customers_without_orders_core(spark, sf_dir).orderBy("c_custkey")
-
-
-CUSTOMERS_WITHOUT_ORDERS_SQL = """
-SELECT c_custkey, c_name, ROUND(c_acctbal, 2) AS acctbal
-FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-ORDER BY c_custkey
-"""
 
 
 def customers_order_presence(spark: SparkSession, sf_dir: str) -> DataFrame:

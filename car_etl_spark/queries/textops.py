@@ -929,30 +929,11 @@ def doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DOC_DUP_CLUSTERS_SQL = """
-SELECT MIN(doc_id) AS cluster_id,
-       COUNT(*) AS cluster_size,
-       COUNT(*) - 1 AS copies_to_drop
-FROM (
-  SELECT doc_id,
-         sha256(array_to_string(
-           list_sort(list_distinct(
-             list_transform(
-               list_filter(string_split_regex(TRIM(text), '[ \\t\\n\\x0B\\f\\r]+'), x -> x <> ''),
-               x -> LOWER(x)))),
-           ' ')) AS fp
-  FROM documents
-)
-GROUP BY fp
-HAVING COUNT(*) > 1
-ORDER BY cluster_id
-"""
-
 # r11: the doc_dup_clusters registry slot was folded into
 # doc_exact_dedup_stats (cc_* columns — the connected-components
 # closure hash-checked against the fp-groupBy ground truth at source
 # grain), freeing the slot for training_pack.  The cluster-grain
-# function and its oracle stay exported for direct use.
+# function stays for the bench's fine-grained rows.
 
 
 #: the substring-serving pattern — crosses a token boundary (space

@@ -20,10 +20,6 @@ from car_etl_spark.queries import QuerySpec
 from car_etl_spark.tables import load_tables
 
 
-def _query_vec(emb: DataFrame) -> DataFrame:
-    return emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
-
-
 #: fetched query vectors keyed by (sf_dir, dataset mtime) — in
 #: production the query embedding arrives AS a request parameter (the
 #: caller embeds the query string once); reading it back out of the
@@ -41,10 +37,6 @@ def _qvec_cache_key(sf_dir: str):
         return (sf_dir, os.stat(path).st_mtime_ns)
     except OSError:
         return None  # non-filesystem layout: skip caching rather than serve stale
-
-
-def clear_query_vec_cache() -> None:
-    _QVEC_CACHE.clear()
 
 
 def _query_vec_literal(emb: DataFrame, cache_key: str | None = None):
@@ -146,63 +138,6 @@ top AS (
 )
 SELECT label, COUNT(*) AS votes, ROUND(AVG(s), 6) AS avg_sim
 FROM top GROUP BY label ORDER BY votes DESC, label ASC
-"""
-
-
-def vector_label_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full-corpus similarity rollup per label — the 'cluster quality'
-    scan (one pass, map-side partial agg)."""
-    emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    q = _query_vec(emb)
-    sim = V.cosine_similarity(F.col("embedding"), F.col("qvec"))
-    return (
-        emb.crossJoin(F.broadcast(q))
-        .select("label", sim.alias("s"))
-        .groupBy("label")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.avg("s"), 6).alias("avg_sim"),
-            F.round(F.max("s"), 6).alias("max_sim"),
-            F.round(F.min("s"), 6).alias("min_sim"),
-        )
-        .orderBy("label")
-    )
-
-
-VECTOR_LABEL_SIMILARITY_SQL = """
-WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0)
-SELECT label, COUNT(*) AS n,
-       ROUND(AVG(list_cosine_similarity(embedding::DOUBLE[], qvec::DOUBLE[])), 6) AS avg_sim,
-       ROUND(MAX(list_cosine_similarity(embedding::DOUBLE[], qvec::DOUBLE[])), 6) AS max_sim,
-       ROUND(MIN(list_cosine_similarity(embedding::DOUBLE[], qvec::DOUBLE[])), 6) AS min_sim
-FROM embeddings, q
-GROUP BY label ORDER BY label
-"""
-
-
-def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Norm statistics per label — embedding-hygiene check (catches
-    unnormalized or degenerate vectors before they poison ANN)."""
-    emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    nrm = V.norm(F.col("embedding"))
-    return (
-        emb.select("label", nrm.alias("nrm"))
-        .groupBy("label")
-        .agg(
-            F.round(F.avg("nrm"), 6).alias("avg_norm"),
-            F.round(F.min("nrm"), 6).alias("min_norm"),
-            F.round(F.max("nrm"), 6).alias("max_norm"),
-        )
-        .orderBy("label")
-    )
-
-
-EMBEDDING_NORMS_SQL = """
-SELECT label,
-       ROUND(AVG(sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))), 6) AS avg_norm,
-       ROUND(MIN(sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))), 6) AS min_norm,
-       ROUND(MAX(sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))), 6) AS max_norm
-FROM embeddings GROUP BY label ORDER BY label
 """
 
 

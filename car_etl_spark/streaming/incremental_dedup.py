@@ -125,7 +125,8 @@ def dedup_batch(
     #   full store scan for rows that could never match.  Strictly
     #   less I/O; measured −27% per batch at a 140k-doc store in one
     #   profile session, flat-within-noise in a noisier second one
-    #   (scripts/profile_incremental_dedup.py, pair parity asserted).
+    #   (scripts/profile_incremental_dedup.py at commit d864714, pair
+    #   parity asserted).
     # - the new banded side is BROADCAST below a row gate, decided by
     #   the TRUE batch count (a near-free job on the just-checkpointed
     #   RDD) instead of Catalyst's size estimate.  At the profile scale

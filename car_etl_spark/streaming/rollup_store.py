@@ -104,14 +104,14 @@ class RollupStore:
     # Same discipline as the posting/IVF stores (operators/indexing):
     # base/delta live under layout-<gen>/, build/compact publish a new
     # generation by flipping _current.json (deferred GC gives in-flight
-    # serves one compact interval of grace), gen 0 = the legacy in-place
-    # layout.  Meta rides INSIDE the generation's base/ so spec, schema,
-    # and compaction epoch publish together.  Sentinels, pending
-    # markers, and the dirty flag stay at the store root (batch ids are
-    # global, not per-generation).  refresh_dates also publishes a new
-    # generation: unchanged partitions hardlink across (one os.link per
-    # file, no data copy), so the bounded invalidation refresh gets the
-    # same never-invalidate-an-in-flight-serve guarantee as compact.
+    # serves one compact interval of grace).  Meta rides INSIDE the
+    # generation's base/ so spec, schema, and compaction epoch publish
+    # together.  Sentinels, pending markers, and the dirty flag stay at
+    # the store root (batch ids are global, not per-generation).
+    # refresh_dates also publishes a new generation: unchanged
+    # partitions hardlink across (one os.link per file, no data copy),
+    # so the bounded invalidation refresh gets the same
+    # never-invalidate-an-in-flight-serve guarantee as compact.
 
     def _gen(self) -> int:
         from car_etl_spark.operators.indexing import _layout_gen
@@ -316,7 +316,7 @@ class RollupStore:
             os.remove(self._dirty_path)
         except OSError:
             pass
-        _gc_store_generations(self.path, new_gen, ("base", "delta"))
+        _gc_store_generations(self.path, new_gen)
 
     def _has_parquet(self, d: str) -> bool:
         from car_etl_spark.operators.indexing import _dir_has_parquet
@@ -680,7 +680,7 @@ class RollupStore:
             # publish a generation built from pre-steal state
             _check_maintenance_lease(lease)
         _flip_layout(self.path, new_gen, fence=lease.fence if lease else None)
-        _gc_store_generations(self.path, new_gen, ("base", "delta"))
+        _gc_store_generations(self.path, new_gen)
 
 
 def run_rollup_maintenance(

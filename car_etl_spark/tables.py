@@ -31,11 +31,6 @@ TABLES = (
     "embeddings",
 )
 
-# Small dimension tables that should always be broadcast in joins: even at
-# 100 TB fact scale these stay O(MB) (regions/nations are bounded; parts
-# and suppliers grow slowly relative to facts).
-BROADCAST_DIMS = frozenset({"region", "nation", "supplier", "part"})
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -71,10 +66,6 @@ def load_tables(
             df = df.filter(df["tenant_id"] == tenant_id)
         out[name] = df
     return out
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_tables(spark, sf_dir, names=(name,))[name]
 
 
 def parquet_rowcount(sf_dir: str, name: str) -> int:

@@ -7,8 +7,10 @@ physical plans.
 
 from __future__ import annotations
 
+import ast
 import os
 import re
+from collections import Counter
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "car_etl_spark")
 
@@ -82,3 +84,47 @@ def test_no_rdd_usage():
             line = src[: m.start()].count("\n") + 1
             offenders.append(f"{os.path.relpath(path, PKG)}:{line}")
     assert not offenders, f".rdd usage: {offenders}"
+
+
+#: directories under the repo root that hold no source: VCS data,
+#: built index stores, benchmark run dirs, the Spark warehouse
+_WALK_SKIP = {".git", ".cache", ".perfbench", "spark-warehouse"}
+
+
+def _top_level_names(tree):
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            yield node.name, node.lineno
+        elif isinstance(node, ast.Assign):
+            for target in node.targets:
+                for n in ast.walk(target):
+                    if isinstance(n, ast.Name):
+                        yield n.id, node.lineno
+        elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+            yield node.target.id, node.lineno
+
+
+def test_no_unreferenced_top_level_definitions():
+    """Every top-level def/class/assignment in the package is named
+    somewhere in the repo's Python besides its own definition line — a
+    query form, helper or constant nothing references is code nothing
+    checks.  Word-boundary match, so a mention in a docstring or comment
+    counts; only dunders are exempt."""
+    repo = os.path.dirname(PKG)
+    uses: Counter = Counter()
+    for root, dirs, files in os.walk(repo):
+        dirs[:] = [d for d in dirs if d not in _WALK_SKIP]
+        for f in files:
+            if f.endswith(".py"):
+                uses.update(re.findall(r"\w+", open(os.path.join(root, f)).read()))
+    offenders = []
+    for path in _py_files():
+        src = open(path).read()
+        lines = src.split("\n")
+        for name, lineno in _top_level_names(ast.parse(src)):
+            if name.startswith("__") and name.endswith("__"):
+                continue
+            at_def = re.findall(r"\w+", lines[lineno - 1]).count(name)
+            if uses[name] <= at_def:
+                offenders.append(f"{os.path.relpath(path, PKG)}:{lineno} {name}")
+    assert not offenders, f"unreferenced top-level definitions: {offenders}"

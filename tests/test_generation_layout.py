@@ -9,14 +9,12 @@ generation-numbered: build/compact write ``layout-<gen+1>/`` (invisible
 until published), atomically flip the ``_current.json`` pointer, and
 defer GC of generation ``gen-1`` until the NEXT compact — so a serve
 pinned to the previous generation finishes against files that still
-exist.  Gen 0 is the legacy in-place layout; pre-r9 stores serve
-unchanged and migrate on their next compact.
+exist.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import functions as F
 
@@ -60,47 +58,13 @@ def test_posting_generation_gc_keeps_one_of_grace(spark, tmp_path):
     store.build(_docs_df(spark, DOCS_V0))  # gen 1
     assert _gen(store.path) == 1
     store.apply_batch(spark, _docs_df(spark, DOCS_B1), None, batch=1)
-    store.compact(spark)  # gen 2; gen 0 (legacy, empty) GC'd
+    store.compact(spark)  # gen 2
     assert _gen(store.path) == 2
     assert os.path.isdir(os.path.join(store.path, "layout-1"))  # grace
     store.compact(spark)  # gen 3; gen 1 GC'd
     assert _gen(store.path) == 3
     assert not os.path.isdir(os.path.join(store.path, "layout-1"))
     assert os.path.isdir(os.path.join(store.path, "layout-2"))
-
-
-def _make_legacy(store):
-    """Fabricate a pre-r9 in-place layout: move the current generation's
-    dirs to the store root and drop the pointer."""
-    root = store.path
-    gen_root = os.path.join(root, f"layout-{_gen(root)}")
-    for d in os.listdir(gen_root):
-        os.rename(os.path.join(gen_root, d), os.path.join(root, d))
-    shutil.rmtree(gen_root)
-    os.remove(os.path.join(root, "_current.json"))
-
-
-def test_posting_legacy_layout_serves_and_migrates(spark, tmp_path):
-    store = IX.PostingStore(str(tmp_path / "p"))
-    store.build(_docs_df(spark, DOCS_V0))
-    expected = _live_postings(store, spark)
-    _make_legacy(store)
-    assert _gen(store.path) == 0
-    # legacy store serves unchanged (paths resolve to the root dirs)
-    assert store.base_dir == os.path.join(store.path, "base")
-    reopened = IX.PostingStore(str(tmp_path / "p"))
-    assert _live_postings(reopened, spark) == expected
-    # maintenance works on the legacy layout
-    assert reopened.apply_batch(spark, _docs_df(spark, DOCS_B1), None, batch=1)
-    after_batch = _live_postings(reopened, spark)
-    # compact MIGRATES to layout-1; legacy root dirs survive one compact
-    reopened.compact(spark)
-    assert _gen(store.path) == 1
-    assert _live_postings(reopened, spark) == after_batch
-    assert os.path.isdir(os.path.join(store.path, "base"))  # grace
-    reopened.compact(spark)  # gen 2: legacy (gen 0) GC'd
-    assert not os.path.isdir(os.path.join(store.path, "base"))
-    assert _live_postings(reopened, spark) == after_batch
 
 
 def test_ivf_inflight_read_survives_compact(spark, tmp_path):

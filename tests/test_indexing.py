@@ -1139,6 +1139,27 @@ def test_regex_search_matches_and_fallback(spark, tmp_path):
         tok.regex_search(spark, "quick", docs)
 
 
+def test_regex_prefilter_skips_substring_sort(spark, tmp_path, monkeypatch):
+    """The literal prefilter only collects candidate ids up to the cap,
+    which does not depend on row order — so it must ask
+    substring_search for the unordered form (an ordered one pays a
+    range exchange and its bound-sampling job per literal)."""
+    store = IX.PostingStore(str(tmp_path / "trio"), analyzer="trigram")
+    docs = _sub_docs(spark, SUB_DOCS)
+    store.build(docs)
+    seen = []
+    orig = IX.PostingStore.substring_search
+
+    def recording(self, *args, **kwargs):
+        seen.append(kwargs.get("ordered", True))
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(IX.PostingStore, "substring_search", recording)
+    got = [tuple(r) for r in store.regex_search(spark, "quick [a-z]+ fox", docs).collect()]
+    assert seen == [False, False]
+    assert got == [(1, "en", 1)]
+
+
 # ---------------------------------------------------------------------------
 # Compaction-epoch crash window: stranded delta/tombstone files after a
 # crash between compact's base swap and its cleanup must be ignored

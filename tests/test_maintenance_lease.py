@@ -467,9 +467,9 @@ def test_publish_detects_steal_between_check_and_flip(tmp_path, monkeypatch):
 
     monkeypatch.setattr(IX, "_test_pre_flip_delay", steal_now)
     with pytest.raises(IX.MaintenanceFencedError):
-        IX._publish_store_generation(root, 1, ("base", "delta"), lease=a)
+        IX._publish_store_generation(root, 1, lease=a)
     # the loser KNOWS; the new owner's next publish supersedes the flip
-    IX._publish_store_generation(root, 2, ("base", "delta"), lease=stolen["lease"])
+    IX._publish_store_generation(root, 2, lease=stolen["lease"])
     assert _ptr(root)["gen"] == 2
     assert _ptr(root)["fence"] == stolen["lease"].fence
     IX.release_maintenance_lease(stolen["lease"])

@@ -98,6 +98,21 @@ def test_normalize_enum_golden(spark):
     assert _apply(spark, N.normalize_enum, vals, allowed_values=allowed) == list(expected)
 
 
+def test_normalize_list_of_strings_golden(spark):
+    # F5: split on newline and semicolon, strip leading/trailing dashes,
+    # bullets and whitespace, drop empties; NULL in -> NULL out
+    cases = [
+        ("- Pool\n• Gym ;  Parking -", ["Pool", "Gym", "Parking"]),
+        ("a;;b\n\n", ["a", "b"]),
+        ("  - • -  ", []),
+        ("well-lit lobby", ["well-lit lobby"]),
+        (None, None),
+    ]
+    df = spark.createDataFrame([(v,) for v, _ in cases], "v string")
+    got = [r.r for r in df.select(N.normalize_list_of_strings(F.col("v")).alias("r")).collect()]
+    assert got == [want for _, want in cases]
+
+
 def test_canonicalize_golden(spark):
     cases = [
         ("Acme Properties, LLC", "acme properties"),
