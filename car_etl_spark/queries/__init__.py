@@ -44,7 +44,7 @@ def resolve_oracle(oracle: str | Callable[[str], str] | None, sf_dir: str) -> st
 
 
 #: prepared-statement cache for the serving-shaped queries, keyed by
-#: (Spark application id, query name, corpus dir, source mtimes).
+#: (Spark application id, query name, corpus dir, source file identities).
 _PREPARED: dict[tuple, DataFrame] = {}
 
 
@@ -62,19 +62,20 @@ def prepared(
     (immutable, content-addressed) inputs, so caching it only skips the
     per-call plan construction + analysis + file-listing overhead —
     measured ~0.35 s of a 0.51 s vector_topk call at sf0.1, i.e. the
-    majority of sub-second serving latency.  The cache key carries the
-    source file mtimes (regenerated corpus -> fresh plan) and the Spark
-    application id (a restarted session never sees another session's
-    plans).  Only STATIC queries (fixed terms / fixed query vector per
-    corpus) may use this; anything parameterized per call must build its
-    plan per call."""
+    majority of sub-second serving latency.  The cache key carries each
+    source's file identity (``tables.file_identity``: every parquet
+    file's path, mtime and size, so a regenerated corpus or a part file
+    rewritten in place gets a fresh plan) and the Spark application id
+    (a restarted session never sees another session's plans).  Only
+    STATIC queries (fixed terms / fixed query vector per corpus) may use
+    this; anything parameterized per call must build its plan per
+    call."""
     import os
 
-    try:
-        stamps = tuple(
-            os.stat(os.path.join(sf_dir, s)).st_mtime_ns for s in sources
-        )
-    except OSError:
+    from car_etl_spark.tables import file_identity
+
+    stamps = tuple(file_identity(os.path.join(sf_dir, s)) for s in sources)
+    if None in stamps:
         return build()  # non-filesystem layout: skip caching, never serve stale
     key = (spark.sparkContext.applicationId, name, os.path.realpath(sf_dir), stamps)
     df = _PREPARED.get(key)

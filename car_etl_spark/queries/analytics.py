@@ -31,7 +31,7 @@ from car_etl_spark.queries.parity import (
     sql_dsum,
     sql_dsum_raw,
 )
-from car_etl_spark.tables import load_tables, parquet_column_absmax, parquet_rowcount
+from car_etl_spark.tables import load_tables, parquet_sum_bound
 
 
 def _customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -287,18 +287,12 @@ ORDER BY l_orderkey, l_linenumber
 
 def _o_sum(sf_dir: str):
     """dsum or its int64-cents twin under the orders footer proof."""
-    ok = int64_cents_safe(
-        parquet_rowcount(sf_dir, "orders"),
-        parquet_column_absmax(sf_dir, "orders", "o_totalprice"),
-    )
+    ok = int64_cents_safe(*parquet_sum_bound(sf_dir, "orders", "o_totalprice"))
     return money_fns(ok)[0]
 
 
 def _o_avg(sf_dir: str):
-    ok = int64_cents_safe(
-        parquet_rowcount(sf_dir, "orders"),
-        parquet_column_absmax(sf_dir, "orders", "o_totalprice"),
-    )
+    ok = int64_cents_safe(*parquet_sum_bound(sf_dir, "orders", "o_totalprice"))
     return money_fns(ok)[2]
 
 

@@ -22,23 +22,14 @@ from car_etl_spark.queries.parity import (
     sql_davg,
     sql_dsum,
 )
-from car_etl_spark.tables import (
-    load_tables,
-    parquet_column_absmax,
-    parquet_column_min,
-    parquet_rowcount,
-)
+from car_etl_spark.tables import load_tables, parquet_column_min, parquet_sum_bound
 
 
 def _ev_money_fns(sf_dir: str):
     """(sum, sum_raw, avg) for events.value — the int64-cents twins when
     the events footer proves no overflow (r13 decimal tail; see
     parity.int64_cents_safe), the DECIMAL(30,6) forms otherwise."""
-    ok = int64_cents_safe(
-        parquet_rowcount(sf_dir, "events"),
-        parquet_column_absmax(sf_dir, "events", "value"),
-    )
-    return money_fns(ok)
+    return money_fns(int64_cents_safe(*parquet_sum_bound(sf_dir, "events", "value")))
 
 
 def _events_hourly_rollup_core(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -181,15 +172,10 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # non-negatives) -> per-user long sum -> one exact decimal finish.
     # Bit-identical to the decimal path (never leaves integers between
     # the levels); falls back to DECIMAL(30,6) when unprovable.
-    mn = parquet_column_min(sf_dir, "events", "value")
-    int_ok = (
-        int64_cents_safe(
-            parquet_rowcount(sf_dir, "events"),
-            parquet_column_absmax(sf_dir, "events", "value"),
-        )
-        and mn is not None
-        and mn >= 0.0
-    )
+    int_ok = int64_cents_safe(*parquet_sum_bound(sf_dir, "events", "value"))
+    if int_ok:
+        mn = parquet_column_min(sf_dir, "events", "value")
+        int_ok = mn is not None and mn >= 0.0
     if int_ok:
         lvl1 = (
             with_session.groupBy("user_id", "session_id")
@@ -753,10 +739,7 @@ def _events_multires_rollup_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact carrier is int64 cents6 when the events footer proves no
     # overflow (integer sums re-group losslessly just like decimals,
     # without the BigDecimal per-row cost); DECIMAL(30,6) otherwise.
-    int_ok = int64_cents_safe(
-        parquet_rowcount(sf_dir, "events"),
-        parquet_column_absmax(sf_dir, "events", "value"),
-    )
+    int_ok = int64_cents_safe(*parquet_sum_bound(sf_dir, "events", "value"))
     vpart = cents6(F.col("value")) if int_ok else F.col("value").cast(DEC)
     minute = ev.groupBy(
         F.date_trunc("minute", F.col("ts")).alias("minute_start"), "event_type"

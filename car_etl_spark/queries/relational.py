@@ -27,7 +27,12 @@ from car_etl_spark.queries.parity import (
     sql_dsum,
     sql_dsum_raw,
 )
-from car_etl_spark.tables import load_tables, parquet_column_absmax, parquet_rowcount
+from car_etl_spark.tables import (
+    load_tables,
+    parquet_column_absmax,
+    parquet_rowcount,
+    parquet_sum_bound,
+)
 
 
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -70,8 +75,12 @@ def _lineitem_money_bound(sf_dir: str) -> tuple[int, float | None]:
     expression the relational queries sum) from footer metadata.  The
     bound covers l_quantity, l_extendedprice, and the disc_price/charge
     products: |price * (1 +- disc) * (1 +- tax)| <= maxprice *
-    (1 + maxabs(disc)) * (1 + maxabs(tax))."""
+    (1 + maxabs(disc)) * (1 + maxabs(tax)).  The column statistics are
+    not walked when the row count is unknown: that alone fails the
+    proof."""
     n = parquet_rowcount(sf_dir, "lineitem")
+    if n < 0:
+        return n, None
     mq = parquet_column_absmax(sf_dir, "lineitem", "l_quantity")
     mp = parquet_column_absmax(sf_dir, "lineitem", "l_extendedprice")
     md = parquet_column_absmax(sf_dir, "lineitem", "l_discount")
@@ -94,10 +103,7 @@ def _li_sum(sf_dir: str):
 
 def _orders_int64_ok(sf_dir: str) -> bool:
     """Footer proof for o_totalprice sums/averages."""
-    return int64_cents_safe(
-        parquet_rowcount(sf_dir, "orders"),
-        parquet_column_absmax(sf_dir, "orders", "o_totalprice"),
-    )
+    return int64_cents_safe(*parquet_sum_bound(sf_dir, "orders", "o_totalprice"))
 
 
 Q1_SQL = """

@@ -5,8 +5,20 @@ query goes through it, which is where a production deployment would hang
 tenant isolation (SURVEY.md §1 "Tenancy": a mandatory
 ``filter(tenant_id == ...)`` mirroring the reference's RLS,
 reference ``supabase/migrations/020_documents.sql:51-60``) and
-partition-pruning predicates.  Reads are plain ``spark.read.parquet`` so
-Catalyst keeps projection/filter pushdown (`PushedFilters` in explain).
+partition-pruning predicates.  Catalyst keeps projection/filter pushdown
+(`PushedFilters` in explain).
+
+Every read passes the table's schema explicitly.  Without one, Spark
+starts a schema-inference job per table per call (measured 110-150 ms
+CPU each against 18-26 ms with the schema passed in, six per batch
+pass of the perfbench ``batch`` rows).  The schema is inferred once and
+memoized per (Spark application id, table path) together with the
+table's file identity: every parquet file's path, ``mtime_ns`` and
+size (:func:`file_identity`).  A rewritten or added part file
+therefore changes the identity and is inferred again, and a layout
+whose identity cannot be read (a non-filesystem path) is read without
+the memo, never against a stale schema.  The memo holds schema
+metadata only: no rows, no ``.cache()``.
 """
 
 from __future__ import annotations
@@ -15,6 +27,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from car_etl_spark.session import tune_session
 
@@ -33,6 +46,55 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+#: inferred table schemas: (application id, table path) -> (file
+#: identity the schema was inferred from, schema).  One entry per table
+#: per application, replaced when the table's files change.  Two
+#: threads missing at once both infer the same schema; the later store
+#: wins, which is harmless.
+_SCHEMAS: dict[tuple[str, str], tuple[tuple, StructType]] = {}
+
+
+def _parquet_files(path: str) -> list[str]:
+    """The parquet files of a table: ``path`` itself, or every
+    ``.parquet`` file under it (sorted) when it is a directory layout."""
+    if not os.path.isdir(path):
+        return [path]
+    files = []
+    for root, _dirs, fns in os.walk(path):
+        files.extend(os.path.join(root, fn) for fn in fns if fn.endswith(".parquet"))
+    return sorted(files)
+
+
+def file_identity(path: str) -> tuple | None:
+    """``(file, mtime_ns, size)`` of every parquet file of a table, or
+    ``None`` when it cannot be read (non-filesystem path, missing file,
+    empty directory).  Directory layouts are identified by their part
+    files, not by the directory's own mtime, which an in-place rewrite
+    of a part file leaves unchanged."""
+    try:
+        ident = []
+        for f in _parquet_files(path):
+            st = os.stat(f)
+            ident.append((f, st.st_mtime_ns, st.st_size))
+    except OSError:
+        return None
+    return tuple(ident) or None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the memoized schema when the
+    table's files are unchanged since it was inferred."""
+    ident = file_identity(path)
+    if ident is None:
+        return spark.read.parquet(path)
+    key = (spark.sparkContext.applicationId, os.path.realpath(path))
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == ident:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (ident, df.schema)
+    return df
+
 
 def load_tables(
     spark: SparkSession,
@@ -48,7 +110,7 @@ def load_tables(
     tune_session(spark)
     out: dict[str, DataFrame] = {}
     for name in names:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
         if name == "events" and dict(df.dtypes).get("ts") == "bigint":
             # TIMESTAMP(NANOS) read as long (nanosAsLong); truncate to
             # micros exactly as DuckDB does when reading the same file.
@@ -81,99 +143,74 @@ def parquet_rowcount(sf_dir: str, name: str) -> int:
     treat -1 as LARGE, not small (see queries/entity._gated_hot_keys)."""
     import pyarrow.parquet as pq
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
     try:
-        if os.path.isdir(path):
-            files = []
-            for root, _dirs, fns in os.walk(path):
-                files.extend(
-                    os.path.join(root, fn) for fn in fns if fn.endswith(".parquet")
-                )
-            if not files:
-                return -1
-            return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-        return pq.ParquetFile(path).metadata.num_rows
+        files = _parquet_files(os.path.join(sf_dir, f"{name}.parquet"))
+        if not files:
+            return -1
+        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
     except Exception:
         return -1
+
+
+def _column_range(sf_dir: str, name: str, column: str) -> tuple | None:
+    """(min, max) of a column over every row group's FOOTER statistics —
+    no Spark job, no scan (the pg_stats analog); ``(None, None)`` when
+    the files hold no row group.  ``None`` when any row group lacks
+    min/max stats, the column is missing or a footer is unreadable: an
+    unprovable bound must fail a proof, never pass it."""
+    import pyarrow.parquet as pq
+
+    lo = hi = None
+    try:
+        files = _parquet_files(os.path.join(sf_dir, f"{name}.parquet"))
+        if not files:
+            return None
+        for f in files:
+            md = pq.ParquetFile(f).metadata
+            idx = next(
+                (i for i in range(md.num_columns) if md.schema.column(i).name == column),
+                None,
+            )
+            if idx is None:
+                return None
+            for rg in range(md.num_row_groups):
+                st = md.row_group(rg).column(idx).statistics
+                if st is None or not st.has_min_max:
+                    return None
+                lo = float(st.min) if lo is None else min(lo, float(st.min))
+                hi = float(st.max) if hi is None else max(hi, float(st.max))
+    except Exception:
+        return None
+    return lo, hi
 
 
 def parquet_column_min(sf_dir: str, name: str, column: str) -> float | None:
     """Column minimum from footer row-group statistics (None when any
     row group lacks stats) — proves non-negativity for integer HALF_UP
     rounding in the int64-cents path."""
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        if os.path.isdir(path):
-            files = []
-            for root, _dirs, fns in os.walk(path):
-                files.extend(
-                    os.path.join(root, fn) for fn in fns if fn.endswith(".parquet")
-                )
-        else:
-            files = [path]
-        if not files:
-            return None
-        worst = None
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            idx = None
-            for i in range(md.num_columns):
-                if md.schema.column(i).name == column:
-                    idx = i
-                    break
-            if idx is None:
-                return None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                v = float(st.min)
-                worst = v if worst is None else min(worst, v)
-        return worst
-    except Exception:
-        return None
+    rng = _column_range(sf_dir, name, column)
+    return None if rng is None else rng[0]
 
 
 def parquet_column_absmax(sf_dir: str, name: str, column: str) -> float | None:
-    """max(|min|, |max|) of a numeric column from parquet FOOTER
-    row-group statistics — no Spark job, no scan (the pg_stats analog).
+    """max(|min|, |max|) of a numeric column from footer row-group
+    statistics.
 
     Feeds the int64-cents overflow proof
     (:func:`car_etl_spark.queries.parity.int64_cents_safe`).  Returns
     ``None`` when any row group lacks min/max stats (or the footer is
-    unreadable): an unprovable bound must fail the proof, never pass it,
-    so callers fall back to the always-correct decimal path."""
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        if os.path.isdir(path):
-            files = []
-            for root, _dirs, fns in os.walk(path):
-                files.extend(
-                    os.path.join(root, fn) for fn in fns if fn.endswith(".parquet")
-                )
-        else:
-            files = [path]
-        if not files:
-            return None
-        best = 0.0
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            idx = None
-            for i in range(md.num_columns):
-                if md.schema.column(i).name == column:
-                    idx = i
-                    break
-            if idx is None:
-                return None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                best = max(best, abs(float(st.min)), abs(float(st.max)))
-        return best
-    except Exception:
+    unreadable), so callers fall back to the always-correct decimal
+    path."""
+    rng = _column_range(sf_dir, name, column)
+    if rng is None:
         return None
+    return 0.0 if rng[0] is None else max(abs(rng[0]), abs(rng[1]))
+
+
+def parquet_sum_bound(sf_dir: str, name: str, column: str) -> tuple[int, float | None]:
+    """(row count, max |value| of ``column``) from footer metadata — the
+    two inputs of :func:`car_etl_spark.queries.parity.int64_cents_safe`
+    for sums of one column.  The column statistics are not walked when
+    the row count is unknown (-1): that alone fails the proof."""
+    n = parquet_rowcount(sf_dir, name)
+    return n, (parquet_column_absmax(sf_dir, name, column) if n >= 0 else None)

@@ -112,3 +112,40 @@ def test_multires_int_cascade_matches_decimal_cascade(spark):
     finally:
         E.int64_cents_safe = orig
     assert fast == slow
+
+
+def test_q1_guard_on_multifile_lineitem_and_missing_stats(spark, tmp_path, monkeypatch):
+    """A directory layout engages the cents path when every part file's
+    footer proves the bound, and falls back to the decimal path when
+    one part file carries no min/max statistics; the result is the
+    single-file corpus's either way.  An unknown row count fails the
+    proof before any column statistics are walked."""
+    import pyarrow.parquet as pq
+
+    from car_etl_spark import tables as T
+    from car_etl_spark.queries import relational as R
+
+    li = pq.read_table(f"{SF_SMALL}/lineitem.parquet")
+    half = li.num_rows // 2
+    table = tmp_path / "lineitem.parquet"
+    table.mkdir()
+    pq.write_table(li.slice(0, half), str(table / "part-0.parquet"))
+    pq.write_table(li.slice(half), str(table / "part-1.parquet"))
+    want = R.q1_pricing_summary(spark, SF_SMALL).collect()
+
+    assert R._lineitem_money_bound(str(tmp_path))[0] == li.num_rows
+    assert R._q1_int64_ok(str(tmp_path)), "every part file carries stats"
+    assert R.q1_pricing_summary(spark, str(tmp_path)).collect() == want
+
+    pq.write_table(li.slice(half), str(table / "part-1.parquet"), write_statistics=False)
+    assert not R._q1_int64_ok(str(tmp_path)), "a part file without stats proves nothing"
+    assert R.q1_pricing_summary(spark, str(tmp_path)).collect() == want
+
+    def walked(*_a):
+        raise AssertionError("column statistics walked for an unknown row count")
+
+    monkeypatch.setattr(R, "parquet_column_absmax", walked)
+    monkeypatch.setattr(T, "parquet_column_absmax", walked)
+    missing = str(tmp_path / "missing")
+    assert R._lineitem_money_bound(missing) == (-1, None)
+    assert T.parquet_sum_bound(missing, "orders", "o_totalprice") == (-1, None)
