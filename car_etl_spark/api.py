@@ -44,9 +44,9 @@ from car_etl_spark.functions import text as T
 from car_etl_spark.functions import vectors as V
 from car_etl_spark.operators import rag as R
 from car_etl_spark.queries.parity import dsum_raw
+from car_etl_spark.queries.search import leg_rank, rrf_fuse
 from car_etl_spark.queries.textops import keyword_scores
 
-RRF_K = 60
 SEARCH_RESULT_CAP = 100  # reference src/api/routes/search.py:65-70
 
 
@@ -56,10 +56,7 @@ def _keyword_leg(corpus: DataFrame, terms: tuple[str, ...], fetch: int) -> DataF
         .filter(F.col("score") > 0)
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(fetch)
-        .withColumn(
-            "rank",
-            F.row_number().over(Window.orderBy(F.desc("score"), F.asc("doc_id"))).cast("long"),
-        )
+        .withColumn("rank", leg_rank("score"))
     )
 
 
@@ -71,10 +68,7 @@ def _vector_leg(embeddings: DataFrame, query_vec: Column, fetch: int) -> DataFra
         .select(F.col("vec_id").alias("doc_id"), sim.alias("score"))
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(fetch)
-        .withColumn(
-            "rank",
-            F.row_number().over(Window.orderBy(F.desc("score"), F.asc("doc_id"))).cast("long"),
-        )
+        .withColumn("rank", leg_rank("score"))
     )
 
 
@@ -104,25 +98,18 @@ def search(
     vec = _vector_leg(embeddings, query_vec, fetch).select(
         "doc_id", F.col("rank").alias("vec_rank")
     )
-    return _rrf_fuse(kw, vec, limit)
+    return rrf_fuse(kw, vec, limit)
 
 
-def _rrf_fuse(kw: DataFrame, vec: DataFrame, limit: int) -> DataFrame:
-    """RRF fusion shared by EVERY hybrid route (k=60, round 8,
-    rrf-desc / doc_id-asc tie-break, leg miss = NULL rank) — one
-    definition so the plain and tenant-scoped surfaces cannot drift.
-    Inputs: (doc_id, kw_rank) and (doc_id, vec_rank), ranks 1-based."""
-    fused = kw.join(vec, "doc_id", "full_outer")
-    rrf = F.round(
-        F.coalesce(1.0 / (RRF_K + F.col("kw_rank")), F.lit(0.0))
-        + F.coalesce(1.0 / (RRF_K + F.col("vec_rank")), F.lit(0.0)),
-        8,
-    )
-    return (
-        fused.select("doc_id", rrf.alias("rrf_score"), "kw_rank", "vec_rank")
-        .orderBy(F.desc("rrf_score"), F.asc("doc_id"))
-        .limit(limit)
-    )
+def _stem_fn(posting_store):
+    """The driver-side stemmer matching the store's analyzer."""
+    if posting_store.analyzer == "porter":
+        from car_etl_spark.functions.porter import porter_py
+
+        return porter_py
+    from car_etl_spark.functions.text import stem_py
+
+    return stem_py
 
 
 def tenant_search(
@@ -140,12 +127,9 @@ def tenant_search(
     the tenant's (tenant, term_bucket) partition directories, so a
     tenant's query can never touch another tenant's data — isolation
     by storage layout, not by post-filter."""
-    if posting_store.analyzer == "porter":
-        from car_etl_spark.functions.porter import porter_py as stem_fn
-    else:
-        from car_etl_spark.functions.text import stem_py as stem_fn
+    stem = _stem_fn(posting_store)
     limit = min(limit, SEARCH_RESULT_CAP)
-    stems = sorted({stem_fn(t.lower()) for t in terms})
+    stems = sorted({stem(t.lower()) for t in terms})
     return posting_store.term_search(spark, stems, tenant=tenant, limit=limit)
 
 
@@ -163,12 +147,9 @@ def tenant_bm25_search(
     equal a store built from that tenant's corpus alone — another
     tenant's corpus shape can never show through the numbers
     (pinned in ``tests/test_tenancy.py``)."""
-    if posting_store.analyzer == "porter":
-        from car_etl_spark.functions.porter import porter_py as stem_fn
-    else:
-        from car_etl_spark.functions.text import stem_py as stem_fn
+    stem = _stem_fn(posting_store)
     limit = min(limit, SEARCH_RESULT_CAP)
-    stems = sorted({stem_fn(t.lower()) for t in terms})
+    stems = sorted({stem(t.lower()) for t in terms})
     return posting_store.bm25_search(spark, stems, tenant=tenant, limit=limit)
 
 
@@ -184,12 +165,9 @@ def tenant_phrase_search(
     tenant's (tenant, term_bucket) directories like every other
     tenant route, so phrase matching can never touch another tenant's
     positions."""
-    if posting_store.analyzer == "porter":
-        from car_etl_spark.functions.porter import porter_py as stem_fn
-    else:
-        from car_etl_spark.functions.text import stem_py as stem_fn
+    stem = _stem_fn(posting_store)
     limit = min(limit, SEARCH_RESULT_CAP)
-    stems = [stem_fn(t.lower()) for t in phrase]  # ordered, not deduped
+    stems = [stem(t.lower()) for t in phrase]  # ordered, not deduped
     return posting_store.phrase_search(spark, stems, tenant=tenant, limit=limit)
 
 
@@ -373,12 +351,7 @@ def tenant_hybrid_search(
     kw = (
         tenant_search(spark, posting_store, terms, tenant, limit=fetch)
         .select("doc_id", F.col("rank_score").alias("kw_score"))
-        .withColumn(
-            "kw_rank",
-            F.row_number()
-            .over(Window.orderBy(F.desc("kw_score"), F.asc("doc_id")))
-            .cast("long"),
-        )
+        .withColumn("kw_rank", leg_rank("kw_score"))
         .select("doc_id", "kw_rank")
     )
     vec_leg = (
@@ -391,15 +364,10 @@ def tenant_hybrid_search(
     vec = (
         vec_leg
         .select(F.col("vec_id").alias("doc_id"), F.col("cosine_sim").alias("vec_score"))
-        .withColumn(
-            "vec_rank",
-            F.row_number()
-            .over(Window.orderBy(F.desc("vec_score"), F.asc("doc_id")))
-            .cast("long"),
-        )
+        .withColumn("vec_rank", leg_rank("vec_score"))
         .select("doc_id", "vec_rank")
     )
-    return _rrf_fuse(kw, vec, limit)
+    return rrf_fuse(kw, vec, limit)
 
 
 def prepare_serving(

@@ -37,8 +37,8 @@ Layout contracts (the 100 TB design):
   (:func:`car_etl_spark.operators.similarity.kmeans_refine`), written
   partitioned by ``centroid_id``; the (tiny) centroid table lands in
   ``meta.json`` so probing is a driver-side numpy argsort with ZERO
-  Spark jobs.  A top-k query scans only the ``nprobe`` probed
-  partitions and rescrores them exactly.
+  Spark jobs.  A top-k query scans only the partitions its cluster-
+  radius certificate cannot rule out and rescores them exactly.
 
 Index builds are content-addressed: the store path embeds a digest of
 (source path, source mtime, layout version, parameters), so a
@@ -356,6 +356,11 @@ REGEX_CANDIDATE_CAP = 10_000
 #: per-row set-probe cost, and the plain probed rescore (exact: a
 #: superset of the survivors) is the honest plan
 PQ_PUSH_MAX_FRACTION = 0.5
+
+#: pq serving: the certified shortlist collects this many x k rows by
+#: raw ADC in its one TakeOrdered pass — a bounded, control-plane-grain
+#: collect; the error-band certificate decides whether it closes
+PQ_SHORTLIST_FACTOR = 4
 
 #: pq codebook drift: when the delta batches' count-weighted mean
 #: reconstruction error exceeds this factor x the base codebooks' mean,
@@ -1436,6 +1441,59 @@ def _live_window(df: DataFrame, epoch: int, upper: int | None) -> DataFrame:
     return df
 
 
+def _live_view(
+    base: DataFrame,
+    delta: DataFrame | None,
+    tombs: DataFrame | None,
+    epoch: int,
+    upper: int | None,
+    row_key: list[str],
+    id_key: list[str],
+) -> DataFrame:
+    """The LSM live view every store read serves: ``base`` ∪ the
+    committed window (:func:`_live_window`) of ``delta``, minus rows
+    older than their id's newest tombstone.  ``delta``/``tombs`` are
+    None when that layer holds no visible parquet.
+
+    - exact-duplicate drop on the delta: a replayed half-applied batch
+      appends identical rows, and ``row_key`` + batch is unique within
+      a correctly-applied batch, so the drop removes only replay
+      artifacts (a doubled tf, a doubled doc length);
+    - tombstone anti-join on the max tombstone batch per ``id_key``:
+      an upsert's own rows carry the same batch as their tombstone and
+      survive ``__tb <= batch``; the tombstones are id-grain and
+      broadcast.
+
+    Callers read the snapshot bounds BEFORE listing the delta and
+    tombstone dirs, so a batch promoted in between is hidden by
+    ``upper`` rather than half-seen."""
+    df = base
+    if delta is not None:
+        df = df.unionByName(
+            _live_window(delta, epoch, upper).dropDuplicates(row_key + ["batch"])
+        )
+    if tombs is not None:
+        tomb = (
+            _live_window(tombs, epoch, upper)
+            .groupBy(*id_key)
+            .agg(F.max("batch").alias("__tb"))
+        )
+        df = (
+            df.join(F.broadcast(tomb), id_key, "left")
+            .filter(F.col("__tb").isNull() | (F.col("__tb") <= F.col("batch")))
+            .drop("__tb")
+        )
+    return df
+
+
+def _should_compact(base_dir: str, pending_dirs: tuple[str, ...], threshold: float) -> bool:
+    """Size-tiered compact policy shared by the stores: fold the LSM
+    layers once the pending (delta, tombstone) bytes exceed
+    ``threshold`` x base bytes.  Pure filesystem stats, no Spark job."""
+    base = _tree_bytes(base_dir)
+    return base > 0 and sum(_tree_bytes(d) for d in pending_dirs) > threshold * base
+
+
 def _max_sentinel_batch(store_path: str) -> int:
     """Highest applied batch id, from the ``_applied_<b>`` sentinels —
     the compaction epoch (no Spark job, no parquet read).  Compact
@@ -1505,7 +1563,7 @@ class PostingStore:
         if positions is None:
             positions = bool(meta.get("positions", True))
         self.positions = positions
-        if not meta and self._has_parquet(self.base_dir):
+        if not meta and _dir_has_parquet(self.base_dir):
             raise ValueError(
                 f"posting store at {path} has a base layout but no "
                 "base/_meta.json — a pre-v3 store; rebuild it (silently "
@@ -1951,27 +2009,14 @@ class PostingStore:
             sch = StructType([StructField(c, stored[c].dataType) for c in cols])
         df = spark.read.schema(sch).parquet(self._doclen_base_at(g))
         epoch, upper = self._snapshot_bounds(as_of, gen=g)
-        if self._has_parquet(self._doclen_delta_at(g)):
-            delta = _live_window(
-                spark.read.schema(sch).parquet(self._doclen_delta_at(g)), epoch, upper
-            )
-            dedup_key = ([self.tenant_col] if self.tenant_col else []) + [
-                "doc_id", "batch"
-            ]
-            df = df.unionByName(delta.dropDuplicates(dedup_key))
-        if self._has_parquet(self._tomb_dir_at(g)):
-            tomb_key = ([self.tenant_col] if self.tenant_col else []) + ["doc_id"]
-            tomb = (
-                _live_window(self._read_tombstones(spark, gen=g), epoch, upper)
-                .groupBy(*tomb_key)
-                .agg(F.max("batch").alias("__tb"))
-            )
-            df = (
-                df.join(F.broadcast(tomb), tomb_key, "left")
-                .filter(F.col("__tb").isNull() | (F.col("__tb") <= F.col("batch")))
-                .drop("__tb")
-            )
-        return df
+        delta_dir, tomb_dir = self._doclen_delta_at(g), self._tomb_dir_at(g)
+        keys = ([self.tenant_col] if self.tenant_col else []) + ["doc_id"]
+        return _live_view(
+            df,
+            spark.read.schema(sch).parquet(delta_dir) if _dir_has_parquet(delta_dir) else None,
+            self._read_tombstones(spark, gen=g) if _dir_has_parquet(tomb_dir) else None,
+            epoch, upper, keys, keys,
+        )
 
     def _read_tombstones(self, spark: SparkSession, gen: int | None = None) -> DataFrame:
         """See :func:`_tombstone_frame`."""
@@ -2046,9 +2091,6 @@ class PostingStore:
 
     # -- read ------------------------------------------------------------
 
-    def _has_parquet(self, d: str) -> bool:
-        return _dir_has_parquet(d)
-
     def read(
         self,
         spark: SparkSession,
@@ -2091,41 +2133,18 @@ class PostingStore:
         # racing a live apply_batch sees the complete previous snapshot
         # (see _live_window)
         epoch, upper = self._snapshot_bounds(as_of, gen=g)
-        if self._has_parquet(self._delta_dir_at(g)):
-            delta = _live_window(
-                scope(reader.parquet(self._delta_dir_at(g))), epoch, upper
-            )
-            # exact-duplicate drop: a replayed half-applied batch appends
-            # identical rows; ([tenant,] doc, raw_term, weight, batch) is
-            # unique within a correctly-applied batch, so this only
-            # removes replay artifacts
-            dedup_key = ([self.tenant_col] if self.tenant_col else []) + [
-                "doc_id", "raw_term", "weight", "batch"
-            ]
-            df = df.unionByName(delta.dropDuplicates(dedup_key))
-        if self._has_parquet(self._tomb_dir_at(g)):
-            tomb_key = ([self.tenant_col] if self.tenant_col else []) + ["doc_id"]
-            tomb = (
-                _live_window(self._read_tombstones(spark, gen=g), epoch, upper)
-                .groupBy(*tomb_key)
-                .agg(F.max("batch").alias("__tb"))
-            )
-            df = (
-                df.join(F.broadcast(tomb), tomb_key, "left")
-                .filter(F.col("__tb").isNull() | (F.col("__tb") <= F.col("batch")))
-                .drop("__tb")
-            )
-        return df
+        delta_dir, tomb_dir = self._delta_dir_at(g), self._tomb_dir_at(g)
+        keys = ([self.tenant_col] if self.tenant_col else []) + ["doc_id"]
+        return _live_view(
+            df,
+            scope(reader.parquet(delta_dir)) if _dir_has_parquet(delta_dir) else None,
+            self._read_tombstones(spark, gen=g) if _dir_has_parquet(tomb_dir) else None,
+            epoch, upper, keys + ["raw_term", "weight"], keys,
+        )
 
     def should_compact(self, threshold: float = COMPACT_DELTA_FRACTION) -> bool:
-        """Size-tiered compact policy: fold the LSM layers once delta
-        (+tombstone) bytes exceed ``threshold`` x base bytes.  Pure
-        filesystem stats, no Spark job."""
-        base = _tree_bytes(self.base_dir)
-        if base == 0:
-            return False
-        pending = _tree_bytes(self.delta_dir) + _tree_bytes(self.tomb_dir)
-        return pending > threshold * base
+        """See :func:`_should_compact`."""
+        return _should_compact(self.base_dir, (self.delta_dir, self.tomb_dir), threshold)
 
     def term_search(
         self,
@@ -2488,7 +2507,6 @@ class PostingStore:
         stemmed_terms: list[str],
         tenant=None,
         limit: int = 20,
-        df_via: str = "window",
     ) -> DataFrame:
         """Okapi BM25 over the pruned posting partitions — the ranking
         function Lucene/Elasticsearch serve, beyond the reference's
@@ -2534,36 +2552,19 @@ class PostingStore:
             F.sum(F.col("tf") * F.col("weight")).alias("tfw"),
             F.max("dl").alias("dl"),
         )
-        # df (document frequency per term), two measured shapes
-        # (scripts/bench_bm25_fuse.py, interleaved at sf0.1):
-        #
-        # - "window" (default): whole-partition window over the
-        #   (doc, term) grain — one row per matching doc per term, so
-        #   count == df exactly; ONE pruned-store pass, full map-side
-        #   partial agg; 0.27 s median.  The term partition concentrates
-        #   DOC-grain rows (one per matching doc) — fine for ordinary
-        #   terms, the hazard only for stop-word-class terms.
-        # - "broadcast": tiny per-term re-aggregate broadcast back — no
-        #   single-partition concentration anywhere (scale-safest for
-        #   hot terms), but Spark does not reuse the (doc,term)
-        #   exchange across the two consumers, so the pruned bucket
-        #   scans twice; 0.32 s median locally.
-        #
-        # A third shape (repartition-by-term so ONE exchange feeds both
-        # the agg and the window) measured fastest (0.25 s, −1
-        # exchange) and was REJECTED: it forfeits map-side partial
-        # aggregation, concentrating a hot term's RAW POSTING rows in
-        # one partition — strictly worse at 100x scale than either
-        # shipped shape.
-        if df_via == "window":
-            per = per.withColumn(
-                "df", F.count(F.lit(1)).over(Window.partitionBy("term"))
-            )
-        elif df_via == "broadcast":
-            dfc = per.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-            per = per.join(F.broadcast(dfc), "term")
-        else:
-            raise ValueError(f"df_via must be 'window' or 'broadcast', got {df_via!r}")
+        # df (document frequency per term): a whole-partition window
+        # over the (doc, term) grain — one row per matching doc per
+        # term, so count == df exactly; ONE pruned-store pass with full
+        # map-side partial aggregation (0.27 s median at sf0.1).  The
+        # term partition concentrates DOC-grain rows (one per matching
+        # doc): fine for ordinary terms, a hazard only for stop-word-
+        # class terms at scale (ROADMAP open item).  Two other measured
+        # shapes lose (ARCHITECTURE.md "BM25 df-shape decision"): a
+        # per-term re-aggregate broadcast back scans the pruned buckets
+        # twice (0.32 s); a repartition-by-term feeding both agg and
+        # window (0.25 s) forfeits map-side partial aggregation and
+        # concentrates a hot term's RAW posting rows.
+        per = per.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("term")))
         contrib = (
             F.log(F.lit(1.0) + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5))
             * (F.col("tfw") * (BM25_K1 + 1.0))
@@ -2641,6 +2642,25 @@ class PostingStore:
 #: in-process memo of built index paths — an os.stat-cheap staleness
 #: check happens inside the digest, so a hit needs no filesystem walk.
 _ENSURED: set[str] = set()
+
+
+def _ensure_store(spark: SparkSession, sf_dir: str, store, table: str, ready_fn, build_fn):
+    """Build-if-missing shared by every content-addressed ``ensure_*``:
+    a memo hit returns at once; otherwise a store that is not
+    ``ready_fn()`` is built from ``table`` through :func:`build_or_wait`
+    as ``build_fn(frame, lease)`` — one builder under the store's lease
+    and heartbeat, every concurrent caller waiting for its publish
+    instead of failing on the held lease or rebuilding after it."""
+    if store.path in _ENSURED:
+        return store
+    if not ready_fn():
+        from car_etl_spark.tables import load_tables
+
+        frame = load_tables(spark, sf_dir, (table,))[table]
+        os.makedirs(index_root(), exist_ok=True)
+        build_or_wait(lambda lease: build_fn(frame, lease), ready_fn, store.path)
+    _ENSURED.add(store.path)
+    return store
 
 
 #: Trigram positions DEFAULT policy (measured table in ARCHITECTURE.md
@@ -2721,22 +2741,11 @@ def ensure_posting_index(
     digest = _source_digest("postings", POSTING_VERSION, source, params)
     path = os.path.join(index_root(), f"postings-{digest}")
     store = PostingStore(path, analyzer, num_buckets=num_buckets, positions=positions)
-    if path in _ENSURED:
-        return store
-    if not store._has_parquet(store.base_dir):
-        from car_etl_spark.session import tune_session
-        from car_etl_spark.tables import load_tables
-
-        tune_session(spark)
-        docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-        os.makedirs(index_root(), exist_ok=True)
-        build_or_wait(
-            lambda lease: store.build(docs, lease=lease),
-            lambda: store._has_parquet(store.base_dir),
-            path,
-        )
-    _ENSURED.add(path)
-    return store
+    return _ensure_store(
+        spark, sf_dir, store, "documents",
+        lambda: _dir_has_parquet(store.base_dir),
+        lambda docs, lease: store.build(docs, lease=lease),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2814,7 +2823,7 @@ class IvfStore:
             except (OSError, ValueError):
                 tenant_col = None
         self.tenant_col = tenant_col
-        if not os.path.exists(self.meta_path) and self._has_parquet(self.assign_dir):
+        if not os.path.exists(self.meta_path) and _dir_has_parquet(self.assign_dir):
             raise ValueError(
                 f"IVF store at {path} has assignments but no "
                 "assignments/_meta.json — a pre-v5 store; rebuild it "
@@ -3009,7 +3018,6 @@ class IvfStore:
         # stringify the original tenant values, not partition-inferred
         # reinterpretations
         written = assigned.sparkSession.read.schema(assigned.schema).parquet(tmp)
-        stats, tstats = self._all_stats(written, cents, vec_col)
         meta = {
             "version": IVF_VERSION,
             "compacted_through": 0,
@@ -3022,33 +3030,13 @@ class IvfStore:
             "dim": len(cents[0][1]) if cents else 0,
             "centroid_ids": [c[0] for c in cents],
             "centroids": [c[1] for c in cents],
-            # clusters can hold NULL-embedding rows only if every member
-            # is NULL (radius null) — treat as radius pi (never prunable)
-            "radii": [
-                stats[c[0]][0] if c[0] in stats and stats[c[0]][0] is not None
-                else 3.141593
-                for c in cents
-            ],
-            "counts": [stats[c[0]][1] if c[0] in stats else 0 for c in cents],
             "batches": {},
             "tenant_col": self.tenant_col,
             # recorded so compact's retrain sample can order by the id
             # hash exactly like build's seed/training sample did
             "id_col": id_col,
         }
-        if tstats is not None:
-            meta["tenants"] = tstats
-        if filter_cols:
-            glob_f, tenant_f = self._filter_stats_all(written, list(filter_cols))
-            meta["filters"] = glob_f
-            if tenant_f is not None:
-                # per-(tenant, centroid, value) counts live INSIDE the
-                # tenant entry, beside its radii/counts — the combined
-                # tenant x filter certificate's statistics
-                for t, cols in tenant_f.items():
-                    meta["tenants"].setdefault(
-                        t, {"radii": {}, "counts": {}}
-                    )["filters"] = cols
+        self._stamp_certificate(meta, written, cents, vec_col, filter_cols)
         if pq_meta is not None:
             meta["pq"] = pq_meta
         meta["schema"] = assigned.schema.jsonValue()
@@ -3056,24 +3044,43 @@ class IvfStore:
             json.dump(meta, f)
         self._publish_generation(new_gen)
 
-    def _all_stats(self, assigned: DataFrame, cents, vec_col: str):
-        """(global stats, per-tenant stats|None) in ONE pass: tenant
-        stores aggregate at the (tenant, centroid) grain and fold the
-        global view driver-side (radius = max over tenants, count =
-        sum) instead of scanning the assignments twice."""
-        if not self.tenant_col:
-            return self._cluster_stats(assigned, cents, vec_col), None
-        tstats = self._tenant_stats(assigned, cents, vec_col)
-        folded: dict = {}
-        for entry in tstats.values():
-            for cid_s, n in entry["counts"].items():
-                cid = int(cid_s)
-                r = entry["radii"].get(cid_s)
-                prev_r, prev_n = folded.get(cid, (None, 0))
-                if r is not None:
-                    prev_r = r if prev_r is None else max(prev_r, r)
-                folded[cid] = (prev_r, prev_n + int(n))
-        return folded, tstats
+    def _stamp_certificate(
+        self, meta: dict, written: DataFrame, cents, vec_col: str, filter_cols
+    ) -> None:
+        """Stamp the exact-probe certificate of a freshly written layout
+        into ``meta`` (build and compact): per-centroid radii/counts,
+        TIGHT from the written rows (maintenance only ever widens
+        them); on tenant stores the per-tenant entries, computed in the
+        SAME pass at the (tenant, centroid) grain with the global view
+        folded driver-side (radius = max over tenants, count = sum);
+        and the declared filter columns' counts at both grains."""
+        if self.tenant_col:
+            meta["tenants"] = self._cluster_stats(written, cents, vec_col, by_tenant=True)
+            stats: dict = {}
+            for entry in meta["tenants"].values():
+                for cid_s, n in entry["counts"].items():
+                    r = entry["radii"].get(cid_s)
+                    prev_r, prev_n = stats.get(int(cid_s), (None, 0))
+                    if r is not None:
+                        prev_r = r if prev_r is None else max(prev_r, r)
+                    stats[int(cid_s)] = (prev_r, prev_n + int(n))
+        else:
+            stats = self._cluster_stats(written, cents, vec_col)
+        # clusters can hold NULL-embedding rows only if every member is
+        # NULL (radius null) — treat as radius pi (never prunable)
+        meta["radii"] = [
+            stats[c[0]][0] if c[0] in stats and stats[c[0]][0] is not None else 3.141593
+            for c in cents
+        ]
+        meta["counts"] = [stats[c[0]][1] if c[0] in stats else 0 for c in cents]
+        if filter_cols:
+            glob_f, tenant_f = self._filter_stats_all(written, list(filter_cols))
+            meta["filters"] = glob_f
+            # per-(tenant, centroid, value) counts live INSIDE the tenant
+            # entry, beside its radii/counts — the combined tenant x
+            # filter certificate's statistics
+            for t, cols in (tenant_f or {}).items():
+                meta["tenants"].setdefault(t, {"radii": {}, "counts": {}})["filters"] = cols
 
     def _write_meta(self, meta: dict) -> None:
         tmp = self.meta_path + ".tmp"
@@ -3081,27 +3088,28 @@ class IvfStore:
             json.dump(meta, f)
         os.replace(tmp, self.meta_path)
 
-    def _cluster_stats(self, assigned: DataFrame, cents, vec_col: str) -> dict:
+    def _cluster_stats(
+        self, assigned: DataFrame, cents, vec_col: str, by_tenant: bool = False
+    ) -> dict:
         """Per-centroid (max angular radius, member count) — the
         control-plane statistics the exact-probe bound needs (one pass;
-        acos argument clamped against fp drift)."""
+        acos argument clamped against fp drift): ``{centroid_id:
+        (radius, n)}``.  ``by_tenant`` groups at the (tenant, centroid)
+        grain for the tenant-scoped certificate — still control-plane
+        small — as ``{tenant: {"radii": {cid: r}, "counts": {cid: n}}}``."""
+        from car_etl_spark.operators.similarity import dim_cosine
+
         cent_df = assigned.sparkSession.createDataFrame(
             [(cid, vec) for cid, vec in cents],
             "centroid_id long, centroid_vec array<double>",
         )
-        from car_etl_spark.operators.similarity import (
-            EXPR_PROJECTION_MAX_DIM,
-            _cosine_pairs_pandas,
+        sim = dim_cosine(
+            F.col(vec_col), F.col("centroid_vec"), len(cents[0][1]) if cents else 0
         )
-
-        dim0 = len(cents[0][1]) if cents else 0
-        if dim0 <= EXPR_PROJECTION_MAX_DIM:
-            sim = V.cosine_similarity(F.col(vec_col), F.col("centroid_vec"))
-        else:
-            sim = _cosine_pairs_pandas(F.col(vec_col), F.col("centroid_vec"))
+        tkey = [self.tenant_col] if by_tenant else []
         stats = (
             assigned.join(F.broadcast(cent_df), "centroid_id")
-            .groupBy("centroid_id")
+            .groupBy(*tkey, "centroid_id")
             .agg(
                 F.max(F.acos(F.least(F.lit(1.0), F.greatest(F.lit(-1.0), sim))))
                 .alias("radius"),
@@ -3109,131 +3117,74 @@ class IvfStore:
             )
             .collect()
         )
-        return {
-            int(r.centroid_id): (
-                float(r.radius) if r.radius is not None else None,
-                int(r.n),
-            )
-            for r in stats
-        }
-
-    def _filter_stats(self, assigned: DataFrame, filter_cols: list[str]) -> dict:
-        """Per-(centroid, value) member counts for each DECLARED
-        filterable attribute — the statistics that extend the
-        certified-exact probe walk to metadata-filtered search (the
-        vector-DB "filterable attribute" contract: attributes are
-        declared at index build, like Lucene doc values).  Grain is
-        centroids x distinct values per column — control-plane sized,
-        enforced by :data:`FILTER_VALUE_CAP` (a high-cardinality column
-        belongs in the predicate pushdown of a full scan, not in index
-        metadata).  NULL-valued rows are excluded: an IN-filter can
-        never match NULL, so their absence keeps counts and predicate
-        agreeing."""
-        out: dict = {}
-        for c in filter_cols:
-            rows = (
-                assigned.filter(F.col(c).isNotNull())
-                .groupBy("centroid_id", c)
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-            n_values = len({r[c] for r in rows})
-            if n_values > FILTER_VALUE_CAP:
-                raise ValueError(
-                    f"filter column {c!r} has {n_values} distinct values "
-                    f"(cap {FILTER_VALUE_CAP}): too high-cardinality for "
-                    "index-resident filter statistics"
+        if not by_tenant:
+            return {
+                int(r.centroid_id): (
+                    float(r.radius) if r.radius is not None else None,
+                    int(r.n),
                 )
-            entry: dict = {}
-            for r in rows:
-                entry.setdefault(str(int(r.centroid_id)), {})[str(r[c])] = int(r.n)
-            out[c] = entry
+                for r in stats
+            }
+        out: dict = {}
+        for r in stats:
+            entry = out.setdefault(str(r[0]), {"radii": {}, "counts": {}})
+            entry["counts"][str(int(r.centroid_id))] = int(r.n)
+            if r.radius is not None:
+                entry["radii"][str(int(r.centroid_id))] = float(r.radius)
         return out
 
     def _filter_stats_all(self, assigned: DataFrame, filter_cols: list[str]):
-        """(global filter stats, per-tenant filter stats | None) — the
-        statistics behind both filtered AND tenant x filtered certified
-        serving.  Tenant-blind stores keep the single global grain;
-        tenant stores aggregate ONE pass per column at the
-        (tenant, centroid, value) grain and fold the global view
-        driver-side (the `_all_stats` discipline).
+        """(global filter stats, per-tenant filter stats | None): per-
+        (centroid, value) member counts for each DECLARED filterable
+        attribute — the statistics that extend the certified-exact probe
+        walk to metadata-filtered (and tenant x filtered) search, the
+        vector-DB "filterable attribute" contract (attributes declared
+        at index build, like Lucene doc values).  ONE pass per column:
+        tenant stores aggregate at the (tenant, centroid, value) grain
+        and fold the global view driver-side (as
+        :meth:`_stamp_certificate` folds radii/counts).  NULL-valued rows are excluded: an IN-filter can
+        never match NULL, so their absence keeps counts and predicate
+        agreeing.
 
-        The cardinality cap applies PER TENANT: each tenant's filter
-        vocabulary is bounded by :data:`FILTER_VALUE_CAP`, so the
-        control-plane size is tenants x cap — the folded global map may
-        union more values than the cap across tenants with disjoint
-        vocabularies, which is exactly the tenant-count multiple the
-        layout already pays for per-tenant radii/counts."""
-        if not self.tenant_col:
-            return self._filter_stats(assigned, filter_cols), None
-        tf: dict = {}
+        Grain is centroids x distinct values per column — control-plane
+        sized, enforced by :data:`FILTER_VALUE_CAP` PER TENANT on tenant
+        stores (a high-cardinality column belongs in the predicate
+        pushdown of a full scan, not in index metadata): the folded
+        global map may union more values than the cap across tenants
+        with disjoint vocabularies, exactly the tenant-count multiple
+        the layout already pays for per-tenant radii/counts."""
+        tkey = [self.tenant_col] if self.tenant_col else []
+        per: dict = {}  # tenant (None on tenant-blind stores) -> col -> cid -> value -> n
         for c in filter_cols:
             rows = (
                 assigned.filter(F.col(c).isNotNull())
-                .groupBy(self.tenant_col, "centroid_id", c)
+                .groupBy(*tkey, "centroid_id", c)
                 .agg(F.count(F.lit(1)).alias("n"))
                 .collect()
             )
             vocab: dict = {}
             for r in rows:
-                vocab.setdefault(str(r[0]), set()).add(r[c])
+                vocab.setdefault(str(r[0]) if tkey else None, set()).add(r[c])
             for t, vals in vocab.items():
                 if len(vals) > FILTER_VALUE_CAP:
+                    scope = f" for tenant {t!r}" if t is not None else ""
                     raise ValueError(
-                        f"filter column {c!r} has {len(vals)} distinct values "
-                        f"for tenant {t!r} (cap {FILTER_VALUE_CAP}): too "
-                        "high-cardinality for index-resident filter statistics"
+                        f"filter column {c!r} has {len(vals)} distinct values"
+                        f"{scope} (cap {FILTER_VALUE_CAP}): too high-cardinality "
+                        "for index-resident filter statistics"
                     )
             for r in rows:
-                tf.setdefault(str(r[0]), {}).setdefault(c, {}).setdefault(
-                    str(int(r.centroid_id)), {}
-                )[str(r[c])] = int(r.n)
+                per.setdefault(str(r[0]) if tkey else None, {}).setdefault(
+                    c, {}
+                ).setdefault(str(int(r.centroid_id)), {})[str(r[c])] = int(r.n)
         glob: dict = {c: {} for c in filter_cols}
-        for cols in tf.values():
+        for cols in per.values():
             for c, cmap in cols.items():
                 for cid, vmap in cmap.items():
                     g = glob[c].setdefault(cid, {})
                     for v, n in vmap.items():
                         g[v] = g.get(v, 0) + n
-        return glob, tf
-
-    def _tenant_stats(self, assigned: DataFrame, cents, vec_col: str) -> dict:
-        """Per-(tenant, centroid) (max angular radius, member count) —
-        the tenant-scoped certificate statistics.  One extra pass at
-        build/compact time; the grain is (tenants x centroids), still
-        control-plane small."""
-        cent_df = assigned.sparkSession.createDataFrame(
-            [(cid, vec) for cid, vec in cents],
-            "centroid_id long, centroid_vec array<double>",
-        )
-        from car_etl_spark.operators.similarity import (
-            EXPR_PROJECTION_MAX_DIM,
-            _cosine_pairs_pandas,
-        )
-
-        dim0 = len(cents[0][1]) if cents else 0
-        if dim0 <= EXPR_PROJECTION_MAX_DIM:
-            sim = V.cosine_similarity(F.col(vec_col), F.col("centroid_vec"))
-        else:
-            sim = _cosine_pairs_pandas(F.col(vec_col), F.col("centroid_vec"))
-        stats = (
-            assigned.join(F.broadcast(cent_df), "centroid_id")
-            .groupBy(self.tenant_col, "centroid_id")
-            .agg(
-                F.max(F.acos(F.least(F.lit(1.0), F.greatest(F.lit(-1.0), sim))))
-                .alias("radius"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .collect()
-        )
-        out: dict = {}
-        for r in stats:
-            t = str(r[0])
-            entry = out.setdefault(t, {"radii": {}, "counts": {}})
-            entry["counts"][str(int(r.centroid_id))] = int(r.n)
-            if r.radius is not None:
-                entry["radii"][str(int(r.centroid_id))] = float(r.radius)
-        return out
+        return glob, (per if tkey else None)
 
     # -- incremental maintenance ----------------------------------------
 
@@ -3472,9 +3423,6 @@ class IvfStore:
             f.write("applied")
         return True
 
-    def _has_parquet(self, d: str) -> bool:
-        return _dir_has_parquet(d)
-
     def read_assignments(
         self,
         spark: SparkSession,
@@ -3521,37 +3469,22 @@ class IvfStore:
                 upper = m.get("applied_through")
         except (OSError, ValueError):
             pass
-        if self._has_parquet(self._delta_dir_at(g)):
-            delta = _live_window(
-                scope(reader.parquet(self._delta_dir_at(g))), epoch, upper
-            )
-            df = df.unionByName(delta.dropDuplicates(key + ["batch"]))
-        if self._has_parquet(self._tomb_dir_at(g)):
-            tomb = (
-                _live_window(
-                    _tombstone_frame(spark, self._tomb_dir_at(g), stored, key),
-                    epoch, upper,
-                )
-                .groupBy(*key)
-                .agg(F.max("batch").alias("__tb"))
-            )
-            df = (
-                df.join(F.broadcast(tomb), key, "left")
-                .filter(F.col("__tb").isNull() | (F.col("__tb") <= F.col("batch")))
-                .drop("__tb")
-            )
-        return df
+        delta_dir, tomb_dir = self._delta_dir_at(g), self._tomb_dir_at(g)
+        return _live_view(
+            df,
+            scope(reader.parquet(delta_dir)) if _dir_has_parquet(delta_dir) else None,
+            _tombstone_frame(spark, tomb_dir, stored, key)
+            if _dir_has_parquet(tomb_dir)
+            else None,
+            epoch, upper, key, key,
+        )
 
     def should_compact(self, threshold: float = COMPACT_DELTA_FRACTION) -> bool:
-        """Same size-tiered policy as :meth:`PostingStore.should_compact`;
-        for the IVF layout the delta fraction ALSO bounds certificate
-        pessimism (tombstone debt + widened radii extend probe sets),
-        so compacting on the same threshold keeps probes tight."""
-        base = _tree_bytes(self.assign_dir)
-        if base == 0:
-            return False
-        pending = _tree_bytes(self.delta_dir) + _tree_bytes(self.tomb_dir)
-        return pending > threshold * base
+        """See :func:`_should_compact`; for the IVF layout the delta
+        fraction ALSO bounds certificate pessimism (tombstone debt +
+        widened radii extend probe sets), so compacting on the same
+        threshold keeps probes tight."""
+        return _should_compact(self.assign_dir, (self.delta_dir, self.tomb_dir), threshold)
 
     def should_retrain(self, factor: float = PQ_RETRAIN_FACTOR) -> bool:
         """True when the delta batches' count-weighted mean pq
@@ -3663,14 +3596,11 @@ class IvfStore:
             .partitionBy(*pcols)
             .parquet(tmp)
         )
-        stats, tstats = self._all_stats(
-            spark.read.schema(live.schema).parquet(tmp), cents, vec_col
-        )
-        m["radii"] = [
-            stats[c[0]][0] if c[0] in stats and stats[c[0]][0] is not None else 3.141593
-            for c in cents
-        ]
-        m["counts"] = [stats[c[0]][1] if c[0] in stats else 0 for c in cents]
+        written = spark.read.schema(live.schema).parquet(tmp)
+        # radii/counts recomputed tight, and filterable-attribute counts
+        # restamped at BOTH grains (the fresh tenant entries replace the
+        # old ones, filters included)
+        self._stamp_certificate(m, written, cents, vec_col, m.get("filters"))
         m["batches"] = {}
         # epoch from the sentinels BEFORE the swap clears them — meta
         # rides the atomic swap, so readers ignore any delta/tombstone
@@ -3679,29 +3609,11 @@ class IvfStore:
         # snapshot bound restarts with the fresh layout (no pending
         # deltas; an uncommitted stranded batch replays in full)
         m["applied_through"] = m["compacted_through"]
-        if tstats is not None:
-            m["tenants"] = tstats
         if m.get("pq"):
             # restamp the err statistics tight from the live rows (a
             # tombstoned outlier no longer forces the fallback pass;
             # after a retrain these become the NEW drift baseline)
-            m["pq"].update(
-                _pq_err_stats(spark.read.schema(live.schema).parquet(tmp))
-            )
-        if m.get("filters"):
-            # restamp filterable-attribute counts TIGHT from the live
-            # rows (same discipline as radii/counts), at BOTH grains on
-            # tenant stores — compact rewrites _all_stats' fresh tenant
-            # entries, so the per-tenant filters must be re-attached
-            glob_f, tenant_f = self._filter_stats_all(
-                spark.read.schema(live.schema).parquet(tmp), list(m["filters"])
-            )
-            m["filters"] = glob_f
-            if tenant_f is not None:
-                for t, cols in tenant_f.items():
-                    m["tenants"].setdefault(
-                        t, {"radii": {}, "counts": {}}
-                    )["filters"] = cols
+            m["pq"].update(_pq_err_stats(written))
         m["schema"] = live.schema.jsonValue()
         with open(os.path.join(tmp, "_meta.json"), "w") as f:
             json.dump(m, f)
@@ -3724,21 +3636,6 @@ class IvfStore:
         )
         thetas = np.arccos(np.clip(sims, -1.0, 1.0))
         return m, ids, sims, thetas
-
-    def probe_ids(
-        self, qvec: list[float], nprobe: int, meta: dict | None = None
-    ) -> list[int]:
-        """The nprobe centroids nearest the query — pure driver-side
-        numpy over meta.json, no Spark job.  Ties break on lowest id
-        (matching :func:`similarity.ivf_topk`'s probe ordering).
-        ``meta`` pins the caller's snapshot (see probe_ids_exact) so a
-        rebuild publishing a new centroid set mid-serve cannot push
-        NEW-geometry probe ids into an OLD generation's partitions."""
-        import numpy as np
-
-        _m, ids, sims, _thetas = self._centroid_angles(qvec, meta=meta)
-        order = np.lexsort((ids, -sims))  # sim desc, id asc
-        return [int(i) for i in ids[order][:nprobe]]
 
     def probe_ids_exact(
         self, qvec: list[float], k: int, tenant=None, where=None,
@@ -3948,12 +3845,44 @@ class IvfStore:
                     est += int(n)
         return max(self.SERVING_MIN_TASKS, -(-est // self.SERVING_ROWS_PER_TASK))
 
+    def _probed_scan(
+        self, spark: SparkSession, g: int, m: dict, probes, id_col: str, tenant, where
+    ) -> DataFrame:
+        """The live rows of the probed partitions under ONE pinned
+        generation ``g`` and its meta snapshot ``m`` (dirs, batch bound
+        and task count all from the same committed state), with the
+        ``where=(col, values)`` IN-predicate pushed into the pruned
+        parquet scan."""
+        scan = self.read_assignments(
+            spark, probes=probes, id_col=id_col, tenant=tenant,
+            as_of=m.get("applied_through"), gen=g,
+        ).coalesce(self._serving_task_count(probes, m))
+        if where is not None:
+            scan = scan.filter(F.col(where[0]).isin(list(where[1])))
+        return scan
+
+    @staticmethod
+    def _rescored_topk(
+        scan: DataFrame, qvec: list[float], k: int, id_col: str, vec_col: str,
+        extra_cols: tuple[str, ...],
+    ) -> DataFrame:
+        """Exact cosine rescoring (6 dp) of ``scan`` against the query,
+        top-k by score desc / id asc — the last stage of every IVF
+        serving mode."""
+        from car_etl_spark.operators.similarity import dim_cosine
+
+        sim = F.round(dim_cosine(F.col(vec_col), V.literal_vector(qvec), len(qvec)), 6)
+        return (
+            scan.select(id_col, *extra_cols, sim.alias("cosine_sim"))
+            .orderBy(F.desc("cosine_sim"), F.asc(id_col))
+            .limit(k)
+        )
+
     def probe_topk(
         self,
         spark: SparkSession,
         qvec: list[float],
         k: int = 20,
-        nprobe: int | None = None,
         id_col: str = "vec_id",
         vec_col: str = "embedding",
         extra_cols: tuple[str, ...] = ("label",),
@@ -3962,10 +3891,9 @@ class IvfStore:
     ) -> DataFrame:
         """Exact-rescored top-k over the probed partitions: ONE Spark
         job, scanning only the probed fraction of the corpus
-        (``PartitionFilters`` on centroid_id).  ``nprobe=None`` (the
-        default) derives a CERTIFIED-exact probe set from the cluster
-        radii (:meth:`probe_ids_exact`); an integer nprobe is the
-        fixed-budget approximate mode (recall < 1 possible).
+        (``PartitionFilters`` on centroid_id).  The probe set is
+        CERTIFIED exact from the cluster radii
+        (:meth:`probe_ids_exact`).
 
         ``where=(col, values)`` is metadata-FILTERED search: the probe
         set certifies against the matching member counts
@@ -3981,35 +3909,10 @@ class IvfStore:
         # unsafe direction, caught by the r9 maintenance soak)
         g = self._gen()
         m = self.meta(g)
-        probes = (
-            self.probe_ids_exact(qvec, k, tenant=tenant, where=where, meta=m)
-            if nprobe is None
-            else self.probe_ids(qvec, nprobe, meta=m)
-        )
-        as_of = m.get("applied_through")
-        qlit = V.literal_vector(qvec)
-        # dim-aware rescoring kernel, same split as the similarity paths:
-        # codegen HOF cosine at low dim, Arrow/BLAS above the cutoff
-        # (interpreted HOF dominates at the reference's 1536 dims)
-        from car_etl_spark.operators.similarity import (
-            EXPR_PROJECTION_MAX_DIM,
-            _cosine_pairs_pandas,
-        )
-
-        if len(qvec) <= EXPR_PROJECTION_MAX_DIM:
-            sim = F.round(V.cosine_similarity(F.col(vec_col), qlit), 6)
-        else:
-            sim = F.round(_cosine_pairs_pandas(F.col(vec_col), qlit), 6)
-        scan = self.read_assignments(
-            spark, probes=probes, id_col=id_col, tenant=tenant, as_of=as_of, gen=g
-        ).coalesce(self._serving_task_count(probes, m))
-        if where is not None:
-            col, values = where
-            scan = scan.filter(F.col(col).isin(list(values)))
-        return (
-            scan.select(id_col, *extra_cols, sim.alias("cosine_sim"))
-            .orderBy(F.desc("cosine_sim"), F.asc(id_col))
-            .limit(k)
+        probes = self.probe_ids_exact(qvec, k, tenant=tenant, where=where, meta=m)
+        return self._rescored_topk(
+            self._probed_scan(spark, g, m, probes, id_col, tenant, where),
+            qvec, k, id_col, vec_col, extra_cols,
         )
 
     def pq_topk(
@@ -4022,8 +3925,6 @@ class IvfStore:
         extra_cols: tuple[str, ...] = ("label",),
         tenant=None,
         where=None,
-        certified: bool = True,
-        rerank_factor: int = 4,
     ) -> DataFrame:
         """CERTIFIED-EXACT top-k from the PRODUCT-QUANTIZED codes —
         the compressed-scan serving mode (see :mod:`operators.pq`).
@@ -4049,21 +3950,7 @@ class IvfStore:
         Exactness does not depend on codebook quality: loose codebooks
         inflate the survivor set (up to a full rescore of the probed
         partitions), never the result.  Refuses stores built without
-        ``pq_m=``.
-
-        ``certified=False`` is the PRODUCTION-PQ serving shape
-        (approximate, like the reference's HNSW route and every
-        deployed PQ system): shortlist the top ``rerank_factor * k``
-        rows by raw ADC score — no threshold pass, no error-band walk
-        — and exact-rescore only those.  Recall < 1 is possible
-        (measured on the scale-curve corpora, scripts/bench_pq_curve.py);
-        the certified mode above is the oracle-checked default.  The
-        reason both exist: on corpora whose within-cluster cosine gaps
-        are smaller than the quantization error, the CERTIFICATE
-        honestly degrades to rescoring everything probed, while the
-        fixed-budget shortlist keeps the compressed-scan latency at a
-        measured recall — the same exact/approximate pairing as
-        probe_ids_exact vs fixed nprobe."""
+        ``pq_m=``."""
         g = self._gen()
         m = self.meta(g)
         if not m.get("pq"):
@@ -4083,25 +3970,15 @@ class IvfStore:
         # compact flip can't pair new tombstones with the old
         # certificate, or post-retrain codes with old codebooks
         probes = self.probe_ids_exact(qvec, k, tenant=tenant, where=where, meta=m)
-        as_of = m.get("applied_through")
-
-        def scoped(cols: list[str]) -> DataFrame:
-            s = self.read_assignments(
-                spark, probes=probes, id_col=id_col, tenant=tenant, as_of=as_of,
-                gen=g,
-            ).coalesce(self._serving_task_count(probes, m))
-            if where is not None:
-                s = s.filter(F.col(where[0]).isin(list(where[1])))
-            return s.select(*cols)
-
         scored = (
-            scoped([id_col, "pq_code", "pq_err"])
+            self._probed_scan(spark, g, m, probes, id_col, tenant, where)
+            .select(id_col, "pq_code", "pq_err")
             .filter(F.col("pq_code").isNotNull())
             .withColumn("__adc", PQ.adc_score_col(F.col("pq_code"), table))
         )
         # FUSED serving shape (the default): ONE TakeOrdered pass over
         # the code-only scan collects the top-R rows by raw ADC with
-        # their error bands (R = rerank_factor*k — bounded, the
+        # their error bands (R = PQ_SHORTLIST_FACTOR*k — bounded, the
         # control-plane grain of the probe ids), the driver derives the
         # certified threshold L from the k best collected lower bounds,
         # and when `min(collected adc) + max_err < L` proves no row
@@ -4117,108 +3994,85 @@ class IvfStore:
         # loose codebooks cost the fallback, not recall).
         fused_ids: list | None = None
         survivors = None
-        if not certified:
-            # fixed-budget ADC shortlist (approximate production mode):
-            # same single TakeOrdered pass; all R ids push into the fetch
-            rows = (
-                scored.orderBy(F.desc("__adc"), F.asc(id_col))
-                .limit(rerank_factor * k)
-                .select(id_col)
-                .collect()
-            )
-            fused_ids = [r[0] for r in rows]
-        else:
-            scored = scored.withColumn(
-                "__lb", F.col("__adc") - F.col("pq_err")
-            ).withColumn("__ub", F.col("__adc") + F.col("pq_err"))
-            R = max(rerank_factor * k, k)
-            rows = (
-                scored.orderBy(F.desc("__adc"), F.asc(id_col))
-                .limit(R)
-                .select(id_col, "__adc", "__lb", "__ub")
-                .collect()
-            )
-            # certified threshold L = min lower bound among the k best
-            # collected lower bounds (at least k probed rows have true
-            # cosine >= L).  When fewer than k rows are probed, L =
-            # their min lb and every row satisfies ub >= lb >= L: all
-            # rescored, still exact.
-            lbs = sorted((float(r["__lb"]) for r in rows), reverse=True)
-            thresh = lbs[k - 1] if len(lbs) >= k else (lbs[-1] if lbs else -2.0)
-            err_max = self._pq_err_ceiling(m)
-            exhausted = len(rows) < R  # the collect saw every probed row
-            complete = exhausted or (
-                err_max is not None
-                and rows
-                and min(float(r["__adc"]) for r in rows) + err_max
-                < thresh - PQ.RERANK_SLACK
-            )
-            if complete:
-                fused_ids = [
-                    r[0]
-                    for r in rows
-                    if float(r["__ub"]) >= thresh - PQ.RERANK_SLACK
-                ]
-            else:
-                # the ceiling couldn't close over the shortlist: collect
-                # the survivor ids themselves, CAPPED (the regex-
-                # candidate discipline — REGEX_CANDIDATE_CAP ids is
-                # control-plane grain), and still push them into the
-                # embedding fetch.  This keeps the serve a single
-                # id-pruned scan even in the near-tie regime where the
-                # certificate honestly degrades toward rescore-all
-                # (there the IN covers most probed rows and the serve
-                # equals the plain probed rescore — which is the right
-                # plan when codes can't separate).  Only past the cap
-                # does the survivor set stay distributed and the serve
-                # pay the join.
-                sur = (
-                    scored.filter(F.col("__ub") >= thresh - PQ.RERANK_SLACK)
-                    .select(id_col)
-                    .limit(REGEX_CANDIDATE_CAP + 1)
-                    .collect()
-                )
-                if len(sur) <= REGEX_CANDIDATE_CAP:
-                    # when most probed rows survive (the near-tie regime
-                    # where codes cannot separate), the id predicate
-                    # buys almost no compute but costs per-action
-                    # optimizer time ∝ |ids| and per-row set probes —
-                    # the honest plan there is the plain probed rescore
-                    # (exact: a superset of the survivors), i.e. what
-                    # probe_topk serves.  One bounded count at prepare
-                    # decides.
-                    n_probed = scored.count()
-                    if len(sur) < PQ_PUSH_MAX_FRACTION * n_probed:
-                        fused_ids = [r[0] for r in sur]
-                    # else: neither fused_ids nor survivors — base
-                    # serves unfiltered below (rescore-all of the
-                    # probed partitions)
-                else:
-                    survivors = scored.filter(
-                        F.col("__ub") >= thresh - PQ.RERANK_SLACK
-                    ).select(id_col)
-        from car_etl_spark.operators.similarity import (
-            EXPR_PROJECTION_MAX_DIM,
-            _cosine_pairs_pandas,
+        scored = scored.withColumn(
+            "__lb", F.col("__adc") - F.col("pq_err")
+        ).withColumn("__ub", F.col("__adc") + F.col("pq_err"))
+        R = PQ_SHORTLIST_FACTOR * k
+        rows = (
+            scored.orderBy(F.desc("__adc"), F.asc(id_col))
+            .limit(R)
+            .select(id_col, "__adc", "__lb", "__ub")
+            .collect()
         )
-
-        qlit = V.literal_vector(qvec)
-        if len(qvec) <= EXPR_PROJECTION_MAX_DIM:
-            sim = F.round(V.cosine_similarity(F.col(vec_col), qlit), 6)
+        # certified threshold L = min lower bound among the k best
+        # collected lower bounds (at least k probed rows have true
+        # cosine >= L).  When fewer than k rows are probed, L =
+        # their min lb and every row satisfies ub >= lb >= L: all
+        # rescored, still exact.
+        lbs = sorted((float(r["__lb"]) for r in rows), reverse=True)
+        thresh = lbs[k - 1] if len(lbs) >= k else (lbs[-1] if lbs else -2.0)
+        err_max = self._pq_err_ceiling(m)
+        exhausted = len(rows) < R  # the collect saw every probed row
+        complete = exhausted or (
+            err_max is not None
+            and rows
+            and min(float(r["__adc"]) for r in rows) + err_max
+            < thresh - PQ.RERANK_SLACK
+        )
+        if complete:
+            fused_ids = [
+                r[0]
+                for r in rows
+                if float(r["__ub"]) >= thresh - PQ.RERANK_SLACK
+            ]
         else:
-            sim = F.round(_cosine_pairs_pandas(F.col(vec_col), qlit), 6)
-        base = scoped([id_col, vec_col, *extra_cols])
+            # the ceiling couldn't close over the shortlist: collect
+            # the survivor ids themselves, CAPPED (the regex-
+            # candidate discipline — REGEX_CANDIDATE_CAP ids is
+            # control-plane grain), and still push them into the
+            # embedding fetch.  This keeps the serve a single
+            # id-pruned scan even in the near-tie regime where the
+            # certificate honestly degrades toward rescore-all
+            # (there the IN covers most probed rows and the serve
+            # equals the plain probed rescore — which is the right
+            # plan when codes can't separate).  Only past the cap
+            # does the survivor set stay distributed and the serve
+            # pay the join.
+            sur = (
+                scored.filter(F.col("__ub") >= thresh - PQ.RERANK_SLACK)
+                .select(id_col)
+                .limit(REGEX_CANDIDATE_CAP + 1)
+                .collect()
+            )
+            if len(sur) <= REGEX_CANDIDATE_CAP:
+                # when most probed rows survive (the near-tie regime
+                # where codes cannot separate), the id predicate
+                # buys almost no compute but costs per-action
+                # optimizer time ∝ |ids| and per-row set probes —
+                # the honest plan there is the plain probed rescore
+                # (exact: a superset of the survivors), i.e. what
+                # probe_topk serves.  One bounded count at prepare
+                # decides.
+                n_probed = scored.count()
+                if len(sur) < PQ_PUSH_MAX_FRACTION * n_probed:
+                    fused_ids = [r[0] for r in sur]
+                # else: neither fused_ids nor survivors — base
+                # serves unfiltered below (rescore-all of the
+                # probed partitions)
+            else:
+                survivors = scored.filter(
+                    F.col("__ub") >= thresh - PQ.RERANK_SLACK
+                ).select(id_col)
+        base = self._probed_scan(spark, g, m, probes, id_col, tenant, where).select(
+            id_col, vec_col, *extra_cols
+        )
         if fused_ids is not None:
             base = base.filter(F.col(id_col).isin(fused_ids))
         elif survivors is not None:
             base = base.join(survivors, id_col)
         # else: rescore-all of the probed partitions (survivor fraction
         # past PQ_PUSH_MAX_FRACTION — the plain probed scan is the plan)
-        return (
-            base.select(id_col, *extra_cols, sim.alias("cosine_sim"))
-            .orderBy(F.desc("cosine_sim"), F.asc(id_col))
-            .limit(k)
-        )
+        return self._rescored_topk(base, qvec, k, id_col, vec_col, extra_cols)
 
     def _pq_err_ceiling(self, m: dict) -> float | None:
         """Upper bound on pq_err over every LIVE encodable row, from
@@ -4279,24 +4133,17 @@ def ensure_tenant_ivf_index(spark: SparkSession, sf_dir: str) -> IvfStore:
     digest = _source_digest("ivf", IVF_VERSION, source, params)
     path = os.path.join(index_root(), f"ivf-{digest}")
     store = IvfStore(path, tenant_col="tenant_id")
-    if path in _ENSURED:
-        return store
-    if not os.path.exists(store.meta_path):
-        from car_etl_spark.session import tune_session
-        from car_etl_spark.tables import load_tables
-
-        tune_session(spark)
-        emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-        emb = emb.withColumn(
-            "tenant_id",
-            F.concat(F.lit("t"), F.pmod(F.col("vec_id"), F.lit(2)).cast("string")),
-        )
-        os.makedirs(index_root(), exist_ok=True)
-        store.build(
-            emb, num_centroids, refine_iterations=2, filter_cols=("label",)
-        )
-    _ENSURED.add(path)
-    return store
+    return _ensure_store(
+        spark, sf_dir, store, "embeddings",
+        lambda: os.path.exists(store.meta_path),
+        lambda emb, lease: store.build(
+            emb.withColumn(
+                "tenant_id",
+                F.concat(F.lit("t"), F.pmod(F.col("vec_id"), F.lit(2)).cast("string")),
+            ),
+            num_centroids, refine_iterations=2, filter_cols=("label",), lease=lease,
+        ),
+    )
 
 
 def ensure_ivf_index(
@@ -4326,26 +4173,11 @@ def ensure_ivf_index(
     digest = _source_digest("ivf", IVF_VERSION, source, params)
     path = os.path.join(index_root(), f"ivf-{digest}")
     store = IvfStore(path)
-    if path in _ENSURED:
-        return store
-    if not os.path.exists(store.meta_path):
-        from car_etl_spark.session import tune_session
-        from car_etl_spark.tables import load_tables
-
-        tune_session(spark)
-        emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-        os.makedirs(index_root(), exist_ok=True)
-        build_or_wait(
-            lambda lease: store.build(
-                emb,
-                num_centroids,
-                refine_iterations,
-                filter_cols=filter_cols,
-                pq_m=pq_m,
-                lease=lease,
-            ),
-            lambda: os.path.exists(store.meta_path),
-            path,
-        )
-    _ENSURED.add(path)
-    return store
+    return _ensure_store(
+        spark, sf_dir, store, "embeddings",
+        lambda: os.path.exists(store.meta_path),
+        lambda emb, lease: store.build(
+            emb, num_centroids, refine_iterations,
+            filter_cols=filter_cols, pq_m=pq_m, lease=lease,
+        ),
+    )

@@ -139,18 +139,6 @@ def _check_banding(num_hashes: int, bands: int) -> int:
     return num_hashes // bands
 
 
-def portable_minhash_array_sigs(
-    exploded: DataFrame, num_hashes: int, id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, sig array<long>) form of :func:`portable_minhash_sigs` —
-    the signature-store shape (``streaming/incremental_dedup.py``),
-    drop-in for ``minhash_from_exploded`` with portable values."""
-    wide = portable_minhash_sigs(exploded, num_hashes, id_col)
-    return wide.select(
-        id_col, F.array(*[F.col(f"__m{i}") for i in range(num_hashes)]).alias("sig")
-    )
-
-
 def portable_banded_signatures(
     sigs: DataFrame, id_col: str = "doc_id", bands: int = 12, num_hashes: int = 48
 ) -> DataFrame:
@@ -183,7 +171,7 @@ def portable_band_pairs(
     """Distinct candidate pairs (a < b) from string band keys — the
     band-key expression itself lives ONLY in
     :func:`portable_banded_signatures` (wide sigs are arrayed and routed
-    through it), so batch and incremental banding cannot drift.
+    through it).
 
     ``bucket_cap`` is the HOT-BUCKET guard: a band bucket holding more
     than this many members is NON-DISCRIMINATIVE — the corpus's

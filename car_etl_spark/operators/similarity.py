@@ -762,18 +762,12 @@ def ivf_topk(
     candidates = assigned.join(F.broadcast(probe), "centroid_id").crossJoin(
         F.broadcast(qdf)
     )
-    # dim-aware exact scoring over the probed buckets (same split as the
-    # banding/verify paths: codegen HOF at low dim, Arrow kernel above).
-    # The branch must be STATIC — a `when` would still ship every row
-    # through the extracted Python-UDF projection node.  Dim comes from
-    # the already-collected centroids (same table), not an extra job.
+    # dim-aware exact scoring over the probed buckets; dim comes from
+    # the already-collected centroids (same table), not an extra job
     dim = next(
         (len(r.centroid_vec) for r in centroid_rows if r.centroid_vec is not None), 0
     )
-    if dim <= EXPR_PROJECTION_MAX_DIM:
-        sim = V.cosine_similarity(F.col(vec_col), F.col("qvec"))
-    else:
-        sim = _cosine_pairs_pandas(F.col(vec_col), F.col("qvec"))
+    sim = dim_cosine(F.col(vec_col), F.col("qvec"), dim)
     return (
         candidates.select(id_col, F.round(sim, 6).alias("cosine_sim"))
         .orderBy(F.desc("cosine_sim"), F.asc(id_col))
@@ -883,6 +877,19 @@ def _cosine_pairs_pandas(a, b):
         return pd.Series(vals).astype("Float64").mask(~ok, pd.NA)
 
     return pair_cosine(a, b)
+
+
+def dim_cosine(a, b, dim: int):
+    """Exact cosine of two vector columns with the kernel picked by
+    dimensionality: the codegen HOF expression up to
+    :data:`EXPR_PROJECTION_MAX_DIM`, the Arrow/BLAS kernel
+    (:func:`_cosine_pairs_pandas`) above it, where interpreted HOF
+    evaluation dominates (the reference's 1536 dims).  The choice is
+    STATIC per call — a ``when`` would still ship every row through the
+    extracted Python-UDF projection node."""
+    if dim <= EXPR_PROJECTION_MAX_DIM:
+        return V.cosine_similarity(a, b)
+    return _cosine_pairs_pandas(a, b)
 
 
 def embedding_lsh_bands(

@@ -10,7 +10,7 @@ DAG, so at 100 TB both legs scan in parallel and fusion is a join on the
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from car_etl_spark.functions import text as T
@@ -22,6 +22,41 @@ RRF_K = 60  # reference src/search/hybrid.py:45
 FETCH_LIMIT = 30  # 2x the final limit, reference hybrid.py:205-206
 FINAL_LIMIT = 15
 QUERY_TERMS = ("spark", "vector", "merge")
+
+
+def leg_rank(score_col: str) -> Column:
+    """1-based rank of a fusion leg's rows: score desc, doc_id asc."""
+    return (
+        F.row_number()
+        .over(Window.orderBy(F.desc(score_col), F.asc("doc_id")))
+        .cast("long")
+    )
+
+
+def rrf_fuse(kw: DataFrame, vec: DataFrame, limit: int, missing_rank=None) -> DataFrame:
+    """RRF fusion shared by EVERY hybrid route (reference
+    ``src/search/hybrid.py:232-258``): full-outer join of the
+    ``(doc_id, kw_rank)`` and ``(doc_id, vec_rank)`` legs, score
+    ``Σ 1/(RRF_K + rank)`` rounded to 8 dp, rrf desc / doc_id asc,
+    top ``limit``.  A doc missing from a leg reports its rank as NULL,
+    or as ``missing_rank`` when given (the registry rows' 0)."""
+    fused = kw.join(vec, "doc_id", "full_outer")
+    rrf = F.round(
+        F.coalesce(1.0 / (RRF_K + F.col("kw_rank")), F.lit(0.0))
+        + F.coalesce(1.0 / (RRF_K + F.col("vec_rank")), F.lit(0.0)),
+        8,
+    )
+    ranks = [
+        F.coalesce(F.col(c), F.lit(missing_rank)).cast("long").alias(c)
+        if missing_rank is not None
+        else F.col(c)
+        for c in ("kw_rank", "vec_rank")
+    ]
+    return (
+        fused.select("doc_id", rrf.alias("rrf_score"), *ranks)
+        .orderBy(F.desc("rrf_score"), F.asc("doc_id"))
+        .limit(limit)
+    )
 
 
 def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -62,10 +97,7 @@ def _hybrid_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("tf").alias("kw_score"))
         .orderBy(F.desc("kw_score"), F.asc("doc_id"))
         .limit(FETCH_LIMIT)
-        .withColumn(
-            "kw_rank",
-            F.row_number().over(Window.orderBy(F.desc("kw_score"), F.asc("doc_id"))).cast("long"),
-        )
+        .withColumn("kw_rank", leg_rank("kw_score"))
     )
 
     from car_etl_spark.queries.vector import _query_vec_literal
@@ -76,28 +108,9 @@ def _hybrid_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.select(F.col("vec_id").alias("doc_id"), sim.alias("vec_score"))
         .orderBy(F.desc("vec_score"), F.asc("doc_id"))
         .limit(FETCH_LIMIT)
-        .withColumn(
-            "vec_rank",
-            F.row_number().over(Window.orderBy(F.desc("vec_score"), F.asc("doc_id"))).cast("long"),
-        )
+        .withColumn("vec_rank", leg_rank("vec_score"))
     )
-
-    fused = kw_leg.join(vec_leg, "doc_id", "full_outer")
-    rrf = F.round(
-        F.coalesce(1.0 / (RRF_K + F.col("kw_rank")), F.lit(0.0))
-        + F.coalesce(1.0 / (RRF_K + F.col("vec_rank")), F.lit(0.0)),
-        8,
-    )
-    return (
-        fused.select(
-            "doc_id",
-            rrf.alias("rrf_score"),
-            F.coalesce(F.col("kw_rank"), F.lit(0)).cast("long").alias("kw_rank"),
-            F.coalesce(F.col("vec_rank"), F.lit(0)).cast("long").alias("vec_rank"),
-        )
-        .orderBy(F.desc("rrf_score"), F.asc("doc_id"))
-        .limit(FINAL_LIMIT)
-    )
+    return rrf_fuse(kw_leg, vec_leg, FINAL_LIMIT, missing_rank=0)
 
 
 def hybrid_porter_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -134,12 +147,7 @@ def hybrid_porter_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.round(F.sum(F.col("tf") * F.col("weight")), 2).alias("kw_score"))
             .orderBy(F.desc("kw_score"), F.asc("doc_id"))
             .limit(FETCH_LIMIT)
-            .withColumn(
-                "kw_rank",
-                F.row_number()
-                .over(Window.orderBy(F.desc("kw_score"), F.asc("doc_id")))
-                .cast("long"),
-            )
+            .withColumn("kw_rank", leg_rank("kw_score"))
         )
 
         emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
@@ -148,30 +156,9 @@ def hybrid_porter_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         vec_leg = (
             ivf.probe_topk(spark, qvec, k=FETCH_LIMIT, extra_cols=())
             .select(F.col("vec_id").alias("doc_id"), F.col("cosine_sim").alias("vec_score"))
-            .withColumn(
-                "vec_rank",
-                F.row_number()
-                .over(Window.orderBy(F.desc("vec_score"), F.asc("doc_id")))
-                .cast("long"),
-            )
+            .withColumn("vec_rank", leg_rank("vec_score"))
         )
-
-        fused = kw_leg.join(vec_leg, "doc_id", "full_outer")
-        rrf = F.round(
-            F.coalesce(1.0 / (RRF_K + F.col("kw_rank")), F.lit(0.0))
-            + F.coalesce(1.0 / (RRF_K + F.col("vec_rank")), F.lit(0.0)),
-            8,
-        )
-        return (
-            fused.select(
-                "doc_id",
-                rrf.alias("rrf_score"),
-                F.coalesce(F.col("kw_rank"), F.lit(0)).cast("long").alias("kw_rank"),
-                F.coalesce(F.col("vec_rank"), F.lit(0)).cast("long").alias("vec_rank"),
-            )
-            .orderBy(F.desc("rrf_score"), F.asc("doc_id"))
-            .limit(FINAL_LIMIT)
-        )
+        return rrf_fuse(kw_leg, vec_leg, FINAL_LIMIT, missing_rank=0)
 
     return prepared(
         spark, "hybrid_porter_ivf_search", sf_dir,

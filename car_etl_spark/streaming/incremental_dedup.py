@@ -23,12 +23,10 @@ Determinism: hashing is the same family as the batch path, so the
 UNION of candidate pairs over any batch split equals the batch job's
 candidate set on the full corpus — pinned by a test.
 
-Two families are supported (``family=``): ``"xxhash64"`` (default, the
-production hot path) and ``"portable"`` (operators/portable.py — the
-cross-engine-reproducible family, so an incremental ingest's dedup
-decisions can be audited outside the JVM).  The store refuses to mix
-families (sidecar-recorded), exactly like it refuses construction-
-version mismatches within a family.
+Signatures are the xxhash64 family of the batch path.  The store
+records the family and its construction version in a sidecar and
+refuses a store written by any other (a ``"portable"``-family store
+included): band-joining across families yields garbage candidates.
 """
 
 from __future__ import annotations
@@ -63,18 +61,6 @@ class SignatureStoreVersionError(RuntimeError):
 NEW_BAND_BROADCAST_MAX = 1_000_000
 
 
-def _family_fns(name: str):
-    """(signature_fn, banding_fn) for a registered family — both take
-    the same argument shapes, so :func:`dedup_batch` is family-blind."""
-    if name == "xxhash64":
-        return S.minhash_from_exploded, S.banded_signatures
-    if name == "portable":
-        from car_etl_spark.operators import portable as P
-
-        return P.portable_minhash_array_sigs, P.portable_banded_signatures
-    raise ValueError(f"unknown MinHash family: {name!r}")
-
-
 def estimated_jaccard(sig_a, sig_b):
     """MinHash similarity estimate: fraction of agreeing components."""
     matches = F.size(
@@ -92,7 +78,6 @@ def dedup_batch(
     shingle_n: int = 3,
     num_hashes: int = S.DEFAULT_NUM_HASHES,
     bands: int = S.DEFAULT_BANDS,
-    family: str = "xxhash64",
 ) -> tuple[DataFrame, DataFrame]:
     """One micro-batch: returns (near-dup pairs touching this batch,
     this batch's signatures to append to the store).
@@ -100,8 +85,7 @@ def dedup_batch(
     Pure DataFrame-in/DataFrame-out so it is the ``foreachBatch`` body
     AND batch-testable, like ``cdc.apply_change_batch``.
     """
-    sig_fn, band_fn = _family_fns(family)
-    sigs_new = sig_fn(
+    sigs_new = S.minhash_from_exploded(
         S.exploded_shingle_rows(new_docs, text_col, shingle_n, id_col),
         num_hashes,
         id_col,
@@ -143,10 +127,10 @@ def dedup_batch(
     # is scanned once, never shuffled), so the extra checkpoint+count
     # barriers cost ~1 s/batch and prune nothing (variant C in the
     # profile script).
-    new_b = band_fn(sigs_new, id_col, bands, num_hashes)
+    new_b = S.banded_signatures(sigs_new, id_col, bands, num_hashes)
     if sigs_new.count() * bands <= NEW_BAND_BROADCAST_MAX:
         new_b = F.broadcast(new_b)
-    all_b = band_fn(union, id_col, bands, num_hashes)
+    all_b = S.banded_signatures(union, id_col, bands, num_hashes)
     new_ids = sigs_new.select(F.col(id_col).alias("id_b"), F.lit(True).alias("__new_b"))
     cand = (
         new_b.alias("a")
@@ -203,7 +187,7 @@ class IncrementalDeduper:
         A store with no sidecar predates versioning == family 1."""
         import json
 
-        mine = (self.params.get("family", "xxhash64"), SIGNATURE_FAMILY_VERSION)
+        mine = ("xxhash64", SIGNATURE_FAMILY_VERSION)
         if os.path.exists(self.meta_path):
             with open(self.meta_path) as f:
                 meta = json.load(f)
@@ -227,7 +211,7 @@ class IncrementalDeduper:
             json.dump(
                 {
                     "sig_version": SIGNATURE_FAMILY_VERSION,
-                    "family": self.params.get("family", "xxhash64"),
+                    "family": "xxhash64",
                 },
                 f,
             )

@@ -63,7 +63,15 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from car_etl_spark.operators.indexing import _with_maintenance_lease
+from car_etl_spark.operators.indexing import (
+    COMPACT_DELTA_FRACTION,
+    _dir_has_parquet,
+    _ensure_store,
+    _should_compact,
+    _source_digest,
+    _with_maintenance_lease,
+    index_root,
+)
 
 #: exact partial-sum type shared with queries/parity.py's DEC
 _DEC = "decimal(30,6)"
@@ -318,11 +326,6 @@ class RollupStore:
             pass
         _gc_store_generations(self.path, new_gen)
 
-    def _has_parquet(self, d: str) -> bool:
-        from car_etl_spark.operators.indexing import _dir_has_parquet
-
-        return _dir_has_parquet(d)
-
     # -- lifecycle ---------------------------------------------------------
 
     @_with_maintenance_lease
@@ -464,7 +467,7 @@ class RollupStore:
         # base (a crash between compact's publish and its delta cleanup
         # strands them; counting them again doubles n/sums)
         epoch = int((self._meta_at(g) or {}).get("compacted_through") or 0)
-        if self._has_parquet(self._delta_dir_at(g)):
+        if _dir_has_parquet(self._delta_dir_at(g)):
             df = df.unionByName(
                 reader.parquet(self._delta_dir_at(g)).filter(
                     (F.col("batch") > epoch) & (F.col("batch") <= committed)
@@ -521,11 +524,10 @@ class RollupStore:
 
     # -- maintenance -----------------------------------------------------------
 
-    def should_compact(self, threshold: float = 0.2) -> bool:
-        from car_etl_spark.operators.indexing import _tree_bytes as parquet_bytes
-
-        base = parquet_bytes(self.base_dir)
-        return base > 0 and parquet_bytes(self.delta_dir) > threshold * base
+    def should_compact(self, threshold: float = COMPACT_DELTA_FRACTION) -> bool:
+        """See :func:`~car_etl_spark.operators.indexing._should_compact`
+        (the rollup store keeps no tombstones: deltas are all it folds)."""
+        return _should_compact(self.base_dir, (self.delta_dir,), threshold)
 
     @_with_maintenance_lease
     def compact(self, spark: SparkSession) -> None:
@@ -713,8 +715,6 @@ def ensure_rollup_store(spark: SparkSession, sf_dir: str) -> RollupStore:
     continuous-aggregate analog of ensure_ivf_index/ensure_posting_index
     (path + mtime digest, built once per corpus version, reused across
     sessions)."""
-    from car_etl_spark.operators.indexing import _source_digest, index_root
-
     source = os.path.join(sf_dir, "events.parquet")
     # version 3: meta moved INSIDE base/ (atomic with the swap) and
     # gained the dataset schema + compaction epoch — older layouts
@@ -722,17 +722,10 @@ def ensure_rollup_store(spark: SparkSession, sf_dir: str) -> RollupStore:
     digest = _source_digest("rollup", 3, source, "event_type|minute")
     path = os.path.join(index_root(), f"rollup-{digest}")
     store = RollupStore(path)
-    if store._meta() is None:
-        from car_etl_spark.operators.indexing import build_or_wait
-        from car_etl_spark.tables import load_tables
-
-        ev = load_tables(spark, sf_dir, ("events",))["events"]
-        os.makedirs(index_root(), exist_ok=True)
-        build_or_wait(
-            lambda lease: store.build(
-                ev.select("ts", "event_type", "value"), lease=lease
-            ),
-            lambda: store._meta() is not None,
-            path,
-        )
-    return store
+    return _ensure_store(
+        spark, sf_dir, store, "events",
+        lambda: store._meta() is not None,
+        lambda ev, lease: store.build(
+            ev.select("ts", "event_type", "value"), lease=lease
+        ),
+    )

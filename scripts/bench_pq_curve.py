@@ -80,12 +80,6 @@ def measure(spark, store, emb_dim: int, n: int, qvec, out_rows: list, tag: str):
     got_pq = [tuple(r) for r in store.pq_topk(spark, qvec, k=20).collect()]
     got_ivf = [tuple(r) for r in store.probe_topk(spark, qvec, k=20).collect()]
     assert got_pq == got_ivf, f"{tag} n={n}: pq != ivf serving"
-    # approximate production mode: fixed ADC shortlist (4k), measured recall
-    got_adc = [
-        tuple(r)
-        for r in store.pq_topk(spark, qvec, k=20, certified=False).collect()
-    ]
-    recall = len({r[0] for r in got_adc} & {r[0] for r in got_ivf}) / len(got_ivf)
     sizes = column_bytes(store.assign_dir)
     probes = store.probe_ids_exact(qvec, 20)
     row = {
@@ -103,10 +97,6 @@ def measure(spark, store, emb_dim: int, n: int, qvec, out_rows: list, tag: str):
         "pq_certified_warm_sec": timed(
             lambda: store.pq_topk(spark, qvec, k=20).collect()
         ),
-        "pq_adc_warm_sec": timed(
-            lambda: store.pq_topk(spark, qvec, k=20, certified=False).collect()
-        ),
-        "pq_adc_recall_at20": round(recall, 4),
         "ivf_warm_sec": timed(lambda: store.probe_topk(spark, qvec, k=20).collect()),
     }
     out_rows.append(row)

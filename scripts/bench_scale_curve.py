@@ -174,7 +174,7 @@ def main() -> None:
         build_s = None
         # rebuild cached stores from older layout versions
         if (
-            not store._has_parquet(store.base_dir)
+            not IX._dir_has_parquet(store.base_dir)
             or (store._meta() or {}).get("version") != IX.POSTING_VERSION
         ):
             t0 = time.perf_counter()
@@ -229,7 +229,7 @@ def main() -> None:
         )
         build_s = None
         if (
-            not tstore._has_parquet(tstore.base_dir)
+            not IX._dir_has_parquet(tstore.base_dir)
             or (tstore._meta() or {}).get("version") != IX.POSTING_VERSION
         ):
             t0 = time.perf_counter()

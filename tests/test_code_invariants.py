@@ -128,3 +128,31 @@ def test_no_unreferenced_top_level_definitions():
             if uses[name] <= at_def:
                 offenders.append(f"{os.path.relpath(path, PKG)}:{lineno} {name}")
     assert not offenders, f"unreferenced top-level definitions: {offenders}"
+
+
+def _word_hits(name: str) -> list[str]:
+    """Package files (relative to the package) whose source names
+    ``name`` as a whole word."""
+    pat = re.compile(rf"\b{re.escape(name)}\b")
+    return sorted(
+        os.path.relpath(p, PKG) for p in _py_files() if pat.search(open(p).read())
+    )
+
+
+def test_search_idioms_have_one_home():
+    """The dim-split cosine kernel and the RRF constant are each written
+    once: callers go through ``similarity.dim_cosine`` and
+    ``queries.search.rrf_fuse`` instead of re-spelling the split or the
+    fusion."""
+    kernel_home = [os.path.join("operators", "similarity.py")]
+    assert _word_hits("EXPR_PROJECTION_MAX_DIM") == kernel_home
+    assert _word_hits("_cosine_pairs_pandas") == kernel_home
+    assigns = [
+        (os.path.relpath(p, PKG), node.lineno)
+        for p in _py_files()
+        for node in ast.walk(ast.parse(open(p).read()))
+        if isinstance(node, (ast.Assign, ast.AnnAssign))
+        for t in (node.targets if isinstance(node, ast.Assign) else [node.target])
+        if isinstance(t, ast.Name) and t.id == "RRF_K"
+    ]
+    assert len(assigns) == 1, assigns

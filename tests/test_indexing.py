@@ -499,15 +499,6 @@ def test_bm25_matches_literal_python(spark, tmp_path):
         for r in store.bm25_search(spark, terms).collect()
     }
     assert got == _py_bm25(DOCS_V0, set(terms))
-    # the hot-term df shape (tiny broadcast re-aggregate, no
-    # single-partition concentration) is value-identical
-    got_b = {
-        r.doc_id: (r.rank_score, r.terms_matched)
-        for r in store.bm25_search(spark, terms, df_via="broadcast").collect()
-    }
-    assert got_b == got
-    with pytest.raises(ValueError, match="df_via"):
-        store.bm25_search(spark, terms, df_via="nope")
 
 
 def test_bm25_stats_and_scores_exact_under_maintenance(spark, tmp_path):
@@ -958,32 +949,6 @@ def test_pq_codebooks_deterministic_and_encoding_edges(spark):
     assert enc[1] == (None, None)
     assert enc[2][1] == 2.0
     assert len(enc[0][0]) == 4 and enc[0][1] < 2.0
-
-
-def test_pq_approximate_mode_shape_and_wide_shortlist_equals_exact(spark, tmp_path):
-    """certified=False is the fixed-budget production shape: k rows
-    out, exact cosines on whatever the shortlist caught; with a
-    shortlist covering the whole probed set it equals brute force."""
-    emb = _clustered_emb(spark)
-    store = IX.IvfStore(str(tmp_path / "pqa"))
-    store.build(emb, num_centroids=4, refine_iterations=2, pq_m=4)
-    qvec = list(emb.filter(F.col("vec_id") == 45).select("embedding").first()[0])
-    approx = [
-        tuple(r)
-        for r in store.pq_topk(spark, qvec, k=10, certified=False).collect()
-    ]
-    assert len(approx) == 10
-    # scores are EXACT cosines (rescored), descending
-    sims = [r[2] for r in approx]
-    assert sims == sorted(sims, reverse=True)
-    # rerank_factor covering the corpus -> equals brute force
-    wide = [
-        tuple(r)
-        for r in store.pq_topk(
-            spark, qvec, k=10, certified=False, rerank_factor=1000
-        ).collect()
-    ]
-    assert wide == _brute_all(emb, qvec, k=10)
 
 
 # ---------------------------------------------------------------------------

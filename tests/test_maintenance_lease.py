@@ -285,6 +285,57 @@ def test_concurrent_ensure_single_builder(spark, tmp_path, monkeypatch):
     assert n == 40
 
 
+def test_ensure_tenant_ivf_index_waits_for_held_lease(spark, tmp_path, monkeypatch):
+    """The tenant IVF ensure goes through build_or_wait like the other
+    ensures: while another builder holds the store's lease it WAITS
+    instead of raising MaintenanceLeaseHeldError, and once the lease is
+    released it builds under its own lease — one published generation."""
+    import pandas as pd
+
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    pd.DataFrame(
+        {
+            "vec_id": range(32),
+            "label": [i % 3 for i in range(32)],
+            "embedding": [[float((i * 7 + d) % 5) + 0.5 for d in range(4)] for i in range(32)],
+        }
+    ).to_parquet(corpus / "embeddings.parquet")
+    monkeypatch.setenv("CAR_ETL_INDEX_DIR", str(tmp_path / "idx"))
+    from car_etl_spark.tables import load_tables, parquet_rowcount
+
+    # warm the schema memo so the ensure reaches its build within the
+    # 1 s window below instead of spending it on schema inference
+    load_tables(spark, str(corpus), ("embeddings",))
+    # the store path ensure_tenant_ivf_index content-addresses
+    n_cent = IX.derive_num_centroids(parquet_rowcount(str(corpus), "embeddings"))
+    digest = IX._source_digest(
+        "ivf", IX.IVF_VERSION, str(corpus / "embeddings.parquet"),
+        f"tenant2|c{n_cent}|r2|flabel",
+    )
+    path = os.path.join(IX.index_root(), f"ivf-{digest}")
+    result: list = []
+
+    def run() -> None:
+        try:
+            result.append(("ok", IX.ensure_tenant_ivf_index(spark, str(corpus))))
+        except BaseException as e:
+            result.append(("err", f"{type(e).__name__}: {e}"))
+
+    with IX.maintenance_lease(path):
+        t = threading.Thread(target=run)
+        t.start()
+        time.sleep(1.0)
+        assert result == [], result  # waiting, not refused
+    t.join(timeout=300)
+    assert not t.is_alive()
+    assert result and result[0][0] == "ok", result
+    store = result[0][1]
+    assert store.path == path
+    assert IX._existing_generations(path) == [1]
+    assert IX._layout_gen(path) == 1
+
+
 def test_build_or_wait_retakes_after_crashed_builder(tmp_path):
     """A builder that died mid-build leaves its lease behind; once the
     TTL expires the waiting ensure re-takes the build itself."""

@@ -232,36 +232,6 @@ def test_portable_minhash_parity_fuzz(spark, texts):
     assert got == want
 
 
-def test_portable_incremental_dedup_equals_batch(spark, tmp_path, planted_docs):
-    """Batch-split invariance holds for the portable family too: the
-    union of pairs over three drops equals one full-corpus dedup_batch,
-    and the store refuses to resume under the other family."""
-    from car_etl_spark.streaming.incremental_dedup import (
-        IncrementalDeduper,
-        SignatureStoreVersionError,
-        dedup_batch,
-    )
-
-    rows = planted_docs.collect()
-    splits = [rows[:30], rows[30:60], rows[60:]]
-    dd = IncrementalDeduper(
-        spark, str(tmp_path / "state"), family="portable", threshold=0.5
-    )
-    for chunk in splits:
-        dd.process_batch(spark.createDataFrame(chunk, planted_docs.schema))
-    # incremental emits new-on-left; normalize orientation for compare
-    got = {frozenset((r.id_a, r.id_b)) for r in dd.pairs().collect()}
-
-    full, _sigs = dedup_batch(planted_docs, None, family="portable", threshold=0.5)
-    want = {frozenset((r.id_a, r.id_b)) for r in full.collect()}
-    assert got == want and len(want) >= 18
-
-    # family mixing refused: same store, xxhash64 code
-    xx = IncrementalDeduper(spark, str(tmp_path / "state"), threshold=0.5)
-    with pytest.raises(SignatureStoreVersionError):
-        xx.signatures()
-
-
 def test_store_meta_written_before_first_signature_append(spark, tmp_path, monkeypatch):
     """Crash-ordering: if the first batch dies right after the signature
     append, the sidecar must already be on disk — otherwise a resume
@@ -270,9 +240,7 @@ def test_store_meta_written_before_first_signature_append(spark, tmp_path, monke
 
     from car_etl_spark.streaming import incremental_dedup as inc
 
-    dd = inc.IncrementalDeduper(
-        spark, str(tmp_path / "state"), family="portable", threshold=0.5
-    )
+    dd = inc.IncrementalDeduper(spark, str(tmp_path / "state"), threshold=0.5)
     seen = {}
     real_meta = inc.IncrementalDeduper._write_store_meta
 
@@ -286,7 +254,7 @@ def test_store_meta_written_before_first_signature_append(spark, tmp_path, monke
     assert seen["sig_exists_at_meta_write"] is False  # meta landed first
     # and the store resumes cleanly under the same family
     assert inc.IncrementalDeduper(
-        spark, str(tmp_path / "state"), family="portable", threshold=0.5
+        spark, str(tmp_path / "state"), threshold=0.5
     ).signatures().count() == 1
 
 

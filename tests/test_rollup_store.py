@@ -11,6 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from car_etl_spark.operators.indexing import _dir_has_parquet
 from car_etl_spark.streaming.rollup_store import (
     RollupStore,
     RollupStoreParamError,
@@ -93,7 +94,7 @@ def test_compact_preserves_view_and_clears_deltas(spark, tmp_path, store):
     store.compact(spark)
     for g, want in before.items():
         assert _rows(store.read(spark, g)) == want
-    assert not store._has_parquet(store.delta_dir)
+    assert not _dir_has_parquet(store.delta_dir)
 
 
 def test_day_grain_equals_direct_aggregation(spark, store):

@@ -71,8 +71,8 @@ def test_posting_half_applied_batch_is_invisible(spark, tmp_path, posting_store,
     with pytest.raises(RuntimeError, match="simulated crash"):
         posting_store.apply_batch(spark, _docs_df(spark, DOCS_B1), None, batch=1)
     # the half-applied batch is fully on disk...
-    assert posting_store._has_parquet(posting_store.delta_dir)
-    assert posting_store._has_parquet(posting_store.tomb_dir)
+    assert IX._dir_has_parquet(posting_store.delta_dir)
+    assert IX._dir_has_parquet(posting_store.tomb_dir)
     # ...and completely invisible: rows, doclens, and bm25 stats all
     # still describe the pre-batch snapshot
     assert _live_postings(posting_store, spark) == before
@@ -150,7 +150,7 @@ def test_ivf_half_applied_batch_is_invisible(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
     # tombstone for id 5 and its new delta row are both on disk, but
     # the view still shows the OLD row — never a vanished id
-    assert store._has_parquet(store.tomb_dir)
+    assert IX._dir_has_parquet(store.tomb_dir)
     after = sorted(
         tuple(r) for r in store.read_assignments(spark).select("vec_id", "label").collect()
     )

@@ -10,6 +10,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from car_etl_spark.operators.indexing import _dir_has_parquet
 from car_etl_spark.streaming import jobs
 from tests.conftest import SF_SMALL
 
@@ -474,6 +475,12 @@ def test_incremental_dedup_refuses_foreign_signature_family(spark, tmp_path):
         json.dump({"sig_version": 1}, f)
     with pytest.raises(SignatureStoreVersionError):
         d.process_batch(_dedup_docs(spark, [(2, "a b c d e f h")]))
+    # a store written under the removed "portable" family option is
+    # foreign too: its sidecar names that family at the current version
+    with open(d.meta_path, "w") as f:
+        json.dump({"sig_version": 2, "family": "portable"}, f)
+    with pytest.raises(SignatureStoreVersionError):
+        d.signatures()
 
 
 # ---------------------------------------------------------------------------
@@ -742,7 +749,7 @@ def test_ivf_streaming_maintenance_matches_brute_force(spark, tmp_path):
     # compact folds the LSM down: batches debt cleared, same service
     store.compact(spark)
     assert store.meta()["batches"] == {}
-    assert not store._has_parquet(store.delta_dir)
+    assert not _dir_has_parquet(store.delta_dir)
     for q in (_vec(0, 0), _vec(3, 0)):
         got = [(r.vec_id, r.cosine_sim) for r in store.probe_topk(spark, q, k=5).collect()]
         assert got == _brute_topk(corpus, q, 5)

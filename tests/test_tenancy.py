@@ -483,7 +483,7 @@ def test_api_tenant_hybrid_route(spark, tmp_path):
         spark, pstore, vstore, ("globexsecret",), qvec, tenant="acme", limit=10
     )
     assert all(r.kw_rank is None for r in leak.collect())  # leg miss = NULL rank,
-    # the same absent-leg encoding api.search uses (one shared _rrf_fuse)
+    # the same absent-leg encoding api.search uses (one shared rrf_fuse)
 
 
 # -- BM25: ranking statistics are RLS-scoped too -------------------------------
