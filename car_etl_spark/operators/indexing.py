@@ -960,9 +960,18 @@ def _with_maintenance_lease(method):
     return wrapper
 
 
-def _active_lease(store) -> MaintenanceLease | None:
+def _active_lease(store) -> MaintenanceLease:
+    """The lease ``@_with_maintenance_lease`` holds for this thread's
+    maintenance call on ``store``; outside one there is nothing to
+    fence a commit with, so this raises."""
     slot = store.__dict__.get("_maint_tl")
-    return getattr(slot, "lease", None) if slot is not None else None
+    lease = getattr(slot, "lease", None) if slot is not None else None
+    if lease is None:
+        raise MaintenanceLeaseError(
+            f"store {store.path}: no maintenance lease is active — "
+            "commits run only inside a @_with_maintenance_lease method"
+        )
+    return lease
 
 
 def _fence_check(store) -> None:
@@ -973,9 +982,7 @@ def _fence_check(store) -> None:
     went to a generation the new owner may already have superseded,
     and a root-level sentinel for that batch would mark content the
     live store never received as applied."""
-    lease = _active_lease(store)
-    if lease is not None:
-        _check_maintenance_lease(lease)
+    _check_maintenance_lease(_active_lease(store))
 
 
 def _dir_has_parquet(d: str) -> bool:
@@ -1300,7 +1307,7 @@ def _existing_generations(store_path: str) -> list[int]:
 _test_pre_flip_delay = None
 
 
-def _flip_layout(store_path: str, new_gen: int, fence: int | None = None) -> None:
+def _flip_layout(store_path: str, new_gen: int, fence: int) -> None:
     """Atomically publish generation ``new_gen`` (os.replace on the
     pointer file) — the compact/rebuild COMMIT POINT for concurrent
     readers.  A serve that resolved its file paths under the previous
@@ -1312,11 +1319,10 @@ def _flip_layout(store_path: str, new_gen: int, fence: int | None = None) -> Non
     ``fence`` stamps the maintainer's token into the pointer; a flip
     with a token LOWER than the pointer's current one refuses — the
     stale half of a lease steal can never clobber the new owner's
-    published generation.  ``fence=None`` (legacy/unleased callers)
-    carries the existing stamp forward unchecked."""
+    published generation."""
     cur = _read_json_file(os.path.join(store_path, "_current.json"))
     cur_fence = int(cur.get("fence", 0))
-    if fence is not None and cur_fence > int(fence):
+    if cur_fence > int(fence):
         raise MaintenanceFencedError(
             f"store {store_path}: publish with fence {fence} refused — "
             f"pointer already stamped by fence {cur_fence} (a newer "
@@ -1324,16 +1330,11 @@ def _flip_layout(store_path: str, new_gen: int, fence: int | None = None) -> Non
         )
     if _test_pre_flip_delay is not None:
         _test_pre_flip_delay()
-    stamped = {
-        "gen": int(new_gen),
-        "fence": int(fence) if fence is not None else cur_fence,
-    }
+    stamped = {"gen": int(new_gen), "fence": int(fence)}
     tmp = os.path.join(store_path, f"_current.json.tmp-{uuid.uuid4().hex}")
     with open(tmp, "w") as f:
         json.dump(stamped, f)
     os.replace(tmp, os.path.join(store_path, "_current.json"))
-    if fence is None:
-        return
     # POST-FLIP VERIFY (r11): the fence comparison above and the
     # os.replace are two filesystem ops — a steal can land between them
     # (the documented CAS residual).  The flip cannot be made atomic
@@ -1365,25 +1366,31 @@ def _flip_layout(store_path: str, new_gen: int, fence: int | None = None) -> Non
 def _publish_store_generation(
     store_path: str,
     new_gen: int,
-    lease: MaintenanceLease | None = None,
+    lease: MaintenanceLease,
+    clear: tuple[str, ...] = ("_applied_",),
 ) -> None:
-    """Flip the pointer to ``new_gen``, then clean up: applied-batch
-    sentinels cleared (a rebuild must never replay-no-op a later batch
-    id — the fresh meta's epoch covers folded batches) and every
-    unpinned generation at or below ``new_gen - 2`` GC'd (one full
-    generation of grace for in-flight readers; pinned generations
-    survive until their pin releases — see ``pinned_generation``).
-    Crash-order argument: the flip is FIRST and the new meta (with its
-    compaction epoch) rides inside the new layout, so any prefix of
-    the cleanup leaves a consistent store — stale sentinels sit at or
-    below the stamped epoch and a stale old generation is unreachable
-    garbage the next compact removes.  With ``lease`` the publish is
-    FENCED: the lease is re-validated and its token rides the flip."""
-    if lease is not None:
-        _check_maintenance_lease(lease)
-    _flip_layout(store_path, new_gen, fence=lease.fence if lease else None)
+    """The one FENCED publish every store generation goes through:
+    re-validate ``lease``, flip the pointer to ``new_gen`` under its
+    token, remove the root markers whose names start with a ``clear``
+    prefix, then GC every unpinned generation at or below
+    ``new_gen - 2`` (one full generation of grace for in-flight
+    readers; pinned generations survive until their pin releases — see
+    ``pinned_generation``).
+
+    ``clear`` is fixed per call site: a posting/IVF rebuild or compact
+    clears the applied-batch sentinels (a rebuild must never
+    replay-no-op a later batch id — the fresh meta's epoch covers
+    folded batches); rollup's compact clears its batch markers and
+    dirty flag, its refresh nothing (the carried-over deltas keep their
+    batch tags).  Crash-order argument: the flip is FIRST and the new meta
+    (with its compaction epoch) rides inside the new layout, so any
+    prefix of the cleanup leaves a consistent store — stale sentinels
+    sit at or below the stamped epoch and a stale old generation is
+    unreachable garbage the next publish removes."""
+    _check_maintenance_lease(lease)
+    _flip_layout(store_path, new_gen, lease.fence)
     for f in os.listdir(store_path):
-        if f.startswith("_applied_"):
+        if f.startswith(clear):
             os.remove(os.path.join(store_path, f))
     _gc_store_generations(store_path, new_gen)
 
@@ -1415,8 +1422,6 @@ def _tombstone_frame(
     (UNABLE_TO_INFER_SCHEMA, caught by the maintenance-under-serving
     soak); with the schema given, a concurrently-emptied dir just reads
     as zero rows."""
-    if stored is None:
-        return spark.read.parquet(tomb_dir)
     from pyspark.sql.types import LongType, StructField, StructType
 
     sch = StructType(
@@ -1426,19 +1431,15 @@ def _tombstone_frame(
     return spark.read.schema(sch).parquet(tomb_dir)
 
 
-def _live_window(df: DataFrame, epoch: int, upper: int | None) -> DataFrame:
+def _live_window(df: DataFrame, epoch: int, upper: int) -> DataFrame:
     """Filter a delta/tombstone frame to the committed snapshot window
     ``epoch < batch <= upper``.  The lower bound drops rows a crashed
     compact stranded (already folded into base); the UPPER bound is the
     snapshot-isolation half: rows of a batch whose commit point
     (``applied_through`` in meta, replaced atomically) has not landed
     are invisible, so a serve racing a live ``apply_batch`` sees the
-    complete previous snapshot — never a half-applied batch.  ``upper``
-    None = pre-snapshot store layout, legacy unbounded behavior."""
-    df = df.filter(F.col("batch") > epoch)
-    if upper is not None:
-        df = df.filter(F.col("batch") <= int(upper))
-    return df
+    complete previous snapshot — never a half-applied batch."""
+    return df.filter(F.col("batch") > epoch).filter(F.col("batch") <= int(upper))
 
 
 def _live_view(
@@ -1446,7 +1447,7 @@ def _live_view(
     delta: DataFrame | None,
     tombs: DataFrame | None,
     epoch: int,
-    upper: int | None,
+    upper: int,
     row_key: list[str],
     id_key: list[str],
 ) -> DataFrame:
@@ -1563,12 +1564,6 @@ class PostingStore:
         if positions is None:
             positions = bool(meta.get("positions", True))
         self.positions = positions
-        if not meta and _dir_has_parquet(self.base_dir):
-            raise ValueError(
-                f"posting store at {path} has a base layout but no "
-                "base/_meta.json — a pre-v3 store; rebuild it (silently "
-                "defaulting the bucket count would mis-prune every query)"
-            )
 
     # -- generation-numbered layout (round 9) ---------------------------
     #
@@ -1627,13 +1622,6 @@ class PostingStore:
     def _doclen_delta_at(self, gen: int | None = None) -> str:
         return os.path.join(self._root(gen), "doclens_delta")
 
-    def _meta_at(self, gen: int | None) -> dict:
-        try:
-            with open(os.path.join(self._base_dir_at(gen), "_meta.json")) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return {}
-
     @property
     def base_dir(self) -> str:
         return self._base_dir_at()
@@ -1663,12 +1651,34 @@ class PostingStore:
         maintenance lease (every caller is ``@_with_maintenance_lease``)."""
         _publish_store_generation(self.path, new_gen, lease=_active_lease(self))
 
-    def _meta(self) -> dict:
+    def _meta(self, gen: int | None = None) -> dict:
+        """Meta of generation ``gen`` (default: the current one) — the
+        store's ONLY meta reader, so the layout version is checked here
+        once and every path below assumes the current layout.  ``{}``
+        means unbuilt; a base layout without meta, or meta of another
+        layout version, refuses (serving or maintaining it would
+        silently misread it: a defaulted bucket count mis-prunes every
+        query, an older stored schema drops columns)."""
+        base = self._base_dir_at(gen)
         try:
-            with open(self.meta_path) as f:
-                return json.load(f)
+            with open(os.path.join(base, "_meta.json")) as f:
+                meta = json.load(f)
         except (OSError, ValueError):
+            if _dir_has_parquet(base):
+                raise ValueError(
+                    f"posting store at {self.path} has a base layout but "
+                    "no base/_meta.json — a pre-v3 store; rebuild it "
+                    "(silently defaulting the bucket count would mis-prune "
+                    "every query)"
+                ) from None
             return {}
+        if meta.get("version") != POSTING_VERSION:
+            raise ValueError(
+                f"posting store at {self.path} has layout version "
+                f"{meta.get('version')} (current {POSTING_VERSION}) — "
+                "rebuild it before applying maintenance batches or serving"
+            )
+        return meta
 
     def _stored_schema(self, gen: int | None = None):
         """The dataset schema recorded at build time — reads supply it
@@ -1677,8 +1687,7 @@ class PostingStore:
         come back as an int and break tombstone joins and scoping)."""
         from pyspark.sql.types import StructType
 
-        m = self._meta_at(gen)
-        return StructType.fromJson(m["schema"]) if "schema" in m else None
+        return StructType.fromJson(self._meta(gen)["schema"])
 
     def bucket_of(self, term: str) -> int:
         """Query-side pruning bucket for a (stemmed) term — bound to
@@ -1837,25 +1846,15 @@ class PostingStore:
             raise ValueError("batch must be > 0 (0 is the base build)")
         if os.path.exists(self._sentinel(batch)):
             return False
-        if batch <= int(self._meta().get("compacted_through") or 0):
+        # the meta read refuses an older layout BEFORE any write
+        meta = self._meta()
+        if batch <= int(meta.get("compacted_through") or 0):
             # batch ids are monotone stream epochs; an id at or below
             # the compaction epoch is a replay of content already folded
             # into base (compact cleared its sentinel) — reapplying
             # would write delta rows the epoch filter ignores and, for
             # the IVF store, inflate certificate counts
             return False
-        # layout-version guard BEFORE any write: appending v5 deltas to
-        # an older base would half-apply the batch and then crash in
-        # the stats refresh (no _doclens sidecar) — and the old stored
-        # schema would silently drop the new dl/positions columns on
-        # read.  Same clear contract as stats(): rebuild first.
-        meta = self._meta()
-        if meta.get("version") != POSTING_VERSION:
-            raise ValueError(
-                f"posting store at {self.path} has layout version "
-                f"{meta.get('version')} (current {POSTING_VERSION}) — "
-                "rebuild it before applying maintenance batches"
-            )
         # tombstone key: (tenant, doc_id) on tenant-partitioned stores —
         # doc ids are only unique WITHIN a tenant (the reference's
         # per-tenant id spaces), so a doc-id-only tombstone from tenant
@@ -1865,7 +1864,7 @@ class PostingStore:
         # _sweep_promoted_orphans); runs under this applier's lease
         _sweep_promoted_orphans(
             [self.delta_dir, self.doclen_delta, self.tomb_dir],
-            int(meta.get("applied_through") or 0),
+            int(meta["applied_through"]),
             recheck=lambda: _fence_check(self),
         )
         tomb_key = ([self.tenant_col] if self.tenant_col else []) + ["doc_id"]
@@ -1913,13 +1912,10 @@ class PostingStore:
                     "(tenant, doc_id) pairs"
                 )
             # field types come from the stored build-time schema (exact,
-            # no partition-type inference, no extra read job); the
-            # upserts schema is the fallback for pre-schema stores
+            # no partition-type inference, no extra read job)
             from pyspark.sql.types import StructField, StructType
 
-            src = self._stored_schema() or (upserts.schema if upserts is not None else None)
-            if src is None:
-                raise ValueError("cannot derive tombstone schema (no meta schema)")
+            src = self._stored_schema()
             fields = [StructField(c, src[c].dataType) for c in tomb_key]
             tomb_parts.append(
                 spark.createDataFrame(
@@ -1995,18 +1991,12 @@ class PostingStore:
         base sidecar + deltas under the SAME tombstone liveness rule as
         the posting rows.  ``as_of`` overrides the committed-snapshot
         bound (maintenance passes its own in-flight batch id)."""
-        g = self._gen()  # pin ONE generation for the whole construction
-        sch = "doc_id long, dl double, batch long"
-        if self.tenant_col:
-            sch = f"{self.tenant_col} string, " + sch
-        stored = self._stored_schema(gen=g)
-        if stored is not None:
-            from pyspark.sql.types import StructField, StructType
+        from pyspark.sql.types import StructField, StructType
 
-            cols = ([self.tenant_col] if self.tenant_col else []) + [
-                "doc_id", "dl", "batch"
-            ]
-            sch = StructType([StructField(c, stored[c].dataType) for c in cols])
+        g = self._gen()  # pin ONE generation for the whole construction
+        stored = self._stored_schema(gen=g)
+        cols = ([self.tenant_col] if self.tenant_col else []) + ["doc_id", "dl", "batch"]
+        sch = StructType([StructField(c, stored[c].dataType) for c in cols])
         df = spark.read.schema(sch).parquet(self._doclen_base_at(g))
         epoch, upper = self._snapshot_bounds(as_of, gen=g)
         delta_dir, tomb_dir = self._doclen_delta_at(g), self._tomb_dir_at(g)
@@ -2027,32 +2017,27 @@ class PostingStore:
 
     def _snapshot_bounds(
         self, as_of: int | None = None, gen: int | None = None
-    ) -> tuple[int, int | None]:
+    ) -> tuple[int, int]:
         """(compaction epoch, committed upper bound) from ONE meta read
         — the window every live view filters deltas/tombstones by (see
         :func:`_live_window`).  ``as_of`` overrides the stamped bound:
         maintenance reads its own in-flight batch as visible."""
-        meta = self._meta_at(gen)
+        meta = self._meta(gen)
         epoch = int(meta.get("compacted_through") or 0)
-        upper = as_of if as_of is not None else meta.get("applied_through")
-        return epoch, (int(upper) if upper is not None else None)
+        return epoch, int(meta["applied_through"] if as_of is None else as_of)
 
-    def _refresh_stats(
-        self, spark: SparkSession, applied_through: int | None = None
-    ) -> None:
+    def _refresh_stats(self, spark: SparkSession, applied_through: int) -> None:
         """Recompute exact (n_docs, sum_dl) from the live doclens view
-        and publish atomically (os.replace on meta).  When called from
-        ``apply_batch``, ``applied_through`` is the in-flight batch id:
-        the stats INCLUDE it (``as_of`` bound) and the same meta write
-        advances the snapshot bound — stats and data commit together,
-        so a reader can never pair batch-B idf/avgdl with batch-(B-1)
-        posting rows."""
+        and publish atomically (os.replace on meta).  ``applied_through``
+        is ``apply_batch``'s in-flight batch id: the stats INCLUDE it
+        (``as_of`` bound) and the same meta write advances the snapshot
+        bound — stats and data commit together, so a reader can never
+        pair batch-B idf/avgdl with batch-(B-1) posting rows."""
         meta = self._meta()
         meta["stats"] = self._stats_of(
             self.read_doclens(spark, as_of=applied_through)
         )
-        if applied_through is not None:
-            meta["applied_through"] = int(applied_through)
+        meta["applied_through"] = int(applied_through)
         tmp = self.meta_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(meta, f)
@@ -2071,11 +2056,11 @@ class PostingStore:
         pair on tenant-partitioned stores (ranking statistics are
         RLS-scoped like the data: a tenant's idf/avgdl never reflect
         another tenant's corpus)."""
-        st = ((meta if meta is not None else self._meta_at(gen)) or {}).get("stats")
+        st = (meta if meta is not None else self._meta(gen)).get("stats")
         if not st or not st.get("n_docs"):
             raise ValueError(
                 f"posting store at {self.path} has no corpus stats — "
-                "pre-v4 store or empty corpus; rebuild it"
+                "unbuilt store or empty corpus"
             )
         if tenant is None:
             return st
@@ -2114,8 +2099,7 @@ class PostingStore:
         # build-time schema supplied explicitly: partition-column type
         # inference would otherwise reinterpret values (string tenant
         # '1001' -> int) and silently break tenant scoping + tombstones
-        stored = self._stored_schema(gen=g)
-        reader = spark.read.schema(stored) if stored is not None else spark.read
+        reader = spark.read.schema(self._stored_schema(gen=g))
 
         def scope(df):
             if buckets is not None:
@@ -2534,10 +2518,10 @@ class PostingStore:
         # maintenance soak caught elsewhere).  The snapshot's
         # applied_through is pushed into the row view as its bound.
         g = self._gen()
-        meta = self._meta_at(g)
+        meta = self._meta(g)
         idx = self.read(
             spark, buckets=buckets, tenant=tenant, gen=g,
-            as_of=meta.get("applied_through"),
+            as_of=meta["applied_through"],
         ).filter(F.col("term").isin(terms))
         # tenant-scoped ranking uses the tenant's OWN corpus stats (and
         # df comes from the tenant-pruned rows), so scores are identical
@@ -2595,18 +2579,6 @@ class PostingStore:
         pointer flips, and the directories the fold read stay on disk
         for one more compact interval — an in-flight serve keeps
         reading them instead of dying on a renamed path."""
-        # same layout-version guard as apply_batch, BEFORE any work:
-        # compacting a pre-v5 store would write the full new base and
-        # then crash in read_doclens (no _doclens sidecar), leaving an
-        # orphan layout behind — fail with the explicit rebuild
-        # message instead
-        meta = self._meta()
-        if meta.get("version") != POSTING_VERSION:
-            raise ValueError(
-                f"posting store at {self.path} has layout version "
-                f"{meta.get('version')} (current {POSTING_VERSION}) — "
-                "rebuild it before applying maintenance batches"
-            )
         # Fold EXACTLY the batches the stamped epoch will claim: the
         # bound comes from the applied-batch SENTINELS, not meta's
         # applied_through — a crash between apply_batch's meta commit
@@ -2818,17 +2790,8 @@ class IvfStore:
         #: reference's per-tenant vector search
         #: (042_match_function.sql:23-39)
         if tenant_col is None and os.path.exists(self.meta_path):
-            try:
-                tenant_col = self.meta().get("tenant_col")
-            except (OSError, ValueError):
-                tenant_col = None
+            tenant_col = self.meta()["tenant_col"]
         self.tenant_col = tenant_col
-        if not os.path.exists(self.meta_path) and _dir_has_parquet(self.assign_dir):
-            raise ValueError(
-                f"IVF store at {path} has assignments but no "
-                "assignments/_meta.json — a pre-v5 store; rebuild it "
-                "(stale or defaulted centroids would certify wrong probes)"
-            )
 
     # -- generation-numbered layout (round 9) ---------------------------
     # Same discipline as PostingStore: mutable dirs under layout-<gen>/,
@@ -2888,11 +2851,7 @@ class IvfStore:
         centroid values."""
         from pyspark.sql.types import StructType
 
-        try:
-            m = self.meta(gen)
-        except (OSError, ValueError):
-            return None
-        return StructType.fromJson(m["schema"]) if "schema" in m else None
+        return StructType.fromJson(self.meta(gen)["schema"])
 
     @_with_maintenance_lease
     def build(
@@ -3227,7 +3186,7 @@ class IvfStore:
         # _sweep_promoted_orphans); runs under this applier's lease
         _sweep_promoted_orphans(
             [self.delta_dir, self.tomb_dir],
-            int(m.get("applied_through") or 0),
+            int(m["applied_through"]),
             recheck=lambda: _fence_check(self),
         )
         cents = sorted(zip(m["centroid_ids"], m["centroids"]))
@@ -3353,12 +3312,6 @@ class IvfStore:
             from pyspark.sql.types import StructField, StructType
 
             src = self._stored_schema()
-            if src is None:
-                src = (
-                    upserts.schema
-                    if upserts is not None
-                    else spark.read.parquet(self.assign_dir).schema
-                )
             tomb_cols = [self.tenant_col, id_col] if self.tenant_col else [id_col]
             tomb = spark.createDataFrame(
                 sorted(tomb_ids),
@@ -3366,7 +3319,7 @@ class IvfStore:
             ).withColumn("batch", F.lit(batch).cast("long"))
             # staged, promoted after the pre-commit fence check (tomb
             # FIRST, preserving the step 2→3 order the crash argument
-            # above relies on for pre-snapshot-layout stores)
+            # above relies on)
             promotes.append(
                 _staged_append(
                     self.tomb_dir,
@@ -3392,8 +3345,8 @@ class IvfStore:
         # bound hides this batch's tombstones AND delta rows, so a serve
         # racing this apply sees the complete previous snapshot (an
         # upserted id is never observed absent between steps 2 and 3
-        # above).  The pessimistic step-1 write still protects pre-
-        # snapshot-layout stores and the crash-replay window.
+        # above).  The pessimistic step-1 write still protects the
+        # crash-replay window.
         m["applied_through"] = batch
         # a stale (stolen-lease) applier stops HERE — with the
         # tombstone/delta writes still staged, so it leaves no ROW DATA
@@ -3454,21 +3407,16 @@ class IvfStore:
 
         key = [self.tenant_col, id_col] if self.tenant_col else [id_col]
         stored = self._stored_schema(gen=g)
-        reader = spark.read.schema(stored) if stored is not None else spark.read
+        reader = spark.read.schema(stored)
         df = scope(reader.parquet(self._assign_dir_at(g)))
         # snapshot window (see PostingStore.read's identical guard, SAME
         # pinned generation as the dirs): the epoch drops stale files a
         # crashed compact already folded into base; the committed upper
         # bound hides batches whose final meta write has not landed
         # (_live_window)
-        epoch, upper = 0, as_of
-        try:
-            m = self.meta(g)
-            epoch = int(m.get("compacted_through") or 0)
-            if upper is None:
-                upper = m.get("applied_through")
-        except (OSError, ValueError):
-            pass
+        m = self.meta(g)
+        epoch = int(m.get("compacted_through") or 0)
+        upper = m["applied_through"] if as_of is None else as_of
         delta_dir, tomb_dir = self._delta_dir_at(g), self._tomb_dir_at(g)
         return _live_view(
             df,
@@ -3545,26 +3493,7 @@ class IvfStore:
             from car_etl_spark.operators import pq as PQ
 
             dim = int(m["pq"]["dim"])
-            # stores built before id_col was recorded in meta: derive it
-            # from the live schema (first non-reserved column) instead of
-            # assuming vec_id — an explicit compact(retrain=True) on an
-            # older-layout store with a non-default id column otherwise
-            # dies with an unresolved-column error
-            idc = m.get("id_col")
-            if idc is None or idc not in live.columns:
-                reserved = {
-                    vec_col, "batch", "centroid_id", "pq_code", "pq_err",
-                    self.tenant_col,
-                }
-                idc = next(
-                    (c for c in live.columns if c not in reserved), None
-                )
-                if idc is None:
-                    raise ValueError(
-                        "cannot infer the id column for PQ retraining on "
-                        "this store layout — rebuild with the current "
-                        "layout (which records id_col in meta)"
-                    )
+            idc = m["id_col"]
             sample = (
                 live.filter(F.col(vec_col).isNotNull())
                 .select(idc, vec_col)
@@ -3620,8 +3549,31 @@ class IvfStore:
         self._publish_generation(new_gen)
 
     def meta(self, gen: int | None = None) -> dict:
-        with open(os.path.join(self._assign_dir_at(gen), "_meta.json")) as f:
-            return json.load(f)
+        """Meta of generation ``gen`` (default: the current one) — the
+        store's ONLY meta reader, so the layout version is checked here
+        once and every path assumes the current layout.  Assignments
+        without meta, or meta of another layout version, refuse (stale
+        or defaulted centroids and statistics would certify wrong
+        probes); an unbuilt store raises ``FileNotFoundError``."""
+        assign = self._assign_dir_at(gen)
+        try:
+            with open(os.path.join(assign, "_meta.json")) as f:
+                m = json.load(f)
+        except FileNotFoundError:
+            if _dir_has_parquet(assign):
+                raise ValueError(
+                    f"IVF store at {self.path} has assignments but no "
+                    "assignments/_meta.json — a pre-v5 store; rebuild it"
+                ) from None
+            raise
+        if m.get("version") != IVF_VERSION:
+            raise ValueError(
+                f"IVF store at {self.path} has layout version "
+                f"{m.get('version')} (current {IVF_VERSION}) — rebuild it; "
+                "its meta lacks what a rebuild or compact under the current "
+                "layout stamps"
+            )
+        return m
 
     def _centroid_angles(self, qvec: list[float], meta: dict | None = None):
         import numpy as np
@@ -3684,37 +3636,19 @@ class IvfStore:
         fstats = vset = tentry = None
         if where is not None:
             col, values = where
+            fstats = (m.get("filters") or {}).get(col)
+            if fstats is None:
+                raise ValueError(
+                    f"{col!r} is not a declared filter column of this "
+                    "store — rebuild with filter_cols=(...)"
+                )
             if tenant is not None:
+                # a declared column without a (tenant, centroid, value)
+                # entry for this tenant means the tenant has zero non-NULL
+                # rows in it — probing nothing loses nothing, the correct
+                # answer is empty
                 tentry = (m.get("tenants") or {}).get(str(tenant), {})
-                fstats = (tentry.get("filters") or {}).get(col)
-                if fstats is None and (m.get("filters") or {}).get(col) is None:
-                    raise ValueError(
-                        f"{col!r} is not a declared filter column of this "
-                        "store — rebuild with filter_cols=(...)"
-                    )
-                if fstats is None:
-                    # declared column but no (tenant, centroid, value)
-                    # stats.  The meta VERSION disambiguates: pre-v6
-                    # layouts never wrote the grain (serving from
-                    # marginals would over-certify — refuse with the
-                    # rebuild hint), while on v6+ a missing entry just
-                    # means this tenant has zero non-NULL rows in the
-                    # column — probing nothing loses nothing, the
-                    # correct answer is empty.
-                    if int(m.get("version") or 0) < 6:
-                        raise ValueError(
-                            "tenant x filter serving needs per-(tenant, "
-                            "centroid, value) statistics — rebuild or "
-                            "compact this store with the current layout"
-                        )
-                    fstats = {}
-            else:
-                fstats = (m.get("filters") or {}).get(col)
-                if fstats is None:
-                    raise ValueError(
-                        f"{col!r} is not a declared filter column of this "
-                        "store — rebuild with filter_cols=(...)"
-                    )
+                fstats = (tentry.get("filters") or {}).get(col, {})
             # SET semantics: duplicate (or str-colliding) values would
             # double-count matching members, certify the walk early,
             # and prune clusters still holding true top-k rows
@@ -3855,7 +3789,7 @@ class IvfStore:
         parquet scan."""
         scan = self.read_assignments(
             spark, probes=probes, id_col=id_col, tenant=tenant,
-            as_of=m.get("applied_through"), gen=g,
+            as_of=m["applied_through"], gen=g,
         ).coalesce(self._serving_task_count(probes, m))
         if where is not None:
             scan = scan.filter(F.col(where[0]).isin(list(where[1])))

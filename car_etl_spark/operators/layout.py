@@ -21,10 +21,12 @@ Spark-first mechanics, no Delta dependency:
   under a hot key.  Edges are computed once per write.
 - **bit interleave** as pure integer Column arithmetic
   (shift/and/or literals — whole-stage codegen, no UDF).
-- **layout = repartitionByRange(zkey) + sortWithinPartitions(zkey)**:
-  one range shuffle (sampled boundaries), each output file covers a
-  contiguous z-range.  At 100 TB this is the standard one-shuffle
-  re-cluster; the write itself is embarrassingly parallel.
+- **layout = exact z-runs + repartition + sortWithinPartitions(zkey)**:
+  the occupied z cells are counted (one aggregate at cell grain) and cut
+  into equi-depth runs by exact counts, so each output file covers a
+  contiguous z-range that is a function of the data alone — a range
+  partitioner's sampled bounds move with the order rows arrive in.  One
+  shuffle; the write itself is embarrassingly parallel.
 - **verification reads parquet footers directly** (pyarrow): per-file
   min/max of each z-column, so tests assert the actual skipping
   property — candidate-file fraction under single-column predicates —
@@ -44,6 +46,7 @@ import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 MAX_TOTAL_BITS = 62  # interleaved key must stay in a positive BIGINT
 
@@ -122,6 +125,37 @@ def zorder_key(edges: dict[str, list[float]], bits_per_col: int) -> Column:
     return key
 
 
+def _z_runs(zdf: DataFrame, keys: list[str], num_files: int) -> DataFrame:
+    """``(keys..., __part)``: the shuffle partition of every occupied
+    ``keys`` cell (partition values + ``__z``), from exact counts.
+    Cells walk in key order and cut into ``num_files`` equi-depth runs
+    — the range partitioner's contract without its bound sampling.
+    ``__part`` is a key Spark's hash partitioner sends to partition
+    ``b`` exactly (``pmod(hash(key), n) == b``, the expression the
+    exchange evaluates), so ``repartition(num_files, "__part")`` puts
+    run ``b`` alone in task ``b``.  One row per occupied cell: at most
+    ``2^(bits x cols)`` per partition value, control-plane for the bit
+    budgets this layout writes."""
+    spark = zdf.sparkSession
+    cells = zdf.groupBy(*keys).count().orderBy(*keys).collect()
+    total = sum(r["count"] for r in cells)
+    key_of = {
+        r.p: r.k
+        for r in spark.range(64 * num_files)
+        .groupBy(F.pmod(F.hash("id"), F.lit(num_files)).alias("p"))
+        .agg(F.min("id").alias("k"))
+        .collect()
+    }
+    rows, seen = [], 0
+    for r in cells:
+        rows.append((*(r[c] for c in keys), key_of[seen * num_files // total]))
+        seen += r["count"]
+    schema = StructType(
+        [zdf.schema[c] for c in keys] + [StructField("__part", LongType())]
+    )
+    return spark.createDataFrame(rows, schema)
+
+
 def write_zordered(
     df: DataFrame,
     path: str,
@@ -139,7 +173,7 @@ def write_zordered(
     ``partition_cols`` (e.g. ``("tenant_id",)``) combines directory
     pruning with z-clustering: the layout becomes
     ``<pcol>=<v>/part-*.parquet`` with files INSIDE each directory
-    covering contiguous z-ranges (the range partitioner keys on
+    covering contiguous z-ranges (the runs of :func:`_z_runs` cut
     (pcols..., __z) and the sort leads with the partition columns, so
     FileFormatWriter preserves the z-order into each file).  Bin edges
     stay GLOBAL — one approxQuantile pass, shared z-space — so
@@ -147,11 +181,16 @@ def write_zordered(
     tenant whose value distribution diverges wildly re-clusters alone
     by passing its own slice."""
     edges = equidepth_edges(df, cols, bits_per_col)
-    zkey = zorder_key(edges, bits_per_col)
-    staged = df.withColumn("__z", zkey).repartitionByRange(
-        num_files, *[F.col(c) for c in partition_cols], F.col("__z")
+    keys = [*partition_cols, "__z"]
+    zdf = df.withColumn("__z", zorder_key(edges, bits_per_col))
+    runs = _z_runs(zdf, keys, num_files)
+    staged = (
+        zdf.join(F.broadcast(runs), [zdf[c].eqNullSafe(runs[c]) for c in keys])
+        .drop(*[runs[c] for c in keys])
+        .repartition(num_files, "__part")
+        .sortWithinPartitions(*partition_cols, "__z")
+        .drop("__z", "__part")
     )
-    staged = staged.sortWithinPartitions(*partition_cols, "__z").drop("__z")
     with _stats_timestamps(df):
         w = staged.write.mode(mode)
         if partition_cols:

@@ -672,9 +672,9 @@ def kmeans_refine(
     """Lloyd refinement of the IVF coarse quantizer: assign -> per-
     cluster mean -> repeat.  Returns (centroid_id, centroid_vec).
 
-    The seed centroids (first-N table vectors) give a correct but
-    unbalanced quantizer; a few Lloyd steps equalize cluster sizes so
-    nprobe buckets carry comparable candidate counts — better
+    The seed centroids give a correct but unbalanced quantizer; a few
+    Lloyd steps equalize cluster sizes so probed buckets carry
+    comparable candidate counts — better
     recall-per-scanned-vector.  Each iteration is one map-only
     assignment (:func:`ivf_assign`) plus ONE aggregation: the per-
     cluster mean is computed with ``posexplode`` + groupBy on
@@ -716,63 +716,6 @@ def kmeans_refine(
         # centroids; they are tiny — cut lineage growth across iterations
         current = current.localCheckpoint(eager=True)
     return current
-
-
-def ivf_topk(
-    emb: DataFrame,
-    query_vec,
-    k: int = 10,
-    num_centroids: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    refine_iterations: int = 0,
-) -> DataFrame:
-    """IVF-style ANN top-k: probe the ``nprobe`` centroids nearest the
-    query and scan only their buckets.
-
-    Centroids are deterministic: the first ``num_centroids`` vectors of
-    the table act as coarse seeds; ``refine_iterations`` > 0 runs that
-    many Lloyd steps (:func:`kmeans_refine`) to balance the buckets
-    before assignment.  Recall vs brute force is validated in tests; at
-    nprobe=num_centroids this degrades gracefully to exact search.
-    """
-    centroids = emb.filter(F.col(id_col) < num_centroids).select(
-        F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("centroid_vec")
-    )
-    if refine_iterations > 0:
-        centroids = kmeans_refine(emb, centroids, refine_iterations, id_col, vec_col)
-    # ONE centroid collect serves the assignment kernel AND the dim
-    # probe for the scoring-path choice — no separate emb.first() job
-    centroid_rows = centroids.select("centroid_id", "centroid_vec").collect()
-    assigned = ivf_assign(emb, centroids, id_col, vec_col, centroid_rows=centroid_rows)
-
-    spark = emb.sparkSession
-    qdf = spark.range(1).select(query_vec.alias("qvec"))
-    probe = (
-        centroids.crossJoin(F.broadcast(qdf))
-        .select(
-            "centroid_id",
-            V.cosine_similarity(F.col("centroid_vec"), F.col("qvec")).alias("s"),
-        )
-        .orderBy(F.desc("s"), F.asc("centroid_id"))
-        .limit(nprobe)
-        .select("centroid_id")
-    )
-    candidates = assigned.join(F.broadcast(probe), "centroid_id").crossJoin(
-        F.broadcast(qdf)
-    )
-    # dim-aware exact scoring over the probed buckets; dim comes from
-    # the already-collected centroids (same table), not an extra job
-    dim = next(
-        (len(r.centroid_vec) for r in centroid_rows if r.centroid_vec is not None), 0
-    )
-    sim = dim_cosine(F.col(vec_col), F.col("qvec"), dim)
-    return (
-        candidates.select(id_col, F.round(sim, 6).alias("cosine_sim"))
-        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
-        .limit(k)
-    )
 
 
 def _hyperplanes(dim: int, num_planes: int, seed: int = 42) -> list[list[float]]:

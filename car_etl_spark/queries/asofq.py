@@ -57,6 +57,33 @@ ASOF_DEL_MOD = 11
 ASOF_REV_TOKEN = "zzasofrev"
 
 
+def asof_store_paths(sf_dir: str) -> tuple[str, str]:
+    """(posting, rollup) store paths, content-addressed on the source
+    tables, the batch rules and each store's LAYOUT VERSION — a layout
+    bump re-addresses the pair instead of reopening an older layout the
+    stores refuse."""
+    from car_etl_spark.operators import indexing as IX
+    from car_etl_spark.streaming import rollup_store as RS
+
+    params = (
+        f"cap{ASOF_DOC_CAP}|up{ASOF_UP_MOD}|del{ASOF_DEL_MOD}|"
+        f"B{ASOF_BATCHES}|{ASOF_REV_TOKEN}"
+    )
+    pdig = IX._source_digest(
+        "asof-posting", IX.POSTING_VERSION,
+        os.path.join(sf_dir, "documents.parquet"), params,
+    )
+    rdig = IX._source_digest(
+        "asof-rollup", RS.ROLLUP_VERSION,
+        os.path.join(sf_dir, "events.parquet"), params,
+    )
+    root = IX.index_root()
+    return (
+        os.path.join(root, f"asof-posting-{pdig}"),
+        os.path.join(root, f"asof-rollup-{rdig}"),
+    )
+
+
 def ensure_asof_stores(spark: SparkSession, sf_dir: str):
     """Content-addressed (posting, rollup) store pair with the
     deterministic batch history applied — built once per corpus
@@ -66,19 +93,7 @@ def ensure_asof_stores(spark: SparkSession, sf_dir: str):
     from car_etl_spark.operators import indexing as IX
     from car_etl_spark.streaming.rollup_store import RollupStore
 
-    params = (
-        f"cap{ASOF_DOC_CAP}|up{ASOF_UP_MOD}|del{ASOF_DEL_MOD}|"
-        f"B{ASOF_BATCHES}|{ASOF_REV_TOKEN}"
-    )
-    pdig = IX._source_digest(
-        "asof-posting", 1, os.path.join(sf_dir, "documents.parquet"), params
-    )
-    rdig = IX._source_digest(
-        "asof-rollup", 1, os.path.join(sf_dir, "events.parquet"), params
-    )
-    root = IX.index_root()
-    ppath = os.path.join(root, f"asof-posting-{pdig}")
-    rpath = os.path.join(root, f"asof-rollup-{rdig}")
+    ppath, rpath = asof_store_paths(sf_dir)
     posting = IX.PostingStore(ppath, num_buckets=8)
     rollup = RollupStore(rpath)
 

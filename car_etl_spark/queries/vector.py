@@ -303,7 +303,7 @@ def _vector_ivf_topk_batch_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assigned = store.read_assignments(
         spark, probes=sorted(probe_union),
-        as_of=meta.get("applied_through"), gen=gen,
+        as_of=meta["applied_through"], gen=gen,
     )
     sim = F.round(V.cosine_similarity(F.col("embedding"), F.col("qvec")), 6)
     scored = (

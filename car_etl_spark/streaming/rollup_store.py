@@ -63,12 +63,22 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# names tests replace (the orphan sweep, the post-promote crash seam)
+# are looked up on the module at call time, through _IX
+from car_etl_spark.operators import indexing as _IX
 from car_etl_spark.operators.indexing import (
     COMPACT_DELTA_FRACTION,
+    MaintenanceFencedError,
+    _active_lease,
     _dir_has_parquet,
     _ensure_store,
+    _fence_check,
+    _layout_gen,
+    _layout_root,
+    _publish_store_generation,
     _should_compact,
     _source_digest,
+    _staged_append,
     _with_maintenance_lease,
     index_root,
 )
@@ -77,6 +87,11 @@ from car_etl_spark.operators.indexing import (
 _DEC = "decimal(30,6)"
 
 GRAINS = ("minute", "hour", "day")
+
+#: layout version stamped into meta, checked by :meth:`RollupStore._meta`
+#: and hashed into every rollup store digest (a bump re-addresses cached
+#: stores instead of leaving them to be refused)
+ROLLUP_VERSION = 4
 
 
 class RollupStoreParamError(RuntimeError):
@@ -122,28 +137,15 @@ class RollupStore:
     # never-invalidate-an-in-flight-serve guarantee as compact.
 
     def _gen(self) -> int:
-        from car_etl_spark.operators.indexing import _layout_gen
-
         return _layout_gen(self.path)
 
     def _base_dir_at(self, gen: int | None = None) -> str:
-        from car_etl_spark.operators.indexing import _layout_root
-
         g = self._gen() if gen is None else gen
         return os.path.join(_layout_root(self.path, g), "base")
 
     def _delta_dir_at(self, gen: int | None = None) -> str:
-        from car_etl_spark.operators.indexing import _layout_root
-
         g = self._gen() if gen is None else gen
         return os.path.join(_layout_root(self.path, g), "delta")
-
-    def _meta_at(self, gen: int | None = None) -> dict | None:
-        mp = os.path.join(self._base_dir_at(gen), "_meta.json")
-        if os.path.exists(mp):
-            with open(mp) as f:
-                return json.load(f)
-        return None
 
     @property
     def base_dir(self) -> str:
@@ -196,11 +198,22 @@ class RollupStore:
             "tenant_col": self.tenant_col,
         }
 
-    def _meta(self) -> dict | None:
-        if os.path.exists(self.meta_path):
-            with open(self.meta_path) as f:
-                return json.load(f)
-        return None
+    def _meta(self, gen: int | None = None) -> dict | None:
+        """Meta of generation ``gen`` (default: the current one), None
+        when unbuilt — the store's ONLY meta reader, so the layout
+        version is checked here once and every path assumes the current
+        layout."""
+        mp = os.path.join(self._base_dir_at(gen), "_meta.json")
+        if not os.path.exists(mp):
+            return None
+        with open(mp) as f:
+            m = json.load(f)
+        if m.get("version") != ROLLUP_VERSION:
+            raise RollupStoreParamError(
+                f"rollup state at {self.path} has layout version "
+                f"{m.get('version')} (current {ROLLUP_VERSION}) — rebuild it"
+            )
+        return m
 
     def _check_params(self) -> None:
         m = self._meta()
@@ -222,7 +235,7 @@ class RollupStore:
             json.dump(
                 {
                     "spec": self._spec(),
-                    "version": 2,
+                    "version": ROLLUP_VERSION,
                     "schema": schema.jsonValue(),
                     "compacted_through": compacted_through,
                 },
@@ -232,10 +245,7 @@ class RollupStore:
     def _stored_schema(self, gen: int | None = None):
         from pyspark.sql.types import StructType
 
-        m = self._meta_at(gen)
-        if m and "schema" in m:
-            return StructType.fromJson(m["schema"])
-        return None
+        return StructType.fromJson(self._meta(gen)["schema"])
 
     def _pcols(self) -> list[str]:
         return ([self.tenant_col] if self.tenant_col else []) + ["event_date"]
@@ -295,43 +305,23 @@ class RollupStore:
         return mx
 
     def _publish_generation(self, new_gen: int) -> None:
-        """Flip the pointer to the freshly-stamped generation, then
-        clear stale maintenance state.  Crash-order argument: the flip
-        is FIRST and the meta (with the new epoch) rides inside the new
-        layout, so any prefix of the cleanup leaves a consistent store
-        — stranded delta files sit at or below the epoch and every
-        reader ignores them.  The PREVIOUS generation stays on disk for
-        one more compact interval (deferred GC, the
-        ``_publish_store_generation`` discipline from
-        operators/indexing), so an in-flight serve keeps reading the
-        files it listed instead of dying on a renamed path."""
-        from car_etl_spark.operators.indexing import (
-            _active_lease,
-            _check_maintenance_lease,
-            _flip_layout,
-            _gc_store_generations,
+        """Publish the freshly-stamped generation through the stores'
+        one fenced sequence (:func:`_publish_store_generation`), clearing
+        the batch markers and the dirty flag: a fresh base folds every
+        applied batch and has no replay duplicates by construction.
+        The meta (with the new epoch) rides inside the new layout, so
+        any prefix of the cleanup leaves a consistent store — stranded
+        delta files sit at or below the epoch and every reader ignores
+        them."""
+        _publish_store_generation(
+            self.path, new_gen, _active_lease(self),
+            clear=("_batch_", os.path.basename(self._dirty_path)),
         )
-
-        lease = _active_lease(self)
-        if lease is not None:
-            _check_maintenance_lease(lease)
-        _flip_layout(self.path, new_gen, fence=lease.fence if lease else None)
-        for f in os.listdir(self.path):
-            if f.startswith("_batch_"):
-                os.remove(os.path.join(self.path, f))
-        # a fresh base has no replay duplicates by construction
-        try:
-            os.remove(self._dirty_path)
-        except OSError:
-            pass
-        _gc_store_generations(self.path, new_gen)
 
     # -- lifecycle ---------------------------------------------------------
 
     @_with_maintenance_lease
     def build(self, events: DataFrame) -> None:
-        from car_etl_spark.operators.indexing import _layout_gen, _layout_root
-
         os.makedirs(self.path, exist_ok=True)
         new_gen = _layout_gen(self.path) + 1
         newroot = _layout_root(self.path, new_gen)
@@ -363,19 +353,11 @@ class RollupStore:
             # content already folded into base (compact cleared its
             # sentinel) — refuse like the sentinel does
             return False
-        from car_etl_spark.operators import indexing as _IX
-        from car_etl_spark.operators.indexing import (
-            MaintenanceFencedError,
-            _fence_check,
-            _staged_append,
-            _sweep_promoted_orphans,
-        )
-
         # retract crash orphans from a previous attempt BEFORE staging
         # anything: files promoted by an applier that crashed before its
         # sentinel landed carry batch ids above the committed bound and
         # would surface under a different-content recommit (r12)
-        _orph, _skipped = _sweep_promoted_orphans(
+        _orph, _skipped = _IX._sweep_promoted_orphans(
             [self.delta_dir], self._max_sentinel(),
             recheck=lambda: _fence_check(self),
         )
@@ -460,13 +442,12 @@ class RollupStore:
         # build-time schema supplied explicitly: partition-column type
         # inference would otherwise reinterpret values (string tenant
         # '0100' folding into int 100 merges two tenants' aggregates)
-        stored = self._stored_schema(gen=g)
-        reader = spark.read.schema(stored) if stored is not None else spark.read
+        reader = spark.read.schema(self._stored_schema(gen=g))
         df = reader.parquet(self._base_dir_at(g))
         # the compaction epoch drops delta rows already folded into
         # base (a crash between compact's publish and its delta cleanup
         # strands them; counting them again doubles n/sums)
-        epoch = int((self._meta_at(g) or {}).get("compacted_through") or 0)
+        epoch = int(self._meta(g).get("compacted_through") or 0)
         if _dir_has_parquet(self._delta_dir_at(g)):
             df = df.unionByName(
                 reader.parquet(self._delta_dir_at(g)).filter(
@@ -562,8 +543,6 @@ class RollupStore:
             "value_max",
             F.lit(0).cast("long").alias("batch"),
         )
-        from car_etl_spark.operators.indexing import _layout_gen, _layout_root
-
         new_gen = _layout_gen(self.path) + 1
         newroot = _layout_root(self.path, new_gen)
         shutil.rmtree(newroot, ignore_errors=True)
@@ -627,14 +606,6 @@ class RollupStore:
         # untouched (unlike compact): the carried-over delta files keep
         # their batch tags, so the committed bound and the epoch keep
         # meaning exactly what they meant in the previous generation.
-        from car_etl_spark.operators.indexing import (
-            _active_lease,
-            _check_maintenance_lease,
-            _flip_layout,
-            _gc_store_generations,
-            _layout_root,
-        )
-
         g = self._gen()
         old_base, old_delta = self._base_dir_at(g), self._delta_dir_at(g)
         new_gen = g + 1
@@ -675,14 +646,10 @@ class RollupStore:
                     os.makedirs(os.path.dirname(dst), exist_ok=True)
                     os.replace(src, dst)
         shutil.rmtree(tmpdir, ignore_errors=True)
-        lease = _active_lease(self)
-        if lease is not None:
-            # same pre-flip revalidation as _publish_generation: a
-            # refresher whose lease was stolen mid-campaign must not
-            # publish a generation built from pre-steal state
-            _check_maintenance_lease(lease)
-        _flip_layout(self.path, new_gen, fence=lease.fence if lease else None)
-        _gc_store_generations(self.path, new_gen)
+        # the same fenced publish as compact (a refresher whose lease was
+        # stolen mid-campaign must not publish a generation built from
+        # pre-steal state), clearing no root markers
+        _publish_store_generation(self.path, new_gen, _active_lease(self), clear=())
 
 
 def run_rollup_maintenance(
@@ -716,10 +683,7 @@ def ensure_rollup_store(spark: SparkSession, sf_dir: str) -> RollupStore:
     (path + mtime digest, built once per corpus version, reused across
     sessions)."""
     source = os.path.join(sf_dir, "events.parquet")
-    # version 3: meta moved INSIDE base/ (atomic with the swap) and
-    # gained the dataset schema + compaction epoch — older layouts
-    # re-address rather than half-upgrade
-    digest = _source_digest("rollup", 3, source, "event_type|minute")
+    digest = _source_digest("rollup", ROLLUP_VERSION, source, "event_type|minute")
     path = os.path.join(index_root(), f"rollup-{digest}")
     store = RollupStore(path)
     return _ensure_store(

@@ -20,6 +20,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import shutil
 import sys
 import time
 
@@ -59,6 +60,17 @@ if _unknown:
         f"SCALE_CURVE_SECTIONS: unknown section(s) {_unknown}; "
         f"known: {','.join(_KNOWN_SECTIONS)}"
     )
+
+
+def _open_cached(open_store, path: str):
+    """Open the cached store at ``path``; one the store refuses to open
+    (an older layout version, or data without meta) is removed and
+    reopened empty, so this run rebuilds it."""
+    try:
+        return open_store(path)
+    except ValueError:
+        shutil.rmtree(path)
+        return open_store(path)
 
 
 def timed(fn, runs: int = 3) -> float:
@@ -170,13 +182,12 @@ def main() -> None:
         src = make_docs(spark, n)
         est = IX.estimate_posting_rows(src)  # directory-aware footer sum
         nb = IX.derive_num_buckets(est)
-        store = IX.PostingStore(os.path.join(ROOT, f"store-{n}"), num_buckets=nb)
+        store = _open_cached(
+            lambda p: IX.PostingStore(p, num_buckets=nb),
+            os.path.join(ROOT, f"store-{n}"),
+        )
         build_s = None
-        # rebuild cached stores from older layout versions
-        if (
-            not IX._dir_has_parquet(store.base_dir)
-            or (store._meta() or {}).get("version") != IX.POSTING_VERSION
-        ):
+        if not IX._dir_has_parquet(store.base_dir):
             t0 = time.perf_counter()
             store.build(spark.read.parquet(src))
             build_s = round(time.perf_counter() - t0, 2)
@@ -224,14 +235,12 @@ def main() -> None:
     # 5k/20k/80k — the 320k trigram build is ~6x rows
     for n in DOC_SIZES[:3] if "substring" in SECTIONS else ():
         src = make_marked_docs(spark, n)
-        tstore = IX.PostingStore(
-            os.path.join(ROOT, f"tristore-{n}"), analyzer="trigram"
+        tstore = _open_cached(
+            lambda p: IX.PostingStore(p, analyzer="trigram"),
+            os.path.join(ROOT, f"tristore-{n}"),
         )
         build_s = None
-        if (
-            not IX._dir_has_parquet(tstore.base_dir)
-            or (tstore._meta() or {}).get("version") != IX.POSTING_VERSION
-        ):
+        if not IX._dir_has_parquet(tstore.base_dir):
             t0 = time.perf_counter()
             tstore.build(spark.read.parquet(src))
             build_s = round(time.perf_counter() - t0, 2)
@@ -277,15 +286,7 @@ def main() -> None:
     for n in VEC_SIZES if "ivf" in SECTIONS else ():
         k = IX.derive_num_centroids(n)
         ivf_path = os.path.join(ROOT, f"ivf-{n}")
-        # self-heal stale cached layouts from older store versions (the
-        # constructor refuses a layout without meta rather than guess)
-        if os.path.isdir(ivf_path) and not os.path.exists(
-            os.path.join(ivf_path, "assignments", "_meta.json")
-        ):
-            import shutil
-
-            shutil.rmtree(ivf_path)
-        store = IX.IvfStore(ivf_path)
+        store = _open_cached(IX.IvfStore, ivf_path)
         build_s = None
         if not os.path.exists(store.meta_path):
             t0 = time.perf_counter()

@@ -156,3 +156,35 @@ def test_search_idioms_have_one_home():
         if isinstance(t, ast.Name) and t.id == "RRF_K"
     ]
     assert len(assigns) == 1, assigns
+
+
+def _function_def(rel: str, name: str) -> ast.FunctionDef:
+    tree = ast.parse(open(os.path.join(PKG, rel)).read())
+    return next(
+        n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == name
+    )
+
+
+def _defaulted_params(fn: ast.FunctionDef) -> set[str]:
+    args = fn.args
+    positional = args.posonlyargs + args.args
+    named = positional[len(positional) - len(args.defaults):] if args.defaults else []
+    kw = [a for a, d in zip(args.kwonlyargs, args.kw_defaults) if d is not None]
+    return {a.arg for a in named + kw}
+
+
+def test_every_generation_publish_is_fenced():
+    """A generation publish always carries a lease: ``_flip_layout``'s
+    ``fence`` and ``_publish_store_generation``'s ``lease`` are required,
+    and no store derives an optional fence from an optional lease."""
+    ix = os.path.join("operators", "indexing.py")
+    assert "fence" not in _defaulted_params(_function_def(ix, "_flip_layout"))
+    assert "lease" not in _defaulted_params(
+        _function_def(ix, "_publish_store_generation")
+    )
+    offenders = [
+        os.path.relpath(p, PKG)
+        for p in _py_files()
+        if re.search(r"if\s+lease\s+else\s+None", open(p).read())
+    ]
+    assert not offenders, f"unfenced publish path: {offenders}"

@@ -655,6 +655,36 @@ def test_compact_refuses_older_layout_version(spark, tmp_path, inc_store):
     assert not os.path.exists(inc_store.base_dir + ".tmp")
 
 
+def test_serving_refuses_older_layout_version(spark, inc_store):
+    """The layout version is checked where meta is read, so an older
+    store is refused by the serving read and at open, not only by
+    maintenance."""
+    import json
+
+    meta = inc_store._meta()
+    meta["version"] = IX.POSTING_VERSION - 1
+    with open(inc_store.meta_path, "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(ValueError, match="rebuild it"):
+        inc_store.read(spark)
+    with pytest.raises(ValueError, match="rebuild it"):
+        IX.PostingStore(inc_store.path)
+
+
+def test_ivf_serving_refuses_older_layout_version(spark, tmp_path):
+    emb = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0]) for i in range(6)],
+        "vec_id long, embedding array<double>",
+    )
+    store = IX.IvfStore(str(tmp_path / "oivf"))
+    store.build(emb, num_centroids=2, refine_iterations=0, keep=())
+    meta = store.meta()
+    meta["version"] = IX.IVF_VERSION - 1
+    store._write_meta(meta)
+    with pytest.raises(ValueError, match="rebuild it"):
+        store.read_assignments(spark)
+
+
 # -- filtered vector search (r7: declared filterable attributes) ------------
 
 
@@ -1472,47 +1502,6 @@ def test_positionsless_recheck_short_text_yields_no_offsets(spark, tmp_path, mon
         for r in lean.substring_search(spark, "quick brown", docs=docs).collect()
     ]
     assert got == [(1, "en", 1)]
-
-
-def test_pq_retrain_infers_id_col_on_legacy_meta(spark, tmp_path):
-    """Stores built before ``id_col`` was recorded in meta: an explicit
-    compact(retrain=True) with a NON-default id column must derive the
-    id column from the live schema instead of assuming vec_id (which
-    would die with an unresolved-column error; ADVICE r8)."""
-    import math
-    import random
-
-    rng = random.Random(7)
-    rows = []
-    for i in range(80):
-        vec = [rng.gauss(0.0, 1.0) for _ in range(8)]
-        nrm = math.sqrt(sum(v * v for v in vec)) or 1.0
-        rows.append((i, [v / nrm for v in vec]))
-    df = spark.createDataFrame(rows, "chunk_id long, embedding array<double>")
-    store = IX.IvfStore(str(tmp_path / "legacy"))
-    store.build(
-        df, num_centroids=2, refine_iterations=2, pq_m=4,
-        id_col="chunk_id", keep=(),
-    )
-    # simulate the pre-id_col meta layout
-    m = store.meta()
-    m.pop("id_col")
-    store._write_meta(m)
-    q = rows[5][1]
-    want = [
-        tuple(r)
-        for r in store.pq_topk(
-            spark, q, k=5, id_col="chunk_id", extra_cols=()
-        ).collect()
-    ]
-    store.compact(spark, retrain=True)  # must not raise unresolved vec_id
-    got = [
-        tuple(r)
-        for r in store.pq_topk(
-            spark, q, k=5, id_col="chunk_id", extra_cols=()
-        ).collect()
-    ]
-    assert [g[0] for g in got] == [w[0] for w in want]
 
 
 def test_pq_drift_signal_and_retrain_at_compact(spark, tmp_path):

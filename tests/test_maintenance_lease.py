@@ -151,6 +151,14 @@ def test_stale_flip_refused_at_pointer_level(tmp_path):
     assert _ptr(root) == {"gen": 2, "fence": 6}
 
 
+def test_fence_check_without_active_lease_raises(tmp_path):
+    """A commit point outside ``@_with_maintenance_lease`` has nothing to
+    fence with: the check raises instead of passing silently."""
+    store = IX.PostingStore(str(tmp_path / "s"))
+    with pytest.raises(IX.MaintenanceLeaseError, match="no maintenance lease"):
+        IX._fence_check(store)
+
+
 def test_release_never_removes_a_stolen_lease(tmp_path):
     root = str(tmp_path / "s")
     a = IX.acquire_maintenance_lease(root, ttl_sec=0.05)

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from car_etl_spark.operators.indexing import _dir_has_parquet
 from car_etl_spark.streaming.rollup_store import (
+    ROLLUP_VERSION,
     RollupStore,
     RollupStoreParamError,
     run_rollup_maintenance,
@@ -151,6 +152,38 @@ def test_param_drift_refused(spark, tmp_path, store):
         other.read(spark, "day")
     with pytest.raises(RollupStoreParamError, match="build"):
         RollupStore(str(tmp_path / "missing")).read(spark, "day")
+
+
+def test_partials_refuse_older_layout_version(spark, store):
+    """The layout version is checked where meta is read, so serving an
+    older-layout rollup store refuses instead of reading it."""
+    import json
+
+    meta = store._meta()
+    meta["version"] = ROLLUP_VERSION - 1
+    with open(store.meta_path, "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(RollupStoreParamError, match="rebuild it"):
+        store.partials(spark)
+
+
+def test_asof_store_paths_follow_layout_versions(monkeypatch):
+    """The as-of store pair is addressed by each store's layout version:
+    a bump re-addresses it rather than reopening a refused layout."""
+    from car_etl_spark.operators import indexing as IX
+    from car_etl_spark.queries.asofq import asof_store_paths
+    from car_etl_spark.streaming import rollup_store as RS
+    from tests.conftest import SF_SMALL
+
+    ppath, rpath = asof_store_paths(SF_SMALL)
+    with monkeypatch.context() as m:
+        m.setattr(IX, "POSTING_VERSION", IX.POSTING_VERSION + 1)
+        assert asof_store_paths(SF_SMALL) != (ppath, rpath)
+        assert asof_store_paths(SF_SMALL)[1] == rpath
+    with monkeypatch.context() as m:
+        m.setattr(RS, "ROLLUP_VERSION", RS.ROLLUP_VERSION + 1)
+        assert asof_store_paths(SF_SMALL) != (ppath, rpath)
+        assert asof_store_paths(SF_SMALL)[0] == ppath
 
 
 def test_refresh_dates_recomputes_invalidated_region(spark, tmp_path, store):

@@ -82,39 +82,6 @@ def test_embedding_lsh_finds_planted_pairs(spark, planted_vectors):
         assert r.cosine_sim >= 0.9
 
 
-def test_ivf_topk_recall_vs_bruteforce(spark):
-    """IVF probe recall against exact brute force on the sf0.001
-    embeddings; full-probe must equal exact."""
-    from car_etl_spark.functions import vectors as V
-    from tests.conftest import SF_SMALL
-    from car_etl_spark.tables import load_tables
-
-    emb = load_tables(spark, SF_SMALL, ("embeddings",))["embeddings"]
-    [qrow] = emb.filter(F.col("vec_id") == 42).select("embedding").collect()
-    qvec = F.array(*[F.lit(float(x)) for x in qrow.embedding])
-
-    exact = [
-        r.vec_id
-        for r in emb.select(
-            "vec_id", V.cosine_similarity(F.col("embedding"), qvec).alias("s")
-        )
-        .orderBy(F.desc("s"), F.asc("vec_id"))
-        .limit(10)
-        .collect()
-    ]
-    ivf = [r.vec_id for r in S.ivf_topk(emb, qvec, k=10, num_centroids=16, nprobe=4).collect()]
-    # partial probe: the query vector itself must be found and recall
-    # should be meaningful on near-random data
-    assert exact[0] == 42
-    assert 42 in ivf
-    assert len(set(exact) & set(ivf)) >= 3
-
-    full_probe = [
-        r.vec_id for r in S.ivf_topk(emb, qvec, k=10, num_centroids=16, nprobe=16).collect()
-    ]
-    assert full_probe == exact  # nprobe = num_centroids -> exact search
-
-
 def test_lsh_band_paths_identical(spark, planted_vectors):
     """The expression path (dim<=128) and the Arrow/numpy path (high
     dim) must assign byte-identical (band, bucket) per vector — the
