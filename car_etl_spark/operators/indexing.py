@@ -58,10 +58,11 @@ import time
 import uuid
 import zlib
 from contextlib import contextmanager
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from car_etl_spark.functions import text as T
 from car_etl_spark.functions import vectors as V
@@ -525,6 +526,105 @@ def _layout_gen(store_path: str) -> int:
 
 def _layout_root(store_path: str, gen: int) -> str:
     return os.path.join(store_path, f"layout-{gen}")
+
+
+def _current_dir(store_path: str, name: str) -> str:
+    """``name`` under the CURRENT generation, resolved per call — for
+    inspection and path probes outside a read; a read resolves its
+    paths once, through a :class:`StoreSnapshot`."""
+    return os.path.join(_layout_root(store_path, _layout_gen(store_path)), name)
+
+
+def _fresh_layout(store_path: str, gen: int | None = None) -> tuple[int, str]:
+    """The generation after ``gen`` (default: the current pointer) and
+    its emptied root — the unpublished staging area a build, compact or
+    refresh writes before its publish flips the pointer."""
+    new_gen = (_layout_gen(store_path) if gen is None else gen) + 1
+    root = _layout_root(store_path, new_gen)
+    shutil.rmtree(root, ignore_errors=True)
+    return new_gen, root
+
+
+@dataclass(frozen=True)
+class StoreSnapshot:
+    """One committed state of a generation-numbered LSM store: the
+    generation ``gen``, its layout ``root``, its parsed ``meta``, the
+    stored dataset ``schema``, and the visible batch window
+    ``epoch < batch <= upper`` (:func:`_live_window`).
+
+    All mutable directories of a store live under ``layout-<gen>/``; a
+    build, compact or refresh writes the next generation and PUBLISHES
+    it by flipping the ``_current.json`` pointer.  The previous
+    generation stays on disk for one more publish (deferred GC, longer
+    under a pin), so a serve that resolved its paths before a flip keeps
+    reading files that still exist.  Meta rides INSIDE its generation
+    (``base/`` or ``assignments/``), so layout, schema, compaction epoch
+    and statistics publish together; within a generation
+    ``apply_batch`` replaces meta in place, and that replace is the
+    batch's commit point.
+
+    A read therefore resolves ONE snapshot — one pointer read, one meta
+    parse — and builds every path, schema and bound from it.  Resolving
+    them per access lets a publish land in between: the old
+    generation's base paired with the new meta's epoch hides deltas
+    that were never folded into that base (the maintenance soak caught
+    exactly this); two meta reads inside one generation can pair
+    batch-(B-1) rows with batch-B BM25 statistics, or an IVF
+    certificate and codebooks with tombstones and codes they never
+    covered.  The bounds are fixed before the delta and tombstone dirs
+    are listed, so a batch promoted in between is hidden by ``upper``.
+
+    ``upper`` is meta's committed ``applied_through`` on the posting
+    and IVF stores.  The rollup store commits a batch by its applied
+    sentinel instead, so its ``upper`` is the highest sentinel, read
+    BEFORE the pointer: a publish flips the pointer before it clears
+    the sentinels, so (sentinel bound, then generation) is consistent
+    in every interleaving.  ``as_of`` overrides ``upper``: maintenance
+    reads its own in-flight batch, and an MVCC read sees the state
+    after batches ``<= as_of`` (down to the epoch, below which batches
+    are folded into base).
+
+    A snapshot is taken per call and never shared across calls;
+    maintenance, which holds the store's lease for its whole run, takes
+    one at entry and may rewrite the ``meta`` dict it owns."""
+
+    gen: int
+    root: str
+    meta: dict
+    schema: StructType
+    epoch: int
+    upper: int
+
+    @classmethod
+    def take(cls, store_path: str, read_meta, upper=None, gen=None):
+        """The snapshot of generation ``gen`` (default: the current
+        one) with meta from ``read_meta(root)``, the store's one meta
+        reader; None when that generation holds no meta (unbuilt)."""
+        g = _layout_gen(store_path) if gen is None else int(gen)
+        root = _layout_root(store_path, g)
+        meta = read_meta(root)
+        if meta is None:
+            return None
+        return cls(
+            g, root, meta, StructType.fromJson(meta["schema"]),
+            int(meta.get("compacted_through") or 0),
+            int(meta["applied_through"] if upper is None else upper),
+        )
+
+    def dir(self, name: str) -> str:
+        return os.path.join(self.root, name)
+
+    def as_of(self, upper: int) -> "StoreSnapshot":
+        """The same generation and meta with the window's upper bound
+        moved to ``upper``."""
+        return replace(self, upper=int(upper))
+
+
+def _built(snap: StoreSnapshot | None, store_path: str, error=ValueError) -> StoreSnapshot:
+    """``snap``, refusing a store with nothing built (no meta)."""
+    if snap is None:
+        raise error(f"no store at {store_path} — build() it first")
+    return snap
 
 
 # -- maintenance writer lease + fencing (round 10) ----------------------
@@ -1413,22 +1513,20 @@ def _gc_layout(store_path: str, gen: int) -> None:
 
 
 def _tombstone_frame(
-    spark: SparkSession, tomb_dir: str, stored, key_cols: list[str]
+    spark: SparkSession, snap: StoreSnapshot, key_cols: list[str]
 ) -> DataFrame:
     """Tombstone read with the schema supplied EXPLICITLY (derived from
-    the stored build-time schema) — shared by the posting and IVF
-    stores.  Inference would not only re-type partition values — it
-    FAILS outright on a dir a racing compact just emptied
+    the snapshot's stored build-time schema) — shared by the posting
+    and IVF stores.  Inference would not only re-type partition values
+    — it FAILS outright on a dir a racing compact just emptied
     (UNABLE_TO_INFER_SCHEMA, caught by the maintenance-under-serving
     soak); with the schema given, a concurrently-emptied dir just reads
     as zero rows."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
     sch = StructType(
-        [StructField(c, stored[c].dataType) for c in key_cols]
+        [StructField(c, snap.schema[c].dataType) for c in key_cols]
         + [StructField("batch", LongType())]
     )
-    return spark.read.schema(sch).parquet(tomb_dir)
+    return spark.read.schema(sch).parquet(snap.dir("tombstones"))
 
 
 def _live_window(df: DataFrame, epoch: int, upper: int) -> DataFrame:
@@ -1443,18 +1541,18 @@ def _live_window(df: DataFrame, epoch: int, upper: int) -> DataFrame:
 
 
 def _live_view(
+    spark: SparkSession,
+    snap: StoreSnapshot,
     base: DataFrame,
-    delta: DataFrame | None,
-    tombs: DataFrame | None,
-    epoch: int,
-    upper: int,
+    delta: str,
+    read_delta,
     row_key: list[str],
     id_key: list[str],
 ) -> DataFrame:
-    """The LSM live view every store read serves: ``base`` ∪ the
-    committed window (:func:`_live_window`) of ``delta``, minus rows
-    older than their id's newest tombstone.  ``delta``/``tombs`` are
-    None when that layer holds no visible parquet.
+    """The LSM live view every posting/IVF read serves: ``base`` ∪ the
+    committed window (:func:`_live_window`) of the snapshot's ``delta``
+    layer (framed by ``read_delta(dir)``), minus rows older than their
+    id's newest tombstone.  A layer with no visible parquet is skipped.
 
     - exact-duplicate drop on the delta: a replayed half-applied batch
       appends identical rows, and ``row_key`` + batch is unique within
@@ -1463,19 +1561,17 @@ def _live_view(
     - tombstone anti-join on the max tombstone batch per ``id_key``:
       an upsert's own rows carry the same batch as their tombstone and
       survive ``__tb <= batch``; the tombstones are id-grain and
-      broadcast.
-
-    Callers read the snapshot bounds BEFORE listing the delta and
-    tombstone dirs, so a batch promoted in between is hidden by
-    ``upper`` rather than half-seen."""
+      broadcast."""
     df = base
-    if delta is not None:
+    delta_dir = snap.dir(delta)
+    if _dir_has_parquet(delta_dir):
         df = df.unionByName(
-            _live_window(delta, epoch, upper).dropDuplicates(row_key + ["batch"])
+            _live_window(read_delta(delta_dir), snap.epoch, snap.upper)
+            .dropDuplicates(row_key + ["batch"])
         )
-    if tombs is not None:
+    if _dir_has_parquet(snap.dir("tombstones")):
         tomb = (
-            _live_window(tombs, epoch, upper)
+            _live_window(_tombstone_frame(spark, snap, id_key), snap.epoch, snap.upper)
             .groupBy(*id_key)
             .agg(F.max("batch").alias("__tb"))
         )
@@ -1495,25 +1591,32 @@ def _should_compact(base_dir: str, pending_dirs: tuple[str, ...], threshold: flo
     return base > 0 and sum(_tree_bytes(d) for d in pending_dirs) > threshold * base
 
 
-def _max_sentinel_batch(store_path: str) -> int:
-    """Highest applied batch id, from the ``_applied_<b>`` sentinels —
-    the compaction epoch (no Spark job, no parquet read).  Compact
-    stamps this into meta as ``compacted_through``; readers then ignore
-    delta/tombstone rows at or below it, which closes the crash window
-    between the base swap and the delta/tombstone cleanup (stale files
-    would otherwise double-count folded rows or, worse, let a stale
-    tombstone kill fresh batch-0 base rows)."""
-    mx = 0
+def _marker_batches(store_path: str, prefix: str, suffix: str = "") -> list[int]:
+    """Batch ids of the store-root markers ``<prefix><batch><suffix>``
+    (no Spark job, no parquet read)."""
+    out = []
     try:
-        for f in os.listdir(store_path):
-            if f.startswith("_applied_"):
-                try:
-                    mx = max(mx, int(f[len("_applied_"):]))
-                except ValueError:
-                    pass
+        names = os.listdir(store_path)
     except OSError:
-        pass
-    return mx
+        return out
+    for f in names:
+        if f.startswith(prefix) and f.endswith(suffix):
+            try:
+                out.append(int(f[len(prefix):len(f) - len(suffix)]))
+            except ValueError:
+                pass
+    return out
+
+
+def _max_sentinel_batch(store_path: str, prefix: str = "_applied_", suffix: str = "") -> int:
+    """Highest applied batch id, from the applied sentinels
+    (``_applied_<b>`` on the posting/IVF stores) — the compaction epoch.
+    Compact stamps this into meta as ``compacted_through``; readers then
+    ignore delta/tombstone rows at or below it, which closes the crash
+    window between the base swap and the delta/tombstone cleanup (stale
+    files would otherwise double-count folded rows or, worse, let a
+    stale tombstone kill fresh batch-0 base rows)."""
+    return max(_marker_batches(store_path, prefix, suffix), default=0)
 
 
 class PostingStore:
@@ -1544,7 +1647,7 @@ class PostingStore:
         #: parquet default (~128 MB).  Small values exist so tests can
         #: exercise row-group pruning on tiny corpora.
         self.row_group_bytes = row_group_bytes
-        meta = self._meta()
+        meta = self._meta() or {}
         if num_buckets is None:
             num_buckets = int(meta.get("num_buckets", DEFAULT_NUM_BUCKETS))
         self.num_buckets = num_buckets
@@ -1565,101 +1668,44 @@ class PostingStore:
             positions = bool(meta.get("positions", True))
         self.positions = positions
 
-    # -- generation-numbered layout (round 9) ---------------------------
-    #
-    # (Each store keeps its OWN copy of these few path helpers rather
-    # than sharing a mixin — deliberate: the three stores differ in
-    # primary-dir name, sentinel naming, and publish semantics
-    # (rollup's refresh keeps sentinels, compact clears them), and the shared pieces that are genuinely identical ARE
-    # shared as module functions: _layout_gen/_layout_root/
-    # _flip_layout/_gc_layout/_publish_store_generation/
-    # _tombstone_frame.)
-    #
-    # All mutable directories live under layout-<gen>/ and a rebuild or
-    # compact PUBLISHES a fresh generation by flipping the _current.json
-    # pointer instead of renaming the live dirs.  A concurrent serve
-    # that listed files under the previous generation keeps reading
-    # them — the old generation stays on disk for one full compact
-    # interval (deferred GC) — so compaction never invalidates an
-    # in-flight query's file paths.  Gen 0 means nothing is published
-    # yet.  Meta lives INSIDE the generation's base/ (underscore-
-    # prefixed, invisible to the parquet reader), so layout and meta
-    # publish together; property ACCESS ORDER in the read paths (data
-    # dir first, meta second) guarantees any flip-straddling mix still
-    # resolves to a committed historical snapshot.
-
-    def _gen(self) -> int:
-        return _layout_gen(self.path)
-
-    def _root(self, gen: int | None = None) -> str:
-        return _layout_root(self.path, self._gen() if gen is None else gen)
-
-    # Read paths must PIN one generation for their whole construction
-    # (``gen = self._gen()`` at entry, every dir and the meta resolved
-    # under it): resolving per-access lets a concurrent flip land
-    # between the data-dir read and the meta read, pairing the OLD
-    # generation's base with the NEW meta's compaction epoch — which
-    # hides deltas that were never folded into that base and serves a
-    # state older than both of the serve's sampled commit ids (the
-    # r9 maintenance soak caught exactly this).  The pinned old
-    # generation stays readable through the deferred GC grace.
-
-    def _base_dir_at(self, gen: int | None = None) -> str:
-        return os.path.join(self._root(gen), "base")
-
-    def _delta_dir_at(self, gen: int | None = None) -> str:
-        return os.path.join(self._root(gen), "delta")
-
-    def _tomb_dir_at(self, gen: int | None = None) -> str:
-        return os.path.join(self._root(gen), "tombstones")
-
-    def _doclen_base_at(self, gen: int | None = None) -> str:
-        #: doc-grain length sidecar rides INSIDE base/ (underscore
-        #: prefix = invisible to the posting read, published atomically
-        #: with the layout)
-        return os.path.join(self._base_dir_at(gen), "_doclens")
-
-    def _doclen_delta_at(self, gen: int | None = None) -> str:
-        return os.path.join(self._root(gen), "doclens_delta")
+    # current-generation paths, for maintenance probes and inspection;
+    # reads take theirs from a StoreSnapshot
 
     @property
     def base_dir(self) -> str:
-        return self._base_dir_at()
+        return _current_dir(self.path, "base")
 
     @property
     def delta_dir(self) -> str:
-        return self._delta_dir_at()
+        return _current_dir(self.path, "delta")
 
     @property
     def tomb_dir(self) -> str:
-        return self._tomb_dir_at()
+        return _current_dir(self.path, "tombstones")
 
     @property
     def meta_path(self) -> str:
         return os.path.join(self.base_dir, "_meta.json")
 
     @property
-    def doclen_base(self) -> str:
-        return self._doclen_base_at()
-
-    @property
     def doclen_delta(self) -> str:
-        return self._doclen_delta_at()
+        return _current_dir(self.path, "doclens_delta")
 
     def _publish_generation(self, new_gen: int) -> None:
         """See :func:`_publish_store_generation`; fenced by the active
         maintenance lease (every caller is ``@_with_maintenance_lease``)."""
         _publish_store_generation(self.path, new_gen, lease=_active_lease(self))
 
-    def _meta(self, gen: int | None = None) -> dict:
-        """Meta of generation ``gen`` (default: the current one) — the
-        store's ONLY meta reader, so the layout version is checked here
-        once and every path below assumes the current layout.  ``{}``
-        means unbuilt; a base layout without meta, or meta of another
-        layout version, refuses (serving or maintaining it would
-        silently misread it: a defaulted bucket count mis-prunes every
-        query, an older stored schema drops columns)."""
-        base = self._base_dir_at(gen)
+    def _meta(self, root: str | None = None) -> dict | None:
+        """Meta of the generation at layout ``root`` (default: the
+        current one) — the store's ONLY meta reader, so the layout
+        version is checked here once and every path below assumes the
+        current layout.  None means unbuilt; a base layout without
+        meta, or meta of another layout version, refuses (serving or
+        maintaining it would silently misread it: a defaulted bucket
+        count mis-prunes every query, an older stored schema drops
+        columns)."""
+        base = os.path.join(root, "base") if root else self.base_dir
         try:
             with open(os.path.join(base, "_meta.json")) as f:
                 meta = json.load(f)
@@ -1671,7 +1717,7 @@ class PostingStore:
                     "(silently defaulting the bucket count would mis-prune "
                     "every query)"
                 ) from None
-            return {}
+            return None
         if meta.get("version") != POSTING_VERSION:
             raise ValueError(
                 f"posting store at {self.path} has layout version "
@@ -1680,14 +1726,15 @@ class PostingStore:
             )
         return meta
 
-    def _stored_schema(self, gen: int | None = None):
-        """The dataset schema recorded at build time — reads supply it
-        explicitly, so partition-column TYPE INFERENCE can never
-        reinterpret values (a string tenant id '1001' would otherwise
-        come back as an int and break tombstone joins and scoping)."""
-        from pyspark.sql.types import StructType
-
-        return StructType.fromJson(self._meta(gen)["schema"])
+    def snapshot(self, as_of: int | None = None, gen: int | None = None):
+        """The :class:`StoreSnapshot` every read of this store takes
+        (default: the current generation at its committed bound); None
+        when unbuilt.  The snapshot's ``schema`` is the dataset schema
+        recorded at build time — reads supply it explicitly, so
+        partition-column TYPE INFERENCE can never reinterpret values (a
+        string tenant id '1001' would otherwise come back as an int and
+        break tombstone joins and scoping)."""
+        return StoreSnapshot.take(self.path, self._meta, as_of, gen)
 
     def bucket_of(self, term: str) -> int:
         """Query-side pruning bucket for a (stemmed) term — bound to
@@ -1803,9 +1850,7 @@ class PostingStore:
             docs, self.analyzer, self.num_buckets, self.tenant_col,
             positions=self.positions,
         ).withColumn("batch", F.lit(0).cast("long"))
-        new_gen = self._gen() + 1
-        root = _layout_root(self.path, new_gen)
-        shutil.rmtree(root, ignore_errors=True)
+        new_gen, root = _fresh_layout(self.path)
         base = os.path.join(root, "base")
         self._write_store(rows, base, "overwrite")
         # derive the sidecar from the WRITTEN layout (not the lineage,
@@ -1846,9 +1891,9 @@ class PostingStore:
             raise ValueError("batch must be > 0 (0 is the base build)")
         if os.path.exists(self._sentinel(batch)):
             return False
-        # the meta read refuses an older layout BEFORE any write
-        meta = self._meta()
-        if batch <= int(meta.get("compacted_through") or 0):
+        # the snapshot refuses an older layout BEFORE any write
+        snap = _built(self.snapshot(), self.path)
+        if batch <= snap.epoch:
             # batch ids are monotone stream epochs; an id at or below
             # the compaction epoch is a replay of content already folded
             # into base (compact cleared its sentinel) — reapplying
@@ -1863,8 +1908,8 @@ class PostingStore:
         # anything (promoted files whose batch never committed — see
         # _sweep_promoted_orphans); runs under this applier's lease
         _sweep_promoted_orphans(
-            [self.delta_dir, self.doclen_delta, self.tomb_dir],
-            int(meta["applied_through"]),
+            [snap.dir("delta"), snap.dir("doclens_delta"), snap.dir("tombstones")],
+            snap.upper,
             recheck=lambda: _fence_check(self),
         )
         tomb_key = ([self.tenant_col] if self.tenant_col else []) + ["doc_id"]
@@ -1886,7 +1931,7 @@ class PostingStore:
             # keeps row-group pruning effective on the merged read path
             promotes.append(
                 _staged_append(
-                    self.delta_dir,
+                    snap.dir("delta"),
                     lambda stage: self._write_store(rows, stage, "append"),
                 )
             )
@@ -1898,7 +1943,7 @@ class PostingStore:
             )
             promotes.append(
                 _staged_append(
-                    self.doclen_delta,
+                    snap.dir("doclens_delta"),
                     lambda stage: dl.coalesce(1).write.mode("append").parquet(stage),
                 )
             )
@@ -1913,10 +1958,7 @@ class PostingStore:
                 )
             # field types come from the stored build-time schema (exact,
             # no partition-type inference, no extra read job)
-            from pyspark.sql.types import StructField, StructType
-
-            src = self._stored_schema()
-            fields = [StructField(c, src[c].dataType) for c in tomb_key]
+            fields = [StructField(c, snap.schema[c].dataType) for c in tomb_key]
             tomb_parts.append(
                 spark.createDataFrame(
                     [tuple(d) if self.tenant_col else (d,) for d in deleted_ids],
@@ -1930,7 +1972,7 @@ class PostingStore:
             tomb = tomb.distinct().withColumn("batch", F.lit(batch).cast("long"))
             promotes.append(
                 _staged_append(
-                    self.tomb_dir,
+                    snap.dir("tombstones"),
                     lambda stage: tomb.coalesce(1)
                     .write.mode("append")
                     .parquet(stage),
@@ -1961,7 +2003,7 @@ class PostingStore:
             promoted.extend(promote())
         if _test_post_promote_crash is not None:
             _test_post_promote_crash()
-        # the stats job must SEE the promoted rows (as_of=batch), so it
+        # the stats job must SEE the promoted rows (bound at batch), so it
         # runs after promotion — and it is long enough for a steal to
         # land, so its commit re-validates the fence.  If that check
         # fires, retract exactly the promoted files: they are still
@@ -1974,7 +2016,7 @@ class PostingStore:
         # never surface them (r12; previously covered only by the
         # same-content crash-replay contract).
         try:
-            self._refresh_stats(spark, applied_through=batch)
+            self._refresh_stats(spark, snap.as_of(batch))
         except MaintenanceFencedError:
             for p in promoted:
                 try:
@@ -1986,58 +2028,37 @@ class PostingStore:
             f.write("applied")
         return True
 
-    def read_doclens(self, spark: SparkSession, as_of: int | None = None) -> DataFrame:
+    def read_doclens(
+        self, spark: SparkSession, snap: StoreSnapshot | None = None
+    ) -> DataFrame:
         """The live doc-length view ``([tenant,] doc_id, dl, batch)`` —
         base sidecar + deltas under the SAME tombstone liveness rule as
-        the posting rows.  ``as_of`` overrides the committed-snapshot
-        bound (maintenance passes its own in-flight batch id)."""
-        from pyspark.sql.types import StructField, StructType
-
-        g = self._gen()  # pin ONE generation for the whole construction
-        stored = self._stored_schema(gen=g)
-        cols = ([self.tenant_col] if self.tenant_col else []) + ["doc_id", "dl", "batch"]
-        sch = StructType([StructField(c, stored[c].dataType) for c in cols])
-        df = spark.read.schema(sch).parquet(self._doclen_base_at(g))
-        epoch, upper = self._snapshot_bounds(as_of, gen=g)
-        delta_dir, tomb_dir = self._doclen_delta_at(g), self._tomb_dir_at(g)
+        the posting rows, in ``snap`` (default: the current snapshot;
+        maintenance passes one whose bound includes its in-flight
+        batch)."""
+        snap = snap or _built(self.snapshot(), self.path)
         keys = ([self.tenant_col] if self.tenant_col else []) + ["doc_id"]
+        sch = StructType(
+            [StructField(c, snap.schema[c].dataType) for c in keys + ["dl", "batch"]]
+        )
+        # the doc-grain sidecar rides INSIDE base/ (underscore prefix:
+        # invisible to the posting read, published with the layout)
+        df = spark.read.schema(sch).parquet(os.path.join(snap.dir("base"), "_doclens"))
         return _live_view(
-            df,
-            spark.read.schema(sch).parquet(delta_dir) if _dir_has_parquet(delta_dir) else None,
-            self._read_tombstones(spark, gen=g) if _dir_has_parquet(tomb_dir) else None,
-            epoch, upper, keys, keys,
+            spark, snap, df, "doclens_delta", spark.read.schema(sch).parquet, keys, keys,
         )
 
-    def _read_tombstones(self, spark: SparkSession, gen: int | None = None) -> DataFrame:
-        """See :func:`_tombstone_frame`."""
-        cols = ([self.tenant_col] if self.tenant_col else []) + ["doc_id"]
-        return _tombstone_frame(
-            spark, self._tomb_dir_at(gen), self._stored_schema(gen=gen), cols
-        )
-
-    def _snapshot_bounds(
-        self, as_of: int | None = None, gen: int | None = None
-    ) -> tuple[int, int]:
-        """(compaction epoch, committed upper bound) from ONE meta read
-        — the window every live view filters deltas/tombstones by (see
-        :func:`_live_window`).  ``as_of`` overrides the stamped bound:
-        maintenance reads its own in-flight batch as visible."""
-        meta = self._meta(gen)
-        epoch = int(meta.get("compacted_through") or 0)
-        return epoch, int(meta["applied_through"] if as_of is None else as_of)
-
-    def _refresh_stats(self, spark: SparkSession, applied_through: int) -> None:
-        """Recompute exact (n_docs, sum_dl) from the live doclens view
-        and publish atomically (os.replace on meta).  ``applied_through``
-        is ``apply_batch``'s in-flight batch id: the stats INCLUDE it
-        (``as_of`` bound) and the same meta write advances the snapshot
-        bound — stats and data commit together, so a reader can never
-        pair batch-B idf/avgdl with batch-(B-1) posting rows."""
-        meta = self._meta()
-        meta["stats"] = self._stats_of(
-            self.read_doclens(spark, as_of=applied_through)
-        )
-        meta["applied_through"] = int(applied_through)
+    def _refresh_stats(self, spark: SparkSession, snap: StoreSnapshot) -> None:
+        """Recompute exact (n_docs, sum_dl) from the live doclens view of
+        ``snap`` — ``apply_batch``'s entry snapshot with its bound moved
+        to the in-flight batch, so the stats INCLUDE that batch — and
+        publish atomically (os.replace on meta): the same meta write
+        advances the snapshot bound, so stats and data commit together
+        and a reader can never pair batch-B idf/avgdl with batch-(B-1)
+        posting rows."""
+        meta = dict(snap.meta)
+        meta["stats"] = self._stats_of(self.read_doclens(spark, snap))
+        meta["applied_through"] = snap.upper
         tmp = self.meta_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(meta, f)
@@ -2048,15 +2069,15 @@ class PostingStore:
         _fence_check(self)
         os.replace(tmp, self.meta_path)
 
-    def stats(
-        self, tenant=None, gen: int | None = None, meta: dict | None = None
-    ) -> dict:
-        """The exact BM25 corpus stats stamped by build/apply/compact:
-        ``{"n_docs": int, "sum_dl": float}`` — the given tenant's own
-        pair on tenant-partitioned stores (ranking statistics are
-        RLS-scoped like the data: a tenant's idf/avgdl never reflect
-        another tenant's corpus)."""
-        st = (meta if meta is not None else self._meta(gen)).get("stats")
+    def stats(self, tenant=None, snap: StoreSnapshot | None = None) -> dict:
+        """The exact BM25 corpus stats stamped by build/apply/compact in
+        ``snap`` (default: the current snapshot): ``{"n_docs": int,
+        "sum_dl": float}`` — the given tenant's own pair on
+        tenant-partitioned stores (ranking statistics are RLS-scoped like
+        the data: a tenant's idf/avgdl never reflect another tenant's
+        corpus)."""
+        snap = snap or self.snapshot()
+        st = snap.meta.get("stats") if snap else None
         if not st or not st.get("n_docs"):
             raise ValueError(
                 f"posting store at {self.path} has no corpus stats — "
@@ -2081,25 +2102,18 @@ class PostingStore:
         spark: SparkSession,
         buckets: list[int] | None = None,
         tenant=None,
-        gen: int | None = None,
-        as_of: int | None = None,
+        snap: StoreSnapshot | None = None,
     ) -> DataFrame:
-        """The current live posting view, optionally pruned to term
-        buckets and/or one tenant (``PartitionFilters`` engage on both
-        predicates — a tenant-scoped query touches ONLY that tenant's
-        directories, the RLS-scan analog).  With no deltas/tombstones
-        (the freshly-built serving case) this is a bare pruned base
-        scan — zero merge overhead."""
+        """The live posting view of ``snap`` (default: the current
+        snapshot), optionally pruned to term buckets and/or one tenant
+        (``PartitionFilters`` engage on both predicates — a tenant-scoped
+        query touches ONLY that tenant's directories, the RLS-scan
+        analog).  With no deltas/tombstones (the freshly-built serving
+        case) this is a bare pruned base scan — zero merge overhead."""
         if tenant is not None and not self.tenant_col:
             raise ValueError("store was not built with a tenant_col")
-        # pin ONE generation for the whole construction (callers that
-        # also read meta-derived state — bm25's corpus stats — pass
-        # their own pin so rows and statistics come from one snapshot)
-        g = self._gen() if gen is None else gen
-        # build-time schema supplied explicitly: partition-column type
-        # inference would otherwise reinterpret values (string tenant
-        # '1001' -> int) and silently break tenant scoping + tombstones
-        reader = spark.read.schema(self._stored_schema(gen=g))
+        snap = snap or _built(self.snapshot(), self.path)
+        reader = spark.read.schema(snap.schema)
 
         def scope(df):
             if buckets is not None:
@@ -2108,22 +2122,10 @@ class PostingStore:
                 df = df.filter(F.col(self.tenant_col) == tenant)
             return df
 
-        df = scope(reader.parquet(self._base_dir_at(g)))
-        # snapshot window (one meta read, SAME pinned generation as the
-        # dirs): epoch drops rows a crashed compact already folded into
-        # base (counting them again would double tf, or let a stale
-        # tombstone kill fresh batch-0 rows); the committed upper bound
-        # hides batches whose commit point has not landed, so a serve
-        # racing a live apply_batch sees the complete previous snapshot
-        # (see _live_window)
-        epoch, upper = self._snapshot_bounds(as_of, gen=g)
-        delta_dir, tomb_dir = self._delta_dir_at(g), self._tomb_dir_at(g)
         keys = ([self.tenant_col] if self.tenant_col else []) + ["doc_id"]
         return _live_view(
-            df,
-            scope(reader.parquet(delta_dir)) if _dir_has_parquet(delta_dir) else None,
-            self._read_tombstones(spark, gen=g) if _dir_has_parquet(tomb_dir) else None,
-            epoch, upper, keys + ["raw_term", "weight"], keys,
+            spark, snap, scope(reader.parquet(snap.dir("base"))), "delta",
+            lambda d: scope(reader.parquet(d)), keys + ["raw_term", "weight"], keys,
         )
 
     def should_compact(self, threshold: float = COMPACT_DELTA_FRACTION) -> bool:
@@ -2509,25 +2511,16 @@ class PostingStore:
         self._require_tenant_scope(tenant)
         terms = sorted(set(stemmed_terms))
         buckets = sorted({self.bucket_of(t) for t in terms})
-        # ONE pinned generation and ONE meta read for rows AND corpus
-        # statistics: the commit point stamps stats and applied_through
-        # in a single meta replace, but within a generation apply_batch
-        # replaces that file in place — two separate meta reads could
-        # still pair batch-(B-1) rows with batch-B idf/avgdl when a
-        # commit lands in between (the mixed-snapshot class the
-        # maintenance soak caught elsewhere).  The snapshot's
-        # applied_through is pushed into the row view as its bound.
-        g = self._gen()
-        meta = self._meta(g)
-        idx = self.read(
-            spark, buckets=buckets, tenant=tenant, gen=g,
-            as_of=meta["applied_through"],
-        ).filter(F.col("term").isin(terms))
+        # ONE snapshot for rows AND corpus statistics (see StoreSnapshot)
+        snap = _built(self.snapshot(), self.path)
+        idx = self.read(spark, buckets=buckets, tenant=tenant, snap=snap).filter(
+            F.col("term").isin(terms)
+        )
         # tenant-scoped ranking uses the tenant's OWN corpus stats (and
         # df comes from the tenant-pruned rows), so scores are identical
         # to a store built from that tenant's corpus alone — isolation
         # extends to the ranking statistics, not just the row set
-        st = self.stats(tenant=tenant, meta=meta)
+        st = self.stats(tenant=tenant, snap=snap)
         n_docs = float(st["n_docs"])
         # identical to the oracle's SUM(dl)/COUNT(*): both divisions see
         # the same exact-integer operands, so the double is bit-equal
@@ -2588,18 +2581,17 @@ class PostingStore:
         # re-lands on content already folded).  Excluding B loses
         # nothing: an unsentineled batch is the stream's to redeliver.
         fold_through = _max_sentinel_batch(self.path)
-        live = self.read(spark, as_of=fold_through).withColumn(
+        snap = _built(self.snapshot(as_of=fold_through), self.path)
+        live = self.read(spark, snap=snap).withColumn(
             "batch", F.lit(0).cast("long")
         )
-        new_gen = self._gen() + 1
-        root = _layout_root(self.path, new_gen)
-        shutil.rmtree(root, ignore_errors=True)
+        new_gen, root = _fresh_layout(self.path, snap.gen)
         base = os.path.join(root, "base")
         self._write_store(live, base, "overwrite")
         # fold the doc-length sidecar the same way (batch resets to 0)
         # and restamp exact corpus stats into the fresh meta
         keys = ([self.tenant_col] if self.tenant_col else []) + ["doc_id"]
-        doclens = self.read_doclens(spark, as_of=fold_through).select(*keys, "dl")
+        doclens = self.read_doclens(spark, snap).select(*keys, "dl")
         stats = self._sidecar_and_stats(doclens, base)
         # epoch == the fold bound, BEFORE the publish clears the
         # sentinels: readers ignore delta/tombstone rows <= this, so a
@@ -2616,21 +2608,27 @@ class PostingStore:
 _ENSURED: set[str] = set()
 
 
-def _ensure_store(spark: SparkSession, sf_dir: str, store, table: str, ready_fn, build_fn):
+def _ensure_store(spark: SparkSession, sf_dir: str, store, table: str, build_fn):
     """Build-if-missing shared by every content-addressed ``ensure_*``:
-    a memo hit returns at once; otherwise a store that is not
-    ``ready_fn()`` is built from ``table`` through :func:`build_or_wait`
-    as ``build_fn(frame, lease)`` — one builder under the store's lease
-    and heartbeat, every concurrent caller waiting for its publish
-    instead of failing on the held lease or rebuilding after it."""
+    a memo hit returns at once; otherwise a store without a snapshot
+    (nothing built) is built from ``table`` through
+    :func:`build_or_wait` as ``build_fn(frame, lease)`` — one builder
+    under the store's lease and heartbeat, every concurrent caller
+    waiting for its publish instead of failing on the held lease or
+    rebuilding after it.  A layout the store refuses (another version,
+    data without meta) raises from ``snapshot()`` instead of being
+    rebuilt over."""
     if store.path in _ENSURED:
         return store
-    if not ready_fn():
+    def ready() -> bool:
+        return store.snapshot() is not None
+
+    if not ready():
         from car_etl_spark.tables import load_tables
 
         frame = load_tables(spark, sf_dir, (table,))[table]
         os.makedirs(index_root(), exist_ok=True)
-        build_or_wait(lambda lease: build_fn(frame, lease), ready_fn, store.path)
+        build_or_wait(lambda lease: build_fn(frame, lease), ready, store.path)
     _ENSURED.add(store.path)
     return store
 
@@ -2715,7 +2713,6 @@ def ensure_posting_index(
     store = PostingStore(path, analyzer, num_buckets=num_buckets, positions=positions)
     return _ensure_store(
         spark, sf_dir, store, "documents",
-        lambda: _dir_has_parquet(store.base_dir),
         lambda docs, lease: store.build(docs, lease=lease),
     )
 
@@ -2789,52 +2786,25 @@ class IvfStore:
         #: WITHIN a tenant's rows — the RLS-visibility analog of the
         #: reference's per-tenant vector search
         #: (042_match_function.sql:23-39)
-        if tenant_col is None and os.path.exists(self.meta_path):
-            tenant_col = self.meta()["tenant_col"]
+        if tenant_col is None:
+            tenant_col = (self.meta() or {}).get("tenant_col")
         self.tenant_col = tenant_col
 
-    # -- generation-numbered layout (round 9) ---------------------------
-    # Same discipline as PostingStore: mutable dirs under layout-<gen>/,
-    # build/compact publish a fresh generation by flipping _current.json
-    # (deferred GC gives in-flight serves one compact interval of
-    # grace).  Meta rides INSIDE the generation's assignments/ so
-    # centroids/stats and layout publish together; apply_batch's
-    # incremental meta updates os.replace the current generation's file
-    # in place, preserving its own write-order argument.
-
-    def _gen(self) -> int:
-        return _layout_gen(self.path)
-
-    def _root(self, gen: int | None = None) -> str:
-        return _layout_root(self.path, self._gen() if gen is None else gen)
-
-    # Serving paths PIN one generation end-to-end (see PostingStore's
-    # pinning note): the probe walk's meta snapshot, the certificate
-    # counts, and the row view's dirs must all resolve under the same
-    # generation, or a flip landing mid-construction pairs an old base
-    # with a new epoch (hiding unfolded deltas) or — after a pq
-    # retrain — new codes with old codebooks.
-
-    def _assign_dir_at(self, gen: int | None = None) -> str:
-        return os.path.join(self._root(gen), "assignments")
-
-    def _delta_dir_at(self, gen: int | None = None) -> str:
-        return os.path.join(self._root(gen), "delta")
-
-    def _tomb_dir_at(self, gen: int | None = None) -> str:
-        return os.path.join(self._root(gen), "tombstones")
+    # current-generation paths, for maintenance probes and inspection;
+    # reads take theirs from a StoreSnapshot (meta rides INSIDE the
+    # generation's assignments/)
 
     @property
     def assign_dir(self) -> str:
-        return self._assign_dir_at()
+        return _current_dir(self.path, "assignments")
 
     @property
     def delta_dir(self) -> str:
-        return self._delta_dir_at()
+        return _current_dir(self.path, "delta")
 
     @property
     def tomb_dir(self) -> str:
-        return self._tomb_dir_at()
+        return _current_dir(self.path, "tombstones")
 
     @property
     def meta_path(self) -> str:
@@ -2844,14 +2814,6 @@ class IvfStore:
         """See :func:`_publish_store_generation`; fenced by the active
         maintenance lease (every caller is ``@_with_maintenance_lease``)."""
         _publish_store_generation(self.path, new_gen, lease=_active_lease(self))
-
-    def _stored_schema(self, gen: int | None = None):
-        """Build-time assignments schema — reads supply it explicitly so
-        partition-column type inference can never reinterpret tenant or
-        centroid values."""
-        from pyspark.sql.types import StructType
-
-        return StructType.fromJson(self.meta(gen)["schema"])
 
     @_with_maintenance_lease
     def build(
@@ -2958,9 +2920,7 @@ class IvfStore:
             # decay measurable instead of silent.
             pq_meta.update(_pq_err_stats(assigned))
         pcols = ([self.tenant_col] if self.tenant_col else []) + ["centroid_id"]
-        new_gen = self._gen() + 1
-        newroot = _layout_root(self.path, new_gen)
-        shutil.rmtree(newroot, ignore_errors=True)
+        new_gen, newroot = _fresh_layout(self.path)
         tmp = os.path.join(newroot, "assignments")
         (
             assigned.repartition(*pcols)
@@ -3174,8 +3134,9 @@ class IvfStore:
             raise ValueError("batch must be > 0 (0 is the base build)")
         if os.path.exists(self._sentinel(batch)):
             return False
-        m = self.meta()
-        if batch <= int(m.get("compacted_through") or 0):
+        snap = _built(self.snapshot(), self.path)
+        m = snap.meta
+        if batch <= snap.epoch:
             # replay of a batch already folded by compact (its sentinel
             # was cleared): reapplying would append epoch-ignored delta
             # rows AND inflate the certificate's per-batch counts — the
@@ -3185,8 +3146,8 @@ class IvfStore:
         # anything (promoted files whose batch never committed — see
         # _sweep_promoted_orphans); runs under this applier's lease
         _sweep_promoted_orphans(
-            [self.delta_dir, self.tomb_dir],
-            int(m["applied_through"]),
+            [snap.dir("delta"), snap.dir("tombstones")],
+            snap.upper,
             recheck=lambda: _fence_check(self),
         )
         cents = sorted(zip(m["centroid_ids"], m["centroids"]))
@@ -3309,20 +3270,17 @@ class IvfStore:
             # tombstone key types derive from the STORED build-time
             # schema (exact — immune to partition-type inference, and no
             # extra read job); tenant stores key by (tenant, id)
-            from pyspark.sql.types import StructField, StructType
-
-            src = self._stored_schema()
             tomb_cols = [self.tenant_col, id_col] if self.tenant_col else [id_col]
             tomb = spark.createDataFrame(
                 sorted(tomb_ids),
-                StructType([StructField(c, src[c].dataType) for c in tomb_cols]),
+                StructType([StructField(c, snap.schema[c].dataType) for c in tomb_cols]),
             ).withColumn("batch", F.lit(batch).cast("long"))
             # staged, promoted after the pre-commit fence check (tomb
             # FIRST, preserving the step 2→3 order the crash argument
             # above relies on)
             promotes.append(
                 _staged_append(
-                    self.tomb_dir,
+                    snap.dir("tombstones"),
                     lambda stage: tomb.coalesce(1)
                     .write.mode("append")
                     .parquet(stage),
@@ -3332,7 +3290,7 @@ class IvfStore:
             pcols = ([self.tenant_col] if self.tenant_col else []) + ["centroid_id"]
             promotes.append(
                 _staged_append(
-                    self.delta_dir,
+                    snap.dir("delta"),
                     lambda stage: assigned.repartition(*pcols)
                     .write.mode("append")
                     .partitionBy(*pcols)
@@ -3382,21 +3340,18 @@ class IvfStore:
         probes: list[int] | None = None,
         id_col: str = "vec_id",
         tenant=None,
-        as_of: int | None = None,
-        gen: int | None = None,
+        snap: StoreSnapshot | None = None,
     ) -> DataFrame:
-        """The live assignment view: base + deduped delta, minus rows
-        older than their id's newest tombstone (liveness rule shared
-        with :class:`PostingStore`: an upsert's own rows carry the same
-        batch as their tombstone and survive `__tb <= batch`).  With
+        """The live assignment view of ``snap`` (default: the current
+        snapshot): base + deduped delta, minus rows older than their
+        id's newest tombstone (liveness rule shared with
+        :class:`PostingStore`: an upsert's own rows carry the same batch
+        as their tombstone and survive `__tb <= batch`).  With
         ``tenant``, both partition levels prune — the scan touches only
-        (tenant, probed-centroid) directories.  ``as_of`` overrides the
-        committed-snapshot bound (see :func:`_live_window`); ``gen``
-        pins the generation a serving walk already read its meta from
-        (default: pin the current one at entry)."""
+        (tenant, probed-centroid) directories."""
         if tenant is not None and not self.tenant_col:
             raise ValueError("store was not built with a tenant_col")
-        g = self._gen() if gen is None else gen
+        snap = snap or _built(self.snapshot(), self.path)
 
         def scope(df):
             if probes is not None:
@@ -3406,25 +3361,10 @@ class IvfStore:
             return df
 
         key = [self.tenant_col, id_col] if self.tenant_col else [id_col]
-        stored = self._stored_schema(gen=g)
-        reader = spark.read.schema(stored)
-        df = scope(reader.parquet(self._assign_dir_at(g)))
-        # snapshot window (see PostingStore.read's identical guard, SAME
-        # pinned generation as the dirs): the epoch drops stale files a
-        # crashed compact already folded into base; the committed upper
-        # bound hides batches whose final meta write has not landed
-        # (_live_window)
-        m = self.meta(g)
-        epoch = int(m.get("compacted_through") or 0)
-        upper = m["applied_through"] if as_of is None else as_of
-        delta_dir, tomb_dir = self._delta_dir_at(g), self._tomb_dir_at(g)
+        reader = spark.read.schema(snap.schema)
         return _live_view(
-            df,
-            scope(reader.parquet(delta_dir)) if _dir_has_parquet(delta_dir) else None,
-            _tombstone_frame(spark, tomb_dir, stored, key)
-            if _dir_has_parquet(tomb_dir)
-            else None,
-            epoch, upper, key, key,
+            spark, snap, scope(reader.parquet(snap.dir("assignments"))), "delta",
+            lambda d: scope(reader.parquet(d)), key, key,
         )
 
     def should_compact(self, threshold: float = COMPACT_DELTA_FRACTION) -> bool:
@@ -3483,10 +3423,11 @@ class IvfStore:
         # PostingStore.compact's sentinel-bound note): an unsentineled
         # batch whose meta commit landed is excluded and redelivered
         fold_through = _max_sentinel_batch(self.path)
-        live = self.read_assignments(spark, as_of=fold_through).withColumn(
+        snap = _built(self.snapshot(as_of=fold_through), self.path)
+        live = self.read_assignments(spark, snap=snap).withColumn(
             "batch", F.lit(0).cast("long")
         )
-        m = self.meta()
+        m = snap.meta
         if m.get("pq") and (retrain if retrain is not None else self.should_retrain()):
             import numpy as np
 
@@ -3515,9 +3456,7 @@ class IvfStore:
         live = live.localCheckpoint(eager=True)
         cents = sorted(zip(m["centroid_ids"], m["centroids"]))
         pcols = ([self.tenant_col] if self.tenant_col else []) + ["centroid_id"]
-        new_gen = self._gen() + 1
-        newroot = _layout_root(self.path, new_gen)
-        shutil.rmtree(newroot, ignore_errors=True)
+        new_gen, newroot = _fresh_layout(self.path, snap.gen)
         tmp = os.path.join(newroot, "assignments")
         (
             live.repartition(*pcols)
@@ -3548,14 +3487,14 @@ class IvfStore:
             json.dump(m, f)
         self._publish_generation(new_gen)
 
-    def meta(self, gen: int | None = None) -> dict:
-        """Meta of generation ``gen`` (default: the current one) — the
-        store's ONLY meta reader, so the layout version is checked here
-        once and every path assumes the current layout.  Assignments
-        without meta, or meta of another layout version, refuse (stale
-        or defaulted centroids and statistics would certify wrong
-        probes); an unbuilt store raises ``FileNotFoundError``."""
-        assign = self._assign_dir_at(gen)
+    def meta(self, root: str | None = None) -> dict | None:
+        """Meta of the generation at layout ``root`` (default: the
+        current one) — the store's ONLY meta reader, so the layout
+        version is checked here once and every path assumes the current
+        layout.  None means unbuilt; assignments without meta, or meta
+        of another layout version, refuse (stale or defaulted centroids
+        and statistics would certify wrong probes)."""
+        assign = os.path.join(root, "assignments") if root else self.assign_dir
         try:
             with open(os.path.join(assign, "_meta.json")) as f:
                 m = json.load(f)
@@ -3565,7 +3504,7 @@ class IvfStore:
                     f"IVF store at {self.path} has assignments but no "
                     "assignments/_meta.json — a pre-v5 store; rebuild it"
                 ) from None
-            raise
+            return None
         if m.get("version") != IVF_VERSION:
             raise ValueError(
                 f"IVF store at {self.path} has layout version "
@@ -3575,25 +3514,22 @@ class IvfStore:
             )
         return m
 
-    def _centroid_angles(self, qvec: list[float], meta: dict | None = None):
-        import numpy as np
-
-        m = meta if meta is not None else self.meta()
-        cmat = np.asarray(m["centroids"], dtype="float64")
-        ids = np.asarray(m["centroid_ids"], dtype="int64")
-        q = np.asarray(qvec, dtype="float64")
-        denom = np.linalg.norm(cmat, axis=1) * np.linalg.norm(q)
-        sims = np.divide(
-            cmat @ q, denom, out=np.full(len(ids), -2.0), where=denom > 0
-        )
-        thetas = np.arccos(np.clip(sims, -1.0, 1.0))
-        return m, ids, sims, thetas
+    def snapshot(self, as_of: int | None = None, gen: int | None = None):
+        """The :class:`StoreSnapshot` every read of this store takes
+        (default: the current generation at its committed bound); None
+        when unbuilt.  One snapshot serves a whole probe: the walk's
+        counts, radii, tombstone debt and codebooks AND the row view's
+        dirs and batch bound — its ``schema`` (the build-time
+        assignments schema) keeps partition-column type inference from
+        reinterpreting tenant or centroid values."""
+        return StoreSnapshot.take(self.path, self.meta, as_of, gen)
 
     def probe_ids_exact(
         self, qvec: list[float], k: int, tenant=None, where=None,
-        meta: dict | None = None,
+        snap: StoreSnapshot | None = None,
     ) -> list[int]:
-        """EXACT probe set via the cluster-radius triangle bound —
+        """EXACT probe set via the cluster-radius triangle bound, from
+        the certificate in ``snap`` (default: the current snapshot) —
         still zero Spark jobs, still driver-side numpy.
 
         Every member x of cluster c satisfies
@@ -3632,7 +3568,13 @@ class IvfStore:
 
         if tenant is not None and not self.tenant_col:
             raise ValueError("store was not built with a tenant_col")
-        m, ids, _sims, thetas = self._centroid_angles(qvec, meta=meta)
+        m = (snap or _built(self.snapshot(), self.path)).meta
+        cmat = np.asarray(m["centroids"], dtype="float64")
+        ids = np.asarray(m["centroid_ids"], dtype="int64")
+        q = np.asarray(qvec, dtype="float64")
+        denom = np.linalg.norm(cmat, axis=1) * np.linalg.norm(q)
+        sims = np.divide(cmat @ q, denom, out=np.full(len(ids), -2.0), where=denom > 0)
+        thetas = np.arccos(np.clip(sims, -1.0, 1.0))
         fstats = vset = tentry = None
         if where is not None:
             col, values = where
@@ -3780,17 +3722,15 @@ class IvfStore:
         return max(self.SERVING_MIN_TASKS, -(-est // self.SERVING_ROWS_PER_TASK))
 
     def _probed_scan(
-        self, spark: SparkSession, g: int, m: dict, probes, id_col: str, tenant, where
+        self, spark: SparkSession, snap: StoreSnapshot, probes, id_col: str, tenant, where
     ) -> DataFrame:
-        """The live rows of the probed partitions under ONE pinned
-        generation ``g`` and its meta snapshot ``m`` (dirs, batch bound
-        and task count all from the same committed state), with the
-        ``where=(col, values)`` IN-predicate pushed into the pruned
-        parquet scan."""
+        """The live rows of the probed partitions in ``snap`` (dirs,
+        batch bound and task count all from the same committed state),
+        with the ``where=(col, values)`` IN-predicate pushed into the
+        pruned parquet scan."""
         scan = self.read_assignments(
-            spark, probes=probes, id_col=id_col, tenant=tenant,
-            as_of=m["applied_through"], gen=g,
-        ).coalesce(self._serving_task_count(probes, m))
+            spark, probes=probes, id_col=id_col, tenant=tenant, snap=snap,
+        ).coalesce(self._serving_task_count(probes, snap.meta))
         if where is not None:
             scan = scan.filter(F.col(where[0]).isin(list(where[1])))
         return scan
@@ -3834,18 +3774,11 @@ class IvfStore:
         (:meth:`probe_ids_exact`) and the IN-predicate is pushed into
         the pruned parquet scan, so both the certificate and the bytes
         read track the filtered corpus."""
-        # ONE generation + ONE meta snapshot pin the whole serve: the
-        # walk's counts/radii/tombstone debt AND the row view's dirs and
-        # batch bound come from the same committed state — a
-        # maintenance commit or a compact flip landing between the
-        # reads can otherwise apply tombstones the certificate's debt
-        # never covered, or pair an old base with a new epoch (the one
-        # unsafe direction, caught by the r9 maintenance soak)
-        g = self._gen()
-        m = self.meta(g)
-        probes = self.probe_ids_exact(qvec, k, tenant=tenant, where=where, meta=m)
+        # ONE snapshot serves the walk and the row view (see StoreSnapshot)
+        snap = _built(self.snapshot(), self.path)
+        probes = self.probe_ids_exact(qvec, k, tenant=tenant, where=where, snap=snap)
         return self._rescored_topk(
-            self._probed_scan(spark, g, m, probes, id_col, tenant, where),
+            self._probed_scan(spark, snap, probes, id_col, tenant, where),
             qvec, k, id_col, vec_col, extra_cols,
         )
 
@@ -3885,8 +3818,12 @@ class IvfStore:
         inflate the survivor set (up to a full rescore of the probed
         partitions), never the result.  Refuses stores built without
         ``pq_m=``."""
-        g = self._gen()
-        m = self.meta(g)
+        # ONE snapshot serves the walk, the codebooks and both scans — a
+        # racing maintenance commit or compact flip can't pair new
+        # tombstones with the old certificate, or post-retrain codes
+        # with old codebooks (see StoreSnapshot)
+        snap = _built(self.snapshot(), self.path)
+        m = snap.meta
         if not m.get("pq"):
             raise ValueError(
                 "store was not built with pq_m= — rebuild with product "
@@ -3898,14 +3835,9 @@ class IvfStore:
 
         books = np.asarray(m["pq"]["codebooks"], dtype="float64")
         table = PQ.adc_table(qvec, books)
-        # the serve's single generation + meta snapshot pin walk
-        # counts, codebooks AND the row view's dirs/batch bound
-        # together (see probe_topk) — a racing maintenance commit or
-        # compact flip can't pair new tombstones with the old
-        # certificate, or post-retrain codes with old codebooks
-        probes = self.probe_ids_exact(qvec, k, tenant=tenant, where=where, meta=m)
+        probes = self.probe_ids_exact(qvec, k, tenant=tenant, where=where, snap=snap)
         scored = (
-            self._probed_scan(spark, g, m, probes, id_col, tenant, where)
+            self._probed_scan(spark, snap, probes, id_col, tenant, where)
             .select(id_col, "pq_code", "pq_err")
             .filter(F.col("pq_code").isNotNull())
             .withColumn("__adc", PQ.adc_score_col(F.col("pq_code"), table))
@@ -3997,7 +3929,7 @@ class IvfStore:
                 survivors = scored.filter(
                     F.col("__ub") >= thresh - PQ.RERANK_SLACK
                 ).select(id_col)
-        base = self._probed_scan(spark, g, m, probes, id_col, tenant, where).select(
+        base = self._probed_scan(spark, snap, probes, id_col, tenant, where).select(
             id_col, vec_col, *extra_cols
         )
         if fused_ids is not None:
@@ -4069,7 +4001,6 @@ def ensure_tenant_ivf_index(spark: SparkSession, sf_dir: str) -> IvfStore:
     store = IvfStore(path, tenant_col="tenant_id")
     return _ensure_store(
         spark, sf_dir, store, "embeddings",
-        lambda: os.path.exists(store.meta_path),
         lambda emb, lease: store.build(
             emb.withColumn(
                 "tenant_id",
@@ -4109,7 +4040,6 @@ def ensure_ivf_index(
     store = IvfStore(path)
     return _ensure_store(
         spark, sf_dir, store, "embeddings",
-        lambda: os.path.exists(store.meta_path),
         lambda emb, lease: store.build(
             emb, num_centroids, refine_iterations,
             filter_cols=filter_cols, pq_m=pq_m, lease=lease,

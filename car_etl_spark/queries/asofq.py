@@ -1,8 +1,8 @@
 """As-of (time-travel) snapshot reads of the LSM stores, oracle-checked.
 
-The stores' MVCC contract — ``read(as_of=N)`` equals the state after
-batches ``<= N`` (base build = batch 0; a batch is visible iff its
-commit landed; tombstones kill strictly-older rows; a same-batch
+The stores' MVCC contract — a read of ``snapshot(as_of=N)`` equals the
+state after batches ``<= N`` (base build = batch 0; a batch is visible
+iff its commit landed; tombstones kill strictly-older rows; a same-batch
 upsert+delete resolves to the upsert) — was pytest-pinned only through
 round 9.  This arm makes it a hard-signal CORRECTNESS row: a dedicated
 posting store and rollup store are built from the ``documents`` /
@@ -174,21 +174,23 @@ def store_asof_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arm-tagged as-of reads at every batch id N in 0..3:
 
     - ``posting``: per-doc posting fingerprint from
-      ``PostingStore.read(as_of=N)`` — distinct raw terms, total tf,
-      and Σ len(raw_term)·tf (tokenizer-parity aggregates the oracle
-      recomputes from the as-of text);
+      ``PostingStore.read`` of ``snapshot(as_of=N)`` — distinct raw
+      terms, total tf, and Σ len(raw_term)·tf (tokenizer-parity
+      aggregates the oracle recomputes from the as-of text);
     - ``doclens``: the doc-length sidecar at N (BM25's dl input);
     - ``rollup``: the day-grain continuous aggregate served
-      ``as_of=N`` from minute partials.
+      at ``as_of=N`` from minute partials.
 
     Output: (arm, asof, k1, k2, n, v1, v2)."""
     from car_etl_spark.queries import prepared
 
     def build() -> DataFrame:
         posting, rollup = ensure_asof_stores(spark, sf_dir)
+        # one snapshot per store; each arm moves only its batch bound
+        psnap, rsnap = posting.snapshot(), rollup.snapshot()
         arms: list[DataFrame] = []
         for n in range(ASOF_BATCHES + 1):
-            rows = posting.read(spark, as_of=n)
+            rows = posting.read(spark, snap=psnap.as_of(n))
             arms.append(
                 rows.groupBy("doc_id").agg(
                     F.countDistinct("raw_term").alias("n"),
@@ -207,7 +209,7 @@ def store_asof_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
             arms.append(
-                posting.read_doclens(spark, as_of=n).select(
+                posting.read_doclens(spark, psnap.as_of(n)).select(
                     F.lit("doclens").alias("arm"),
                     F.lit(n).cast("long").alias("asof"),
                     F.col("doc_id").cast("string").alias("k1"),
@@ -218,7 +220,7 @@ def store_asof_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
             arms.append(
-                rollup.read(spark, "day", exact_sums=True, as_of=n).select(
+                rollup.read(spark, "day", exact_sums=True, snap=rsnap.as_of(n)).select(
                     F.lit("rollup").alias("arm"),
                     F.lit(n).cast("long").alias("asof"),
                     F.date_format("bucket_start", "yyyy-MM-dd").alias("k1"),

@@ -287,24 +287,19 @@ def _vector_ivf_topk_batch_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
         .collect()
     )
-    # one generation + meta snapshot pin every query's certificate
-    # AND the row view's dirs/batch bound (see IvfStore.probe_topk's
-    # race note)
-    gen = store._gen()
-    meta = store.meta(gen)
+    # one snapshot serves every query's certificate AND the row view
+    # (see StoreSnapshot)
+    snap = store.snapshot()
     probe_union: set[int] = set()
     for r in qrows:
         probe_union |= set(
-            store.probe_ids_exact([float(x) for x in r.qvec], 6, meta=meta)
+            store.probe_ids_exact([float(x) for x in r.qvec], 6, snap=snap)
         )
     queries = spark.createDataFrame(
         [(int(r.query_id), [float(x) for x in r.qvec]) for r in qrows],
         "query_id long, qvec array<double>",
     )
-    assigned = store.read_assignments(
-        spark, probes=sorted(probe_union),
-        as_of=meta["applied_through"], gen=gen,
-    )
+    assigned = store.read_assignments(spark, probes=sorted(probe_union), snap=snap)
     sim = F.round(V.cosine_similarity(F.col("embedding"), F.col("qvec")), 6)
     scored = (
         assigned.crossJoin(F.broadcast(queries))

@@ -69,12 +69,16 @@ from car_etl_spark.operators import indexing as _IX
 from car_etl_spark.operators.indexing import (
     COMPACT_DELTA_FRACTION,
     MaintenanceFencedError,
+    StoreSnapshot,
     _active_lease,
+    _built,
+    _current_dir,
     _dir_has_parquet,
     _ensure_store,
     _fence_check,
-    _layout_gen,
-    _layout_root,
+    _fresh_layout,
+    _marker_batches,
+    _max_sentinel_batch,
     _publish_store_generation,
     _should_compact,
     _source_digest,
@@ -123,37 +127,18 @@ class RollupStore:
             gc = (tenant_col,) + gc
         self.group_cols = gc
 
-    # -- generation-numbered layout (round 9) ---------------------------
-    # Same discipline as the posting/IVF stores (operators/indexing):
-    # base/delta live under layout-<gen>/, build/compact publish a new
-    # generation by flipping _current.json (deferred GC gives in-flight
-    # serves one compact interval of grace).  Meta rides INSIDE the
-    # generation's base/ so spec, schema, and compaction epoch publish
-    # together.  Sentinels, pending markers, and the dirty flag stay at
-    # the store root (batch ids are global, not per-generation).
-    # refresh_dates also publishes a new generation: unchanged
-    # partitions hardlink across (one os.link per file, no data copy),
-    # so the bounded invalidation refresh gets the same
-    # never-invalidate-an-in-flight-serve guarantee as compact.
-
-    def _gen(self) -> int:
-        return _layout_gen(self.path)
-
-    def _base_dir_at(self, gen: int | None = None) -> str:
-        g = self._gen() if gen is None else gen
-        return os.path.join(_layout_root(self.path, g), "base")
-
-    def _delta_dir_at(self, gen: int | None = None) -> str:
-        g = self._gen() if gen is None else gen
-        return os.path.join(_layout_root(self.path, g), "delta")
+    # current-generation paths, for maintenance probes and inspection;
+    # reads take theirs from a StoreSnapshot.  Sentinels, pending
+    # markers and the dirty flag stay at the store root (batch ids are
+    # global, not per-generation).
 
     @property
     def base_dir(self) -> str:
-        return self._base_dir_at()
+        return _current_dir(self.path, "base")
 
     @property
     def delta_dir(self) -> str:
-        return self._delta_dir_at()
+        return _current_dir(self.path, "delta")
 
     @property
     def meta_path(self) -> str:
@@ -198,12 +183,12 @@ class RollupStore:
             "tenant_col": self.tenant_col,
         }
 
-    def _meta(self, gen: int | None = None) -> dict | None:
-        """Meta of generation ``gen`` (default: the current one), None
-        when unbuilt — the store's ONLY meta reader, so the layout
-        version is checked here once and every path assumes the current
-        layout."""
-        mp = os.path.join(self._base_dir_at(gen), "_meta.json")
+    def _meta(self, root: str | None = None) -> dict | None:
+        """Meta of the generation at layout ``root`` (default: the
+        current one), None when unbuilt — the store's ONLY meta reader,
+        so the layout version is checked here once and every path
+        assumes the current layout."""
+        mp = os.path.join(os.path.join(root, "base") if root else self.base_dir, "_meta.json")
         if not os.path.exists(mp):
             return None
         with open(mp) as f:
@@ -215,17 +200,29 @@ class RollupStore:
             )
         return m
 
-    def _check_params(self) -> None:
-        m = self._meta()
-        if m is None:
+    def snapshot(self, as_of: int | None = None, gen: int | None = None):
+        """The :class:`StoreSnapshot` every read of this store takes;
+        None when unbuilt, and a refusal when the stored (groups,
+        value) spec is not the one this code computes.  The committed
+        bound is the highest applied sentinel (``as_of`` overrides it:
+        the MVCC read of the state after batches ``<= as_of``), read
+        BEFORE the generation is pinned — see :class:`StoreSnapshot`
+        for why that order is the consistent one.  The snapshot's
+        ``schema`` keeps partition-column type inference from folding a
+        string tenant '0100' into int 100 and merging two tenants'
+        aggregates."""
+        upper = (
+            _max_sentinel_batch(self.path, "_batch_", "_applied")
+            if as_of is None
+            else int(as_of)
+        )
+        snap = StoreSnapshot.take(self.path, self._meta, upper, gen)
+        if snap is not None and snap.meta["spec"] != self._spec():
             raise RollupStoreParamError(
-                f"no rollup state at {self.path} — build() it first"
-            )
-        if m["spec"] != self._spec():
-            raise RollupStoreParamError(
-                f"rollup state at {self.path} was built with {m['spec']}; "
+                f"rollup state at {self.path} was built with {snap.meta['spec']}; "
                 f"this code computes {self._spec()} — rebuild before resuming"
             )
+        return snap
 
     def _stamp_meta(self, target_dir: str, schema, compacted_through: int) -> None:
         """Write meta into a (tmp) base layout BEFORE it is swapped
@@ -241,11 +238,6 @@ class RollupStore:
                 },
                 f,
             )
-
-    def _stored_schema(self, gen: int | None = None):
-        from pyspark.sql.types import StructType
-
-        return StructType.fromJson(self._meta(gen)["schema"])
 
     def _pcols(self) -> list[str]:
         return ([self.tenant_col] if self.tenant_col else []) + ["event_date"]
@@ -264,19 +256,10 @@ class RollupStore:
         """Batch ids whose append crashed: a pending marker with no
         applied sentinel.  Their delta rows are a PARTIAL, never-
         acknowledged write — foreachBatch will replay the whole batch."""
-        out = []
-        try:
-            for f in os.listdir(self.path):
-                if f.startswith("_batch_") and f.endswith("_pending"):
-                    try:
-                        b = int(f[len("_batch_"):-len("_pending")])
-                    except ValueError:
-                        continue
-                    if not os.path.exists(self._sentinel(b)):
-                        out.append(b)
-        except OSError:
-            pass
-        return out
+        return [
+            b for b in _marker_batches(self.path, "_batch_", "_pending")
+            if not os.path.exists(self._sentinel(b))
+        ]
 
     def _needs_dup_drop(self) -> bool:
         """True only when a crash-replay may have duplicated delta rows
@@ -288,21 +271,6 @@ class RollupStore:
         pass instead of two); compact folds everything into a fresh
         base and clears the flag."""
         return os.path.exists(self._dirty_path)
-
-    def _max_sentinel(self) -> int:
-        """Highest applied batch id — the compaction epoch (pure
-        filesystem, no Spark job)."""
-        mx = 0
-        try:
-            for f in os.listdir(self.path):
-                if f.startswith("_batch_") and f.endswith("_applied"):
-                    try:
-                        mx = max(mx, int(f[len("_batch_"):-len("_applied")]))
-                    except ValueError:
-                        pass
-        except OSError:
-            pass
-        return mx
 
     def _publish_generation(self, new_gen: int) -> None:
         """Publish the freshly-stamped generation through the stores'
@@ -323,9 +291,7 @@ class RollupStore:
     @_with_maintenance_lease
     def build(self, events: DataFrame) -> None:
         os.makedirs(self.path, exist_ok=True)
-        new_gen = _layout_gen(self.path) + 1
-        newroot = _layout_root(self.path, new_gen)
-        shutil.rmtree(newroot, ignore_errors=True)
+        new_gen, newroot = _fresh_layout(self.path)
         tmp = os.path.join(newroot, "base")
         rows = self._minute_partials(events).withColumn(
             "batch", F.lit(0).cast("long")
@@ -345,10 +311,10 @@ class RollupStore:
         False for an already-applied batch (sentinel)."""
         if batch <= 0:
             raise ValueError("batch must be > 0 (0 is the base build)")
-        self._check_params()
+        snap = _built(self.snapshot(), self.path, RollupStoreParamError)
         if os.path.exists(self._sentinel(batch)):
             return False
-        if batch <= int(self._meta().get("compacted_through") or 0):
+        if batch <= snap.epoch:
             # a batch id at or below the compaction epoch is a replay of
             # content already folded into base (compact cleared its
             # sentinel) — refuse like the sentinel does
@@ -358,7 +324,7 @@ class RollupStore:
         # sentinel landed carry batch ids above the committed bound and
         # would surface under a different-content recommit (r12)
         _orph, _skipped = _IX._sweep_promoted_orphans(
-            [self.delta_dir], self._max_sentinel(),
+            [snap.dir("delta")], snap.upper,
             recheck=lambda: _fence_check(self),
         )
         if os.path.exists(self._pending(batch)) and _skipped:
@@ -382,7 +348,7 @@ class RollupStore:
             "batch", F.lit(batch).cast("long")
         )
         promote, abort = _staged_append(
-            self.delta_dir,
+            snap.dir("delta"),
             lambda stage: partials.repartition(*self._pcols())
             .write.mode("append")
             .partitionBy(*self._pcols())
@@ -409,49 +375,28 @@ class RollupStore:
         start_date=None,
         end_date=None,
         tenant=None,
-        as_of: int | None = None,
+        snap: StoreSnapshot | None = None,
     ) -> DataFrame:
-        """The live minute-grain view: base + deltas, crash-duplicate
-        rows dropped (deterministic per-(group, batch) aggregates make
-        exact-duplicate drop sufficient — the posting-store replay
-        argument), date range pruned at the partition level."""
-        self._check_params()
+        """The live minute-grain view of ``snap`` (default: the current
+        snapshot): base + deltas, crash-duplicate rows dropped
+        (deterministic per-(group, batch) aggregates make exact-duplicate
+        drop sufficient — the posting-store replay argument), date range
+        pruned at the partition level."""
+        snap = snap or _built(self.snapshot(), self.path, RollupStoreParamError)
         if tenant is not None and not self.tenant_col:
             raise ValueError("store was not built with a tenant_col")
-        # snapshot window ORDER matters under concurrent maintenance:
-        # the applied-sentinel bound hides a batch whose append is
-        # still in flight (parquet files land per-task — a concurrent
-        # reader would otherwise sum a PARTIAL batch; the sentinel, one
-        # atomic file create after the append job, is the commit point;
-        # batch ids are monotone stream epochs from one writer, so
-        # max-sentinel is a prefix bound).  It is read FIRST, and the
-        # generation is pinned SECOND: the publish flips the pointer
-        # BEFORE clearing sentinels, so observing committed=C then gen
-        # g is consistent in every interleaving — pre-flip the pinned
-        # old dirs still hold the deltas <= C, post-flip the new base
-        # already folds them under an epoch >= C.  (Pinning first and
-        # then reading a post-clear committed=0 against OLD dirs would
-        # hide unfolded deltas — the mixed-state class the r9
-        # maintenance soak caught.)
-        # ``as_of`` overrides the committed bound: the MVCC time-travel
-        # read (state after batches <= N), same contract as
-        # PostingStore._snapshot_bounds — meaningful down to the
-        # compaction epoch (older batches are folded into base)
-        committed = self._max_sentinel() if as_of is None else int(as_of)
-        g = self._gen()
-        # build-time schema supplied explicitly: partition-column type
-        # inference would otherwise reinterpret values (string tenant
-        # '0100' folding into int 100 merges two tenants' aggregates)
-        reader = spark.read.schema(self._stored_schema(gen=g))
-        df = reader.parquet(self._base_dir_at(g))
-        # the compaction epoch drops delta rows already folded into
-        # base (a crash between compact's publish and its delta cleanup
-        # strands them; counting them again doubles n/sums)
-        epoch = int(self._meta(g).get("compacted_through") or 0)
-        if _dir_has_parquet(self._delta_dir_at(g)):
+        reader = spark.read.schema(snap.schema)
+        df = reader.parquet(snap.dir("base"))
+        # the committed bound hides a batch whose append is still in
+        # flight (parquet files land per-task; the sentinel, one atomic
+        # file create after the append job, is the commit point); the
+        # compaction epoch drops delta rows already folded into base (a
+        # crash between compact's publish and its delta cleanup strands
+        # them; counting them again doubles n/sums)
+        if _dir_has_parquet(snap.dir("delta")):
             df = df.unionByName(
-                reader.parquet(self._delta_dir_at(g)).filter(
-                    (F.col("batch") > epoch) & (F.col("batch") <= committed)
+                reader.parquet(snap.dir("delta")).filter(
+                    (F.col("batch") > snap.epoch) & (F.col("batch") <= snap.upper)
                 )
             )
         if tenant is not None:
@@ -476,18 +421,19 @@ class RollupStore:
         end_date=None,
         exact_sums: bool = False,
         tenant=None,
-        as_of: int | None = None,
+        snap: StoreSnapshot | None = None,
     ) -> DataFrame:
         """Rollup at the requested grain from persisted partials:
         (bucket_start, groups..., n, value_sum, value_avg, value_min,
-        value_max).  Never touches raw events.  ``exact_sums=True``
+        value_max) from ``snap`` (default: the current snapshot).
+        Never touches raw events.  ``exact_sums=True``
         keeps value_sum as the DECIMAL partial (and omits the derived
         avg) so callers can apply their own finalization/rounding —
         required for bit-parity with oracle twins that round the
         DECIMAL before casting."""
         if grain not in GRAINS:
             raise ValueError(f"grain must be one of {GRAINS}")
-        parts = self.partials(spark, start_date, end_date, tenant=tenant, as_of=as_of)
+        parts = self.partials(spark, start_date, end_date, tenant=tenant, snap=snap)
         out = self._merge_to(
             parts, F.date_trunc(grain, F.col("minute_start")), self.group_cols
         )
@@ -519,13 +465,13 @@ class RollupStore:
         never-acknowledged append) are EXCLUDED from the fold: their
         partial rows must not enter base, because the swap clears the
         pending markers and the stream's replay of that batch (its id
-        stays above the epoch — no sentinel means _max_sentinel skips
-        it) will re-append the FULL batch.  Folding the partials would
+        stays above the epoch — no sentinel means the committed bound
+        skips it) will re-append the FULL batch.  Folding the partials would
         double-count them with no duplicate-drop able to repair it
         (base rows carry batch 0).  Excluding them loses nothing: an
         unacknowledged batch is the replay's to deliver."""
-        self._check_params()
-        parts = self.partials(spark)
+        snap = _built(self.snapshot(), self.path, RollupStoreParamError)
+        parts = self.partials(spark, snap=snap)
         stranded = self._stranded_batches()
         if stranded:
             parts = parts.filter(~F.col("batch").isin(stranded))
@@ -543,9 +489,7 @@ class RollupStore:
             "value_max",
             F.lit(0).cast("long").alias("batch"),
         )
-        new_gen = _layout_gen(self.path) + 1
-        newroot = _layout_root(self.path, new_gen)
-        shutil.rmtree(newroot, ignore_errors=True)
+        new_gen, newroot = _fresh_layout(self.path, snap.gen)
         tmp = os.path.join(newroot, "base")
         (
             live.repartition(*self._pcols())
@@ -556,7 +500,7 @@ class RollupStore:
         # epoch from the sentinels BEFORE the publish clears them: the
         # meta rides the new layout, so readers ignore any delta files a
         # crash strands between the flip and the cleanup
-        self._stamp_meta(tmp, live.schema, self._max_sentinel())
+        self._stamp_meta(tmp, live.schema, snap.upper)
         self._publish_generation(new_gen)
 
     @_with_maintenance_lease
@@ -568,7 +512,7 @@ class RollupStore:
         SOURCE frame and swap them in, deleting any delta rows for
         those dates.  Bounded by the invalidated region — never a full
         history rescan."""
-        self._check_params()
+        snap = _built(self.snapshot(), self.path, RollupStoreParamError)
         dates = [str(d) for d in dates]
         fresh = (
             self._minute_partials(
@@ -606,11 +550,8 @@ class RollupStore:
         # untouched (unlike compact): the carried-over delta files keep
         # their batch tags, so the committed bound and the epoch keep
         # meaning exactly what they meant in the previous generation.
-        g = self._gen()
-        old_base, old_delta = self._base_dir_at(g), self._delta_dir_at(g)
-        new_gen = g + 1
-        newroot = _layout_root(self.path, new_gen)
-        shutil.rmtree(newroot, ignore_errors=True)
+        old_base, old_delta = snap.dir("base"), snap.dir("delta")
+        new_gen, newroot = _fresh_layout(self.path, snap.gen)
         new_base = os.path.join(newroot, "base")
         new_delta = os.path.join(newroot, "delta")
         skip = {
@@ -688,7 +629,6 @@ def ensure_rollup_store(spark: SparkSession, sf_dir: str) -> RollupStore:
     store = RollupStore(path)
     return _ensure_store(
         spark, sf_dir, store, "events",
-        lambda: store._meta() is not None,
         lambda ev, lease: store.build(
             ev.select("ts", "event_type", "value"), lease=lease
         ),

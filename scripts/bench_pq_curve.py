@@ -58,11 +58,17 @@ def column_bytes(assign_dir: str) -> dict:
     return sizes
 
 
+def _has_pq(store) -> bool:
+    """True when the cached store is built with pq codes."""
+    snap = store.snapshot()
+    return snap is not None and bool(snap.meta.get("pq"))
+
+
 def survivor_fraction(spark, store, qvec, k=20) -> float:
-    meta = store.meta()
-    table = PQ.adc_table(qvec, np.asarray(meta["pq"]["codebooks"]))
-    probes = store.probe_ids_exact(qvec, k)
-    scan = store.read_assignments(spark, probes=probes).filter(
+    snap = store.snapshot()
+    table = PQ.adc_table(qvec, np.asarray(snap.meta["pq"]["codebooks"]))
+    probes = store.probe_ids_exact(qvec, k, snap=snap)
+    scan = store.read_assignments(spark, probes=probes, snap=snap).filter(
         F.col("pq_code").isNotNull()
     )
     scored = (
@@ -112,7 +118,7 @@ def main() -> None:
         k = IX.derive_num_centroids(n)
         path = os.path.join(ROOT, f"pq-{n}")
         store = IX.IvfStore(path)
-        if not os.path.exists(store.meta_path) or not store.meta().get("pq"):
+        if not _has_pq(store):
             t0 = time.perf_counter()
             store.build(
                 make_vectors(spark, n), num_centroids=k, refine_iterations=1, pq_m=8
@@ -132,7 +138,7 @@ def main() -> None:
     dim, n = 64, 16_000
     path = os.path.join(ROOT, f"pqgraded-{n}")
     store = IX.IvfStore(path)
-    if not os.path.exists(store.meta_path) or not store.meta().get("pq"):
+    if not _has_pq(store):
         import math
         import random
 
@@ -168,7 +174,7 @@ def main() -> None:
 
     path = os.path.join(ROOT, f"pq1536-{n}")
     store = IX.IvfStore(path)
-    if not os.path.exists(store.meta_path) or not store.meta().get("pq"):
+    if not _has_pq(store):
         rng = random.Random(1536)
         clusters = 16
         centers = []

@@ -74,7 +74,7 @@ def main() -> None:
         events = spark.read.parquet(src)
         store = RollupStore(os.path.join(ROOT, f"roll-{n}"))
         build_s = None
-        if store._meta() is None:
+        if store.snapshot() is None:
             t0 = time.perf_counter()
             store.build(events)
             build_s = round(time.perf_counter() - t0, 2)
@@ -95,7 +95,7 @@ def main() -> None:
         # included): must track the batch, not the corpus
         batch_df = events.limit(BATCH_ROWS)
         t0 = time.perf_counter()
-        store.apply_batch(spark, batch_df, batch=store._max_sentinel() + 1)
+        store.apply_batch(spark, batch_df, batch=store.snapshot().upper + 1)
         apply_s = round(time.perf_counter() - t0, 4)
         row = {
             "events": n,

@@ -187,7 +187,7 @@ def main() -> None:
             os.path.join(ROOT, f"store-{n}"),
         )
         build_s = None
-        if not IX._dir_has_parquet(store.base_dir):
+        if store.snapshot() is None:
             t0 = time.perf_counter()
             store.build(spark.read.parquet(src))
             build_s = round(time.perf_counter() - t0, 2)
@@ -240,7 +240,7 @@ def main() -> None:
             os.path.join(ROOT, f"tristore-{n}"),
         )
         build_s = None
-        if not IX._dir_has_parquet(tstore.base_dir):
+        if tstore.snapshot() is None:
             t0 = time.perf_counter()
             tstore.build(spark.read.parquet(src))
             build_s = round(time.perf_counter() - t0, 2)
@@ -288,7 +288,7 @@ def main() -> None:
         ivf_path = os.path.join(ROOT, f"ivf-{n}")
         store = _open_cached(IX.IvfStore, ivf_path)
         build_s = None
-        if not os.path.exists(store.meta_path):
+        if store.snapshot() is None:
             t0 = time.perf_counter()
             store.build(make_vectors(spark, n), num_centroids=k, refine_iterations=1)
             build_s = round(time.perf_counter() - t0, 2)

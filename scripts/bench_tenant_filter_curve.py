@@ -81,7 +81,7 @@ def main() -> None:
         emb = spark.read.parquet(path)
         spath = os.path.join(ROOT, f"tivf-{n}")
         store = IX.IvfStore(spath, tenant_col="tenant_id")
-        if not os.path.exists(store.meta_path):
+        if store.snapshot() is None:
             store.build(
                 emb,
                 num_centroids=IX.derive_num_centroids(n),

@@ -106,7 +106,7 @@ def main() -> None:
         for tag, positions in (("pos", True), ("nopos", False)):
             spath = os.path.join(ROOT, f"tri-{tag}-{n}")
             store = IX.PostingStore(spath, analyzer="trigram", positions=positions)
-            if not store._meta():
+            if store.snapshot() is None:
                 t0 = time.perf_counter()
                 store.build(docs)
                 row[f"{tag}_build_s"] = round(time.perf_counter() - t0, 1)

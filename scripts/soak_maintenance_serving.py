@@ -239,19 +239,19 @@ def oracle_rollup(spark, events: list) -> list[tuple]:
 
 
 def state_id_posting(store: IX.PostingStore) -> int:
-    return int(store._meta().get("applied_through") or 0)
+    return store.snapshot().upper
 
 
 def state_id_ivf(store: IX.IvfStore) -> int:
     try:
-        return int(store.meta().get("applied_through") or 0)
+        return store.snapshot().upper
     except (OSError, ValueError):
         return 0
 
 
 def state_id_rollup(store: RollupStore) -> int:
-    meta = store._meta() or {}
-    return max(int(meta.get("compacted_through") or 0), store._max_sentinel())
+    snap = store.snapshot()
+    return max(snap.epoch, snap.upper)
 
 
 def main() -> None:  # noqa: C901
@@ -400,13 +400,13 @@ def main() -> None:  # noqa: C901
             probes = (
                 (
                     (posting.delta_dir, posting.doclen_delta, posting.tomb_dir),
-                    int(posting._meta().get("applied_through") or 0),
+                    posting.snapshot().upper,
                 ),
                 (
                     (ivf.delta_dir, ivf.tomb_dir),
-                    int(ivf.meta().get("applied_through") or 0),
+                    ivf.snapshot().upper,
                 ),
-                ((rollup.delta_dir,), rollup._max_sentinel()),
+                ((rollup.delta_dir,), rollup.snapshot().upper),
             )
             n_orph = sum(
                 1
@@ -543,7 +543,7 @@ def main() -> None:  # noqa: C901
 
         def _pinned_straggler_body() -> None:
             def checksum(g: int, sid: int):
-                df = posting.read(spark, gen=g, as_of=sid)
+                df = posting.read(spark, snap=posting.snapshot(gen=g, as_of=sid))
                 row = df.select(
                     F.count(F.lit(1)).alias("n"),
                     # decimal accumulator: a long sum of 64-bit hashes

@@ -188,3 +188,53 @@ def test_every_generation_publish_is_fenced():
         if re.search(r"if\s+lease\s+else\s+None", open(p).read())
     ]
     assert not offenders, f"unfenced publish path: {offenders}"
+
+
+#: each LSM store's read methods: every one takes one ``snap`` (a
+#: ``StoreSnapshot``) in place of the gen/meta/as_of it used to thread
+STORE_READS = {
+    (os.path.join("operators", "indexing.py"), "PostingStore"): {"read", "read_doclens", "stats"},
+    (os.path.join("operators", "indexing.py"), "IvfStore"): {
+        "read_assignments", "probe_ids_exact", "_probed_scan",
+    },
+    (os.path.join("streaming", "rollup_store.py"), "RollupStore"): {"partials", "read"},
+}
+
+#: what a read would use to resolve the CURRENT generation by itself
+CURRENT_LAYOUT_NAMES = {
+    "_layout_gen", "_current_dir", "base_dir", "delta_dir", "tomb_dir",
+    "assign_dir", "doclen_delta", "meta_path",
+}
+
+
+def _names_used(fn: ast.FunctionDef) -> set[str]:
+    return {
+        n.id if isinstance(n, ast.Name) else n.attr
+        for n in ast.walk(fn)
+        if isinstance(n, (ast.Name, ast.Attribute))
+    }
+
+
+def test_store_reads_take_one_snapshot():
+    """Each store resolves its generation in ``snapshot()`` only: no
+    other store method calls ``_layout_gen``, and no read method takes
+    ``gen=``/``meta=``/``as_of=`` or resolves a current-generation path
+    itself — it reads everything from the snapshot it takes."""
+    for (rel, cls), reads in STORE_READS.items():
+        tree = ast.parse(open(os.path.join(PKG, rel)).read())
+        klass = next(
+            n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == cls
+        )
+        methods = {n.name: n for n in klass.body if isinstance(n, ast.FunctionDef)}
+        assert reads <= set(methods), (cls, reads - set(methods))
+        assert "snapshot" in methods, cls
+        for name, fn in methods.items():
+            if name != "snapshot":
+                assert "_layout_gen" not in _names_used(fn), f"{cls}.{name}"
+        for name in reads:
+            fn = methods[name]
+            params = {a.arg for a in fn.args.args + fn.args.kwonlyargs}
+            assert "snap" in params, f"{cls}.{name}"
+            assert not params & {"gen", "meta", "as_of"}, f"{cls}.{name}: {params}"
+            used = _names_used(fn) & CURRENT_LAYOUT_NAMES
+            assert not used, f"{cls}.{name} resolves {used} itself"

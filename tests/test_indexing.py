@@ -1405,7 +1405,7 @@ def test_positionsless_trigram_store_serves_same_answers(spark, tmp_path):
         str(tmp_path / "trilean"), analyzer="trigram", positions=False
     )
     lean.build(docs)
-    assert "positions" not in [f.name for f in lean._stored_schema().fields]
+    assert "positions" not in [f.name for f in lean.snapshot().schema.fields]
     # reopened handle restores the knob from meta
     assert IX.PostingStore(str(tmp_path / "trilean")).positions is False
 

@@ -218,3 +218,48 @@ def test_compact_folds_only_sentineled_batches(spark, tmp_path, posting_store):
     assert _live_postings(posting_store, spark) == v0
     assert posting_store.apply_batch(spark, _docs_df(spark, DOCS_B1), None, batch=1)
     assert _live_postings(posting_store, spark) == applied
+
+
+def test_each_store_read_parses_meta_once(spark, tmp_path, posting_store, monkeypatch):
+    """A serving read resolves ONE snapshot: the store's meta is parsed
+    exactly once per call, however many paths, bounds, statistics and
+    scans the read builds from it."""
+    import builtins
+
+    from car_etl_spark.streaming.rollup_store import RollupStore
+
+    emb = _clustered_emb(spark)
+    ivf = IX.IvfStore(str(tmp_path / "pq"))
+    ivf.build(emb, num_centroids=4, refine_iterations=0, pq_m=4)
+    events = spark.createDataFrame(
+        [(1, "click", "2024-01-01 10:00:30", 2.0)],
+        "event_id long, event_type string, ts string, value double",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    rollup = RollupStore(str(tmp_path / "rollup"))
+    rollup.build(events)
+    qvec = list(emb.filter(F.col("vec_id") == 3).select("embedding").first()[0])
+    stems = [r[0] for r in posting_store.read(spark).select("term").limit(2).collect()]
+
+    parses = []
+    real_open = builtins.open
+
+    def counting_open(file, mode="r", *args, **kwargs):
+        if os.path.basename(str(file)) == "_meta.json" and "r" in mode:
+            parses.append(file)
+        return real_open(file, mode, *args, **kwargs)
+
+    monkeypatch.setattr(builtins, "open", counting_open)
+    calls = {
+        "term_search": lambda: posting_store.term_search(spark, stems),
+        "bm25_search": lambda: posting_store.bm25_search(spark, stems),
+        "phrase_search": lambda: posting_store.phrase_search(spark, stems),
+        "probe_topk": lambda: ivf.probe_topk(spark, qvec, k=5),
+        "pq_topk": lambda: ivf.pq_topk(spark, qvec, k=5),
+        "rollup.read": lambda: rollup.read(spark, "day"),
+    }
+    counts = {}
+    for name, call in calls.items():
+        parses.clear()
+        call()
+        counts[name] = len(parses)
+    assert counts == {name: 1 for name in calls}, counts
