@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import os
 
+from py4j.java_gateway import java_import
 from pyspark.sql import SparkSession
 
 
@@ -33,6 +34,17 @@ from pyspark.sql import SparkSession
 #: cache is built once per JVM, so it cannot be set on a live session
 #: (see the module docstring).
 CODEGEN_CACHE_ENTRIES = 1000
+
+#: JVM classes pyspark reaches by simple name on most DataFrame calls
+#: (a serve request looked them up ~16, ~11 and ~18 times).  py4j
+#: resolves a simple name through its wildcard imports, one failed
+#: ``Class.forName`` classpath scan per package tried, unless the name
+#: is a single-type import, which is a map hit.
+PY4J_SINGLE_IMPORTS = (
+    "org.apache.spark.api.python.PythonUtils",
+    "org.apache.spark.sql.api.python.PythonSQLUtils",
+    "org.apache.spark.sql.functions",
+)
 
 
 def default_parallelism() -> int:
@@ -80,6 +92,8 @@ def tune_session(spark: SparkSession) -> SparkSession:
         except Exception:
             # Driver session may pin some confs; never fail a query on tuning.
             pass
+    for name in PY4J_SINGLE_IMPORTS:
+        java_import(spark._jvm, name)
     try:
         spark._car_etl_tuned = True
     except Exception:

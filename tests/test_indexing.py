@@ -876,13 +876,21 @@ def _pq_survivor_fraction(spark, store, qvec, k=10):
     return n_sur / n_all
 
 
-def test_pq_topk_exact_and_pruning_on_clustered(spark, tmp_path):
+@pytest.fixture(scope="module")
+def clustered_pq(spark, tmp_path_factory):
+    """A read-only pq_m=4 store over the clustered corpus; its 160-row
+    training sample caps each codebook at k_eff = 160 codewords."""
+    emb = _clustered_emb(spark)
+    store = IX.IvfStore(str(tmp_path_factory.mktemp("clustered_pq") / "ivf"))
+    store.build(emb, num_centroids=4, refine_iterations=2, pq_m=4)
+    return emb, store
+
+
+def test_pq_topk_exact_and_pruning_on_clustered(spark, clustered_pq):
     """pq_topk == brute force on a clustered corpus, AND the error-band
     certificate actually prunes: most probed rows are settled from the
     8-byte codes without touching their embeddings."""
-    emb = _clustered_emb(spark)
-    store = IX.IvfStore(str(tmp_path / "pq1"))
-    store.build(emb, num_centroids=4, refine_iterations=2, pq_m=4)
+    emb, store = clustered_pq
     qvec = list(emb.filter(F.col("vec_id") == 45).select("embedding").first()[0])
     got = [tuple(r) for r in store.pq_topk(spark, qvec, k=10).collect()]
     assert got == _brute_all(emb, qvec, k=10)
@@ -979,6 +987,70 @@ def test_pq_codebooks_deterministic_and_encoding_edges(spark):
     assert enc[1] == (None, None)
     assert enc[2][1] == 2.0
     assert len(enc[0][0]) == 4 and enc[0][1] < 2.0
+
+
+def _gathered_adc(table, codes):
+    import numpy as np
+
+    arr = np.frombuffer(b"".join(codes), dtype="uint8").reshape(len(codes), -1)
+    return table[np.arange(arr.shape[1])[None, :], arr].sum(axis=1)
+
+
+def test_adc_scores_in_the_jvm_and_equal_a_numpy_gather(spark, clustered_pq):
+    """The ADC pass is a JVM expression: no Python evaluation node in
+    the executed plan, and its scores equal a numpy gather-and-sum, on
+    the k_eff < 256 store and over the full byte range (k = 256)."""
+    import numpy as np
+
+    from car_etl_spark.operators import pq as PQ
+
+    emb, store = clustered_pq
+    snap = store.snapshot()
+    books = np.asarray(snap.meta["pq"]["codebooks"])
+    assert books.shape[:2] == (4, 160)
+    qvec = list(emb.filter(F.col("vec_id") == 45).select("embedding").first()[0])
+    table = PQ.adc_table(qvec, books)
+    scan = store.read_assignments(spark, snap=snap).filter(F.col("pq_code").isNotNull())
+    scored = scan.withColumn("adc", PQ.adc_score_col(F.col("pq_code"), table))
+    plan = scored._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+    rows = scored.select("pq_code", "adc").collect()
+    assert len(rows) == 160
+    np.testing.assert_allclose(
+        [r.adc for r in rows], _gathered_adc(table, [r.pq_code for r in rows]),
+        rtol=0, atol=1e-12,
+    )
+    rng = np.random.default_rng(5)
+    table = rng.normal(size=(8, 256))
+    codes = [bytearray(rng.integers(0, 256, size=8, dtype="uint8").tobytes()) for _ in range(300)]
+    df = spark.createDataFrame([(c,) for c in codes], "pq_code binary")
+    got = [r[0] for r in df.select(PQ.adc_score_col(F.col("pq_code"), table)).collect()]
+    np.testing.assert_allclose(got, _gathered_adc(table, codes), rtol=0, atol=1e-12)
+
+
+def test_fresh_query_vectors_compile_nothing(spark, clustered_pq):
+    """The query vector and the ADC table are array literals, which
+    generated code holds by reference: after one warm-up call, fresh
+    query vectors through probe_topk and pq_topk compile no class.
+    k = 20 is the serving limit; an id list of ten or fewer becomes an
+    ``In`` whose values are inlined into the generated source."""
+    import random
+
+    from tests.test_session import _compiles
+
+    emb, store = clustered_pq
+    base = {r.vec_id: list(r.embedding) for r in emb.collect()}
+    rng = random.Random(17)
+
+    def fresh(i):
+        return [x + rng.gauss(0.0, 0.01) for x in base[i]]
+
+    for serve in (store.probe_topk, store.pq_topk):
+        serve(spark, fresh(5), k=20).collect()
+        before = _compiles(spark)
+        for i in (7, 45, 130):
+            serve(spark, fresh(i), k=20).collect()
+        assert _compiles(spark) == before, f"{serve.__name__} compiled {_compiles(spark) - before}"
 
 
 # ---------------------------------------------------------------------------

@@ -207,6 +207,34 @@ def test_highdim_cosine_null_semantics_match_expression_twin(spark):
     assert [r.i for r in kept.collect()] == [1]
 
 
+def test_literal_doubles_are_exact_and_refuse_non_finite(spark):
+    """A per-request list of doubles reaches the plan as one string
+    literal parsed JVM-side; the shortest-repr round trip must return
+    every finite double bit for bit, and non-finite values must refuse
+    rather than turn into IEEE specials no serving path can rank."""
+    import math
+    import struct
+
+    from car_etl_spark.functions import vectors as V
+
+    rng = random.Random(23)
+    vals = [5e-324, 1e-300, 1.7976931348623157e308, -0.0, 0.0, 1 / 3, -2 / 3,
+            0.1 + 0.2, 123456789.12345678, -2.2250738585072014e-308]
+    while len(vals) < 1000:  # 17-significant-digit values across all exponents
+        x = struct.unpack(">d", struct.pack(">Q", rng.getrandbits(64)))[0]
+        if math.isfinite(x):
+            vals.append(x)
+    got = spark.range(1).select(V.literal_doubles(vals)).first()[0]
+
+    def bits(xs):
+        return [struct.pack(">d", x) for x in xs]
+
+    assert bits(got) == bits(vals)
+    for bad in (math.nan, math.inf, -math.inf):
+        with pytest.raises(ValueError, match="non-finite"):
+            V.literal_doubles([0.5, bad])
+
+
 # ---------------------------------------------------------------------------
 # Scale-aware blocking plans (round-4: bucket widths must track corpus size)
 
