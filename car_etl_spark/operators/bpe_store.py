@@ -45,7 +45,7 @@ from car_etl_spark.functions.bpe import (
     train_bpe,
     word_frequencies,
 )
-from car_etl_spark.operators.indexing import _source_digest, index_root
+from car_etl_spark.operators.lsm import _source_digest, index_root
 
 BPE_VERSION = 1
 DEFAULT_NUM_MERGES = 200

@@ -91,17 +91,17 @@ def estimated_df_tokens(df: DataFrame) -> int:
 
     try:
         leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-        total = 0
-        for i in range(leaves.size()):
-            b = int(leaves.apply(i).stats().sizeInBytes())
-            if b >= _UNKNOWN_PLAN_BYTES:
-                return -1
-            total += max(0, b)
+        sizes = [
+            max(0, int(leaves.apply(i).stats().sizeInBytes()))
+            for i in range(leaves.size())
+        ]
     except Exception:
         return -1
-    if total <= 0:
+    if sum(sizes) <= 0 or max(sizes) >= _UNKNOWN_PLAN_BYTES:
         return -1
-    return max(1, total // AVG_TOKEN_BYTES)
+    # tokens per leaf, then summed: a join's estimate is exactly the sum
+    # of its inputs' estimates, whatever their byte sizes' remainders
+    return max(1, sum(b // AVG_TOKEN_BYTES for b in sizes))
 
 
 def shard_col(key, num_shards: int):

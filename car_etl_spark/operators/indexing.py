@@ -48,24 +48,30 @@ converge on the same directory (tmp-build + atomic rename).
 
 from __future__ import annotations
 
-import functools
-import hashlib
-import json
 import os
-import shutil
-import threading
-import time
-import uuid
 import zlib
-from contextlib import contextmanager
-from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import StructField, StructType
 
 from car_etl_spark.functions import text as T
 from car_etl_spark.functions import vectors as V
+from car_etl_spark.operators.lsm import (
+    LsmStore,
+    StoreSnapshot,
+    _current_dir,
+    _ensure_store,
+    _fresh_layout,
+    _live_view,
+    _source_digest,
+    _tree_bytes,
+    _with_maintenance_lease,
+    index_root,
+)
+# _layout_gen is re-exported for perfbench/ingest.py, which imports both
+# names from here to count a store's live files
+from car_etl_spark.operators.lsm import _layout_gen, _layout_root  # noqa: F401
 
 # v2: bucket count derived from corpus stats (meta.json) + term-sorted
 #     partitions so parquet row-group min/max stats prune within a bucket
@@ -127,25 +133,6 @@ BODY_WEIGHT = 1.0
 #: the oracle twins in queries/fts.py cannot drift.
 BM25_K1 = 1.2
 BM25_B = 0.75
-
-
-def index_root() -> str:
-    """Where persisted indexes live: ``$CAR_ETL_INDEX_DIR`` or
-    ``<repo>/.cache/indexes`` (gitignored scratch, like a warehouse dir)."""
-    env = os.environ.get("CAR_ETL_INDEX_DIR")
-    if env:
-        return env
-    pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    return os.path.join(os.path.dirname(pkg_dir), ".cache", "indexes")
-
-
-def _source_digest(kind: str, version: int, source_path: str, params: str) -> str:
-    try:
-        mtime = os.stat(source_path).st_mtime_ns
-    except OSError:
-        mtime = -1
-    key = f"{kind}|v{version}|{os.path.realpath(source_path)}|{mtime}|{params}"
-    return hashlib.sha256(key.encode()).hexdigest()[:16]
 
 
 def term_bucket_col(term_col, num_buckets: int = DEFAULT_NUM_BUCKETS):
@@ -491,1135 +478,7 @@ def doclens_from_rows(rows: DataFrame, tenant_col: str | None = None) -> DataFra
     )
 
 
-
-def _tree_bytes(d: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(d):
-        for fn in files:
-            if fn.endswith(".parquet"):
-                try:
-                    total += os.path.getsize(os.path.join(root, fn))
-                except OSError:
-                    pass
-    return total
-
-
-#: compact when the delta layer exceeds this fraction of the base —
-#: below it, the merged read's extra union/anti-join cost is noise;
-#: above it, read amplification grows linearly with delta volume while
-#: a compaction is a one-time O(live) rewrite.  The LSM analog of a
-#: size-tiered merge policy; measured serving-under-maintenance numbers
-#: are in ARCHITECTURE.md.
-COMPACT_DELTA_FRACTION = 0.2
-
-
-def _layout_gen(store_path: str) -> int:
-    """Current generation of a generation-numbered store layout — the
-    ``_current.json`` pointer at the store root.  0 = nothing published
-    yet (the first build publishes ``layout-1/``)."""
-    try:
-        with open(os.path.join(store_path, "_current.json")) as f:
-            return int(json.load(f)["gen"])
-    except (OSError, ValueError, KeyError, TypeError):
-        return 0
-
-
-def _layout_root(store_path: str, gen: int) -> str:
-    return os.path.join(store_path, f"layout-{gen}")
-
-
-def _current_dir(store_path: str, name: str) -> str:
-    """``name`` under the CURRENT generation, resolved per call — for
-    inspection and path probes outside a read; a read resolves its
-    paths once, through a :class:`StoreSnapshot`."""
-    return os.path.join(_layout_root(store_path, _layout_gen(store_path)), name)
-
-
-def _fresh_layout(store_path: str, gen: int | None = None) -> tuple[int, str]:
-    """The generation after ``gen`` (default: the current pointer) and
-    its emptied root — the unpublished staging area a build, compact or
-    refresh writes before its publish flips the pointer."""
-    new_gen = (_layout_gen(store_path) if gen is None else gen) + 1
-    root = _layout_root(store_path, new_gen)
-    shutil.rmtree(root, ignore_errors=True)
-    return new_gen, root
-
-
-@dataclass(frozen=True)
-class StoreSnapshot:
-    """One committed state of a generation-numbered LSM store: the
-    generation ``gen``, its layout ``root``, its parsed ``meta``, the
-    stored dataset ``schema``, and the visible batch window
-    ``epoch < batch <= upper`` (:func:`_live_window`).
-
-    All mutable directories of a store live under ``layout-<gen>/``; a
-    build, compact or refresh writes the next generation and PUBLISHES
-    it by flipping the ``_current.json`` pointer.  The previous
-    generation stays on disk for one more publish (deferred GC, longer
-    under a pin), so a serve that resolved its paths before a flip keeps
-    reading files that still exist.  Meta rides INSIDE its generation
-    (``base/`` or ``assignments/``), so layout, schema, compaction epoch
-    and statistics publish together; within a generation
-    ``apply_batch`` replaces meta in place, and that replace is the
-    batch's commit point.
-
-    A read therefore resolves ONE snapshot — one pointer read, one meta
-    parse — and builds every path, schema and bound from it.  Resolving
-    them per access lets a publish land in between: the old
-    generation's base paired with the new meta's epoch hides deltas
-    that were never folded into that base (the maintenance soak caught
-    exactly this); two meta reads inside one generation can pair
-    batch-(B-1) rows with batch-B BM25 statistics, or an IVF
-    certificate and codebooks with tombstones and codes they never
-    covered.  The bounds are fixed before the delta and tombstone dirs
-    are listed, so a batch promoted in between is hidden by ``upper``.
-
-    ``upper`` is meta's committed ``applied_through`` on the posting
-    and IVF stores.  The rollup store commits a batch by its applied
-    sentinel instead, so its ``upper`` is the highest sentinel, read
-    BEFORE the pointer: a publish flips the pointer before it clears
-    the sentinels, so (sentinel bound, then generation) is consistent
-    in every interleaving.  ``as_of`` overrides ``upper``: maintenance
-    reads its own in-flight batch, and an MVCC read sees the state
-    after batches ``<= as_of`` (down to the epoch, below which batches
-    are folded into base).
-
-    A snapshot is taken per call and never shared across calls;
-    maintenance, which holds the store's lease for its whole run, takes
-    one at entry and may rewrite the ``meta`` dict it owns."""
-
-    gen: int
-    root: str
-    meta: dict
-    schema: StructType
-    epoch: int
-    upper: int
-
-    @classmethod
-    def take(cls, store_path: str, read_meta, upper=None, gen=None):
-        """The snapshot of generation ``gen`` (default: the current
-        one) with meta from ``read_meta(root)``, the store's one meta
-        reader; None when that generation holds no meta (unbuilt)."""
-        g = _layout_gen(store_path) if gen is None else int(gen)
-        root = _layout_root(store_path, g)
-        meta = read_meta(root)
-        if meta is None:
-            return None
-        return cls(
-            g, root, meta, StructType.fromJson(meta["schema"]),
-            int(meta.get("compacted_through") or 0),
-            int(meta["applied_through"] if upper is None else upper),
-        )
-
-    def dir(self, name: str) -> str:
-        return os.path.join(self.root, name)
-
-    def as_of(self, upper: int) -> "StoreSnapshot":
-        """The same generation and meta with the window's upper bound
-        moved to ``upper``."""
-        return replace(self, upper=int(upper))
-
-
-def _built(snap: StoreSnapshot | None, store_path: str, error=ValueError) -> StoreSnapshot:
-    """``snap``, refusing a store with nothing built (no meta)."""
-    if snap is None:
-        raise error(f"no store at {store_path} — build() it first")
-    return snap
-
-
-# -- maintenance writer lease + fencing (round 10) ----------------------
-#
-# Every generation-publishing store assumed a SINGLE maintainer through
-# round 9 — two compactors racing the pointer flip would both publish
-# and one generation's work would silently vanish (or GC would delete a
-# just-published layout).  At 100 TB compaction runs from a scheduler
-# and double-start is routine, so maintenance now runs under a writer
-# LEASE with a FENCING TOKEN (the Chubby/ZooKeeper discipline, on the
-# same coordination substrate the stores already use: atomic filesystem
-# renames — the trade Delta Lake documents for file-only stores):
-#
-# - acquire = O_CREAT|O_EXCL on ``_maint_lease.json``; a held lease
-#   makes a second maintainer REFUSE loudly (MaintenanceLeaseHeldError)
-#   instead of racing.
-# - the token is monotone across acquisitions (``_maint_fence.json``,
-#   bumped only while holding the exclusive-create) and is stamped into
-#   ``_current.json`` at every flip; a flip whose token is LOWER than
-#   the pointer's refuses (MaintenanceFencedError) — a maintainer that
-#   stalled past its TTL and lost the lease to a steal can never
-#   clobber the new owner's published generation.
-# - expiry: a crashed owner's lease is stealable after ``ttl_sec``;
-#   exactly one stealer wins (rename of the expired file), then
-#   re-runs the exclusive create.  Expiry is only checked when
-#   CONTESTED — an uncontested owner past its TTL still publishes,
-#   which is safe because fencing, not the clock, protects the pointer.
-#
-# Residual window (documented, detection added r11): the lease check
-# and the pointer flip are two filesystem ops, so a steal landing in
-# the microseconds between them can produce one last same-token flip;
-# the monotone token bounds the damage to a single already-built layout
-# and the next publish self-heals.  Closing it needs a CAS primitive
-# the filesystem does not offer — but DETECTION does not:
-# ``_flip_layout`` re-reads the pointer after its os.replace and
-# raises MaintenanceFencedError on a mismatch (the loser learns its
-# layout was orphaned instead of exiting believing it published), and
-# re-reads the fence counter to catch the reverse interleaving (our
-# replace clobbered a newer owner's flip — their next publish
-# self-heals, ours raises so the clobber is never silent).
-#
-# Second TOCTOU of the same shape (renew/release): both are
-# read-check-then-write, so a TTL steal landing between the ownership
-# check and the os.replace/os.remove would clobber (or delete) the new
-# owner's lease file — mutual exclusion still holds (the stamped fence
-# decides every publish), but it inverts WHO wins: the legitimate
-# stealer gets fenced at its commit while the stalled owner proceeds.
-# Mitigations: ``renew`` re-reads the fence counter after its replace
-# and self-reverts an accidental clobber (deletes the stale file it
-# just wrote and stops heartbeating); ``release`` captures the lease
-# atomically by rename and renames it BACK if the captured content
-# turns out not to be ours.
-
-_LEASE_FILE = "_maint_lease.json"
-_FENCE_FILE = "_maint_fence.json"
-MAINT_LEASE_TTL_SEC = 600.0
-
-
-class MaintenanceLeaseError(RuntimeError):
-    """Base for maintenance mutual-exclusion violations."""
-
-
-class MaintenanceLeaseHeldError(MaintenanceLeaseError):
-    """Another maintainer holds this store's writer lease."""
-
-
-class MaintenanceFencedError(MaintenanceLeaseError):
-    """This maintainer's lease was lost (stolen after TTL expiry or
-    released); its publish was refused to protect the new owner's
-    work."""
-
-
-@dataclass(frozen=True)
-class MaintenanceLease:
-    store_path: str
-    owner: str
-    fence: int
-    # the TTL this lease was ACQUIRED with — heartbeats and renewals
-    # default to it, so a short-TTL lease never silently stretches back
-    # to the global default on its first beat (and a heartbeat period
-    # derived from the global constant can never exceed a shorter
-    # acquired TTL and let the lease expire between beats)
-    ttl_sec: float = MAINT_LEASE_TTL_SEC
-
-
-def _read_json_file(path: str) -> dict:
-    try:
-        with open(path) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return {}
-
-
-def acquire_maintenance_lease(
-    store_path: str, owner: str | None = None, ttl_sec: float = MAINT_LEASE_TTL_SEC
-) -> MaintenanceLease:
-    """Take the store's maintenance writer lease or raise
-    :class:`MaintenanceLeaseHeldError`.  Never blocks."""
-    os.makedirs(store_path, exist_ok=True)
-    owner = owner or uuid.uuid4().hex
-    lease_path = os.path.join(store_path, _LEASE_FILE)
-    # the lease must appear WITH its content in one atomic step — an
-    # O_EXCL create followed by a write leaves an empty-file window a
-    # concurrent acquirer would misread as an expired (stealable)
-    # lease.  os.link of a fully-written unique temp file is atomic
-    # create-with-content and fails EEXIST like O_EXCL.
-    tmp = os.path.join(store_path, f".{_LEASE_FILE}.{owner}")
-    with open(tmp, "w") as f:
-        json.dump(
-            {"owner": owner, "fence": 0, "expires": time.time() + ttl_sec}, f
-        )
-    won = False
-    try:
-        for _attempt in (1, 2):
-            try:
-                os.link(tmp, lease_path)
-                won = True
-                break
-            except FileExistsError:
-                cur = _read_json_file(lease_path)
-                if time.time() <= float(cur.get("expires", 0.0)):
-                    raise MaintenanceLeaseHeldError(
-                        f"maintenance lease on {store_path} held by "
-                        f"{cur.get('owner')} (fence {cur.get('fence')}, "
-                        f"expires {cur.get('expires')}) — a second concurrent "
-                        "maintainer must not run; wait for it or its TTL"
-                    )
-                # expired: exactly one stealer wins the rename of the
-                # stale file; the loser sees ENOENT (mid-steal elsewhere)
-                grave = lease_path + f".expired-{owner}"
-                try:
-                    os.rename(lease_path, grave)
-                except OSError:
-                    raise MaintenanceLeaseHeldError(
-                        f"maintenance lease on {store_path}: lost the steal "
-                        "race for the expired lease — another maintainer is "
-                        "taking over"
-                    )
-                try:
-                    os.remove(grave)
-                except OSError:
-                    pass
-        if not won:  # both create attempts lost
-            raise MaintenanceLeaseHeldError(
-                f"maintenance lease on {store_path}: could not acquire"
-            )
-        # we hold the lease: the token bump below is single-writer by
-        # construction.  max() with the pointer's stamped fence heals a
-        # deleted counter file; the final lease content (with the real
-        # fence) replaces the placeholder atomically.
-        last = int(
-            _read_json_file(os.path.join(store_path, _FENCE_FILE)).get("fence", 0)
-        )
-        cur_ptr = _read_json_file(os.path.join(store_path, "_current.json"))
-        fence = max(last, int(cur_ptr.get("fence", 0))) + 1
-        ftmp = os.path.join(store_path, f".{_FENCE_FILE}.{owner}")
-        with open(ftmp, "w") as f:
-            json.dump({"fence": fence}, f)
-        os.replace(ftmp, os.path.join(store_path, _FENCE_FILE))
-        # final content goes through a FRESH temp file: ``tmp`` shares
-        # the lease's inode after the link, so rewriting it would
-        # truncate the live lease in place — the same empty-file window
-        # the link dance exists to close
-        tmp2 = tmp + ".final"
-        with open(tmp2, "w") as f:
-            json.dump(
-                {"owner": owner, "fence": fence, "expires": time.time() + ttl_sec},
-                f,
-            )
-        os.replace(tmp2, lease_path)
-    finally:
-        if tmp is not None:
-            try:
-                os.remove(tmp)
-            except OSError:
-                pass
-    return MaintenanceLease(
-        store_path=store_path, owner=owner, fence=fence, ttl_sec=ttl_sec
-    )
-
-
-def renew_maintenance_lease(
-    lease: MaintenanceLease, ttl_sec: float | None = None
-) -> bool:
-    """Extend a held lease's expiry (heartbeat).  Returns False if the
-    lease is no longer ours (stolen after a stall) — the caller keeps
-    working and gets fenced at its commit point, which is the correct
-    outcome; renewing is only an optimization that prevents a LIVE
-    long-running maintainer from ever looking expired.
-
-    The default extension is the TTL the lease was ACQUIRED with (not
-    the global constant): a short-TTL lease must never be silently
-    stretched back to 600 s by its own heartbeat.
-
-    Check-then-replace TOCTOU (see the module's residual-window note):
-    a steal landing between the ownership check and the os.replace
-    would overwrite the new owner's lease with ours.  A steal always
-    bumps the monotone fence counter, so after the replace we re-read
-    the counter — if it advanced past our fence, the write was a
-    clobber: self-revert (remove the stale file we just wrote, leaving
-    the steal path open again) and report the lease lost."""
-    if ttl_sec is None:
-        ttl_sec = lease.ttl_sec
-    lease_path = os.path.join(lease.store_path, _LEASE_FILE)
-    cur = _read_json_file(lease_path)
-    if cur.get("owner") != lease.owner or int(cur.get("fence", -1)) != lease.fence:
-        return False
-    tmp = os.path.join(lease.store_path, f".{_LEASE_FILE}.renew-{lease.owner}")
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "owner": lease.owner,
-                "fence": lease.fence,
-                "expires": time.time() + ttl_sec,
-            },
-            f,
-        )
-    os.replace(tmp, lease_path)
-    counter = int(
-        _read_json_file(os.path.join(lease.store_path, _FENCE_FILE)).get("fence", 0)
-    )
-    if counter > lease.fence:
-        # someone acquired after us while we were mid-renew: our replace
-        # clobbered their lease file.  Self-revert by CAPTURE (rename,
-        # then inspect) — a plain check-then-remove would repeat the
-        # TOCTOU one level down: the new owner's heartbeat can re-renew
-        # between our re-read and the remove, and we would delete THEIR
-        # fresh lease.  Captured content that is not our clobber is put
-        # back via os.link (never overwrites an even newer acquire).
-        grave = lease_path + f".unclobber-{lease.owner}"
-        try:
-            os.rename(lease_path, grave)
-        except OSError:
-            return False  # already replaced/removed: nothing to revert
-        took = _read_json_file(grave)
-        if took.get("owner") == lease.owner and int(took.get("fence", -1)) == lease.fence:
-            try:
-                os.remove(grave)  # our clobber: gone for good
-            except OSError:
-                pass
-        else:
-            _restore_captured_lease(grave, lease_path)
-        return False
-    return True
-
-
-def _restore_captured_lease(grave: str, lease_path: str) -> None:
-    """Put a captured (renamed-away) lease back in place.  os.link
-    first — it fails EEXIST instead of overwriting, so a fresh
-    (higher-fence) acquire that landed during the capture window is
-    never clobbered.  Any OTHER link failure (hardlink-less or flaky
-    filesystem) falls back to rename: restoring with a small overwrite
-    risk beats silently DESTROYING the captured owner's lease (the
-    fence ordering still decides every publish either way)."""
-    try:
-        os.link(grave, lease_path)
-    except FileExistsError:
-        pass  # newer acquire present: keep it, drop the grave
-    except OSError:
-        try:
-            os.rename(grave, lease_path)
-        except OSError:
-            return  # grave itself gone: nothing left to restore
-        return
-    try:
-        os.remove(grave)
-    except OSError:
-        pass
-
-
-class _LeaseHeartbeat(threading.Thread):
-    """Background renewal while a long build/campaign holds a lease —
-    without it, any maintenance outlasting the TTL looks expired to a
-    contending acquirer and gets stolen MID-BUILD (two builders then
-    write the same unpublished generation directory)."""
-
-    def __init__(self, lease: MaintenanceLease, ttl_sec: float | None = None):
-        super().__init__(daemon=True)
-        self.lease = lease
-        # default to the TTL the lease was acquired with — a period
-        # derived from the global constant would exceed a shorter
-        # acquired TTL (200 s beats vs a 60 s lease) and let the lease
-        # expire between beats, then silently stretch it back to 600 s
-        self.ttl_sec = lease.ttl_sec if ttl_sec is None else ttl_sec
-        self.stop_evt = threading.Event()
-
-    def run(self) -> None:
-        # ttl/3 keeps two missed beats of margin; the old max(1.0, ...)
-        # floor made the period LONGER than any sub-3s TTL — the lease
-        # then looked expired for most of every beat interval (burned a
-        # short-TTL test; a production 600 s TTL never hit it).  The
-        # 20 ms absolute floor only guards a pathological ~0 TTL.
-        period = max(0.02, self.ttl_sec / 3.0)
-        while not self.stop_evt.wait(period):
-            if not renew_maintenance_lease(self.lease, self.ttl_sec):
-                return  # stolen: stop heartbeating, fencing handles the rest
-
-    def stop(self) -> None:
-        self.stop_evt.set()
-
-
-def release_maintenance_lease(lease: MaintenanceLease) -> None:
-    """Release if still ours; a stolen/expired-and-replaced lease is
-    left for its new owner (never remove someone else's lease).
-
-    Implemented capture-by-rename rather than check-then-remove: the
-    rename atomically takes whatever the lease file holds, THEN we
-    inspect it — if the captured content is not ours (a steal landed
-    between our last check and the rename), it is renamed straight
-    back, so the new owner's lease is never deleted.  The rename-back
-    window (lease file briefly absent) admits only a fresh acquire;
-    restoring via os.link (fails EEXIST) rather than rename means such
-    an acquire — which carries a HIGHER fence than the captured owner
-    — is never overwritten either."""
-    lease_path = os.path.join(lease.store_path, _LEASE_FILE)
-    cur = _read_json_file(lease_path)
-    if cur.get("owner") != lease.owner or int(cur.get("fence", -1)) != lease.fence:
-        return
-    grave = lease_path + f".release-{lease.owner}"
-    try:
-        os.rename(lease_path, grave)
-    except OSError:
-        return  # already gone (stolen mid-release): nothing to release
-    took = _read_json_file(grave)
-    if took.get("owner") == lease.owner and int(took.get("fence", -1)) == lease.fence:
-        try:
-            os.remove(grave)
-        except OSError:
-            pass
-    else:
-        # captured someone else's lease: put it back untouched (link
-        # first so a fresh higher-fence acquire is never overwritten;
-        # rename fallback so a link-incapable filesystem restores
-        # rather than destroys — see _restore_captured_lease)
-        _restore_captured_lease(grave, lease_path)
-
-
-def _check_maintenance_lease(lease: MaintenanceLease) -> None:
-    cur = _read_json_file(os.path.join(lease.store_path, _LEASE_FILE))
-    if cur.get("owner") != lease.owner or int(cur.get("fence", -1)) != lease.fence:
-        raise MaintenanceFencedError(
-            f"maintenance lease on {lease.store_path} no longer held: "
-            f"ours (owner {lease.owner}, fence {lease.fence}) vs current "
-            f"(owner {cur.get('owner')}, fence {cur.get('fence')}) — "
-            "refusing to publish over the new maintainer's work"
-        )
-
-
-@contextmanager
-def maintenance_lease(
-    store_path: str, owner: str | None = None, ttl_sec: float = MAINT_LEASE_TTL_SEC
-):
-    lease = acquire_maintenance_lease(store_path, owner=owner, ttl_sec=ttl_sec)
-    try:
-        yield lease
-    finally:
-        release_maintenance_lease(lease)
-
-
-def build_or_wait(
-    build_fn,
-    ready_fn,
-    store_path: str,
-    timeout_sec: float = 900.0,
-    poll_sec: float = 0.25,
-) -> None:
-    """Single-builder-plus-waiters for the ensure_* index builds.
-
-    A maintenance double-start must refuse, but an ensure_* caller
-    wants the INDEX, not the privilege of building it.  This takes the
-    store's writer lease itself, RE-CHECKS ``ready_fn`` under that
-    exclusivity (a concurrent builder may have finished while we
-    queued — without the recheck the second caller would rebuild a
-    just-published store), and runs ``build_fn(lease)`` only if the
-    store is still missing.  While another session holds the lease it
-    polls, returning as soon as the published store appears; a crashed
-    builder's lease expires by TTL and the steal path lets a waiter
-    re-take the build (its partial layout was unpublished by
-    construction)."""
-    deadline = time.time() + timeout_sec
-    while True:
-        if ready_fn():
-            return
-        try:
-            with maintenance_lease(store_path) as lease:
-                if ready_fn():  # finished while we waited for the lease
-                    return
-                hb = _LeaseHeartbeat(lease)  # a slow build must never
-                hb.start()  # look expired to a contending ensure
-                try:
-                    build_fn(lease)
-                finally:
-                    hb.stop()
-                return
-        except MaintenanceLeaseHeldError:
-            if time.time() >= deadline:
-                raise MaintenanceLeaseHeldError(
-                    f"timed out after {timeout_sec}s waiting for a "
-                    f"concurrent builder of {store_path} (lease still "
-                    "held and store not ready)"
-                )
-            time.sleep(poll_sec)
-
-
-def _with_maintenance_lease(method):
-    """Decorator for the generation-publishing maintenance entry points
-    (build / apply_batch / compact / refresh): run under the store's
-    writer lease.  Callers may pass ``lease=`` (an already-held lease —
-    a scheduler doing apply+compact under one acquisition); otherwise
-    one is acquired for the duration.  The active lease rides a
-    per-instance thread-local so ``_publish_generation`` fences the
-    pointer flip without threading a parameter through every body."""
-
-    @functools.wraps(method)
-    def wrapper(self, *args, lease: MaintenanceLease | None = None, **kwargs):
-        slot = self.__dict__.setdefault("_maint_tl", threading.local())
-        if lease is not None:
-            _check_maintenance_lease(lease)
-            prev = getattr(slot, "lease", None)
-            slot.lease = lease
-            try:
-                return method(self, *args, **kwargs)
-            finally:
-                slot.lease = prev
-        with maintenance_lease(self.path) as auto:
-            prev = getattr(slot, "lease", None)
-            slot.lease = auto
-            try:
-                return method(self, *args, **kwargs)
-            finally:
-                slot.lease = prev
-
-    return wrapper
-
-
-def _active_lease(store) -> MaintenanceLease:
-    """The lease ``@_with_maintenance_lease`` holds for this thread's
-    maintenance call on ``store``; outside one there is nothing to
-    fence a commit with, so this raises."""
-    slot = store.__dict__.get("_maint_tl")
-    lease = getattr(slot, "lease", None) if slot is not None else None
-    if lease is None:
-        raise MaintenanceLeaseError(
-            f"store {store.path}: no maintenance lease is active — "
-            "commits run only inside a @_with_maintenance_lease method"
-        )
-    return lease
-
-
-def _fence_check(store) -> None:
-    """Re-validate the active lease at a COMMIT POINT (the meta bound
-    replace / applied sentinel, not just generation flips): a
-    maintainer that stalled past its TTL inside apply_batch and lost
-    the lease to a steal must not land its commit — its delta files
-    went to a generation the new owner may already have superseded,
-    and a root-level sentinel for that batch would mark content the
-    live store never received as applied."""
-    _check_maintenance_lease(_active_lease(store))
-
-
-def _dir_has_parquet(d: str) -> bool:
-    """True if ``d`` holds parquet files a Spark read would SEE —
-    hidden entries (``_``/``.`` prefixes, Spark's HiddenFileFilter) are
-    skipped at every level, so in-flight ``_staging-*`` appends never
-    make an empty delta/tombstone dir look readable."""
-    if not os.path.isdir(d):
-        return False
-    for root, dirs, files in os.walk(d):
-        dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
-        if any(
-            f.endswith(".parquet") and not f.startswith(("_", "."))
-            for f in files
-        ):
-            return True
-    return False
-
-
-_STAGING_PREFIX = "_staging-"
-
-
-def _staged_append(live_dir: str, write_fn):
-    """Stage a parquet append so a FENCED applier leaves nothing in the
-    committed-visible range (round 11, closes the apply-batch fencing
-    hole): ``write_fn`` writes into a per-attempt dir INSIDE
-    ``live_dir`` whose ``_`` prefix makes it invisible to every Spark
-    read, and the returned ``promote()`` renames the staged files into
-    the live tree only after the caller's fence check passes.  Without
-    this, a stale (stolen-lease) applier's delta rows land before it is
-    fenced; if the new owner later commits the same batch id with
-    different content, the orphans fall inside the committed snapshot
-    window (exact-duplicate drop only removes identical replays).
-
-    Rename is per-file (part names carry task UUIDs — no collisions)
-    and partition subdirectories merge by relative path.  ``abort()``
-    (or a crash — the staged dir is hidden and swept by
-    :func:`_sweep_stale_staging` on the next apply) discards the
-    attempt without touching the live tree."""
-    os.makedirs(live_dir, exist_ok=True)
-    _sweep_stale_staging(live_dir)
-    stage = os.path.join(live_dir, f"{_STAGING_PREFIX}{uuid.uuid4().hex}")
-    write_fn(stage)
-
-    def promote() -> list[str]:
-        # returns the promoted file paths: a caller whose COMMIT is
-        # fenced after promotion (the posting store's stats job runs
-        # between promote and its meta replace) can retract exactly
-        # these files — they are still invisible (the snapshot bound
-        # never advanced), so per-file removal is safe
-        out: list[str] = []
-        for root, dirs, files in os.walk(stage):
-            dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
-            rel = os.path.relpath(root, stage)
-            dest = live_dir if rel == "." else os.path.join(live_dir, rel)
-            made = False
-            for fn in files:
-                if fn.startswith(("_", ".")):
-                    continue  # _SUCCESS / .crc markers stay behind
-                if not made:
-                    os.makedirs(dest, exist_ok=True)
-                    made = True
-                dst = os.path.join(dest, fn)
-                os.rename(os.path.join(root, fn), dst)
-                out.append(dst)
-        shutil.rmtree(stage, ignore_errors=True)
-        return out
-
-    def abort() -> None:
-        shutil.rmtree(stage, ignore_errors=True)
-
-    return promote, abort
-
-
-def _sweep_stale_staging(
-    live_dir: str, max_age_sec: float = 2 * MAINT_LEASE_TTL_SEC
-) -> None:
-    """Reclaim staging dirs orphaned by a crashed/fenced applier.  Age
-    gates on the dir's own mtime (it moves with top-level writes); the
-    2×TTL bound means any applier that could still promote has long
-    since lost its lease."""
-    try:
-        entries = os.listdir(live_dir)
-    except OSError:
-        return
-    now = time.time()
-    for fn in entries:
-        if not fn.startswith(_STAGING_PREFIX):
-            continue
-        p = os.path.join(live_dir, fn)
-        try:
-            if now - os.stat(p).st_mtime > max_age_sec:
-                shutil.rmtree(p, ignore_errors=True)
-        except OSError:
-            pass
-
-
-# test seam: injected between a batch's file PROMOTION and its commit
-# point (posting: the stats/meta replace; IVF: the counts meta replace;
-# rollup: the sentinel create) so the crash-orphan window — promoted
-# files whose batch the store never committed — can be forced
-# deterministically in tests
-_test_post_promote_crash = None
-
-
-def _file_min_batch(path: str):
-    """min(batch) over one parquet file, footer-first: row-group
-    statistics when complete, else a values read of JUST the batch
-    column (delta files are batch-sized — still no Spark job).  Returns
-    None for files without a batch column (not batch-tagged data).
-    Raises ``ValueError`` (pyarrow's ArrowInvalid subclasses it) on a
-    corrupt/truncated file — the caller turns that into a LOUD error,
-    because a file Spark cannot read either means serving is already
-    broken and a silent skip would reopen the recommit hole."""
-    import pyarrow.parquet as _pq
-
-    md = _pq.ParquetFile(path).metadata
-    idx = None
-    for i in range(md.num_columns):
-        if md.schema.column(i).name == "batch":
-            idx = i
-            break
-    if idx is None:
-        return None
-    mn = None
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(idx).statistics
-        if st is None or not st.has_min_max:
-            mn = None
-            break
-        mn = st.min if mn is None else min(mn, st.min)
-    if mn is not None:
-        return int(mn)
-    col = _pq.read_table(path, columns=["batch"]).column("batch")
-    if col.null_count == len(col):
-        return None
-    import pyarrow.compute as _pc
-
-    return int(_pc.min(col).as_py())
-
-
-def _sweep_promoted_orphans(
-    dirs: list, committed_bound: int, recheck=None, dry_run: bool = False
-) -> tuple:
-    """Retract promoted-but-uncommitted delta/tombstone files — the
-    r11 documented residual: an applier that CRASHED (kill, OOM)
-    between ``promote()`` and its batch's commit point skipped the
-    fence-retract and left files whose every row carries a batch id
-    ABOVE the committed snapshot bound.  Those rows are invisible
-    (readers filter ``batch <= bound``) until someone re-commits the
-    same batch id — with different content, the orphans would then
-    fall inside the committed window (exact-duplicate drop only
-    removes identical replays).
-
-    Called at ``apply_batch`` entry, under the writer lease, BEFORE the
-    new attempt stages anything: a file is an orphan iff its
-    min(batch) exceeds ``committed_bound`` (:func:`_file_min_batch` —
-    footer/column reads only, no Spark job, cost ∝ uncompacted delta
-    file count at batch cadence, never query time).  Two-phase:
-    CANDIDATES are collected first (the seconds-scale walk), then
-    ``recheck`` (the caller's fence check) runs immediately before any
-    removal — a sweeper that stalled past its lease TTL mid-walk must
-    not delete the new owner's in-flight promoted files off a stale
-    bound; the recheck shrinks that window to the same millisecond
-    class as fence-check→promote.  Files that vanish mid-walk
-    (OSError — e.g. a racing generation GC) are skipped and reported.
-
-    Removal races a serve that listed the orphan before the sweep and
-    opens it after — the same accepted class as the r11 fenced
-    retract's per-file removal (the orphan's rows were never visible;
-    the exposure is one failed scan, bounded by the crash-to-next-
-    apply interval, not a wrong answer).
-
-    Returns ``(orphans, skipped)``; with ``dry_run`` the orphans are
-    reported, not removed (soak/test evidence probes)."""
-    orphans: list = []
-    skipped: list = []
-    for d in dirs:
-        for root, dnames, fnames in os.walk(d):
-            dnames[:] = [x for x in dnames if not x.startswith(("_", "."))]
-            for fn in fnames:
-                if fn.startswith(("_", ".")) or not fn.endswith(".parquet"):
-                    continue
-                p = os.path.join(root, fn)
-                try:
-                    mn = _file_min_batch(p)
-                except OSError:
-                    skipped.append(p)
-                    continue
-                except ValueError as e:
-                    raise ValueError(
-                        f"_sweep_promoted_orphans: unreadable parquet file {p} "
-                        "in the live tree (Spark serving would fail on it "
-                        "too) — restore or remove it manually"
-                    ) from e
-                if mn is not None and mn > int(committed_bound):
-                    orphans.append(p)
-    if dry_run or not orphans:
-        return orphans, skipped
-    if recheck is not None:
-        recheck()
-    removed: list = []
-    for p in orphans:
-        try:
-            os.remove(p)
-            removed.append(p)
-        except OSError:
-            skipped.append(p)
-    return removed, skipped
-
-
-# -- reader pins: pin-aware generation retention (round 10) -------------
-#
-# The one-interval GC grace is enough for sub-second serves but not for
-# a straggler scan straddling two compact intervals — routine at 100 TB.
-# A reader that needs its generation to outlive compaction PINS it: a
-# pin file under ``_pins/`` blocks GC of that generation until the pin
-# is released or goes stale (``PIN_TTL_SEC`` since last touch — a
-# crashed reader must not leak disk forever; long scans refresh via
-# os.utime).  GC sweeps ALL unpinned generations at or below the grace
-# bound, so a generation whose pin blocked one sweep is reclaimed by
-# the next sweep after release — nothing leaks.
-
-PIN_TTL_SEC = 1800.0
-
-
-def _pins_dir(store_path: str) -> str:
-    return os.path.join(store_path, "_pins")
-
-
-def pin_generation(store_path: str, gen: int) -> str:
-    """Create a pin file for ``gen``; returns its path (the release
-    handle).  Pin BEFORE resolving file paths under the generation."""
-    d = _pins_dir(store_path)
-    os.makedirs(d, exist_ok=True)
-    p = os.path.join(d, f"gen-{int(gen)}.{uuid.uuid4().hex}.pin")
-    with open(p, "w") as f:
-        f.write("")
-    return p
-
-
-def unpin_generation(pin_path: str) -> None:
-    try:
-        os.remove(pin_path)
-    except OSError:
-        pass
-
-
-@contextmanager
-def pinned_generation(store_path: str, gen: int | None = None):
-    """Pin the (current, unless given) generation for the scope — the
-    long-scan API: a read whose jobs may straddle multiple compact
-    cycles resolves its paths under the yielded generation and GC will
-    not touch that layout while the pin lives.  A background heartbeat
-    touches the pin file every ``PIN_TTL_SEC/3`` so a scan longer than
-    the stale-pin TTL keeps its layout — without it the GC would reap
-    the pin as a crashed reader's mid-scan, the exact failure pins
-    exist to prevent."""
-    g = _layout_gen(store_path) if gen is None else int(gen)
-    p = pin_generation(store_path, g)
-    stop = threading.Event()
-
-    def refresh() -> None:
-        while not stop.wait(max(1.0, PIN_TTL_SEC / 3.0)):
-            try:
-                os.utime(p)
-            except OSError:
-                return  # unpinned/reaped: nothing left to refresh
-
-    t = threading.Thread(target=refresh, daemon=True)
-    t.start()
-    try:
-        yield g
-    finally:
-        stop.set()
-        unpin_generation(p)
-
-
-def _pinned_generations(store_path: str) -> set[int]:
-    """Live-pinned generations; stale pin files (older than
-    ``PIN_TTL_SEC``) are removed on the way."""
-    out: set[int] = set()
-    d = _pins_dir(store_path)
-    try:
-        entries = os.listdir(d)
-    except OSError:
-        return out
-    now = time.time()
-    for fn in entries:
-        if not (fn.startswith("gen-") and fn.endswith(".pin")):
-            continue
-        p = os.path.join(d, fn)
-        try:
-            gen = int(fn.split(".", 1)[0][len("gen-"):])
-            if now - os.stat(p).st_mtime > PIN_TTL_SEC:
-                os.remove(p)  # crashed reader: reclaim
-                continue
-        except (OSError, ValueError):
-            continue
-        out.add(gen)
-    return out
-
-
-def _existing_generations(store_path: str) -> list[int]:
-    """Generations with directories on disk: every ``layout-<n>/``."""
-    gens: list[int] = []
-    try:
-        for fn in os.listdir(store_path):
-            if fn.startswith("layout-"):
-                try:
-                    gens.append(int(fn[len("layout-"):]))
-                except ValueError:
-                    pass
-    except OSError:
-        return gens
-    return sorted(gens)
-
-
-# test seam: injected between the fence comparison and the pointer
-# os.replace so the CAS-residual interleaving (a steal landing in that
-# microsecond window) can be forced deterministically in tests
-_test_pre_flip_delay = None
-
-
-def _flip_layout(store_path: str, new_gen: int, fence: int) -> None:
-    """Atomically publish generation ``new_gen`` (os.replace on the
-    pointer file) — the compact/rebuild COMMIT POINT for concurrent
-    readers.  A serve that resolved its file paths under the previous
-    generation keeps reading those files (they stay on disk for one
-    full generation of grace, see ``_gc_layout``) instead of dying on
-    vanished paths — the zero-retry replacement for the r9 soak's
-    retry-on-swap policy.
-
-    ``fence`` stamps the maintainer's token into the pointer; a flip
-    with a token LOWER than the pointer's current one refuses — the
-    stale half of a lease steal can never clobber the new owner's
-    published generation."""
-    cur = _read_json_file(os.path.join(store_path, "_current.json"))
-    cur_fence = int(cur.get("fence", 0))
-    if cur_fence > int(fence):
-        raise MaintenanceFencedError(
-            f"store {store_path}: publish with fence {fence} refused — "
-            f"pointer already stamped by fence {cur_fence} (a newer "
-            "maintainer took over after this one's lease expired)"
-        )
-    if _test_pre_flip_delay is not None:
-        _test_pre_flip_delay()
-    stamped = {"gen": int(new_gen), "fence": int(fence)}
-    tmp = os.path.join(store_path, f"_current.json.tmp-{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        json.dump(stamped, f)
-    os.replace(tmp, os.path.join(store_path, "_current.json"))
-    # POST-FLIP VERIFY (r11): the fence comparison above and the
-    # os.replace are two filesystem ops — a steal can land between them
-    # (the documented CAS residual).  The flip cannot be made atomic
-    # with the check, but the LOSER can always be told:
-    #  - pointer no longer ours → a newer flip landed after ours; our
-    #    layout is orphaned (next publish GCs it) — raise instead of
-    #    returning success.
-    #  - pointer ours but the fence counter advanced past our token →
-    #    a steal happened mid-flip and our replace may have clobbered
-    #    the new owner's pointer; their next publish self-heals (their
-    #    token is higher), and we raise so the clobber is never silent.
-    now = _read_json_file(os.path.join(store_path, "_current.json"))
-    counter = int(
-        _read_json_file(os.path.join(store_path, _FENCE_FILE)).get("fence", 0)
-    )
-    if (
-        int(now.get("gen", -1)) != stamped["gen"]
-        or int(now.get("fence", -1)) != stamped["fence"]
-        or counter > int(fence)
-    ):
-        raise MaintenanceFencedError(
-            f"store {store_path}: publish of gen {new_gen} (fence {fence}) "
-            f"raced a lease steal — pointer now {now}, fence counter "
-            f"{counter}; this maintainer's layout must be considered "
-            "orphaned (the new owner's next publish supersedes it)"
-        )
-
-
-def _publish_store_generation(
-    store_path: str,
-    new_gen: int,
-    lease: MaintenanceLease,
-    clear: tuple[str, ...] = ("_applied_",),
-) -> None:
-    """The one FENCED publish every store generation goes through:
-    re-validate ``lease``, flip the pointer to ``new_gen`` under its
-    token, remove the root markers whose names start with a ``clear``
-    prefix, then GC every unpinned generation at or below
-    ``new_gen - 2`` (one full generation of grace for in-flight
-    readers; pinned generations survive until their pin releases — see
-    ``pinned_generation``).
-
-    ``clear`` is fixed per call site: a posting/IVF rebuild or compact
-    clears the applied-batch sentinels (a rebuild must never
-    replay-no-op a later batch id — the fresh meta's epoch covers
-    folded batches); rollup's compact clears its batch markers and
-    dirty flag, its refresh nothing (the carried-over deltas keep their
-    batch tags).  Crash-order argument: the flip is FIRST and the new meta
-    (with its compaction epoch) rides inside the new layout, so any
-    prefix of the cleanup leaves a consistent store — stale sentinels
-    sit at or below the stamped epoch and a stale old generation is
-    unreachable garbage the next publish removes."""
-    _check_maintenance_lease(lease)
-    _flip_layout(store_path, new_gen, lease.fence)
-    for f in os.listdir(store_path):
-        if f.startswith(clear):
-            os.remove(os.path.join(store_path, f))
-    _gc_store_generations(store_path, new_gen)
-
-
-def _gc_store_generations(store_path: str, new_gen: int) -> None:
-    """Sweep every on-disk generation at or below ``new_gen - 2`` that
-    no live pin protects.  Sweeping ALL eligible generations (not just
-    exactly ``new_gen - 2``) is what makes pin-blocked layouts a
-    deferral, not a leak: the next publish after release reclaims
-    them."""
-    pinned = _pinned_generations(store_path)
-    for g in _existing_generations(store_path):
-        if g <= new_gen - 2 and g not in pinned:
-            _gc_layout(store_path, g)
-
-
-def _gc_layout(store_path: str, gen: int) -> None:
-    """Remove generation ``gen``'s directory."""
-    shutil.rmtree(_layout_root(store_path, gen), ignore_errors=True)
-
-
-def _tombstone_frame(
-    spark: SparkSession, snap: StoreSnapshot, key_cols: list[str]
-) -> DataFrame:
-    """Tombstone read with the schema supplied EXPLICITLY (derived from
-    the snapshot's stored build-time schema) — shared by the posting
-    and IVF stores.  Inference would not only re-type partition values
-    — it FAILS outright on a dir a racing compact just emptied
-    (UNABLE_TO_INFER_SCHEMA, caught by the maintenance-under-serving
-    soak); with the schema given, a concurrently-emptied dir just reads
-    as zero rows."""
-    sch = StructType(
-        [StructField(c, snap.schema[c].dataType) for c in key_cols]
-        + [StructField("batch", LongType())]
-    )
-    return spark.read.schema(sch).parquet(snap.dir("tombstones"))
-
-
-def _live_window(df: DataFrame, epoch: int, upper: int) -> DataFrame:
-    """Filter a delta/tombstone frame to the committed snapshot window
-    ``epoch < batch <= upper``.  The lower bound drops rows a crashed
-    compact stranded (already folded into base); the UPPER bound is the
-    snapshot-isolation half: rows of a batch whose commit point
-    (``applied_through`` in meta, replaced atomically) has not landed
-    are invisible, so a serve racing a live ``apply_batch`` sees the
-    complete previous snapshot — never a half-applied batch."""
-    return df.filter(F.col("batch") > epoch).filter(F.col("batch") <= int(upper))
-
-
-def _live_view(
-    spark: SparkSession,
-    snap: StoreSnapshot,
-    base: DataFrame,
-    delta: str,
-    read_delta,
-    row_key: list[str],
-    id_key: list[str],
-) -> DataFrame:
-    """The LSM live view every posting/IVF read serves: ``base`` ∪ the
-    committed window (:func:`_live_window`) of the snapshot's ``delta``
-    layer (framed by ``read_delta(dir)``), minus rows older than their
-    id's newest tombstone.  A layer with no visible parquet is skipped.
-
-    - exact-duplicate drop on the delta: a replayed half-applied batch
-      appends identical rows, and ``row_key`` + batch is unique within
-      a correctly-applied batch, so the drop removes only replay
-      artifacts (a doubled tf, a doubled doc length);
-    - tombstone anti-join on the max tombstone batch per ``id_key``:
-      an upsert's own rows carry the same batch as their tombstone and
-      survive ``__tb <= batch``; the tombstones are id-grain and
-      broadcast."""
-    df = base
-    delta_dir = snap.dir(delta)
-    if _dir_has_parquet(delta_dir):
-        df = df.unionByName(
-            _live_window(read_delta(delta_dir), snap.epoch, snap.upper)
-            .dropDuplicates(row_key + ["batch"])
-        )
-    if _dir_has_parquet(snap.dir("tombstones")):
-        tomb = (
-            _live_window(_tombstone_frame(spark, snap, id_key), snap.epoch, snap.upper)
-            .groupBy(*id_key)
-            .agg(F.max("batch").alias("__tb"))
-        )
-        df = (
-            df.join(F.broadcast(tomb), id_key, "left")
-            .filter(F.col("__tb").isNull() | (F.col("__tb") <= F.col("batch")))
-            .drop("__tb")
-        )
-    return df
-
-
-def _should_compact(base_dir: str, pending_dirs: tuple[str, ...], threshold: float) -> bool:
-    """Size-tiered compact policy shared by the stores: fold the LSM
-    layers once the pending (delta, tombstone) bytes exceed
-    ``threshold`` x base bytes.  Pure filesystem stats, no Spark job."""
-    base = _tree_bytes(base_dir)
-    return base > 0 and sum(_tree_bytes(d) for d in pending_dirs) > threshold * base
-
-
-def _marker_batches(store_path: str, prefix: str, suffix: str = "") -> list[int]:
-    """Batch ids of the store-root markers ``<prefix><batch><suffix>``
-    (no Spark job, no parquet read)."""
-    out = []
-    try:
-        names = os.listdir(store_path)
-    except OSError:
-        return out
-    for f in names:
-        if f.startswith(prefix) and f.endswith(suffix):
-            try:
-                out.append(int(f[len(prefix):len(f) - len(suffix)]))
-            except ValueError:
-                pass
-    return out
-
-
-def _max_sentinel_batch(store_path: str, prefix: str = "_applied_", suffix: str = "") -> int:
-    """Highest applied batch id, from the applied sentinels
-    (``_applied_<b>`` on the posting/IVF stores) — the compaction epoch.
-    Compact stamps this into meta as ``compacted_through``; readers then
-    ignore delta/tombstone rows at or below it, which closes the crash
-    window between the base swap and the delta/tombstone cleanup (stale
-    files would otherwise double-count folded rows or, worse, let a
-    stale tombstone kill fresh batch-0 base rows)."""
-    return max(_marker_batches(store_path, prefix, suffix), default=0)
-
-
-class PostingStore:
+class PostingStore(LsmStore):
     """Persisted posting table with LSM-style incremental maintenance.
 
     Liveness rule: a posting row written at ``batch`` b is dead iff a
@@ -1631,6 +490,16 @@ class PostingStore:
     and the delta read path drops exact-duplicate rows so a half-applied
     batch replay cannot double tf.
     """
+
+    KIND = "posting store"
+    VERSION = POSTING_VERSION
+    META_DIR = "base"
+    NO_META = (
+        "a pre-v3 store (silently defaulting the bucket count would "
+        "mis-prune every query)"
+    )
+    PENDING_DIRS = ("delta", "tombstones")
+    BATCH_DIRS = ("delta", "doclens_delta", "tombstones")
 
     def __init__(
         self,
@@ -1668,73 +537,9 @@ class PostingStore:
             positions = bool(meta.get("positions", True))
         self.positions = positions
 
-    # current-generation paths, for maintenance probes and inspection;
-    # reads take theirs from a StoreSnapshot
-
-    @property
-    def base_dir(self) -> str:
-        return _current_dir(self.path, "base")
-
-    @property
-    def delta_dir(self) -> str:
-        return _current_dir(self.path, "delta")
-
-    @property
-    def tomb_dir(self) -> str:
-        return _current_dir(self.path, "tombstones")
-
-    @property
-    def meta_path(self) -> str:
-        return os.path.join(self.base_dir, "_meta.json")
-
     @property
     def doclen_delta(self) -> str:
         return _current_dir(self.path, "doclens_delta")
-
-    def _publish_generation(self, new_gen: int) -> None:
-        """See :func:`_publish_store_generation`; fenced by the active
-        maintenance lease (every caller is ``@_with_maintenance_lease``)."""
-        _publish_store_generation(self.path, new_gen, lease=_active_lease(self))
-
-    def _meta(self, root: str | None = None) -> dict | None:
-        """Meta of the generation at layout ``root`` (default: the
-        current one) — the store's ONLY meta reader, so the layout
-        version is checked here once and every path below assumes the
-        current layout.  None means unbuilt; a base layout without
-        meta, or meta of another layout version, refuses (serving or
-        maintaining it would silently misread it: a defaulted bucket
-        count mis-prunes every query, an older stored schema drops
-        columns)."""
-        base = os.path.join(root, "base") if root else self.base_dir
-        try:
-            with open(os.path.join(base, "_meta.json")) as f:
-                meta = json.load(f)
-        except (OSError, ValueError):
-            if _dir_has_parquet(base):
-                raise ValueError(
-                    f"posting store at {self.path} has a base layout but "
-                    "no base/_meta.json — a pre-v3 store; rebuild it "
-                    "(silently defaulting the bucket count would mis-prune "
-                    "every query)"
-                ) from None
-            return None
-        if meta.get("version") != POSTING_VERSION:
-            raise ValueError(
-                f"posting store at {self.path} has layout version "
-                f"{meta.get('version')} (current {POSTING_VERSION}) — "
-                "rebuild it before applying maintenance batches or serving"
-            )
-        return meta
-
-    def snapshot(self, as_of: int | None = None, gen: int | None = None):
-        """The :class:`StoreSnapshot` every read of this store takes
-        (default: the current generation at its committed bound); None
-        when unbuilt.  The snapshot's ``schema`` is the dataset schema
-        recorded at build time — reads supply it explicitly, so
-        partition-column TYPE INFERENCE can never reinterpret values (a
-        string tenant id '1001' would otherwise come back as an int and
-        break tombstone joins and scoping)."""
-        return StoreSnapshot.take(self.path, self._meta, as_of, gen)
 
     def bucket_of(self, term: str) -> int:
         """Query-side pruning bucket for a (stemmed) term — bound to
@@ -1766,34 +571,28 @@ class PostingStore:
 
     # -- build -----------------------------------------------------------
 
-    def _stamp_meta_into(
-        self, base: str, schema, stats: dict | None = None,
-        compacted_through: int = 0,
+    def _publish_base(
+        self, new_gen: int, schema, doclens: DataFrame, epoch: int
     ) -> None:
-        """Stamp meta (the exact dataset schema, the BM25 corpus stats,
-        and the compaction epoch) into a not-yet-published generation's
-        base dir — layout, sidecar, meta, and stats then publish
-        together when :meth:`_publish_generation` flips the pointer."""
-        with open(os.path.join(base, "_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "version": POSTING_VERSION,
-                    "num_buckets": self.num_buckets,
-                    "analyzer": self.analyzer,
-                    "tenant_col": self.tenant_col,
-                    "positions": self.positions,
-                    "schema": schema.jsonValue(),
-                    "stats": stats,
-                    "compacted_through": compacted_through,
-                    # fresh layout has no pending deltas: the snapshot
-                    # bound restarts at the epoch (an UNCOMMITTED delta
-                    # a crashed apply stranded stays invisible — its
-                    # batch id never got a sentinel, so it sits above
-                    # the epoch and the stream replays it in full)
-                    "applied_through": compacted_through,
-                },
-                f,
-            )
+        """Write the doc-length sidecar into the written base of
+        generation ``new_gen`` and publish it with its meta: the exact
+        dataset schema, the corpus stats of that sidecar and the
+        compaction epoch.  The snapshot bound restarts at the epoch (a
+        fresh layout has no pending deltas; an UNCOMMITTED delta a
+        crashed apply stranded stays invisible — its batch id never got
+        a sentinel, so it sits above the epoch and the stream replays
+        it in full)."""
+        base = os.path.join(_layout_root(self.path, new_gen), "base")
+        self._publish_meta(new_gen, {
+            "num_buckets": self.num_buckets,
+            "analyzer": self.analyzer,
+            "tenant_col": self.tenant_col,
+            "positions": self.positions,
+            "schema": schema.jsonValue(),
+            "stats": self._sidecar_and_stats(doclens, base),
+            "compacted_through": epoch,
+            "applied_through": epoch,
+        })
 
     def _sidecar_and_stats(self, doclens: DataFrame, tmp: str) -> dict:
         """Write the doc-length sidecar into a tmp layout (batch 0) and
@@ -1859,14 +658,9 @@ class PostingStore:
         written = rows.sparkSession.read.schema(rows.schema).parquet(base)
         keys = ([self.tenant_col] if self.tenant_col else []) + ["doc_id"]
         doclens = written.groupBy(*keys).agg(F.max("dl").alias("dl"))
-        stats = self._sidecar_and_stats(doclens, base)
-        self._stamp_meta_into(base, rows.schema, stats)
-        self._publish_generation(new_gen)
+        self._publish_base(new_gen, rows.schema, doclens, 0)
 
     # -- incremental maintenance ----------------------------------------
-
-    def _sentinel(self, batch: int) -> str:
-        return os.path.join(self.path, f"_applied_{batch}")
 
     @_with_maintenance_lease
     def apply_batch(
@@ -1886,147 +680,75 @@ class PostingStore:
         never the store: a changed document touches nearly every term
         bucket, so partition-level rewrite is the wrong maintenance
         primitive here — delta appends + read-time tombstone merge is.
+        The commit order is :meth:`LsmStore._apply_batch`'s; this store
+        stages delta rows, doc lengths and tombstones, and commits by
+        its stats + meta replace (:meth:`_refresh_stats`).
         """
-        if batch <= 0:
-            raise ValueError("batch must be > 0 (0 is the base build)")
-        if os.path.exists(self._sentinel(batch)):
-            return False
-        # the snapshot refuses an older layout BEFORE any write
-        snap = _built(self.snapshot(), self.path)
-        if batch <= snap.epoch:
-            # batch ids are monotone stream epochs; an id at or below
-            # the compaction epoch is a replay of content already folded
-            # into base (compact cleared its sentinel) — reapplying
-            # would write delta rows the epoch filter ignores and, for
-            # the IVF store, inflate certificate counts
-            return False
-        # tombstone key: (tenant, doc_id) on tenant-partitioned stores —
-        # doc ids are only unique WITHIN a tenant (the reference's
-        # per-tenant id spaces), so a doc-id-only tombstone from tenant
-        # A would wrongly kill tenant B's rows sharing the id
-        # retract crash orphans from a previous attempt BEFORE staging
-        # anything (promoted files whose batch never committed — see
-        # _sweep_promoted_orphans); runs under this applier's lease
-        _sweep_promoted_orphans(
-            [snap.dir("delta"), snap.dir("doclens_delta"), snap.dir("tombstones")],
-            snap.upper,
-            recheck=lambda: _fence_check(self),
+        if deleted_ids and self.tenant_col and not all(
+            isinstance(d, (tuple, list)) and len(d) == 2 for d in deleted_ids
+        ):
+            raise ValueError(
+                "tenant-partitioned store: deleted_ids must be "
+                "(tenant, doc_id) pairs"
+            )
+
+        def stage(snap: StoreSnapshot, _skipped) -> list:
+            # tombstone key: (tenant, doc_id) on tenant-partitioned
+            # stores — doc ids are only unique WITHIN a tenant (the
+            # reference's per-tenant id spaces), so a doc-id-only
+            # tombstone from tenant A would wrongly kill tenant B's rows
+            tomb_key = ([self.tenant_col] if self.tenant_col else []) + ["doc_id"]
+            tomb_parts, appends = [], []
+            if upserts is not None:
+                rows = build_posting_rows(
+                    upserts, self.analyzer, self.num_buckets, self.tenant_col,
+                    positions=self.positions,
+                ).withColumn("batch", F.lit(batch).cast("long"))
+                # delta files are batch-sized, so sorting them is cheap
+                # and keeps row-group pruning effective on the merged
+                # read path
+                appends.append(
+                    ("delta", lambda out: self._write_store(rows, out, "append"))
+                )
+                # doc-length sidecar delta (same batch tag, same
+                # tombstone liveness rule) — keeps the BM25 corpus stats
+                # EXACT under maintenance at doc-grain cost
+                dl = doclens_from_rows(rows, self.tenant_col).withColumn(
+                    "batch", F.lit(batch).cast("long")
+                )
+                appends.append((
+                    "doclens_delta",
+                    lambda out: dl.coalesce(1).write.mode("append").parquet(out),
+                ))
+                tomb_parts.append(upserts.select(*tomb_key).distinct())
+            if deleted_ids:
+                # field types come from the stored build-time schema
+                # (exact, no partition-type inference, no extra read job)
+                fields = [StructField(c, snap.schema[c].dataType) for c in tomb_key]
+                tomb_parts.append(
+                    spark.createDataFrame(
+                        [tuple(d) if self.tenant_col else (d,) for d in deleted_ids],
+                        StructType(fields),
+                    )
+                )
+            if tomb_parts:
+                tomb = tomb_parts[0]
+                for p in tomb_parts[1:]:
+                    tomb = tomb.unionByName(p)
+                tomb = tomb.distinct().withColumn("batch", F.lit(batch).cast("long"))
+                appends.append((
+                    "tombstones",
+                    lambda out: tomb.coalesce(1).write.mode("append").parquet(out),
+                ))
+            return appends
+
+        # the stats job must SEE the promoted rows (bound at batch), so
+        # the commit runs after promotion: one pass over doc-grain rows
+        # per maintenance batch (10^9 docs is a few GB, amortized at
+        # batch cadence, never paid at query time)
+        return self._apply_batch(
+            batch, stage, lambda snap: self._refresh_stats(spark, snap)
         )
-        tomb_key = ([self.tenant_col] if self.tenant_col else []) + ["doc_id"]
-        tomb_parts = []
-        # every append is STAGED (hidden per-attempt dir) and promoted
-        # into the live tree only after the pre-commit fence check: a
-        # stale (stolen-lease) applier must leave NOTHING in the
-        # committed-visible batch range — orphan rows it landed before
-        # being fenced would become visible if the new owner later
-        # commits the same batch id with different content (exact-
-        # duplicate drop only removes identical replays)
-        promotes = []
-        if upserts is not None:
-            rows = build_posting_rows(
-                upserts, self.analyzer, self.num_buckets, self.tenant_col,
-                positions=self.positions,
-            ).withColumn("batch", F.lit(batch).cast("long"))
-            # delta files are batch-sized, so sorting them is cheap and
-            # keeps row-group pruning effective on the merged read path
-            promotes.append(
-                _staged_append(
-                    snap.dir("delta"),
-                    lambda stage: self._write_store(rows, stage, "append"),
-                )
-            )
-            # doc-length sidecar delta (same batch tag, same tombstone
-            # liveness rule) — keeps the BM25 corpus stats EXACT under
-            # maintenance at doc-grain cost, not posting-grain
-            dl = doclens_from_rows(rows, self.tenant_col).withColumn(
-                "batch", F.lit(batch).cast("long")
-            )
-            promotes.append(
-                _staged_append(
-                    snap.dir("doclens_delta"),
-                    lambda stage: dl.coalesce(1).write.mode("append").parquet(stage),
-                )
-            )
-            tomb_parts.append(upserts.select(*tomb_key).distinct())
-        if deleted_ids:
-            if self.tenant_col and not all(
-                isinstance(d, (tuple, list)) and len(d) == 2 for d in deleted_ids
-            ):
-                raise ValueError(
-                    "tenant-partitioned store: deleted_ids must be "
-                    "(tenant, doc_id) pairs"
-                )
-            # field types come from the stored build-time schema (exact,
-            # no partition-type inference, no extra read job)
-            fields = [StructField(c, snap.schema[c].dataType) for c in tomb_key]
-            tomb_parts.append(
-                spark.createDataFrame(
-                    [tuple(d) if self.tenant_col else (d,) for d in deleted_ids],
-                    StructType(fields),
-                )
-            )
-        if tomb_parts:
-            tomb = tomb_parts[0]
-            for p in tomb_parts[1:]:
-                tomb = tomb.unionByName(p)
-            tomb = tomb.distinct().withColumn("batch", F.lit(batch).cast("long"))
-            promotes.append(
-                _staged_append(
-                    snap.dir("tombstones"),
-                    lambda stage: tomb.coalesce(1)
-                    .write.mode("append")
-                    .parquet(stage),
-                )
-            )
-        # refresh corpus stats from the live doclens view — one pass
-        # over doc-grain rows per maintenance batch (10^9 docs is a few
-        # GB, amortized at batch cadence, never paid at query time).
-        # Crash between here and the sentinel replays the whole batch:
-        # delta reads dedup exact-duplicate rows and the stats
-        # recompute is idempotent, so the replay converges.  Stamping
-        # applied_through=batch WITH the stats (one os.replace) is the
-        # batch's COMMIT POINT for concurrent readers: until it lands,
-        # the snapshot bound hides this batch's delta/tombstone rows,
-        # so a serve racing this apply sees the complete pre-batch
-        # corpus — never new rows without their tombstone (double tf)
-        # or a tombstone without its rows (vanished doc).
-        # a stale (stolen-lease) applier stops HERE — with every write
-        # still staged, so it leaves nothing in the live tree
-        try:
-            _fence_check(self)
-        except MaintenanceFencedError:
-            for _promote, abort in promotes:
-                abort()
-            raise
-        promoted: list[str] = []
-        for promote, _abort in promotes:
-            promoted.extend(promote())
-        if _test_post_promote_crash is not None:
-            _test_post_promote_crash()
-        # the stats job must SEE the promoted rows (bound at batch), so it
-        # runs after promotion — and it is long enough for a steal to
-        # land, so its commit re-validates the fence.  If that check
-        # fires, retract exactly the promoted files: they are still
-        # invisible (the bound never advanced), so the fenced applier
-        # again leaves nothing in the committed range.  A CRASH (kill,
-        # OOM) in this window skips the retract — the orphans stay
-        # invisible (the bound never advanced) and the NEXT apply's
-        # _sweep_promoted_orphans retracts them before anything new is
-        # staged, so a different-content recommit of this batch id can
-        # never surface them (r12; previously covered only by the
-        # same-content crash-replay contract).
-        try:
-            self._refresh_stats(spark, snap.as_of(batch))
-        except MaintenanceFencedError:
-            for p in promoted:
-                try:
-                    os.remove(p)
-                except OSError:
-                    pass
-            raise
-        with open(self._sentinel(batch), "w") as f:
-            f.write("applied")
-        return True
 
     def read_doclens(
         self, spark: SparkSession, snap: StoreSnapshot | None = None
@@ -2036,7 +758,7 @@ class PostingStore:
         the posting rows, in ``snap`` (default: the current snapshot;
         maintenance passes one whose bound includes its in-flight
         batch)."""
-        snap = snap or _built(self.snapshot(), self.path)
+        snap = snap or self._built_snapshot()
         keys = ([self.tenant_col] if self.tenant_col else []) + ["doc_id"]
         sch = StructType(
             [StructField(c, snap.schema[c].dataType) for c in keys + ["dl", "batch"]]
@@ -2049,25 +771,22 @@ class PostingStore:
         )
 
     def _refresh_stats(self, spark: SparkSession, snap: StoreSnapshot) -> None:
-        """Recompute exact (n_docs, sum_dl) from the live doclens view of
-        ``snap`` — ``apply_batch``'s entry snapshot with its bound moved
-        to the in-flight batch, so the stats INCLUDE that batch — and
-        publish atomically (os.replace on meta): the same meta write
-        advances the snapshot bound, so stats and data commit together
-        and a reader can never pair batch-B idf/avgdl with batch-(B-1)
-        posting rows."""
+        """The batch's COMMIT: recompute exact (n_docs, sum_dl) from the
+        live doclens view of ``snap`` — ``apply_batch``'s entry snapshot
+        with its bound moved to the in-flight batch, so the stats
+        INCLUDE that batch — and stamp them with ``applied_through`` in
+        one fenced meta replace.  Until it lands, the snapshot bound
+        hides the batch's delta and tombstone rows, so a serve racing
+        the apply sees the complete pre-batch corpus (never new rows
+        without their tombstone — double tf — or a tombstone without
+        its rows), and a reader can never pair batch-B idf/avgdl with
+        batch-(B-1) posting rows.  A replay after a crash converges:
+        delta reads drop exact-duplicate rows and the recompute is
+        idempotent."""
         meta = dict(snap.meta)
         meta["stats"] = self._stats_of(self.read_doclens(spark, snap))
         meta["applied_through"] = snap.upper
-        tmp = self.meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        # the stats recompute above is a Spark job — long enough for a
-        # TTL steal to land after the caller's fence check; re-validate
-        # at the actual commit so a stale applier cannot roll the meta
-        # (and the snapshot bound) back over the new owner's
-        _fence_check(self)
-        os.replace(tmp, self.meta_path)
+        self._commit_meta(meta)
 
     def stats(self, tenant=None, snap: StoreSnapshot | None = None) -> dict:
         """The exact BM25 corpus stats stamped by build/apply/compact in
@@ -2112,7 +831,7 @@ class PostingStore:
         case) this is a bare pruned base scan — zero merge overhead."""
         if tenant is not None and not self.tenant_col:
             raise ValueError("store was not built with a tenant_col")
-        snap = snap or _built(self.snapshot(), self.path)
+        snap = snap or self._built_snapshot()
         reader = spark.read.schema(snap.schema)
 
         def scope(df):
@@ -2127,10 +846,6 @@ class PostingStore:
             spark, snap, scope(reader.parquet(snap.dir("base"))), "delta",
             lambda d: scope(reader.parquet(d)), keys + ["raw_term", "weight"], keys,
         )
-
-    def should_compact(self, threshold: float = COMPACT_DELTA_FRACTION) -> bool:
-        """See :func:`_should_compact`."""
-        return _should_compact(self.base_dir, (self.delta_dir, self.tomb_dir), threshold)
 
     def term_search(
         self,
@@ -2250,9 +965,11 @@ class PostingStore:
         id_col: str = "doc_id",
         text_col: str = "text",
         ordered: bool = True,
+        snap: StoreSnapshot | None = None,
     ) -> DataFrame:
         """EXACT substring (ILIKE '%pattern%') serving from a TRIGRAM
-        store — grep over the corpus without scanning it.
+        store — grep over the corpus without scanning it — in ``snap``
+        (default: the current snapshot).
 
         pg_trgm's GIN index answers LIKE by intersecting the pattern's
         trigram posting lists, then RECHECKS candidates against the
@@ -2302,7 +1019,7 @@ class PostingStore:
         grams = {i: pat[i : i + 3] for i in offs}
         uniq = sorted(set(grams.values()))
         buckets = sorted({self.bucket_of(g) for g in uniq})
-        idx = self.read(spark, buckets=buckets, tenant=tenant).filter(
+        idx = self.read(spark, buckets=buckets, tenant=tenant, snap=snap).filter(
             F.col("term").isin(uniq)
         )
         if not self.positions:
@@ -2458,6 +1175,10 @@ class PostingStore:
         lits = regex_required_literals(pattern)
         scoped = base
         if lits:
+            # ONE snapshot for every literal's posting read: legs taken
+            # from two generations could intersect candidate sets that
+            # never coexisted and silently drop a doc
+            snap = self._built_snapshot()
             cand = None
             for lit in lits:
                 # docs rides through for the positions-less layout's
@@ -2467,7 +1188,7 @@ class PostingStore:
                 # exchange plus its bound-sampling job per literal
                 ids = self.substring_search(
                     spark, lit, tenant=tenant, docs=docs,
-                    id_col=id_col, text_col=text_col, ordered=False,
+                    id_col=id_col, text_col=text_col, ordered=False, snap=snap,
                 ).select("doc_id")
                 cand = ids if cand is None else cand.join(ids, "doc_id")
             cand_ids = [
@@ -2512,7 +1233,7 @@ class PostingStore:
         terms = sorted(set(stemmed_terms))
         buckets = sorted({self.bucket_of(t) for t in terms})
         # ONE snapshot for rows AND corpus statistics (see StoreSnapshot)
-        snap = _built(self.snapshot(), self.path)
+        snap = self._built_snapshot()
         idx = self.read(spark, buckets=buckets, tenant=tenant, snap=snap).filter(
             F.col("term").isin(terms)
         )
@@ -2572,16 +1293,7 @@ class PostingStore:
         pointer flips, and the directories the fold read stay on disk
         for one more compact interval — an in-flight serve keeps
         reading them instead of dying on a renamed path."""
-        # Fold EXACTLY the batches the stamped epoch will claim: the
-        # bound comes from the applied-batch SENTINELS, not meta's
-        # applied_through — a crash between apply_batch's meta commit
-        # and its sentinel write leaves applied_through one ahead, and
-        # folding by it would publish a base containing batch B under
-        # an epoch of B-1 (no committed state matches, and B's replay
-        # re-lands on content already folded).  Excluding B loses
-        # nothing: an unsentineled batch is the stream's to redeliver.
-        fold_through = _max_sentinel_batch(self.path)
-        snap = _built(self.snapshot(as_of=fold_through), self.path)
+        snap = self._fold_snapshot()
         live = self.read(spark, snap=snap).withColumn(
             "batch", F.lit(0).cast("long")
         )
@@ -2592,45 +1304,11 @@ class PostingStore:
         # and restamp exact corpus stats into the fresh meta
         keys = ([self.tenant_col] if self.tenant_col else []) + ["doc_id"]
         doclens = self.read_doclens(spark, snap).select(*keys, "dl")
-        stats = self._sidecar_and_stats(doclens, base)
         # epoch == the fold bound, BEFORE the publish clears the
         # sentinels: readers ignore delta/tombstone rows <= this, so a
         # crash between the flip and the cleanup can never double-count
         # (or let a stale tombstone kill fresh batch-0 rows)
-        self._stamp_meta_into(
-            base, live.schema, stats, compacted_through=fold_through,
-        )
-        self._publish_generation(new_gen)
-
-
-#: in-process memo of built index paths — an os.stat-cheap staleness
-#: check happens inside the digest, so a hit needs no filesystem walk.
-_ENSURED: set[str] = set()
-
-
-def _ensure_store(spark: SparkSession, sf_dir: str, store, table: str, build_fn):
-    """Build-if-missing shared by every content-addressed ``ensure_*``:
-    a memo hit returns at once; otherwise a store without a snapshot
-    (nothing built) is built from ``table`` through
-    :func:`build_or_wait` as ``build_fn(frame, lease)`` — one builder
-    under the store's lease and heartbeat, every concurrent caller
-    waiting for its publish instead of failing on the held lease or
-    rebuilding after it.  A layout the store refuses (another version,
-    data without meta) raises from ``snapshot()`` instead of being
-    rebuilt over."""
-    if store.path in _ENSURED:
-        return store
-    def ready() -> bool:
-        return store.snapshot() is not None
-
-    if not ready():
-        from car_etl_spark.tables import load_tables
-
-        frame = load_tables(spark, sf_dir, (table,))[table]
-        os.makedirs(index_root(), exist_ok=True)
-        build_or_wait(lambda lease: build_fn(frame, lease), ready, store.path)
-    _ENSURED.add(store.path)
-    return store
+        self._publish_base(new_gen, live.schema, doclens, snap.upper)
 
 
 #: Trigram positions DEFAULT policy (measured table in ARCHITECTURE.md
@@ -2745,7 +1423,7 @@ def _farthest_point_select(vecs: list[list[float]], k: int) -> list[list[float]]
     return [vecs[i] for i in chosen]
 
 
-class IvfStore:
+class IvfStore(LsmStore):
     """Persisted IVF layout: assignments partitioned by centroid_id +
     driver-resident centroids in meta.json.
 
@@ -2777,6 +1455,12 @@ class IvfStore:
       ``compact()`` folds everything down and resets D.
     """
 
+    KIND = "IVF store"
+    VERSION = IVF_VERSION
+    META_DIR = "assignments"
+    NO_META = "a pre-v5 store"
+    PENDING_DIRS = BATCH_DIRS = ("delta", "tombstones")
+
     def __init__(self, path: str, tenant_col: str | None = None):
         self.path = path
         #: multi-tenant layout: ONE shared frozen quantizer (centroids
@@ -2790,30 +1474,10 @@ class IvfStore:
             tenant_col = (self.meta() or {}).get("tenant_col")
         self.tenant_col = tenant_col
 
-    # current-generation paths, for maintenance probes and inspection;
-    # reads take theirs from a StoreSnapshot (meta rides INSIDE the
-    # generation's assignments/)
-
-    @property
-    def assign_dir(self) -> str:
-        return _current_dir(self.path, "assignments")
-
-    @property
-    def delta_dir(self) -> str:
-        return _current_dir(self.path, "delta")
-
-    @property
-    def tomb_dir(self) -> str:
-        return _current_dir(self.path, "tombstones")
-
-    @property
-    def meta_path(self) -> str:
-        return os.path.join(self.assign_dir, "_meta.json")
-
-    def _publish_generation(self, new_gen: int) -> None:
-        """See :func:`_publish_store_generation`; fenced by the active
-        maintenance lease (every caller is ``@_with_maintenance_lease``)."""
-        _publish_store_generation(self.path, new_gen, lease=_active_lease(self))
+    # the base layer under its own name, and the meta reader under the
+    # name the IVF store's callers use
+    assign_dir = LsmStore.base_dir
+    meta = LsmStore._meta
 
     @_with_maintenance_lease
     def build(
@@ -2919,15 +1583,9 @@ class IvfStore:
             # rescore volume, and these numbers are what make that
             # decay measurable instead of silent.
             pq_meta.update(_pq_err_stats(assigned))
-        pcols = ([self.tenant_col] if self.tenant_col else []) + ["centroid_id"]
         new_gen, newroot = _fresh_layout(self.path)
         tmp = os.path.join(newroot, "assignments")
-        (
-            assigned.repartition(*pcols)
-            .write.mode("overwrite")
-            .partitionBy(*pcols)
-            .parquet(tmp)
-        )
+        self._write_assignments(assigned, tmp, "overwrite")
         cents = sorted(
             (int(r.centroid_id), [float(x) for x in r.centroid_vec])
             for r in rows
@@ -2938,7 +1596,6 @@ class IvfStore:
         # reinterpretations
         written = assigned.sparkSession.read.schema(assigned.schema).parquet(tmp)
         meta = {
-            "version": IVF_VERSION,
             "compacted_through": 0,
             # snapshot bound (see _live_window): fresh layout, nothing
             # pending — advanced atomically by apply_batch's final meta
@@ -2959,9 +1616,11 @@ class IvfStore:
         if pq_meta is not None:
             meta["pq"] = pq_meta
         meta["schema"] = assigned.schema.jsonValue()
-        with open(os.path.join(tmp, "_meta.json"), "w") as f:
-            json.dump(meta, f)
-        self._publish_generation(new_gen)
+        self._publish_meta(new_gen, meta)
+
+    def _write_assignments(self, df: DataFrame, target: str, mode: str) -> None:
+        pcols = ([self.tenant_col] if self.tenant_col else []) + ["centroid_id"]
+        df.repartition(*pcols).write.mode(mode).partitionBy(*pcols).parquet(target)
 
     def _stamp_certificate(
         self, meta: dict, written: DataFrame, cents, vec_col: str, filter_cols
@@ -3000,12 +1659,6 @@ class IvfStore:
             # filter certificate's statistics
             for t, cols in (tenant_f or {}).items():
                 meta["tenants"].setdefault(t, {"radii": {}, "counts": {}})["filters"] = cols
-
-    def _write_meta(self, meta: dict) -> None:
-        tmp = self.meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self.meta_path)
 
     def _cluster_stats(
         self, assigned: DataFrame, cents, vec_col: str, by_tenant: bool = False
@@ -3107,9 +1760,6 @@ class IvfStore:
 
     # -- incremental maintenance ----------------------------------------
 
-    def _sentinel(self, batch: int) -> str:
-        return os.path.join(self.path, f"_applied_{batch}")
-
     @_with_maintenance_lease
     def apply_batch(
         self,
@@ -3129,210 +1779,163 @@ class IvfStore:
         rows.  The batch's per-centroid (count, max-angle) stats land in
         ``meta['batches'][batch]`` — keyed by batch id, so a replay
         overwrites rather than double-counts, and the sentinel makes
-        completed batches no-ops."""
-        if batch <= 0:
-            raise ValueError("batch must be > 0 (0 is the base build)")
-        if os.path.exists(self._sentinel(batch)):
-            return False
-        snap = _built(self.snapshot(), self.path)
-        m = snap.meta
-        if batch <= snap.epoch:
-            # replay of a batch already folded by compact (its sentinel
-            # was cleared): reapplying would append epoch-ignored delta
-            # rows AND inflate the certificate's per-batch counts — the
-            # unsafe direction — so refuse like the sentinel does
-            return False
-        # retract crash orphans from a previous attempt BEFORE staging
-        # anything (promoted files whose batch never committed — see
-        # _sweep_promoted_orphans); runs under this applier's lease
-        _sweep_promoted_orphans(
-            [snap.dir("delta"), snap.dir("tombstones")],
-            snap.upper,
-            recheck=lambda: _fence_check(self),
-        )
-        cents = sorted(zip(m["centroid_ids"], m["centroids"]))
-        if self.tenant_col and self.tenant_col not in keep:
-            keep = tuple(keep) + (self.tenant_col,)
-        filter_cols = list(m.get("filters") or {})
-        for c in filter_cols:
-            if c not in keep and c != id_col:
-                keep = tuple(keep) + (c,)
-        tomb_ids: set = set()
-        promotes = []  # staged appends, promoted after the fence check
-        batch_entry: dict = {"counts": {}, "radii": {}, "tombs": 0}
-        if upserts is not None:
-            from car_etl_spark.operators.similarity import ivf_assign
+        completed batches no-ops.  The commit order is
+        :meth:`LsmStore._apply_batch`'s; this store stages tombstones
+        then delta rows (after a pessimistic meta write) and commits by
+        its counts + meta replace.
 
-            from types import SimpleNamespace
+        WRITE ORDER is the certificate's crash-safety argument — a
+        reader (or a post-crash session) may observe any prefix:
 
-            assigned = ivf_assign(
-                upserts, None, id_col, vec_col,
-                centroid_rows=[
-                    SimpleNamespace(centroid_id=cid, centroid_vec=vec)
-                    for cid, vec in cents
-                ],
-                keep=keep,
-            ).withColumn("batch", F.lit(batch).cast("long"))
-            if m.get("pq"):
-                # encode against the FROZEN codebooks (same contract as
-                # the frozen coarse quantizer) — the per-row error bound
-                # keeps certified serving exact no matter how far the
-                # corpus drifts from the training sample
-                import numpy as np
+        1. meta PESSIMISM first (radii widened + tombstone debt, NO
+           counts yet): wider cones and a bigger D only ever ADD
+           probes.  A crash here costs probe width, never recall.
+        2. tombstones: upserted/deleted ids go dark.  Their members are
+           still in the stale counts, and D covers exactly them, so the
+           k+D walk stays certified over the visible rows.  (Tombstones
+           BEFORE delta: an upserted id is briefly absent rather than
+           ever visible in two versions.)
+        3. delta rows: new vectors appear.  Counts don't include them
+           yet — undercounting extends the walk, which again only
+           widens probes.
+        4. meta counts + the snapshot bound in one fenced replace (the
+           COMMIT POINT: until it lands, the bound hides this batch's
+           tombstones AND delta rows, so a serve racing this apply sees
+           the complete previous snapshot), then the sentinel.
 
-                from car_etl_spark.operators import pq as PQ
-
-                assigned = PQ.encode_with_err(
-                    assigned, vec_col,
-                    np.asarray(m["pq"]["codebooks"], dtype="float64"),
-                )
-            assigned = assigned.localCheckpoint(eager=True)
-            stats = self._cluster_stats(assigned, cents, vec_col)
-            if m.get("pq"):
-                # batch err stats ride the PESSIMISTIC meta write (they
-                # stay in the early copy): a reader that sees the delta
-                # rows must already see an err ceiling covering them, or
-                # the fused shortlist could certify completeness it
-                # doesn't have.  mean/p95/n_enc feed should_retrain().
-                est = _pq_err_stats(assigned)
-                if est["max_err"] is not None:
-                    batch_entry.update(est)
-            batch_entry["counts"] = {str(cid): n for cid, (_r, n) in stats.items()}
-            batch_entry["radii"] = {
-                str(cid): r for cid, (r, _n) in stats.items() if r is not None
-            }
-            if filter_cols:
-                # per-batch filterable-attribute counts: the filtered
-                # walk ADDS these when present; their absence (pre-
-                # feature batches, pessimistic write) undercounts, which
-                # only extends the walk — safe.  Tenant stores also keep
-                # the (tenant, centroid, value) grain so the COMBINED
-                # tenant x filter walk stays tight under maintenance.
-                bglob, btenant = self._filter_stats_all(assigned, filter_cols)
-                batch_entry["filters"] = bglob
-                if btenant is not None:
-                    batch_entry["tenant_filters"] = btenant
-            # control-plane collect: bounded by the MICRO-BATCH's distinct
-            # id count (connector pages are O(100-1000) rows), never by
-            # store size — same ceiling argument as the CDC token path
-            tomb_cols = (
-                [self.tenant_col, id_col] if self.tenant_col else [id_col]
+        A fenced applier leaves no row data in the committed range (its
+        appends stay staged, or are retracted after promotion).
+        Residual (safe direction): the pessimistic ``batches[b]`` entry
+        of step 1 may linger — repairing meta while fenced risks rolling
+        back the new owner's commits, which is strictly worse than the
+        entry's only effect (widened radii + tombstone debt = extra
+        probes, never lost recall); it is overwritten if the new owner
+        applies the same batch id and cleared by the next compact."""
+        # tenant stores: (tenant, id) pairs — ids are only unique within
+        # a tenant, and a bare-id tombstone from one tenant must never
+        # kill another tenant's rows
+        if deleted_ids and self.tenant_col and not all(
+            isinstance(d, (tuple, list)) and len(d) == 2 for d in deleted_ids
+        ):
+            raise ValueError(
+                "tenant-partitioned store: deleted_ids must be "
+                "(tenant, vec_id) pairs"
             )
-            tomb_ids |= {tuple(r) for r in assigned.select(*tomb_cols).distinct().collect()}
-        if deleted_ids:
-            # tenant stores: (tenant, id) pairs — ids are only unique
-            # within a tenant, and a bare-id tombstone from one tenant
-            # must never kill another tenant's rows
-            if self.tenant_col:
-                if not all(
-                    isinstance(d, (tuple, list)) and len(d) == 2 for d in deleted_ids
-                ):
-                    raise ValueError(
-                        "tenant-partitioned store: deleted_ids must be "
-                        "(tenant, vec_id) pairs"
-                    )
-                tomb_ids |= {tuple(d) for d in deleted_ids}
-            else:
-                tomb_ids |= {(d,) for d in deleted_ids}
-        batch_entry["tombs"] = len(tomb_ids)
+        entry: dict = {"counts": {}, "radii": {}, "tombs": 0}
 
-        # WRITE ORDER is the certificate's crash-safety argument — a
-        # reader (or a post-crash session) may observe any prefix:
-        #
-        # 1. meta PESSIMISM first (radii widened + tombstone debt, NO
-        #    counts yet): wider cones and a bigger D only ever ADD
-        #    probes.  A crash here costs probe width, never recall.
-        # 2. tombstones: upserted/deleted ids go dark.  Their members
-        #    are still in the stale counts, and D covers exactly them,
-        #    so the k+D walk stays certified over the visible rows.
-        #    (Tombstones BEFORE delta: an upserted id is briefly absent
-        #    rather than ever visible in two versions.)
-        # 3. delta rows: new vectors appear.  Counts don't include them
-        #    yet — undercounting extends the walk, which again only
-        #    widens probes.
-        # 4. meta counts + sentinel: the batch entry gets its final
-        #    values (keyed by batch id, so replays overwrite).
-        pessimistic = dict(batch_entry)
-        pessimistic["counts"] = {}
-        # filters counts must ALSO wait for the delta write: counting
-        # not-yet-visible matching rows would certify the filtered
-        # walk's L too early (the one direction that loses recall)
-        pessimistic.pop("filters", None)
-        pessimistic.pop("tenant_filters", None)
-        m.setdefault("batches", {})[str(batch)] = pessimistic
-        # fence BEFORE the pessimistic meta write too: ``m`` was read at
-        # entry, so a stale applier writing it here would roll the live
-        # meta back over everything the new owner committed since —
-        # strictly worse than the delta-orphan hole the staging closes
-        _fence_check(self)
-        self._write_meta(m)
-        if tomb_ids:
-            # tombstone key types derive from the STORED build-time
-            # schema (exact — immune to partition-type inference, and no
-            # extra read job); tenant stores key by (tenant, id)
+        def stage(snap: StoreSnapshot, _skipped) -> list:
+            m = snap.meta
+            cents = sorted(zip(m["centroid_ids"], m["centroids"]))
+            cols = tuple(keep)
+            if self.tenant_col and self.tenant_col not in cols:
+                cols += (self.tenant_col,)
+            filter_cols = list(m.get("filters") or {})
+            for c in filter_cols:
+                if c not in cols and c != id_col:
+                    cols += (c,)
             tomb_cols = [self.tenant_col, id_col] if self.tenant_col else [id_col]
-            tomb = spark.createDataFrame(
-                sorted(tomb_ids),
-                StructType([StructField(c, snap.schema[c].dataType) for c in tomb_cols]),
-            ).withColumn("batch", F.lit(batch).cast("long"))
-            # staged, promoted after the pre-commit fence check (tomb
-            # FIRST, preserving the step 2→3 order the crash argument
-            # above relies on)
-            promotes.append(
-                _staged_append(
-                    snap.dir("tombstones"),
-                    lambda stage: tomb.coalesce(1)
-                    .write.mode("append")
-                    .parquet(stage),
+            tomb_ids: set = set()
+            appends = []
+            if upserts is not None:
+                from types import SimpleNamespace
+
+                from car_etl_spark.operators.similarity import ivf_assign
+
+                assigned = ivf_assign(
+                    upserts, None, id_col, vec_col,
+                    centroid_rows=[
+                        SimpleNamespace(centroid_id=cid, centroid_vec=vec)
+                        for cid, vec in cents
+                    ],
+                    keep=cols,
+                ).withColumn("batch", F.lit(batch).cast("long"))
+                if m.get("pq"):
+                    # encode against the FROZEN codebooks (same contract
+                    # as the frozen coarse quantizer) — the per-row error
+                    # bound keeps certified serving exact no matter how
+                    # far the corpus drifts from the training sample
+                    import numpy as np
+
+                    from car_etl_spark.operators import pq as PQ
+
+                    assigned = PQ.encode_with_err(
+                        assigned, vec_col,
+                        np.asarray(m["pq"]["codebooks"], dtype="float64"),
+                    )
+                assigned = assigned.localCheckpoint(eager=True)
+                stats = self._cluster_stats(assigned, cents, vec_col)
+                if m.get("pq"):
+                    # batch err stats ride the PESSIMISTIC meta write
+                    # (they stay in the early copy): a reader that sees
+                    # the delta rows must already see an err ceiling
+                    # covering them, or the fused shortlist could certify
+                    # completeness it doesn't have.  mean/p95/n_enc feed
+                    # should_retrain().
+                    est = _pq_err_stats(assigned)
+                    if est["max_err"] is not None:
+                        entry.update(est)
+                entry["counts"] = {str(cid): n for cid, (_r, n) in stats.items()}
+                entry["radii"] = {
+                    str(cid): r for cid, (r, _n) in stats.items() if r is not None
+                }
+                if filter_cols:
+                    # per-batch filterable-attribute counts: the filtered
+                    # walk ADDS these when present; their absence (pre-
+                    # feature batches, pessimistic write) undercounts,
+                    # which only extends the walk — safe.  Tenant stores
+                    # also keep the (tenant, centroid, value) grain so the
+                    # COMBINED tenant x filter walk stays tight under
+                    # maintenance.
+                    bglob, btenant = self._filter_stats_all(assigned, filter_cols)
+                    entry["filters"] = bglob
+                    if btenant is not None:
+                        entry["tenant_filters"] = btenant
+                # control-plane collect: bounded by the MICRO-BATCH's
+                # distinct id count (connector pages are O(100-1000)
+                # rows), never by store size — same ceiling argument as
+                # the CDC token path
+                tomb_ids |= {
+                    tuple(r) for r in assigned.select(*tomb_cols).distinct().collect()
+                }
+                appends.append(
+                    ("delta", lambda out: self._write_assignments(assigned, out, "append"))
                 )
-            )
-        if upserts is not None:
-            pcols = ([self.tenant_col] if self.tenant_col else []) + ["centroid_id"]
-            promotes.append(
-                _staged_append(
-                    snap.dir("delta"),
-                    lambda stage: assigned.repartition(*pcols)
-                    .write.mode("append")
-                    .partitionBy(*pcols)
-                    .parquet(stage),
-                )
-            )
-        m["batches"][str(batch)] = batch_entry
-        # COMMIT POINT for concurrent readers: counts and the snapshot
-        # bound advance in one atomic meta replace — until it lands, the
-        # bound hides this batch's tombstones AND delta rows, so a serve
-        # racing this apply sees the complete previous snapshot (an
-        # upserted id is never observed absent between steps 2 and 3
-        # above).  The pessimistic step-1 write still protects the
-        # crash-replay window.
-        m["applied_through"] = batch
-        # a stale (stolen-lease) applier stops HERE — with the
-        # tombstone/delta writes still staged, so it leaves no ROW DATA
-        # in the committed-visible range.  Residual (documented, safe
-        # direction): the pessimistic batches[b] meta entry written
-        # above may linger — repairing meta while fenced risks rolling
-        # back the new owner's commits, which is strictly worse than
-        # the entry's only effect (widened radii + tombstone debt =
-        # extra probes, never lost recall); it is overwritten if the
-        # new owner applies the same batch id and cleared by the next
-        # compact in any case.
-        try:
-            _fence_check(self)
-        except MaintenanceFencedError:
-            for _promote, abort in promotes:
-                abort()
-            raise
-        for promote, _abort in promotes:
-            promote()
-        if _test_post_promote_crash is not None:
-            _test_post_promote_crash()
-        # a crash HERE (post-promote, pre-commit) leaves delta/tomb
-        # orphans above the committed bound — invisible, and retracted
-        # by the next apply's _sweep_promoted_orphans (r12)
-        self._write_meta(m)
-        with open(self._sentinel(batch), "w") as f:
-            f.write("applied")
-        return True
+            if deleted_ids:
+                tomb_ids |= {tuple(d) if self.tenant_col else (d,) for d in deleted_ids}
+            entry["tombs"] = len(tomb_ids)
+            # step 1: filters counts must ALSO wait for the delta write —
+            # counting not-yet-visible matching rows would certify the
+            # filtered walk's L too early (the one direction that loses
+            # recall)
+            pessimistic = {
+                k: v for k, v in entry.items() if k not in ("filters", "tenant_filters")
+            }
+            pessimistic["counts"] = {}
+            m.setdefault("batches", {})[str(batch)] = pessimistic
+            self._commit_meta(m)
+            if tomb_ids:
+                # tombstone key types derive from the STORED build-time
+                # schema (exact — immune to partition-type inference, and
+                # no extra read job); tenant stores key by (tenant, id)
+                tomb = spark.createDataFrame(
+                    sorted(tomb_ids),
+                    StructType(
+                        [StructField(c, snap.schema[c].dataType) for c in tomb_cols]
+                    ),
+                ).withColumn("batch", F.lit(batch).cast("long"))
+                # tombstones FIRST: the step 2 -> 3 order above
+                appends.insert(0, (
+                    "tombstones",
+                    lambda out: tomb.coalesce(1).write.mode("append").parquet(out),
+                ))
+            return appends
+
+        def commit(snap: StoreSnapshot) -> None:
+            snap.meta["batches"][str(batch)] = entry
+            snap.meta["applied_through"] = snap.upper
+            self._commit_meta(snap.meta)
+
+        return self._apply_batch(batch, stage, commit)
 
     def read_assignments(
         self,
@@ -3351,7 +1954,7 @@ class IvfStore:
         (tenant, probed-centroid) directories."""
         if tenant is not None and not self.tenant_col:
             raise ValueError("store was not built with a tenant_col")
-        snap = snap or _built(self.snapshot(), self.path)
+        snap = snap or self._built_snapshot()
 
         def scope(df):
             if probes is not None:
@@ -3366,13 +1969,6 @@ class IvfStore:
             spark, snap, scope(reader.parquet(snap.dir("assignments"))), "delta",
             lambda d: scope(reader.parquet(d)), key, key,
         )
-
-    def should_compact(self, threshold: float = COMPACT_DELTA_FRACTION) -> bool:
-        """See :func:`_should_compact`; for the IVF layout the delta
-        fraction ALSO bounds certificate pessimism (tombstone debt +
-        widened radii extend probe sets), so compacting on the same
-        threshold keeps probes tight."""
-        return _should_compact(self.assign_dir, (self.delta_dir, self.tomb_dir), threshold)
 
     def should_retrain(self, factor: float = PQ_RETRAIN_FACTOR) -> bool:
         """True when the delta batches' count-weighted mean pq
@@ -3419,11 +2015,7 @@ class IvfStore:
         build) and every row re-encoded — free rewrite-wise, compact
         rewrites every row regardless.  Err stats restamp tight either
         way."""
-        # fold bound == the epoch the publish stamps (see
-        # PostingStore.compact's sentinel-bound note): an unsentineled
-        # batch whose meta commit landed is excluded and redelivered
-        fold_through = _max_sentinel_batch(self.path)
-        snap = _built(self.snapshot(as_of=fold_through), self.path)
+        snap = self._fold_snapshot()
         live = self.read_assignments(spark, snap=snap).withColumn(
             "batch", F.lit(0).cast("long")
         )
@@ -3455,15 +2047,9 @@ class IvfStore:
                 m["pq"]["codebooks"] = books.tolist()
         live = live.localCheckpoint(eager=True)
         cents = sorted(zip(m["centroid_ids"], m["centroids"]))
-        pcols = ([self.tenant_col] if self.tenant_col else []) + ["centroid_id"]
         new_gen, newroot = _fresh_layout(self.path, snap.gen)
         tmp = os.path.join(newroot, "assignments")
-        (
-            live.repartition(*pcols)
-            .write.mode("overwrite")
-            .partitionBy(*pcols)
-            .parquet(tmp)
-        )
+        self._write_assignments(live, tmp, "overwrite")
         written = spark.read.schema(live.schema).parquet(tmp)
         # radii/counts recomputed tight, and filterable-attribute counts
         # restamped at BOTH grains (the fresh tenant entries replace the
@@ -3473,7 +2059,7 @@ class IvfStore:
         # epoch from the sentinels BEFORE the swap clears them — meta
         # rides the atomic swap, so readers ignore any delta/tombstone
         # files a crash strands between the swap and the cleanup
-        m["compacted_through"] = fold_through
+        m["compacted_through"] = snap.upper
         # snapshot bound restarts with the fresh layout (no pending
         # deltas; an uncommitted stranded batch replays in full)
         m["applied_through"] = m["compacted_through"]
@@ -3483,46 +2069,7 @@ class IvfStore:
             # after a retrain these become the NEW drift baseline)
             m["pq"].update(_pq_err_stats(written))
         m["schema"] = live.schema.jsonValue()
-        with open(os.path.join(tmp, "_meta.json"), "w") as f:
-            json.dump(m, f)
-        self._publish_generation(new_gen)
-
-    def meta(self, root: str | None = None) -> dict | None:
-        """Meta of the generation at layout ``root`` (default: the
-        current one) — the store's ONLY meta reader, so the layout
-        version is checked here once and every path assumes the current
-        layout.  None means unbuilt; assignments without meta, or meta
-        of another layout version, refuse (stale or defaulted centroids
-        and statistics would certify wrong probes)."""
-        assign = os.path.join(root, "assignments") if root else self.assign_dir
-        try:
-            with open(os.path.join(assign, "_meta.json")) as f:
-                m = json.load(f)
-        except FileNotFoundError:
-            if _dir_has_parquet(assign):
-                raise ValueError(
-                    f"IVF store at {self.path} has assignments but no "
-                    "assignments/_meta.json — a pre-v5 store; rebuild it"
-                ) from None
-            return None
-        if m.get("version") != IVF_VERSION:
-            raise ValueError(
-                f"IVF store at {self.path} has layout version "
-                f"{m.get('version')} (current {IVF_VERSION}) — rebuild it; "
-                "its meta lacks what a rebuild or compact under the current "
-                "layout stamps"
-            )
-        return m
-
-    def snapshot(self, as_of: int | None = None, gen: int | None = None):
-        """The :class:`StoreSnapshot` every read of this store takes
-        (default: the current generation at its committed bound); None
-        when unbuilt.  One snapshot serves a whole probe: the walk's
-        counts, radii, tombstone debt and codebooks AND the row view's
-        dirs and batch bound — its ``schema`` (the build-time
-        assignments schema) keeps partition-column type inference from
-        reinterpreting tenant or centroid values."""
-        return StoreSnapshot.take(self.path, self.meta, as_of, gen)
+        self._publish_meta(new_gen, m)
 
     def probe_ids_exact(
         self, qvec: list[float], k: int, tenant=None, where=None,
@@ -3568,7 +2115,7 @@ class IvfStore:
 
         if tenant is not None and not self.tenant_col:
             raise ValueError("store was not built with a tenant_col")
-        m = (snap or _built(self.snapshot(), self.path)).meta
+        m = (snap or self._built_snapshot()).meta
         cmat = np.asarray(m["centroids"], dtype="float64")
         ids = np.asarray(m["centroid_ids"], dtype="int64")
         q = np.asarray(qvec, dtype="float64")
@@ -3775,7 +2322,7 @@ class IvfStore:
         the pruned parquet scan, so both the certificate and the bytes
         read track the filtered corpus."""
         # ONE snapshot serves the walk and the row view (see StoreSnapshot)
-        snap = _built(self.snapshot(), self.path)
+        snap = self._built_snapshot()
         probes = self.probe_ids_exact(qvec, k, tenant=tenant, where=where, snap=snap)
         return self._rescored_topk(
             self._probed_scan(spark, snap, probes, id_col, tenant, where),
@@ -3822,7 +2369,7 @@ class IvfStore:
         # racing maintenance commit or compact flip can't pair new
         # tombstones with the old certificate, or post-retrain codes
         # with old codebooks (see StoreSnapshot)
-        snap = _built(self.snapshot(), self.path)
+        snap = self._built_snapshot()
         m = snap.meta
         if not m.get("pq"):
             raise ValueError(

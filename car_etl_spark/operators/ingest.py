@@ -150,24 +150,14 @@ def land_documents(
     from car_etl_spark.operators.scale import write_partitioned
 
     if zorder_cols:
-        from car_etl_spark.operators.layout import (
-            _stats_timestamps,
-            equidepth_edges,
-            zorder_key,
-        )
+        from car_etl_spark.operators.layout import _stats_timestamps, zorder_staged
 
-        edges = equidepth_edges(df, list(zorder_cols), bits_per_col)
-        staged = (
-            df.withColumn("__z", zorder_key(edges, bits_per_col))
-            # range partitioning on (pcols, z): a big tenant-day splits
-            # across MANY tasks/files (parallel write, each file a
-            # contiguous z-range inside its directory) instead of
-            # hash-collapsing each directory onto one task
-            .repartitionByRange(
-                num_files, *[F.col(c) for c in partition_cols], F.col("__z")
-            )
-            .sortWithinPartitions(*partition_cols, "__z")
-            .drop("__z")
+        # runs cut on (pcols, z): a big tenant-day splits across MANY
+        # tasks/files (parallel write, each file a contiguous z-range
+        # inside its directory) instead of hash-collapsing each
+        # directory onto one task
+        staged, _edges = zorder_staged(
+            df, list(zorder_cols), bits_per_col, num_files, partition_cols
         )
         with _stats_timestamps(df):
             write_partitioned(staged, path, partition_cols, mode=mode)
@@ -327,18 +317,10 @@ def optimize_landing(
         # what the rewritten files must contain
         rows = spark.read.parquet(pdir)
         if zorder_cols:
-            from car_etl_spark.operators.layout import (
-                _stats_timestamps,
-                equidepth_edges,
-                zorder_key,
-            )
+            from car_etl_spark.operators.layout import _stats_timestamps, zorder_staged
 
-            edges = equidepth_edges(rows, list(zorder_cols), bits_per_col)
-            staged = (
-                rows.withColumn("__z", zorder_key(edges, bits_per_col))
-                .repartitionByRange(target_files, F.col("__z"))
-                .sortWithinPartitions("__z")
-                .drop("__z")
+            staged, _edges = zorder_staged(
+                rows, list(zorder_cols), bits_per_col, target_files, ()
             )
             with _stats_timestamps(rows):
                 staged.write.mode("overwrite").parquet(tmp)

@@ -156,6 +156,36 @@ def _z_runs(zdf: DataFrame, keys: list[str], num_files: int) -> DataFrame:
     return spark.createDataFrame(rows, schema)
 
 
+def zorder_staged(
+    df: DataFrame,
+    cols: list[str],
+    bits_per_col: int,
+    num_files: int,
+    partition_cols: tuple[str, ...],
+) -> tuple[DataFrame, dict[str, list[float]]]:
+    """``(staged, edges)``: ``df`` laid out for a z-ordered write of
+    ``num_files`` tasks — the Morton key of ``cols`` over equi-depth
+    ``edges``, cut into exact runs of (``partition_cols``..., key)
+    cells (:func:`_z_runs`), one run per task, sorted within each task
+    so every written file covers a contiguous z-range inside its
+    directory.  Exact counts, not a sampled range partitioner, so the
+    same input always stages the same files.  Every z-ordered writer
+    (:func:`write_zordered`, the landing writers in ``ingest.py``)
+    stages through here."""
+    edges = equidepth_edges(df, cols, bits_per_col)
+    keys = [*partition_cols, "__z"]
+    zdf = df.withColumn("__z", zorder_key(edges, bits_per_col))
+    runs = _z_runs(zdf, keys, num_files)
+    staged = (
+        zdf.join(F.broadcast(runs), [zdf[c].eqNullSafe(runs[c]) for c in keys])
+        .drop(*[runs[c] for c in keys])
+        .repartition(num_files, "__part")
+        .sortWithinPartitions(*partition_cols, "__z")
+        .drop("__z", "__part")
+    )
+    return staged, edges
+
+
 def write_zordered(
     df: DataFrame,
     path: str,
@@ -180,17 +210,7 @@ def write_zordered(
     incremental per-partition rewrites stay mutually comparable; a
     tenant whose value distribution diverges wildly re-clusters alone
     by passing its own slice."""
-    edges = equidepth_edges(df, cols, bits_per_col)
-    keys = [*partition_cols, "__z"]
-    zdf = df.withColumn("__z", zorder_key(edges, bits_per_col))
-    runs = _z_runs(zdf, keys, num_files)
-    staged = (
-        zdf.join(F.broadcast(runs), [zdf[c].eqNullSafe(runs[c]) for c in keys])
-        .drop(*[runs[c] for c in keys])
-        .repartition(num_files, "__part")
-        .sortWithinPartitions(*partition_cols, "__z")
-        .drop("__z", "__part")
-    )
+    staged, edges = zorder_staged(df, cols, bits_per_col, num_files, partition_cols)
     with _stats_timestamps(df):
         w = staged.write.mode(mode)
         if partition_cols:

@@ -63,21 +63,22 @@ def asof_store_paths(sf_dir: str) -> tuple[str, str]:
     bump re-addresses the pair instead of reopening an older layout the
     stores refuse."""
     from car_etl_spark.operators import indexing as IX
+    from car_etl_spark.operators import lsm
     from car_etl_spark.streaming import rollup_store as RS
 
     params = (
         f"cap{ASOF_DOC_CAP}|up{ASOF_UP_MOD}|del{ASOF_DEL_MOD}|"
         f"B{ASOF_BATCHES}|{ASOF_REV_TOKEN}"
     )
-    pdig = IX._source_digest(
+    pdig = lsm._source_digest(
         "asof-posting", IX.POSTING_VERSION,
         os.path.join(sf_dir, "documents.parquet"), params,
     )
-    rdig = IX._source_digest(
+    rdig = lsm._source_digest(
         "asof-rollup", RS.ROLLUP_VERSION,
         os.path.join(sf_dir, "events.parquet"), params,
     )
-    root = IX.index_root()
+    root = lsm.index_root()
     return (
         os.path.join(root, f"asof-posting-{pdig}"),
         os.path.join(root, f"asof-rollup-{rdig}"),
@@ -91,6 +92,7 @@ def ensure_asof_stores(spark: SparkSession, sf_dir: str):
     ``_asof_complete`` marker gates reuse: a partially-built store
     (crashed mid-batches) rebuilds from scratch."""
     from car_etl_spark.operators import indexing as IX
+    from car_etl_spark.operators import lsm
     from car_etl_spark.streaming.rollup_store import RollupStore
 
     ppath, rpath = asof_store_paths(sf_dir)
@@ -103,13 +105,13 @@ def ensure_asof_stores(spark: SparkSession, sf_dir: str):
         under a held lease would delete the lease out from under us."""
         import shutil
 
-        keep = {IX._LEASE_FILE, IX._FENCE_FILE, "_pins"}
+        keep = {lsm._LEASE_FILE, lsm._FENCE_FILE, "_pins"}
         try:
             entries = os.listdir(root)
         except OSError:
             return
         for fn in entries:
-            if fn in keep or fn.startswith("." + IX._LEASE_FILE):
+            if fn in keep or fn.startswith("." + lsm._LEASE_FILE):
                 continue
             p = os.path.join(root, fn)
             (shutil.rmtree if os.path.isdir(p) else os.remove)(p)
@@ -145,7 +147,7 @@ def ensure_asof_stores(spark: SparkSession, sf_dir: str):
             with open(pmark, "w") as f:
                 f.write("ok")
 
-        IX.build_or_wait(
+        lsm.build_or_wait(
             build_posting, lambda: os.path.exists(pmark), ppath
         )
 
@@ -164,7 +166,7 @@ def ensure_asof_stores(spark: SparkSession, sf_dir: str):
             with open(rmark, "w") as f:
                 f.write("ok")
 
-        IX.build_or_wait(
+        lsm.build_or_wait(
             build_rollup, lambda: os.path.exists(rmark), rpath
         )
     return posting, rollup

@@ -265,7 +265,7 @@ def _cached_hot_affix_keys(
     profile — ``None`` where the corpus has no hot blocks for that key,
     so the common no-skew case keeps the bare self-join plan (and warm
     runs skip the profile pass entirely)."""
-    from car_etl_spark.operators.indexing import _source_digest
+    from car_etl_spark.operators.lsm import _source_digest
 
     ck = (
         _source_digest("hotkeys", 1, os.path.join(sf_dir, "customer.parquet"), ""),

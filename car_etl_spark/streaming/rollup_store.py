@@ -24,11 +24,14 @@ stores' base + batch-tagged delta + sentinel pattern):
 - **compact()**: folds deltas into a fresh base (atomic swap), same
   policy surface as the other stores.
 
-Crash/replay safety is the posting-store argument, not a ledger: a
-batch writes ONE deterministic aggregate row per touched group, so a
-crash-before-sentinel replay appends byte-identical duplicates and the
-read path's exact-duplicate drop (group keys + batch) restores the
-view; a sentinel makes completed batches no-ops.  Meta (spec + the
+Crash/replay safety is the shared commit order of the LSM stores
+(:meth:`~car_etl_spark.operators.lsm.LsmStore._apply_batch`): the
+applied sentinel is this store's commit point, a replay's entry sweep
+retracts a crashed attempt's promoted rows before it appends, and a
+sentinel makes completed batches no-ops.  A batch writes ONE
+deterministic aggregate row per touched group, so rows the sweep could
+not retract are byte-identical duplicates the dirty-flagged read drops
+(group keys + batch).  Meta (spec + the
 exact dataset schema + the compaction epoch) rides INSIDE base/ and
 swaps atomically with it; readers ignore delta rows at or below the
 epoch and apply_batch refuses them, so a crash between compact's swap
@@ -56,33 +59,24 @@ where a raw re-scan cannot.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# names tests replace (the orphan sweep, the post-promote crash seam)
-# are looked up on the module at call time, through _IX
-from car_etl_spark.operators import indexing as _IX
-from car_etl_spark.operators.indexing import (
-    COMPACT_DELTA_FRACTION,
-    MaintenanceFencedError,
+from car_etl_spark.operators.lsm import (
+    LsmStore,
     StoreSnapshot,
     _active_lease,
-    _built,
-    _current_dir,
     _dir_has_parquet,
     _ensure_store,
     _fence_check,
     _fresh_layout,
-    _marker_batches,
+    _live_window,
     _max_sentinel_batch,
     _publish_store_generation,
-    _should_compact,
     _source_digest,
-    _staged_append,
     _with_maintenance_lease,
     index_root,
 )
@@ -92,10 +86,12 @@ _DEC = "decimal(30,6)"
 
 GRAINS = ("minute", "hour", "day")
 
-#: layout version stamped into meta, checked by :meth:`RollupStore._meta`
+#: layout version stamped into meta, checked by the store's meta reader
 #: and hashed into every rollup store digest (a bump re-addresses cached
 #: stores instead of leaving them to be refused)
-ROLLUP_VERSION = 4
+#: v5: applied sentinels are ``_applied_<b>`` like the posting/IVF
+#: stores', and the pending-marker ledger is gone
+ROLLUP_VERSION = 5
 
 
 class RollupStoreParamError(RuntimeError):
@@ -104,7 +100,17 @@ class RollupStoreParamError(RuntimeError):
     silently wrong, so refuse instead (the sketch-store discipline)."""
 
 
-class RollupStore:
+class RollupStore(LsmStore):
+    KIND = "rollup state"
+    VERSION = ROLLUP_VERSION
+    ERROR = RollupStoreParamError
+    META_DIR = "base"
+    NO_META = "a torn or foreign layout"
+    PENDING_DIRS = BATCH_DIRS = ("delta",)
+    # a fresh base folds every applied batch and has no replay
+    # duplicates by construction: compact clears the dirty flag too
+    CLEARED = ("_applied_", "_replay_dirty")
+
     def __init__(
         self,
         path: str,
@@ -126,23 +132,6 @@ class RollupStore:
         if tenant_col and tenant_col not in gc:
             gc = (tenant_col,) + gc
         self.group_cols = gc
-
-    # current-generation paths, for maintenance probes and inspection;
-    # reads take theirs from a StoreSnapshot.  Sentinels, pending
-    # markers and the dirty flag stay at the store root (batch ids are
-    # global, not per-generation).
-
-    @property
-    def base_dir(self) -> str:
-        return _current_dir(self.path, "base")
-
-    @property
-    def delta_dir(self) -> str:
-        return _current_dir(self.path, "delta")
-
-    @property
-    def meta_path(self) -> str:
-        return os.path.join(self.base_dir, "_meta.json")
 
     # -- shared aggregation kernels -------------------------------------
 
@@ -183,189 +172,77 @@ class RollupStore:
             "tenant_col": self.tenant_col,
         }
 
-    def _meta(self, root: str | None = None) -> dict | None:
-        """Meta of the generation at layout ``root`` (default: the
-        current one), None when unbuilt — the store's ONLY meta reader,
-        so the layout version is checked here once and every path
-        assumes the current layout."""
-        mp = os.path.join(os.path.join(root, "base") if root else self.base_dir, "_meta.json")
-        if not os.path.exists(mp):
-            return None
-        with open(mp) as f:
-            m = json.load(f)
-        if m.get("version") != ROLLUP_VERSION:
-            raise RollupStoreParamError(
-                f"rollup state at {self.path} has layout version "
-                f"{m.get('version')} (current {ROLLUP_VERSION}) — rebuild it"
-            )
-        return m
-
-    def snapshot(self, as_of: int | None = None, gen: int | None = None):
-        """The :class:`StoreSnapshot` every read of this store takes;
-        None when unbuilt, and a refusal when the stored (groups,
-        value) spec is not the one this code computes.  The committed
-        bound is the highest applied sentinel (``as_of`` overrides it:
-        the MVCC read of the state after batches ``<= as_of``), read
-        BEFORE the generation is pinned — see :class:`StoreSnapshot`
-        for why that order is the consistent one.  The snapshot's
-        ``schema`` keeps partition-column type inference from folding a
-        string tenant '0100' into int 100 and merging two tenants'
-        aggregates."""
-        upper = (
-            _max_sentinel_batch(self.path, "_batch_", "_applied")
-            if as_of is None
-            else int(as_of)
-        )
-        snap = StoreSnapshot.take(self.path, self._meta, upper, gen)
-        if snap is not None and snap.meta["spec"] != self._spec():
-            raise RollupStoreParamError(
-                f"rollup state at {self.path} was built with {snap.meta['spec']}; "
-                f"this code computes {self._spec()} — rebuild before resuming"
-            )
-        return snap
-
-    def _stamp_meta(self, target_dir: str, schema, compacted_through: int) -> None:
-        """Write meta into a (tmp) base layout BEFORE it is swapped
-        live — spec, the exact dataset schema (type-inference guard),
-        and the compaction epoch travel with the data."""
-        with open(os.path.join(target_dir, "_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "spec": self._spec(),
-                    "version": ROLLUP_VERSION,
-                    "schema": schema.jsonValue(),
-                    "compacted_through": compacted_through,
-                },
-                f,
-            )
+    def _committed_bound(self) -> int:
+        """The highest applied sentinel: this store commits a batch by
+        its sentinel (one atomic file create after the append), so a
+        batch whose append is still in flight stays hidden."""
+        return _max_sentinel_batch(self.path)
 
     def _pcols(self) -> list[str]:
         return ([self.tenant_col] if self.tenant_col else []) + ["event_date"]
 
-    def _sentinel(self, batch: int) -> str:
-        return os.path.join(self.path, f"_batch_{batch}_applied")
+    def _write_partials(self, df: DataFrame, target: str, mode: str) -> None:
+        pcols = self._pcols()
+        df.repartition(*pcols).write.mode(mode).partitionBy(*pcols).parquet(target)
 
-    def _pending(self, batch: int) -> str:
-        return os.path.join(self.path, f"_batch_{batch}_pending")
+    def _publish_base(self, new_gen: int, schema, epoch: int) -> None:
+        """Publish the written generation with its meta: the spec, the
+        exact dataset schema (type-inference guard) and the compaction
+        epoch travel with the data."""
+        self._publish_meta(new_gen, {
+            "spec": self._spec(),
+            "schema": schema.jsonValue(),
+            "compacted_through": epoch,
+        })
 
     @property
     def _dirty_path(self) -> str:
         return os.path.join(self.path, "_replay_dirty")
 
-    def _stranded_batches(self) -> list[int]:
-        """Batch ids whose append crashed: a pending marker with no
-        applied sentinel.  Their delta rows are a PARTIAL, never-
-        acknowledged write — foreachBatch will replay the whole batch."""
-        return [
-            b for b in _marker_batches(self.path, "_batch_", "_pending")
-            if not os.path.exists(self._sentinel(b))
-        ]
-
     def _needs_dup_drop(self) -> bool:
         """True only when a crash-replay may have duplicated delta rows
-        — the CLEAN-LEDGER fast path: every apply writes a pending
-        marker before its delta append and clears it after the applied
-        sentinel, so a replay that finds a stranded pending marker (the
-        only way duplicates can enter) stamps the store dirty.  A clean
-        ledger serves without the duplicate-drop aggregation (one merge
-        pass instead of two); compact folds everything into a fresh
-        base and clears the flag."""
+        — the CLEAN-LEDGER fast path: every apply's entry sweep retracts
+        a crashed attempt's promoted rows (batch above the committed
+        bound) before the replay appends, so duplicates can only enter
+        when the sweep reports files it could not retract, and only
+        then is the store stamped dirty.  A clean ledger serves without
+        the duplicate-drop aggregation (one merge pass instead of two);
+        compact folds everything into a fresh base and clears the
+        flag."""
         return os.path.exists(self._dirty_path)
-
-    def _publish_generation(self, new_gen: int) -> None:
-        """Publish the freshly-stamped generation through the stores'
-        one fenced sequence (:func:`_publish_store_generation`), clearing
-        the batch markers and the dirty flag: a fresh base folds every
-        applied batch and has no replay duplicates by construction.
-        The meta (with the new epoch) rides inside the new layout, so
-        any prefix of the cleanup leaves a consistent store — stranded
-        delta files sit at or below the epoch and every reader ignores
-        them."""
-        _publish_store_generation(
-            self.path, new_gen, _active_lease(self),
-            clear=("_batch_", os.path.basename(self._dirty_path)),
-        )
 
     # -- lifecycle ---------------------------------------------------------
 
     @_with_maintenance_lease
     def build(self, events: DataFrame) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        new_gen, newroot = _fresh_layout(self.path)
-        tmp = os.path.join(newroot, "base")
+        new_gen, root = _fresh_layout(self.path)
         rows = self._minute_partials(events).withColumn(
             "batch", F.lit(0).cast("long")
         )
-        (
-            rows.repartition(*self._pcols())
-            .write.mode("overwrite")
-            .partitionBy(*self._pcols())
-            .parquet(tmp)
-        )
-        self._stamp_meta(tmp, rows.schema, 0)
-        self._publish_generation(new_gen)
+        self._write_partials(rows, os.path.join(root, "base"), "overwrite")
+        self._publish_base(new_gen, rows.schema, 0)
 
     @_with_maintenance_lease
     def apply_batch(self, spark: SparkSession, events: DataFrame, batch: int) -> bool:
         """Fold one micro-batch of (possibly late) events in.  Returns
-        False for an already-applied batch (sentinel)."""
-        if batch <= 0:
-            raise ValueError("batch must be > 0 (0 is the base build)")
-        snap = _built(self.snapshot(), self.path, RollupStoreParamError)
-        if os.path.exists(self._sentinel(batch)):
-            return False
-        if batch <= snap.epoch:
-            # a batch id at or below the compaction epoch is a replay of
-            # content already folded into base (compact cleared its
-            # sentinel) — refuse like the sentinel does
-            return False
-        # retract crash orphans from a previous attempt BEFORE staging
-        # anything: files promoted by an applier that crashed before its
-        # sentinel landed carry batch ids above the committed bound and
-        # would surface under a different-content recommit (r12)
-        _orph, _skipped = _IX._sweep_promoted_orphans(
-            [snap.dir("delta")], snap.upper,
-            recheck=lambda: _fence_check(self),
-        )
-        if os.path.exists(self._pending(batch)) and _skipped:
-            # a previous attempt crashed mid-append AND the sweep could
-            # not retract every orphan (file vanished/remove failed):
-            # this replay may duplicate the survivors — flag the store
-            # so reads pay the duplicate-drop until the next compact.
-            # With a clean sweep the replay CANNOT duplicate (every
-            # crashed-attempt row carried batch > the committed bound
-            # and was just removed), so the clean-ledger fast path
-            # survives crash replays (r12 — was an unconditional stamp)
-            with open(self._dirty_path, "w") as f:
-                f.write("replayed after crashed append")
-        with open(self._pending(batch), "w") as f:
-            f.write("pending")
-        # staged append, promoted only after the fence check: a stale
-        # (stolen-lease) applier leaves nothing in the live delta tree
-        # (its orphan rows would otherwise become visible if the new
-        # owner commits the same batch id with different content)
-        partials = self._minute_partials(events).withColumn(
-            "batch", F.lit(batch).cast("long")
-        )
-        promote, abort = _staged_append(
-            snap.dir("delta"),
-            lambda stage: partials.repartition(*self._pcols())
-            .write.mode("append")
-            .partitionBy(*self._pcols())
-            .parquet(stage),
-        )
-        try:
-            _fence_check(self)  # a stale (stolen-lease) applier stops HERE
-        except MaintenanceFencedError:
-            abort()
-            raise
-        promote()
-        if _IX._test_post_promote_crash is not None:
-            _IX._test_post_promote_crash()
-        with open(self._sentinel(batch), "w") as f:
-            f.write("applied")
-        os.remove(self._pending(batch))
-        return True
+        False for an already-applied batch (sentinel).  The commit order
+        is :meth:`LsmStore._apply_batch`'s: this store stages one delta
+        append and commits by its sentinel, after a last fence check."""
+
+        def stage(snap: StoreSnapshot, skipped) -> list:
+            if skipped:
+                # the sweep could not retract every file a crashed
+                # attempt promoted (vanished mid-walk / remove failed):
+                # this replay may duplicate them — reads pay the
+                # duplicate-drop until the next compact
+                with open(self._dirty_path, "w") as f:
+                    f.write("replayed over unswept files")
+            partials = self._minute_partials(events).withColumn(
+                "batch", F.lit(batch).cast("long")
+            )
+            return [("delta", lambda out: self._write_partials(partials, out, "append"))]
+
+        return self._apply_batch(batch, stage, lambda snap: _fence_check(self))
 
     # -- serving -------------------------------------------------------------
 
@@ -382,7 +259,7 @@ class RollupStore:
         (deterministic per-(group, batch) aggregates make exact-duplicate
         drop sufficient — the posting-store replay argument), date range
         pruned at the partition level."""
-        snap = snap or _built(self.snapshot(), self.path, RollupStoreParamError)
+        snap = snap or self._built_snapshot()
         if tenant is not None and not self.tenant_col:
             raise ValueError("store was not built with a tenant_col")
         reader = spark.read.schema(snap.schema)
@@ -395,9 +272,7 @@ class RollupStore:
         # them; counting them again doubles n/sums)
         if _dir_has_parquet(snap.dir("delta")):
             df = df.unionByName(
-                reader.parquet(snap.dir("delta")).filter(
-                    (F.col("batch") > snap.epoch) & (F.col("batch") <= snap.upper)
-                )
+                _live_window(reader.parquet(snap.dir("delta")), snap.epoch, snap.upper)
             )
         if tenant is not None:
             df = df.filter(F.col(self.tenant_col) == tenant)
@@ -451,30 +326,20 @@ class RollupStore:
 
     # -- maintenance -----------------------------------------------------------
 
-    def should_compact(self, threshold: float = COMPACT_DELTA_FRACTION) -> bool:
-        """See :func:`~car_etl_spark.operators.indexing._should_compact`
-        (the rollup store keeps no tombstones: deltas are all it folds)."""
-        return _should_compact(self.base_dir, (self.delta_dir,), threshold)
-
     @_with_maintenance_lease
     def compact(self, spark: SparkSession) -> None:
         """Fold deltas into a fresh base: one minute-grain re-merge,
         atomic swap, sentinels cleared.
 
-        STRANDED batches (pending marker, no sentinel — a crashed,
-        never-acknowledged append) are EXCLUDED from the fold: their
-        partial rows must not enter base, because the swap clears the
-        pending markers and the stream's replay of that batch (its id
-        stays above the epoch — no sentinel means the committed bound
-        skips it) will re-append the FULL batch.  Folding the partials would
-        double-count them with no duplicate-drop able to repair it
-        (base rows carry batch 0).  Excluding them loses nothing: an
-        unacknowledged batch is the replay's to deliver."""
-        snap = _built(self.snapshot(), self.path, RollupStoreParamError)
+        The fold reads the committed snapshot, whose bound is the
+        highest sentinel, so a crashed, never-acknowledged append
+        (promoted rows, no sentinel) stays out of base: the stream's
+        replay of that batch (its id stays above the epoch) re-appends
+        the FULL batch, and folding its partial rows would double-count
+        them with no duplicate-drop able to repair it (base rows carry
+        batch 0)."""
+        snap = self._fold_snapshot()
         parts = self.partials(spark, snap=snap)
-        stranded = self._stranded_batches()
-        if stranded:
-            parts = parts.filter(~F.col("batch").isin(stranded))
         live = self._merge_to(
             parts,
             F.col("minute_start"),
@@ -489,19 +354,12 @@ class RollupStore:
             "value_max",
             F.lit(0).cast("long").alias("batch"),
         )
-        new_gen, newroot = _fresh_layout(self.path, snap.gen)
-        tmp = os.path.join(newroot, "base")
-        (
-            live.repartition(*self._pcols())
-            .write.mode("overwrite")
-            .partitionBy(*self._pcols())
-            .parquet(tmp)
-        )
+        new_gen, root = _fresh_layout(self.path, snap.gen)
+        self._write_partials(live, os.path.join(root, "base"), "overwrite")
         # epoch from the sentinels BEFORE the publish clears them: the
         # meta rides the new layout, so readers ignore any delta files a
         # crash strands between the flip and the cleanup
-        self._stamp_meta(tmp, live.schema, snap.upper)
-        self._publish_generation(new_gen)
+        self._publish_base(new_gen, live.schema, snap.upper)
 
     @_with_maintenance_lease
     def refresh_dates(
@@ -512,7 +370,7 @@ class RollupStore:
         SOURCE frame and swap them in, deleting any delta rows for
         those dates.  Bounded by the invalidated region — never a full
         history rescan."""
-        snap = _built(self.snapshot(), self.path, RollupStoreParamError)
+        snap = self._built_snapshot()
         dates = [str(d) for d in dates]
         fresh = (
             self._minute_partials(
@@ -524,9 +382,7 @@ class RollupStore:
         )
         tmpdir = os.path.join(self.path, ".refresh.tmp")
         shutil.rmtree(tmpdir, ignore_errors=True)
-        fresh.repartition(*self._pcols()).write.partitionBy(*self._pcols()).parquet(
-            tmpdir
-        )
+        self._write_partials(fresh, tmpdir, "overwrite")
         # partition prefixes: "" for single-tenant stores, one
         # "tenant=<t>/" per tenant dir under a tenant layout — the
         # refresh swaps each tenant's invalidated dates independently

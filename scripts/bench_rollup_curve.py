@@ -26,7 +26,7 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from car_etl_spark.operators.indexing import _tree_bytes  # noqa: E402
+from car_etl_spark.operators.lsm import _tree_bytes  # noqa: E402
 from car_etl_spark.session import get_spark  # noqa: E402
 from car_etl_spark.streaming.rollup_store import RollupStore  # noqa: E402
 

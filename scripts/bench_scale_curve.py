@@ -29,6 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from car_etl_spark.operators import indexing as IX  # noqa: E402
+from car_etl_spark.operators.lsm import _tree_bytes  # noqa: E402
 from car_etl_spark.session import get_spark  # noqa: E402
 
 ROOT = os.path.join(
@@ -214,7 +215,7 @@ def main() -> None:
             "est_postings": est,
             "num_buckets": nb,
             "matched_postings": matched,
-            "store_mb": round(IX._tree_bytes(store.base_dir) / 1e6, 1),
+            "store_mb": round(_tree_bytes(store.base_dir) / 1e6, 1),
             "query_warm_sec": timed(q),
             "bm25_warm_sec": timed(qb),
             "phrase_warm_sec": timed(qp),
@@ -273,7 +274,7 @@ def main() -> None:
                 "docs": n,
                 "pattern": tag,
                 "postings_touched": touched,
-                "store_mb": round(IX._tree_bytes(tstore.base_dir) / 1e6, 1),
+                "store_mb": round(_tree_bytes(tstore.base_dir) / 1e6, 1),
                 "substring_warm_sec": timed(sq),
                 "raw_scan_warm_sec": timed(sscan),
             }

@@ -63,6 +63,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from car_etl_spark.functions import vectors as V  # noqa: E402
 from car_etl_spark.functions.text import stem_py  # noqa: E402
 from car_etl_spark.operators import indexing as IX  # noqa: E402
+from car_etl_spark.operators import lsm  # noqa: E402
 from car_etl_spark.session import get_spark  # noqa: E402
 from car_etl_spark.streaming.rollup_store import RollupStore  # noqa: E402
 
@@ -345,7 +346,7 @@ def main() -> None:  # noqa: C901
         # finally could set maint_done (found by the r11 pin arm run —
         # the rogue then compacted unopposed forever).
         stores = (posting, trigram, ivf, ivfpq, rollup)
-        leases = {s.path: IX.acquire_maintenance_lease(s.path) for s in stores}
+        leases = {s.path: lsm.acquire_maintenance_lease(s.path) for s in stores}
 
         crash_counters = {"injected": 0, "recovered": 0, "orphan_dirs": 0}
 
@@ -358,8 +359,9 @@ def main() -> None:  # noqa: C901
             follows must sweep the orphans (_sweep_promoted_orphans) —
             any racing serve that ever sees poison is a mismatch."""
 
-            def boom():
-                raise RuntimeError("soak: injected post-promote crash")
+            def boom(step):
+                if step == "promoted":
+                    raise RuntimeError("soak: injected post-promote crash")
 
             poison_docs = docs_df(
                 spark, {999999: "soakpoisonterm soakpoisonterm unique"}
@@ -372,7 +374,7 @@ def main() -> None:  # noqa: C901
             poison_ev = events_df(
                 spark, [(999_999_000 + b, "click", "2024-01-01 10:00:30", 1_000_000.0)]
             )
-            IX._test_post_promote_crash = boom
+            lsm._test_crash_point = boom
             try:
                 for store, args in (
                     (posting, (poison_docs, None)),
@@ -393,7 +395,7 @@ def main() -> None:  # noqa: C901
                 except RuntimeError:
                     pass
             finally:
-                IX._test_post_promote_crash = None
+                lsm._test_crash_point = None
             # orphan EVIDENCE uses the sweep's own predicate in dry-run
             # (min(batch) > committed bound), not a bare dir-has-parquet
             # probe that ordinary committed delta files would satisfy
@@ -411,7 +413,7 @@ def main() -> None:  # noqa: C901
             n_orph = sum(
                 1
                 for dirs, bound in probes
-                if IX._sweep_promoted_orphans(list(dirs), bound, dry_run=True)[0]
+                if lsm._sweep_promoted_orphans(list(dirs), bound, dry_run=True)[0]
             )
             with lock:
                 crash_counters["injected"] += 1
@@ -419,7 +421,7 @@ def main() -> None:  # noqa: C901
 
         def maintenance() -> None:
             spark.sparkContext.setLocalProperty("spark.scheduler.pool", "maintenance")
-            beats = [IX._LeaseHeartbeat(lease) for lease in leases.values()]
+            beats = [lsm._LeaseHeartbeat(lease) for lease in leases.values()]
             for hb in beats:
                 hb.start()
             try:
@@ -481,7 +483,7 @@ def main() -> None:  # noqa: C901
                 for hb in beats:
                     hb.stop()
                 for lease in leases.values():
-                    IX.release_maintenance_lease(lease)
+                    lsm.release_maintenance_lease(lease)
 
         rogue_counters = {"attempts": 0, "refused": 0, "published": 0}
 
@@ -512,7 +514,7 @@ def main() -> None:  # noqa: C901
                         rogue_counters["attempts"] += 1
                         rogue_counters["published"] += 1
                         errors.append(f"rogue maintainer PUBLISHED on {p}")
-                except IX.MaintenanceLeaseError:
+                except lsm.MaintenanceLeaseError:
                     with lock:
                         rogue_counters["attempts"] += 1
                         rogue_counters["refused"] += 1
@@ -555,24 +557,24 @@ def main() -> None:  # noqa: C901
             # pin after the FIRST compact so the pinned gen becomes
             # GC-eligible (<= new_gen - 2) while we still hold it
             while not maint_done.is_set():
-                if IX._layout_gen(posting.path) >= 2:
+                if lsm._layout_gen(posting.path) >= 2:
                     break
                 time.sleep(0.2)
             if maint_done.is_set():
                 with lock:
                     pin_counters["skipped"] += 1
                 return
-            with IX.pinned_generation(posting.path) as g:
+            with lsm.pinned_generation(posting.path) as g:
                 with lock:
                     pin_counters["pins"] += 1
                     pin_counters["pinned_gen"] = g
                 sid = state_id_posting(posting)
                 early = checksum(g, sid)
                 while not maint_done.is_set():
-                    if IX._layout_gen(posting.path) >= g + 2:
+                    if lsm._layout_gen(posting.path) >= g + 2:
                         break
                     time.sleep(0.2)
-                if IX._layout_gen(posting.path) < g + 2:
+                if lsm._layout_gen(posting.path) < g + 2:
                     with lock:
                         pin_counters["skipped"] += 1
                     return

@@ -10,6 +10,8 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("car-etl-spark-tests", master="local[8]", shuffle_partitions=8)
+    # sized like every other session: $SPARK_GRAFT_CPUS cores and as
+    # many shuffle partitions (see session.default_parallelism)
+    spark = get_spark("car-etl-spark-tests")
     yield spark
     spark.stop()

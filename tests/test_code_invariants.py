@@ -21,6 +21,7 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), 
 READ_ALLOWED = {
     "tables.py",
     os.path.join("operators", "indexing.py"),
+    os.path.join("operators", "lsm.py"),          # the LSM stores' shared live view
     os.path.join("operators", "multimodal.py"),   # binaryFile landing dirs
     os.path.join("operators", "ingest.py"),       # read_landed: tenant filter IS the partition predicate
     os.path.join("operators", "scale.py"),        # write_partitioned readback
@@ -177,10 +178,10 @@ def test_every_generation_publish_is_fenced():
     """A generation publish always carries a lease: ``_flip_layout``'s
     ``fence`` and ``_publish_store_generation``'s ``lease`` are required,
     and no store derives an optional fence from an optional lease."""
-    ix = os.path.join("operators", "indexing.py")
-    assert "fence" not in _defaulted_params(_function_def(ix, "_flip_layout"))
+    lsm = os.path.join("operators", "lsm.py")
+    assert "fence" not in _defaulted_params(_function_def(lsm, "_flip_layout"))
     assert "lease" not in _defaulted_params(
-        _function_def(ix, "_publish_store_generation")
+        _function_def(lsm, "_publish_store_generation")
     )
     offenders = [
         os.path.relpath(p, PKG)
@@ -193,7 +194,9 @@ def test_every_generation_publish_is_fenced():
 #: each LSM store's read methods: every one takes one ``snap`` (a
 #: ``StoreSnapshot``) in place of the gen/meta/as_of it used to thread
 STORE_READS = {
-    (os.path.join("operators", "indexing.py"), "PostingStore"): {"read", "read_doclens", "stats"},
+    (os.path.join("operators", "indexing.py"), "PostingStore"): {
+        "read", "read_doclens", "stats", "substring_search",
+    },
     (os.path.join("operators", "indexing.py"), "IvfStore"): {
         "read_assignments", "probe_ids_exact", "_probed_scan",
     },
@@ -215,22 +218,30 @@ def _names_used(fn: ast.FunctionDef) -> set[str]:
     }
 
 
+#: the shared base every LSM store class derives from
+LSM_BASE = (os.path.join("operators", "lsm.py"), "LsmStore")
+
+
+def _class_methods(rel: str, cls: str) -> dict[str, ast.FunctionDef]:
+    tree = ast.parse(open(os.path.join(PKG, rel)).read())
+    klass = next(
+        n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == cls
+    )
+    return {n.name: n for n in klass.body if isinstance(n, ast.FunctionDef)}
+
+
 def test_store_reads_take_one_snapshot():
     """Each store resolves its generation in ``snapshot()`` only: no
     other store method calls ``_layout_gen``, and no read method takes
     ``gen=``/``meta=``/``as_of=`` or resolves a current-generation path
     itself — it reads everything from the snapshot it takes."""
-    for (rel, cls), reads in STORE_READS.items():
-        tree = ast.parse(open(os.path.join(PKG, rel)).read())
-        klass = next(
-            n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == cls
-        )
-        methods = {n.name: n for n in klass.body if isinstance(n, ast.FunctionDef)}
-        assert reads <= set(methods), (cls, reads - set(methods))
-        assert "snapshot" in methods, cls
-        for name, fn in methods.items():
+    for rel, cls in [LSM_BASE, *STORE_READS]:
+        for name, fn in _class_methods(rel, cls).items():
             if name != "snapshot":
                 assert "_layout_gen" not in _names_used(fn), f"{cls}.{name}"
+    for (rel, cls), reads in STORE_READS.items():
+        methods = _class_methods(rel, cls)
+        assert reads <= set(methods), (cls, reads - set(methods))
         for name in reads:
             fn = methods[name]
             params = {a.arg for a in fn.args.args + fn.args.kwonlyargs}
@@ -238,3 +249,44 @@ def test_store_reads_take_one_snapshot():
             assert not params & {"gen", "meta", "as_of"}, f"{cls}.{name}: {params}"
             used = _names_used(fn) & CURRENT_LAYOUT_NAMES
             assert not used, f"{cls}.{name} resolves {used} itself"
+
+
+#: what every LSM store shares, written once on :class:`LsmStore`: the
+#: meta reader, the snapshot, the fenced meta replace and generation
+#: publish, the sentinel path, the compaction policy and the commit
+#: skeleton
+LSM_SHARED = {
+    "_meta", "snapshot", "_commit_meta", "_publish_generation", "_sentinel",
+    "should_compact", "_apply_batch",
+}
+
+
+def test_lsm_stores_share_one_shell():
+    """The three stores derive from ``LsmStore`` and define none of its
+    shared methods again; the orphan sweep, the staged append and the
+    crash seam are called only from ``lsm.py`` (the one commit
+    skeleton); and ``rollup_store.py`` takes no private name from
+    ``indexing``."""
+    assert LSM_SHARED <= set(_class_methods(*LSM_BASE))
+    for rel, cls in STORE_READS:
+        tree = ast.parse(open(os.path.join(PKG, rel)).read())
+        klass = next(
+            n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == cls
+        )
+        assert [b.id for b in klass.bases if isinstance(b, ast.Name)] == ["LsmStore"], cls
+        again = LSM_SHARED & set(_class_methods(rel, cls))
+        assert not again, f"{cls} redefines {again}"
+    lsm = [os.path.join("operators", "lsm.py")]
+    for name in ("_sweep_promoted_orphans", "_staged_append", "_test_crash_point"):
+        assert _word_hits(name) == lsm, name
+    rollup = ast.parse(open(os.path.join(PKG, "streaming", "rollup_store.py")).read())
+    private = [
+        a.name
+        for n in ast.walk(rollup)
+        if isinstance(n, ast.ImportFrom)
+        and n.module == "car_etl_spark.operators.indexing"
+        for a in n.names
+        if a.name.startswith("_")
+    ]
+    assert not private, private
+    assert "_IX" not in _names_used(rollup)

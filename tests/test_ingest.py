@@ -216,6 +216,48 @@ def test_landing_zorder_secondary_column_skipping(spark, tmp_path):
     assert "PartitionFilters" in plan and "PartitionFilters: []" not in plan
 
 
+def test_landing_zorder_is_deterministic(spark, tmp_path):
+    """Landing the same frame twice writes the same z-ordered files:
+    per directory, the files' ``__z`` ranges (the Morton key recomputed
+    from each file's rows) are identical — the staging cuts exact runs
+    from cell counts instead of range bounds sampled from the rows."""
+    from datetime import date
+
+    from car_etl_spark.operators.layout import equidepth_edges, zorder_key
+
+    cols = ["doc_id", "file_size"]
+    df = (
+        spark.range(4000)
+        .select(
+            F.col("id").alias("doc_id"),
+            F.concat(F.lit("t"), (F.col("id") % 2).cast("string")).alias("tenant_id"),
+            F.lit(date(2026, 2, 1)).alias("ingest_date"),
+            ((F.col("id") * 37) % 1000).alias("file_size"),
+        )
+        .repartition(4)
+    )
+    edges = equidepth_edges(df, cols, 6)
+
+    def z_ranges(path):
+        out = {}
+        for root, _dirs, files in os.walk(path):
+            for f in files:
+                if f.endswith(".parquet"):
+                    z = spark.read.parquet(os.path.join(root, f)).select(
+                        zorder_key(edges, 6).alias("z")
+                    )
+                    lo, hi = z.agg(F.min("z"), F.max("z")).first()
+                    out.setdefault(os.path.relpath(root, path), []).append((lo, hi))
+        return {d: sorted(r) for d, r in out.items()}
+
+    first, second = str(tmp_path / "first"), str(tmp_path / "second")
+    for path in (first, second):
+        I.land_documents(df, path, zorder_cols=tuple(cols), num_files=4)
+    got = z_ranges(first)
+    assert sum(len(r) for r in got.values()) > len(got)  # several files per dir
+    assert got == z_ranges(second)
+
+
 def test_optimize_landing_compacts_atomically(spark, tmp_path):
     """Small-file compaction: multi-batch appends leave many files per
     partition; optimize_landing rewrites qualifying partitions to

@@ -29,6 +29,7 @@ import time
 import pytest
 
 from car_etl_spark.operators import indexing as IX
+from car_etl_spark.operators import lsm
 from tests.test_indexing import DOCS_B1, DOCS_V0, _docs_df, _live_postings
 
 
@@ -48,11 +49,11 @@ def _ptr(path: str) -> dict:
 
 def test_second_maintainer_refuses_while_lease_held(spark, tmp_path):
     store = _built_store(spark, tmp_path)
-    with IX.maintenance_lease(store.path):
-        with pytest.raises(IX.MaintenanceLeaseHeldError):
-            IX.acquire_maintenance_lease(store.path)
+    with lsm.maintenance_lease(store.path):
+        with pytest.raises(lsm.MaintenanceLeaseHeldError):
+            lsm.acquire_maintenance_lease(store.path)
         # auto-acquiring entry points refuse the same way
-        with pytest.raises(IX.MaintenanceLeaseHeldError):
+        with pytest.raises(lsm.MaintenanceLeaseHeldError):
             store.compact(spark)
     # released: maintenance proceeds
     store.compact(spark)
@@ -65,7 +66,7 @@ def test_racing_compactors_exactly_one_wins(spark, tmp_path):
     store = _built_store(spark, tmp_path)
     store.apply_batch(spark, _docs_df(spark, DOCS_B1), None, batch=1)
     expected = _live_postings(store, spark)
-    g0 = IX._layout_gen(store.path)
+    g0 = lsm._layout_gen(store.path)
 
     results: list = [None, None]
 
@@ -75,7 +76,7 @@ def test_racing_compactors_exactly_one_wins(spark, tmp_path):
             # shape (two processes would each build their own handle)
             IX.PostingStore(store.path).compact(spark)
             results[i] = "published"
-        except IX.MaintenanceLeaseError:
+        except lsm.MaintenanceLeaseError:
             results[i] = "refused"
 
     ts = [threading.Thread(target=run, args=(i,)) for i in range(2)]
@@ -84,7 +85,7 @@ def test_racing_compactors_exactly_one_wins(spark, tmp_path):
     for t in ts:
         t.join()
     assert sorted(results) == ["published", "refused"], results
-    assert IX._layout_gen(store.path) == g0 + 1
+    assert lsm._layout_gen(store.path) == g0 + 1
     assert _live_postings(store, spark) == expected
 
 
@@ -92,15 +93,15 @@ def test_lease_passthrough_scheduler_shape(spark, tmp_path):
     """A scheduler holding ONE lease across apply+compact passes it
     through; a second maintainer stays locked out the whole time."""
     store = _built_store(spark, tmp_path)
-    with IX.maintenance_lease(store.path) as lease:
+    with lsm.maintenance_lease(store.path) as lease:
         store.apply_batch(
             spark, _docs_df(spark, DOCS_B1), None, batch=1, lease=lease
         )
-        with pytest.raises(IX.MaintenanceLeaseHeldError):
-            IX.acquire_maintenance_lease(store.path)
+        with pytest.raises(lsm.MaintenanceLeaseHeldError):
+            lsm.acquire_maintenance_lease(store.path)
         store.compact(spark, lease=lease)
     # the lease file is gone after release
-    assert not os.path.exists(os.path.join(store.path, IX._LEASE_FILE))
+    assert not os.path.exists(os.path.join(store.path, lsm._LEASE_FILE))
 
 
 # -- fencing ------------------------------------------------------------
@@ -111,21 +112,21 @@ def test_expired_lease_is_stolen_and_old_owner_is_fenced(spark, tmp_path):
     TTL, B steals the lease and publishes; A's publish then refuses
     (fenced) and B's generation survives untouched."""
     store = _built_store(spark, tmp_path)
-    a = IX.acquire_maintenance_lease(store.path, ttl_sec=0.05)
+    a = lsm.acquire_maintenance_lease(store.path, ttl_sec=0.05)
     time.sleep(0.1)  # A stalls past its TTL
-    b = IX.acquire_maintenance_lease(store.path, ttl_sec=600)
+    b = lsm.acquire_maintenance_lease(store.path, ttl_sec=600)
     assert b.fence > a.fence
 
     store.compact(spark, lease=b)  # B publishes
-    gen_b = IX._layout_gen(store.path)
+    gen_b = lsm._layout_gen(store.path)
     assert _ptr(store.path)["fence"] == b.fence
 
     # A wakes up and tries to publish its stale work
-    with pytest.raises(IX.MaintenanceFencedError):
+    with pytest.raises(lsm.MaintenanceFencedError):
         store.compact(spark, lease=a)
-    assert IX._layout_gen(store.path) == gen_b
+    assert lsm._layout_gen(store.path) == gen_b
     assert _ptr(store.path)["fence"] == b.fence
-    IX.release_maintenance_lease(b)
+    lsm.release_maintenance_lease(b)
 
 
 def test_fence_monotone_across_publishes(spark, tmp_path):
@@ -143,11 +144,11 @@ def test_stale_flip_refused_at_pointer_level(tmp_path):
     pointer past a newer maintainer's stamp."""
     root = str(tmp_path / "s")
     os.makedirs(root)
-    IX._flip_layout(root, 1, fence=5)
-    with pytest.raises(IX.MaintenanceFencedError):
-        IX._flip_layout(root, 2, fence=4)
+    lsm._flip_layout(root, 1, fence=5)
+    with pytest.raises(lsm.MaintenanceFencedError):
+        lsm._flip_layout(root, 2, fence=4)
     assert _ptr(root) == {"gen": 1, "fence": 5}
-    IX._flip_layout(root, 2, fence=6)
+    lsm._flip_layout(root, 2, fence=6)
     assert _ptr(root) == {"gen": 2, "fence": 6}
 
 
@@ -155,19 +156,19 @@ def test_fence_check_without_active_lease_raises(tmp_path):
     """A commit point outside ``@_with_maintenance_lease`` has nothing to
     fence with: the check raises instead of passing silently."""
     store = IX.PostingStore(str(tmp_path / "s"))
-    with pytest.raises(IX.MaintenanceLeaseError, match="no maintenance lease"):
-        IX._fence_check(store)
+    with pytest.raises(lsm.MaintenanceLeaseError, match="no maintenance lease"):
+        lsm._fence_check(store)
 
 
 def test_release_never_removes_a_stolen_lease(tmp_path):
     root = str(tmp_path / "s")
-    a = IX.acquire_maintenance_lease(root, ttl_sec=0.05)
+    a = lsm.acquire_maintenance_lease(root, ttl_sec=0.05)
     time.sleep(0.1)
-    b = IX.acquire_maintenance_lease(root, ttl_sec=600)
-    IX.release_maintenance_lease(a)  # must be a no-op: B owns it now
-    cur = IX._read_json_file(os.path.join(root, IX._LEASE_FILE))
+    b = lsm.acquire_maintenance_lease(root, ttl_sec=600)
+    lsm.release_maintenance_lease(a)  # must be a no-op: B owns it now
+    cur = lsm._read_json_file(os.path.join(root, lsm._LEASE_FILE))
     assert cur.get("owner") == b.owner
-    IX.release_maintenance_lease(b)
+    lsm.release_maintenance_lease(b)
 
 
 # -- pin-aware generation retention -------------------------------------
@@ -181,7 +182,7 @@ def test_pinned_read_survives_two_compact_cycles(spark, tmp_path):
     store = _built_store(spark, tmp_path)
     snapshot = _live_postings(store, spark)
 
-    with IX.pinned_generation(store.path) as g:
+    with lsm.pinned_generation(store.path) as g:
         straggler = store.read(spark).select(
             "doc_id", "lang", "raw_term", "term", "weight", "tf", "term_bucket"
         )
@@ -198,9 +199,9 @@ def test_pinned_read_survives_two_compact_cycles(spark, tmp_path):
 
 def test_stale_pin_expires_and_layout_is_reclaimed(spark, tmp_path):
     store = _built_store(spark, tmp_path)
-    g = IX._layout_gen(store.path)
-    pin = IX.pin_generation(store.path, g)
-    old = time.time() - IX.PIN_TTL_SEC - 60
+    g = lsm._layout_gen(store.path)
+    pin = lsm.pin_generation(store.path, g)
+    old = time.time() - lsm.PIN_TTL_SEC - 60
     os.utime(pin, (old, old))  # crashed reader: pin went stale
     store.compact(spark)
     store.compact(spark)
@@ -210,14 +211,14 @@ def test_stale_pin_expires_and_layout_is_reclaimed(spark, tmp_path):
 
 def test_pin_blocks_only_its_generation(spark, tmp_path):
     store = _built_store(spark, tmp_path)
-    g = IX._layout_gen(store.path)
+    g = lsm._layout_gen(store.path)
     store.compact(spark)  # g+1
-    pin = IX.pin_generation(store.path, g + 1)
+    pin = lsm.pin_generation(store.path, g + 1)
     store.compact(spark)  # g+2: g eligible + unpinned -> swept
     store.compact(spark)  # g+3: g+1 eligible but pinned -> kept
     assert not os.path.isdir(os.path.join(store.path, f"layout-{g}"))
     assert os.path.isdir(os.path.join(store.path, f"layout-{g + 1}"))
-    IX.unpin_generation(pin)
+    lsm.unpin_generation(pin)
     store.compact(spark)
     assert not os.path.isdir(os.path.join(store.path, f"layout-{g + 1}"))
 
@@ -233,8 +234,8 @@ def test_rollup_store_lease_and_fence(spark, tmp_path):
     ).withColumn("ts", F_to_ts("ts"))
     store = RollupStore(str(tmp_path / "r"))
     store.build(events)
-    with IX.maintenance_lease(store.path):
-        with pytest.raises(IX.MaintenanceLeaseHeldError):
+    with lsm.maintenance_lease(store.path):
+        with pytest.raises(lsm.MaintenanceLeaseHeldError):
             store.compact(spark)
     store.compact(spark)
     assert _ptr(store.path)["fence"] > 0
@@ -287,7 +288,7 @@ def test_concurrent_ensure_single_builder(spark, tmp_path, monkeypatch):
         t.join()
     assert all(r[0] == "ok" for r in results), results
     path = results[0][1]
-    assert IX._layout_gen(path) == 1  # built exactly once
+    assert lsm._layout_gen(path) == 1  # built exactly once
     store = IX.PostingStore(path)
     n = store.read(spark).select("doc_id").distinct().count()
     assert n == 40
@@ -317,11 +318,11 @@ def test_ensure_tenant_ivf_index_waits_for_held_lease(spark, tmp_path, monkeypat
     load_tables(spark, str(corpus), ("embeddings",))
     # the store path ensure_tenant_ivf_index content-addresses
     n_cent = IX.derive_num_centroids(parquet_rowcount(str(corpus), "embeddings"))
-    digest = IX._source_digest(
+    digest = lsm._source_digest(
         "ivf", IX.IVF_VERSION, str(corpus / "embeddings.parquet"),
         f"tenant2|c{n_cent}|r2|flabel",
     )
-    path = os.path.join(IX.index_root(), f"ivf-{digest}")
+    path = os.path.join(lsm.index_root(), f"ivf-{digest}")
     result: list = []
 
     def run() -> None:
@@ -330,7 +331,7 @@ def test_ensure_tenant_ivf_index_waits_for_held_lease(spark, tmp_path, monkeypat
         except BaseException as e:
             result.append(("err", f"{type(e).__name__}: {e}"))
 
-    with IX.maintenance_lease(path):
+    with lsm.maintenance_lease(path):
         t = threading.Thread(target=run)
         t.start()
         time.sleep(1.0)
@@ -340,8 +341,8 @@ def test_ensure_tenant_ivf_index_waits_for_held_lease(spark, tmp_path, monkeypat
     assert result and result[0][0] == "ok", result
     store = result[0][1]
     assert store.path == path
-    assert IX._existing_generations(path) == [1]
-    assert IX._layout_gen(path) == 1
+    assert lsm._existing_generations(path) == [1]
+    assert lsm._layout_gen(path) == 1
 
 
 def test_build_or_wait_retakes_after_crashed_builder(tmp_path):
@@ -349,8 +350,8 @@ def test_build_or_wait_retakes_after_crashed_builder(tmp_path):
     TTL expires the waiting ensure re-takes the build itself."""
     root = str(tmp_path / "s")
     # crashed builder: lease exists (short TTL), store never ready
-    dead = IX.acquire_maintenance_lease(root, ttl_sec=0.2)
-    assert os.path.exists(os.path.join(root, IX._LEASE_FILE))
+    dead = lsm.acquire_maintenance_lease(root, ttl_sec=0.2)
+    assert os.path.exists(os.path.join(root, lsm._LEASE_FILE))
     built = []
 
     def build(lease):
@@ -360,7 +361,7 @@ def test_build_or_wait_retakes_after_crashed_builder(tmp_path):
         built.append(1)
 
     time.sleep(0.25)  # let the crashed builder's TTL lapse
-    IX.build_or_wait(build, lambda: bool(built), root, timeout_sec=10)
+    lsm.build_or_wait(build, lambda: bool(built), root, timeout_sec=10)
     assert built == [1]
 
 
@@ -370,10 +371,10 @@ def test_stale_applier_fenced_at_commit_point(spark, tmp_path):
     superseded generation, and the root-level sentinel would mark the
     batch applied on a store that never received it."""
     store = _built_store(spark, tmp_path)
-    a = IX.acquire_maintenance_lease(store.path, ttl_sec=0.05)
+    a = lsm.acquire_maintenance_lease(store.path, ttl_sec=0.05)
     time.sleep(0.1)
-    b = IX.acquire_maintenance_lease(store.path)  # steal
-    with pytest.raises(IX.MaintenanceFencedError):
+    b = lsm.acquire_maintenance_lease(store.path)  # steal
+    with pytest.raises(lsm.MaintenanceFencedError):
         store.apply_batch(spark, _docs_df(spark, DOCS_B1), None, batch=1, lease=a)
     # the commit never landed: no sentinel, no applied_through advance
     assert not os.path.exists(store._sentinel(1))
@@ -383,7 +384,7 @@ def test_stale_applier_fenced_at_commit_point(spark, tmp_path):
         spark, _docs_df(spark, DOCS_B1), None, batch=1, lease=b
     )
     assert os.path.exists(store._sentinel(1))
-    IX.release_maintenance_lease(b)
+    lsm.release_maintenance_lease(b)
 
 
 def test_heartbeat_keeps_live_holder_from_looking_expired(tmp_path):
@@ -393,41 +394,41 @@ def test_heartbeat_keeps_live_holder_from_looking_expired(tmp_path):
     0.3 s TTL flaked under full-suite CPU load, and exposed that the
     heartbeat's 1 s minimum period exceeded sub-3 s TTLs outright.)"""
     root = str(tmp_path / "s")
-    lease = IX.acquire_maintenance_lease(root, ttl_sec=1.5)
-    hb = IX._LeaseHeartbeat(lease, ttl_sec=1.5)
+    lease = lsm.acquire_maintenance_lease(root, ttl_sec=1.5)
+    hb = lsm._LeaseHeartbeat(lease, ttl_sec=1.5)
     hb.start()
     try:
         deadline = time.time() + 4.0  # several TTLs elapse
         while time.time() < deadline:
-            with pytest.raises(IX.MaintenanceLeaseHeldError):
-                IX.acquire_maintenance_lease(root)
+            with pytest.raises(lsm.MaintenanceLeaseHeldError):
+                lsm.acquire_maintenance_lease(root)
             time.sleep(0.25)
     finally:
         hb.stop()
         hb.join()
-        IX.release_maintenance_lease(lease)
+        lsm.release_maintenance_lease(lease)
 
 
 def test_renew_refuses_after_steal(tmp_path):
     root = str(tmp_path / "s")
-    a = IX.acquire_maintenance_lease(root, ttl_sec=0.05)
+    a = lsm.acquire_maintenance_lease(root, ttl_sec=0.05)
     time.sleep(0.1)
-    b = IX.acquire_maintenance_lease(root)
-    assert not IX.renew_maintenance_lease(a)  # stolen: heartbeat stops
-    assert IX.renew_maintenance_lease(b)
-    IX.release_maintenance_lease(b)
+    b = lsm.acquire_maintenance_lease(root)
+    assert not lsm.renew_maintenance_lease(a)  # stolen: heartbeat stops
+    assert lsm.renew_maintenance_lease(b)
+    lsm.release_maintenance_lease(b)
 
 
 def test_pin_autorefresh_outlives_stale_ttl(tmp_path, monkeypatch):
     """pinned_generation's refresh thread keeps the pin fresh, so a
     scan longer than PIN_TTL_SEC is not reaped as a crashed reader."""
-    monkeypatch.setattr(IX, "PIN_TTL_SEC", 0.6)
+    monkeypatch.setattr(lsm, "PIN_TTL_SEC", 0.6)
     root = str(tmp_path / "s")
     os.makedirs(root)
-    with IX.pinned_generation(root, gen=3):
+    with lsm.pinned_generation(root, gen=3):
         time.sleep(1.5)  # well past the stale TTL
-        assert IX._pinned_generations(root) == {3}
-    assert IX._pinned_generations(root) == set()
+        assert lsm._pinned_generations(root) == {3}
+    assert lsm._pinned_generations(root) == set()
 
 
 # -- round 11: staged appends, post-flip verify, renew/release TOCTOU ----
@@ -442,21 +443,21 @@ def test_fenced_applier_leaves_nothing_visible(spark, tmp_path):
     every append and promotes after the fence check, so a fenced
     applier leaves the live tree byte-untouched."""
     store = _built_store(spark, tmp_path)
-    a = IX.acquire_maintenance_lease(store.path, ttl_sec=0.05)
+    a = lsm.acquire_maintenance_lease(store.path, ttl_sec=0.05)
     time.sleep(0.1)
-    b = IX.acquire_maintenance_lease(store.path)  # steal
+    b = lsm.acquire_maintenance_lease(store.path)  # steal
     stale = [(2, "en", "poisonterm from the fenced applier")]
-    with pytest.raises(IX.MaintenanceFencedError):
+    with pytest.raises(lsm.MaintenanceFencedError):
         store.apply_batch(spark, _docs_df(spark, stale), None, batch=1, lease=a)
-    assert not IX._dir_has_parquet(store.delta_dir)
-    assert not IX._dir_has_parquet(store.doclen_delta)
-    assert not IX._dir_has_parquet(store.tomb_dir)
+    assert not lsm._dir_has_parquet(store.delta_dir)
+    assert not lsm._dir_has_parquet(store.doclen_delta)
+    assert not lsm._dir_has_parquet(store.tomb_dir)
     # new owner commits DIFFERENT content under the SAME batch id: only
     # its content may ever serve
     assert store.apply_batch(spark, _docs_df(spark, DOCS_B1), None, batch=1, lease=b)
     terms = {r[0] for r in store.read(spark).select("raw_term").collect()}
     assert "checkpoint" in terms and "poisonterm" not in terms
-    IX.release_maintenance_lease(b)
+    lsm.release_maintenance_lease(b)
 
 
 def test_ivf_fenced_applier_leaves_nothing_visible(spark, tmp_path):
@@ -468,14 +469,14 @@ def test_ivf_fenced_applier_leaves_nothing_visible(spark, tmp_path):
     store = IX.IvfStore(str(tmp_path / "ivf"))
     store.build(emb, num_centroids=4, refine_iterations=1)
     meta_before = store.meta()
-    a = IX.acquire_maintenance_lease(store.path, ttl_sec=0.05)
+    a = lsm.acquire_maintenance_lease(store.path, ttl_sec=0.05)
     time.sleep(0.1)
-    b = IX.acquire_maintenance_lease(store.path)  # steal
+    b = lsm.acquire_maintenance_lease(store.path)  # steal
     up = emb.filter(F.col("vec_id") < 3)
-    with pytest.raises(IX.MaintenanceFencedError):
+    with pytest.raises(lsm.MaintenanceFencedError):
         store.apply_batch(spark, up, None, batch=1, lease=a)
-    assert not IX._dir_has_parquet(store.delta_dir)
-    assert not IX._dir_has_parquet(store.tomb_dir)
+    assert not lsm._dir_has_parquet(store.delta_dir)
+    assert not lsm._dir_has_parquet(store.tomb_dir)
     # the stale applier's PESSIMISTIC meta write was fenced too — the
     # live meta still has no batch-1 entry and no rolled-back content
     m = store.meta()
@@ -485,7 +486,7 @@ def test_ivf_fenced_applier_leaves_nothing_visible(spark, tmp_path):
     )
     assert store.apply_batch(spark, up, None, batch=1, lease=b)
     assert "1" in store.meta()["batches"]
-    IX.release_maintenance_lease(b)
+    lsm.release_maintenance_lease(b)
 
 
 def test_rollup_fenced_applier_leaves_no_delta(spark, tmp_path):
@@ -497,15 +498,15 @@ def test_rollup_fenced_applier_leaves_no_delta(spark, tmp_path):
     ).withColumn("ts", F_to_ts("ts"))
     store = RollupStore(str(tmp_path / "r"))
     store.build(events)
-    a = IX.acquire_maintenance_lease(store.path, ttl_sec=0.05)
+    a = lsm.acquire_maintenance_lease(store.path, ttl_sec=0.05)
     time.sleep(0.1)
-    b = IX.acquire_maintenance_lease(store.path)  # steal
-    with pytest.raises(IX.MaintenanceFencedError):
+    b = lsm.acquire_maintenance_lease(store.path)  # steal
+    with pytest.raises(lsm.MaintenanceFencedError):
         store.apply_batch(spark, events, batch=1, lease=a)
-    assert not IX._dir_has_parquet(store.delta_dir)
+    assert not lsm._dir_has_parquet(store.delta_dir)
     assert not os.path.exists(store._sentinel(1))
     assert store.apply_batch(spark, events, batch=1, lease=b)
-    IX.release_maintenance_lease(b)
+    lsm.release_maintenance_lease(b)
 
 
 def test_publish_detects_steal_between_check_and_flip(tmp_path, monkeypatch):
@@ -516,22 +517,22 @@ def test_publish_detects_steal_between_check_and_flip(tmp_path, monkeypatch):
     believing it published."""
     root = str(tmp_path / "s")
     os.makedirs(root)
-    a = IX.acquire_maintenance_lease(root, ttl_sec=0.05)
+    a = lsm.acquire_maintenance_lease(root, ttl_sec=0.05)
     time.sleep(0.1)  # expired but uncontested: a proceeds to publish
     stolen = {}
 
     def steal_now():
-        monkeypatch.setattr(IX, "_test_pre_flip_delay", None)  # fire once
-        stolen["lease"] = IX.acquire_maintenance_lease(root)
+        monkeypatch.setattr(lsm, "_test_pre_flip_delay", None)  # fire once
+        stolen["lease"] = lsm.acquire_maintenance_lease(root)
 
-    monkeypatch.setattr(IX, "_test_pre_flip_delay", steal_now)
-    with pytest.raises(IX.MaintenanceFencedError):
-        IX._publish_store_generation(root, 1, lease=a)
+    monkeypatch.setattr(lsm, "_test_pre_flip_delay", steal_now)
+    with pytest.raises(lsm.MaintenanceFencedError):
+        lsm._publish_store_generation(root, 1, lease=a)
     # the loser KNOWS; the new owner's next publish supersedes the flip
-    IX._publish_store_generation(root, 2, lease=stolen["lease"])
+    lsm._publish_store_generation(root, 2, lease=stolen["lease"])
     assert _ptr(root)["gen"] == 2
     assert _ptr(root)["fence"] == stolen["lease"].fence
-    IX.release_maintenance_lease(stolen["lease"])
+    lsm.release_maintenance_lease(stolen["lease"])
 
 
 def test_renew_self_reverts_accidental_clobber(tmp_path):
@@ -541,20 +542,20 @@ def test_renew_self_reverts_accidental_clobber(tmp_path):
     read-back detects the clobber, removes the stale file, and reports
     the lease lost."""
     root = str(tmp_path / "s")
-    a = IX.acquire_maintenance_lease(root, ttl_sec=0.05)
+    a = lsm.acquire_maintenance_lease(root, ttl_sec=0.05)
     time.sleep(0.1)
-    b = IX.acquire_maintenance_lease(root)  # steal: counter is now b's
+    b = lsm.acquire_maintenance_lease(root)  # steal: counter is now b's
     # simulate a's replace having won the race: put a's content back
     # (this is exactly the on-disk state after the TOCTOU clobber)
-    with open(os.path.join(root, IX._LEASE_FILE), "w") as f:
+    with open(os.path.join(root, lsm._LEASE_FILE), "w") as f:
         json.dump(
             {"owner": a.owner, "fence": a.fence, "expires": time.time() + 600}, f
         )
-    assert not IX.renew_maintenance_lease(a)  # detected: lease reported lost
+    assert not lsm.renew_maintenance_lease(a)  # detected: lease reported lost
     # the clobbered file was removed, so the rightful owner (or anyone)
     # can re-establish a lease immediately instead of waiting out a TTL
-    assert not os.path.exists(os.path.join(root, IX._LEASE_FILE))
-    IX.release_maintenance_lease(b)
+    assert not os.path.exists(os.path.join(root, lsm._LEASE_FILE))
+    lsm.release_maintenance_lease(b)
 
 
 def test_release_restores_captured_stolen_lease(tmp_path, monkeypatch):
@@ -562,25 +563,25 @@ def test_release_restores_captured_stolen_lease(tmp_path, monkeypatch):
     steal lands before the rename, the grave holds the NEW owner's
     lease — it must be put back, not deleted."""
     root = str(tmp_path / "s")
-    a = IX.acquire_maintenance_lease(root, ttl_sec=0.05)
+    a = lsm.acquire_maintenance_lease(root, ttl_sec=0.05)
     time.sleep(0.1)
-    b = IX.acquire_maintenance_lease(root)  # steal
+    b = lsm.acquire_maintenance_lease(root)  # steal
     # lie ONCE to release's pre-check so it proceeds to the capture
     # (deterministically reproducing check-passes-then-steal-lands)
-    real = IX._read_json_file
+    real = lsm._read_json_file
     lied = {}
 
     def lie_once(path):
-        if path.endswith(IX._LEASE_FILE) and not lied:
+        if path.endswith(lsm._LEASE_FILE) and not lied:
             lied["done"] = True
             return {"owner": a.owner, "fence": a.fence}
         return real(path)
 
-    monkeypatch.setattr(IX, "_read_json_file", lie_once)
-    IX.release_maintenance_lease(a)
-    cur = IX._read_json_file(os.path.join(root, IX._LEASE_FILE))
+    monkeypatch.setattr(lsm, "_read_json_file", lie_once)
+    lsm.release_maintenance_lease(a)
+    cur = lsm._read_json_file(os.path.join(root, lsm._LEASE_FILE))
     assert cur.get("owner") == b.owner and int(cur.get("fence")) == b.fence
-    IX.release_maintenance_lease(b)
+    lsm.release_maintenance_lease(b)
 
 
 def test_lease_carries_acquired_ttl(tmp_path):
@@ -588,28 +589,28 @@ def test_lease_carries_acquired_ttl(tmp_path):
     silently stretch back to the 600 s default) and heartbeat at a
     period derived from it."""
     root = str(tmp_path / "s")
-    lease = IX.acquire_maintenance_lease(root, ttl_sec=30.0)
+    lease = lsm.acquire_maintenance_lease(root, ttl_sec=30.0)
     assert lease.ttl_sec == 30.0
-    assert IX.renew_maintenance_lease(lease)  # default = acquired TTL
-    cur = IX._read_json_file(os.path.join(root, IX._LEASE_FILE))
+    assert lsm.renew_maintenance_lease(lease)  # default = acquired TTL
+    cur = lsm._read_json_file(os.path.join(root, lsm._LEASE_FILE))
     assert cur["expires"] - time.time() <= 31.0
-    hb = IX._LeaseHeartbeat(lease)
+    hb = lsm._LeaseHeartbeat(lease)
     assert hb.ttl_sec == 30.0  # period 10 s < TTL: never expires mid-beat
-    IX.release_maintenance_lease(lease)
+    lsm.release_maintenance_lease(lease)
 
 
 def test_staging_dirs_invisible_and_swept(tmp_path):
     """In-flight/crashed staging dirs are hidden from every read-side
     probe and reclaimed by the next apply's sweep once stale."""
     live = str(tmp_path / "delta")
-    stale = os.path.join(live, f"{IX._STAGING_PREFIX}deadbeef")
+    stale = os.path.join(live, f"{lsm._STAGING_PREFIX}deadbeef")
     os.makedirs(stale)
     with open(os.path.join(stale, "part-0.parquet"), "w") as f:
         f.write("x")
-    assert not IX._dir_has_parquet(live)  # hidden at every level
-    old = time.time() - 2 * IX.MAINT_LEASE_TTL_SEC - 60
+    assert not lsm._dir_has_parquet(live)  # hidden at every level
+    old = time.time() - 2 * lsm.MAINT_LEASE_TTL_SEC - 60
     os.utime(stale, (old, old))
-    IX._sweep_stale_staging(live)
+    lsm._sweep_stale_staging(live)
     assert not os.path.isdir(stale)
 
 
@@ -622,36 +623,36 @@ def test_posting_retracts_promoted_files_when_stats_commit_fenced(
     promoted (still invisible — the bound never advanced), leaving the
     live tree clean for the new owner's different-content commit."""
     store = _built_store(spark, tmp_path)
-    a = IX.acquire_maintenance_lease(store.path, ttl_sec=600)
+    a = lsm.acquire_maintenance_lease(store.path, ttl_sec=600)
     real_refresh = type(store)._refresh_stats
 
     def steal_then_refresh(self, *args, **kwargs):
         # the steal lands while the stats job runs: force-expire and
         # replace the lease, exactly the mid-job TTL-steal interleaving
-        lease_path = os.path.join(self.path, IX._LEASE_FILE)
-        cur = IX._read_json_file(lease_path)
+        lease_path = os.path.join(self.path, lsm._LEASE_FILE)
+        cur = lsm._read_json_file(lease_path)
         cur["expires"] = 0.0
         with open(lease_path, "w") as f:
             json.dump(cur, f)
-        steal_then_refresh.b = IX.acquire_maintenance_lease(self.path)
+        steal_then_refresh.b = lsm.acquire_maintenance_lease(self.path)
         return real_refresh(self, *args, **kwargs)
 
     monkeypatch.setattr(type(store), "_refresh_stats", steal_then_refresh)
     stale = [(2, "en", "poisonterm promoted then retracted")]
-    with pytest.raises(IX.MaintenanceFencedError):
+    with pytest.raises(lsm.MaintenanceFencedError):
         store.apply_batch(spark, _docs_df(spark, stale), None, batch=1, lease=a)
     monkeypatch.setattr(type(store), "_refresh_stats", real_refresh)
     # the retract removed every promoted file: nothing visible anywhere
-    assert not IX._dir_has_parquet(store.delta_dir)
-    assert not IX._dir_has_parquet(store.doclen_delta)
-    assert not IX._dir_has_parquet(store.tomb_dir)
+    assert not lsm._dir_has_parquet(store.delta_dir)
+    assert not lsm._dir_has_parquet(store.doclen_delta)
+    assert not lsm._dir_has_parquet(store.tomb_dir)
     assert not os.path.exists(store._sentinel(1))
     # the new owner commits different content under the same batch id
     b = steal_then_refresh.b
     assert store.apply_batch(spark, _docs_df(spark, DOCS_B1), None, batch=1, lease=b)
     terms = {r[0] for r in store.read(spark).select("raw_term").collect()}
     assert "checkpoint" in terms and "poisonterm" not in terms
-    IX.release_maintenance_lease(b)
+    lsm.release_maintenance_lease(b)
 
 
 def test_ivf_phantom_pessimistic_meta_swept_at_compact(spark, tmp_path):
@@ -675,7 +676,7 @@ def test_ivf_phantom_pessimistic_meta_swept_at_compact(spark, tmp_path):
 
     # steal the lease AFTER the pessimistic write lands but BEFORE the
     # commit fence: wrap the store's first meta write to expire + steal
-    a = IX.acquire_maintenance_lease(store.path, ttl_sec=0.05)
+    a = lsm.acquire_maintenance_lease(store.path, ttl_sec=0.05)
     real_write = store._write_meta
     stolen = {}
 
@@ -683,11 +684,11 @@ def test_ivf_phantom_pessimistic_meta_swept_at_compact(spark, tmp_path):
         real_write(m)
         if not stolen:
             time.sleep(0.1)  # let a's TTL lapse so the steal goes through
-            stolen["b"] = IX.acquire_maintenance_lease(store.path)
+            stolen["b"] = lsm.acquire_maintenance_lease(store.path)
 
     store._write_meta = steal_after_first_write
     up = emb.filter(F.col("vec_id") < 3)
-    with pytest.raises(IX.MaintenanceFencedError):
+    with pytest.raises(lsm.MaintenanceFencedError):
         store.apply_batch(spark, up, None, batch=1, lease=a)
     store._write_meta = real_write
 
@@ -696,8 +697,8 @@ def test_ivf_phantom_pessimistic_meta_swept_at_compact(spark, tmp_path):
     m = store.meta()
     assert "1" in (m.get("batches") or {}), "pessimistic entry missing"
     assert m["batches"]["1"]["counts"] == {}
-    assert not IX._dir_has_parquet(store.delta_dir)
-    assert not IX._dir_has_parquet(store.tomb_dir)
+    assert not lsm._dir_has_parquet(store.delta_dir)
+    assert not lsm._dir_has_parquet(store.tomb_dir)
     assert int(m.get("applied_through") or 0) == 0
 
     # safe-direction claim: serving over the phantom stays exactly the
@@ -711,13 +712,58 @@ def test_ivf_phantom_pessimistic_meta_swept_at_compact(spark, tmp_path):
         clean.probe_ids_exact(qvec, k=10)
     )
 
-    IX.release_maintenance_lease(stolen["b"])
+    lsm.release_maintenance_lease(stolen["b"])
     store.compact(spark)
     m2 = store.meta()
     assert "1" not in (m2.get("batches") or {}), "compact must sweep the phantom"
     after = [tuple(r) for r in store.probe_topk(spark, qvec, k=10).collect()]
     assert after == clean_res
     assert store.probe_ids_exact(qvec, k=10) == clean.probe_ids_exact(qvec, k=10)
+
+
+def test_ivf_commit_fenced_after_promote(spark, tmp_path, monkeypatch):
+    """The IVF commit is fenced like the posting store's: a lease steal
+    landing after the batch's files were promoted makes its counts +
+    meta replace refuse, the promoted files are retracted, and
+    ``applied_through`` and the counts stay as they were."""
+    from pyspark.sql import functions as F
+
+    from tests.test_indexing import _clustered_emb
+
+    emb = _clustered_emb(spark)
+    store = IX.IvfStore(str(tmp_path / "ivf"))
+    store.build(emb, num_centroids=4, refine_iterations=1)
+    before = store.meta()
+    a = lsm.acquire_maintenance_lease(store.path, ttl_sec=600)
+    stolen = {}
+
+    def steal_after_promote(step):
+        if step == "promoted":
+            lease_path = os.path.join(store.path, lsm._LEASE_FILE)
+            cur = lsm._read_json_file(lease_path)
+            cur["expires"] = 0.0
+            with open(lease_path, "w") as f:
+                json.dump(cur, f)
+            stolen["b"] = lsm.acquire_maintenance_lease(store.path)
+
+    monkeypatch.setattr(lsm, "_test_crash_point", steal_after_promote)
+    up = emb.filter(F.col("vec_id") < 3)
+    with pytest.raises(lsm.MaintenanceFencedError):
+        store.apply_batch(spark, up, [5], batch=1, lease=a)
+    monkeypatch.setattr(lsm, "_test_crash_point", None)
+    # the promoted delta rows and tombstones were retracted
+    assert not lsm._dir_has_parquet(store.delta_dir)
+    assert not lsm._dir_has_parquet(store.tomb_dir)
+    assert not os.path.exists(store._sentinel(1))
+    m = store.meta()
+    assert m["applied_through"] == before["applied_through"]
+    assert m["counts"] == before["counts"]
+    assert all(not e["counts"] for e in (m.get("batches") or {}).values())
+    # the new owner applies the same batch cleanly
+    b = stolen["b"]
+    assert store.apply_batch(spark, up, [5], batch=1, lease=b)
+    assert store.meta()["applied_through"] == 1
+    lsm.release_maintenance_lease(b)
 
 
 # -- crash-orphan retraction (round 12) ----------------------------------
@@ -734,10 +780,11 @@ def test_ivf_phantom_pessimistic_meta_swept_at_compact(spark, tmp_path):
 
 
 def _crash(monkeypatch):
-    def boom():
-        raise RuntimeError("simulated crash after promote")
+    def boom(step):
+        if step == "promoted":
+            raise RuntimeError("simulated crash after promote")
 
-    monkeypatch.setattr(IX, "_test_post_promote_crash", boom)
+    monkeypatch.setattr(lsm, "_test_crash_point", boom)
 
 
 def test_posting_crash_orphans_swept_before_different_content_commit(
@@ -750,14 +797,14 @@ def test_posting_crash_orphans_swept_before_different_content_commit(
         store.apply_batch(spark, _docs_df(spark, stale), None, batch=1)
     # the crash left promoted orphans in the live tree (batch above the
     # committed bound -> still invisible), and no commit happened
-    assert IX._dir_has_parquet(store.delta_dir)
+    assert lsm._dir_has_parquet(store.delta_dir)
     assert not os.path.exists(store._sentinel(1))
     terms = {r[0] for r in store.read(spark).select("raw_term").collect()}
     assert "poisonterm" not in terms
     # a new owner commits DIFFERENT content under the SAME batch id:
     # the entry sweep retracts the orphans first, so only its content
     # may ever serve
-    monkeypatch.setattr(IX, "_test_post_promote_crash", None)
+    monkeypatch.setattr(lsm, "_test_crash_point", None)
     assert store.apply_batch(spark, _docs_df(spark, DOCS_B1), None, batch=1)
     terms = {r[0] for r in store.read(spark).select("raw_term").collect()}
     assert "checkpoint" in terms and "poisonterm" not in terms
@@ -790,11 +837,11 @@ def test_ivf_crash_orphans_swept_before_different_content_commit(
     _crash(monkeypatch)
     with pytest.raises(RuntimeError, match="simulated crash"):
         store.apply_batch(spark, crashed_up, None, batch=1)
-    assert IX._dir_has_parquet(store.delta_dir) or IX._dir_has_parquet(store.tomb_dir)
+    assert lsm._dir_has_parquet(store.delta_dir) or lsm._dir_has_parquet(store.tomb_dir)
     assert int(store.meta().get("applied_through") or 0) == 0
 
     # committed attempt: SAME batch id, different content (vec 1 only)
-    monkeypatch.setattr(IX, "_test_post_promote_crash", None)
+    monkeypatch.setattr(lsm, "_test_crash_point", None)
     committed_up = emb.filter(F.col("vec_id") == 1)
     assert store.apply_batch(spark, committed_up, None, batch=1)
     assert clean.apply_batch(spark, committed_up, None, batch=1)
@@ -828,10 +875,10 @@ def test_rollup_crash_orphans_swept_before_different_content_commit(
     poison = ev([("2024-01-01 01:00:00", "click", 1000.0)])
     with pytest.raises(RuntimeError, match="simulated crash"):
         store.apply_batch(spark, poison, batch=1)
-    assert IX._dir_has_parquet(store.delta_dir)
+    assert lsm._dir_has_parquet(store.delta_dir)
     assert not os.path.exists(store._sentinel(1))
 
-    monkeypatch.setattr(IX, "_test_post_promote_crash", None)
+    monkeypatch.setattr(lsm, "_test_crash_point", None)
     good = ev([("2024-01-01 01:00:00", "click", 7.0)])
     assert store.apply_batch(spark, good, batch=1)
     from pyspark.sql import functions as F
@@ -860,14 +907,14 @@ def test_sweep_value_fallback_and_corrupt_file_fails_loud(tmp_path):
     os.makedirs(d)
     t = pa.table({"batch": pa.array([5, 6], "int64"), "v": [1, 2]})
     pq.write_table(t, os.path.join(d, "a.parquet"), write_statistics=False)
-    orph, skipped = IX._sweep_promoted_orphans([d], 4, dry_run=True)
+    orph, skipped = lsm._sweep_promoted_orphans([d], 4, dry_run=True)
     assert [os.path.basename(p) for p in orph] == ["a.parquet"] and not skipped
     # min(batch)=5 <= bound=5 -> committed range, never a candidate
-    assert IX._sweep_promoted_orphans([d], 5, dry_run=True) == ([], [])
+    assert lsm._sweep_promoted_orphans([d], 5, dry_run=True) == ([], [])
     with open(os.path.join(d, "bad.parquet"), "w") as f:
         f.write("not a parquet file")
     with pytest.raises(ValueError, match="unreadable parquet"):
-        IX._sweep_promoted_orphans([d], 4, dry_run=True)
+        lsm._sweep_promoted_orphans([d], 4, dry_run=True)
 
 
 def test_sweep_rechecks_fence_before_removing_anything(tmp_path):
@@ -884,10 +931,10 @@ def test_sweep_rechecks_fence_before_removing_anything(tmp_path):
     pq.write_table(pa.table({"batch": pa.array([5], "int64")}), p)
 
     def stolen():
-        raise IX.MaintenanceFencedError("lease stolen mid-walk")
+        raise lsm.MaintenanceFencedError("lease stolen mid-walk")
 
-    with pytest.raises(IX.MaintenanceFencedError):
-        IX._sweep_promoted_orphans([d], 4, recheck=stolen)
+    with pytest.raises(lsm.MaintenanceFencedError):
+        lsm._sweep_promoted_orphans([d], 4, recheck=stolen)
     assert os.path.exists(p), "no removal may precede the recheck"
-    removed, skipped = IX._sweep_promoted_orphans([d], 4)
+    removed, skipped = lsm._sweep_promoted_orphans([d], 4)
     assert removed == [p] and not skipped and not os.path.exists(p)

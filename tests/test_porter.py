@@ -138,9 +138,9 @@ def test_porter_posting_store_matches_literal(spark, tmp_path, monkeypatch):
     its raw terms (the vocab-join optimization changes nothing)."""
     sf_dir = SF_SMALL
     monkeypatch.setenv("CAR_ETL_INDEX_DIR", str(tmp_path))
-    from car_etl_spark.operators import indexing
+    from car_etl_spark.operators import indexing, lsm
 
-    monkeypatch.setattr(indexing, "_ENSURED", set())
+    monkeypatch.setattr(lsm, "_ENSURED", set())
     store = indexing.ensure_posting_index(spark, sf_dir, analyzer="porter")
     rows = store.read(spark).select("raw_term", "term").distinct().collect()
     assert rows

@@ -11,7 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from car_etl_spark.operators.indexing import _dir_has_parquet
+from car_etl_spark.operators.lsm import _dir_has_parquet
 from car_etl_spark.streaming.rollup_store import (
     ROLLUP_VERSION,
     RollupStore,
@@ -73,15 +73,11 @@ def test_replay_and_crash_replay_are_noops(spark, tmp_path, store):
     before = _rows(store.read(spark, "minute"))
     # sentinel short-circuit
     assert store.apply_batch(spark, _df(spark, B1), batch=1) is False
-    # crash-before-sentinel: the write order (pending -> delta ->
-    # sentinel -> clear pending) guarantees the pending marker is still
-    # on disk in that state; r12 — the replay's entry sweep retracts
-    # the orphaned delta rows (batch above the committed bound) and the
-    # replay lands fresh: no duplicates, ledger stays CLEAN, and the
-    # served view is unchanged
+    # crash-before-sentinel: the delta rows are on disk, the sentinel
+    # is not; the replay's entry sweep retracts the orphaned delta rows
+    # (batch above the committed bound) and the replay lands fresh: no
+    # duplicates, ledger stays CLEAN, and the served view is unchanged
     os.remove(store._sentinel(1))
-    with open(store._pending(1), "w") as f:
-        f.write("pending")
     assert store.apply_batch(spark, _df(spark, B1), batch=1)
     assert store._needs_dup_drop() is False
     assert _rows(store.read(spark, "minute")) == before
@@ -375,8 +371,6 @@ def test_clean_ledger_skips_duplicate_drop_but_replay_stays_exact(spark, tmp_pat
     # crash: delta rows landed but the applied sentinel did not
     store.apply_batch(spark, _df(spark, B2), batch=2)
     os.remove(store._sentinel(2))
-    with open(store._pending(2), "w") as f:
-        f.write("pending")  # the marker a mid-append crash leaves
     # replay: the sweep retracts the orphaned rows, the replay lands
     # fresh — ledger stays clean, no duplicate-drop aggregation
     assert store.apply_batch(spark, _df(spark, B2), batch=2) is True
@@ -404,15 +398,13 @@ def test_replay_stamps_dirty_only_when_sweep_leaves_files(
     a sweep that could not retract every orphan (vanished mid-walk /
     remove failure) — forced here by stubbing the sweep to report a
     skipped file."""
-    from car_etl_spark.operators import indexing as IX
+    from car_etl_spark.operators import lsm
 
     store.apply_batch(spark, _df(spark, B1), batch=1)
     store.apply_batch(spark, _df(spark, B2), batch=2)
     os.remove(store._sentinel(2))
-    with open(store._pending(2), "w") as f:
-        f.write("pending")
     monkeypatch.setattr(
-        IX, "_sweep_promoted_orphans", lambda *a, **k: ([], ["leftover"])
+        lsm, "_sweep_promoted_orphans", lambda *a, **k: ([], ["leftover"])
     )
     assert store.apply_batch(spark, _df(spark, B2), batch=2) is True
     assert store._needs_dup_drop() is True
@@ -493,25 +485,23 @@ def test_api_rollup_with_distinct_composition(spark, tmp_path):
 
 
 def test_compact_excludes_stranded_batches_so_replay_stays_exact(spark, tmp_path, store):
-    """A batch that crashed mid-append (pending marker, no sentinel)
-    must NOT have its partial rows folded into base by compact: the
-    swap clears the pending marker, so the stream's replay would
-    re-append the full batch and the partials would count twice with
-    no duplicate-drop able to repair it (base rows carry batch 0).
-    Compact excludes stranded batches; the replay delivers them."""
+    """A batch that crashed mid-append (delta rows, no sentinel) must
+    NOT have its partial rows folded into base by compact: the stream's
+    replay would re-append the full batch and the partials would count
+    twice with no duplicate-drop able to repair it (base rows carry
+    batch 0).  Compact folds the committed snapshot, bounded by the
+    highest sentinel, so it excludes stranded batches; the replay
+    delivers them."""
     store.apply_batch(spark, _df(spark, B1), batch=1)
-    # batch 2 "crashes": delta rows landed, pending still on disk,
-    # sentinel never written (the real crash ordering)
+    # batch 2 "crashes": delta rows landed, sentinel never written
     store.apply_batch(spark, _df(spark, B2), batch=2)
     os.remove(store._sentinel(2))
-    with open(store._pending(2), "w") as f:
-        f.write("pending")
-    assert store._stranded_batches() == [2]
+    assert store.snapshot().upper == 1
 
     store.compact(spark)
     # epoch stopped BELOW the stranded batch and its rows are gone
     assert int(store._meta()["compacted_through"]) == 1
-    assert store._stranded_batches() == []
+    assert not _dir_has_parquet(store.delta_dir)
     # the stream replays batch 2 (unacknowledged -> not a no-op)
     assert store.apply_batch(spark, _df(spark, B2), batch=2) is True
 

@@ -36,12 +36,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from car_etl_spark.operators import indexing as IX
+from car_etl_spark.operators import lsm
 from tests.test_indexing import (
     DOCS_B1,
     DOCS_V0,
+    SUB_DOCS,
     _docs_df,
     _live_postings,
     _clustered_emb,
+    _sub_docs,
 )
 
 
@@ -71,8 +74,8 @@ def test_posting_half_applied_batch_is_invisible(spark, tmp_path, posting_store,
     with pytest.raises(RuntimeError, match="simulated crash"):
         posting_store.apply_batch(spark, _docs_df(spark, DOCS_B1), None, batch=1)
     # the half-applied batch is fully on disk...
-    assert IX._dir_has_parquet(posting_store.delta_dir)
-    assert IX._dir_has_parquet(posting_store.tomb_dir)
+    assert lsm._dir_has_parquet(posting_store.delta_dir)
+    assert lsm._dir_has_parquet(posting_store.tomb_dir)
     # ...and completely invisible: rows, doclens, and bm25 stats all
     # still describe the pre-batch snapshot
     assert _live_postings(posting_store, spark) == before
@@ -150,7 +153,7 @@ def test_ivf_half_applied_batch_is_invisible(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
     # tombstone for id 5 and its new delta row are both on disk, but
     # the view still shows the OLD row — never a vanished id
-    assert IX._dir_has_parquet(store.tomb_dir)
+    assert lsm._dir_has_parquet(store.tomb_dir)
     after = sorted(
         tuple(r) for r in store.read_assignments(spark).select("vec_id", "label").collect()
     )
@@ -223,7 +226,8 @@ def test_compact_folds_only_sentineled_batches(spark, tmp_path, posting_store):
 def test_each_store_read_parses_meta_once(spark, tmp_path, posting_store, monkeypatch):
     """A serving read resolves ONE snapshot: the store's meta is parsed
     exactly once per call, however many paths, bounds, statistics and
-    scans the read builds from it."""
+    scans the read builds from it — a regex plan included, whose
+    literal legs all read the one snapshot."""
     import builtins
 
     from car_etl_spark.streaming.rollup_store import RollupStore
@@ -237,6 +241,9 @@ def test_each_store_read_parses_meta_once(spark, tmp_path, posting_store, monkey
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     rollup = RollupStore(str(tmp_path / "rollup"))
     rollup.build(events)
+    tri = IX.PostingStore(str(tmp_path / "trigram"), analyzer="trigram")
+    sub_docs = _sub_docs(spark, SUB_DOCS)
+    tri.build(sub_docs)
     qvec = list(emb.filter(F.col("vec_id") == 3).select("embedding").first()[0])
     stems = [r[0] for r in posting_store.read(spark).select("term").limit(2).collect()]
 
@@ -256,6 +263,7 @@ def test_each_store_read_parses_meta_once(spark, tmp_path, posting_store, monkey
         "probe_topk": lambda: ivf.probe_topk(spark, qvec, k=5),
         "pq_topk": lambda: ivf.pq_topk(spark, qvec, k=5),
         "rollup.read": lambda: rollup.read(spark, "day"),
+        "regex_search": lambda: tri.regex_search(spark, "quick [a-z]+ fox", sub_docs),
     }
     counts = {}
     for name, call in calls.items():

@@ -10,7 +10,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from car_etl_spark.operators.indexing import _dir_has_parquet
+from car_etl_spark.operators.lsm import _dir_has_parquet
 from car_etl_spark.streaming import jobs
 from tests.conftest import SF_SMALL
 
